@@ -167,13 +167,17 @@ def _parquet_files(root: str):
     tree (segment/layout dirs) OR a single ``.parquet`` FILE (the
     testdata star tables are plain files; ``os.walk`` on a file yields
     nothing, which silently turned every footer fold over such a root
-    into its scan fallback)."""
+    into its scan fallback). A root that does not exist, or is a file
+    that is not ``.parquet``, raises: a mistyped path must not read as
+    an empty table."""
     if os.path.isfile(root):
-        if root.endswith(".parquet") and not os.path.basename(
-            root
-        ).startswith(("_", ".")):
+        if not root.endswith(".parquet"):
+            raise ValueError(f"{root!r} is a file but not a .parquet file")
+        if not os.path.basename(root).startswith(("_", ".")):
             yield root
         return
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"parquet root {root!r} does not exist")
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             if f.endswith(".parquet") and not f.startswith(("_", ".")):

@@ -1,12 +1,13 @@
-"""CAS-lease commit-lock provider — the object-store posture.
+"""The manifest commit lock: one lease protocol over pluggable stores.
 
-:class:`~fintech_etl_spark.sinks.manifest.FileLockProvider` needs an
-atomic create-exclusive (``O_CREAT|O_EXCL``), which POSIX, NFSv4 and
-HDFS give but S3-class object stores historically did not — the same
-gap that makes Delta-on-S3 require the DynamoDB LogStore and Iceberg
-ship a ``DynamoDbLockManager``. What those services DO give is a tiny
-conditional-write vocabulary, and that is the entire surface this
-module builds on:
+Every commit, vacuum and restore runs under :class:`CASLockProvider`,
+a LEASE built on a tiny conditional-write vocabulary — the shape of
+the Delta-on-S3 DynamoDB LogStore and Iceberg's lock managers. The
+STORE is the only thing that changes between deployments:
+:class:`PosixCASStore` (the default, one file per key next to the
+manifests), :class:`GCSCASStore`, :class:`S3CASStore`,
+:class:`DynamoDBCASStore`, or the in-process :class:`CASStore`
+emulation the race tests drive. A store implements four primitives:
 
 ===============================  ===================================
 primitive here                   real-service mapping
@@ -33,28 +34,28 @@ primitive here                   real-service mapping
                                  cleanly to a concurrent steal
 ===============================  ===================================
 
-:class:`CASLockProvider` composes them into a LEASE (the
-Delta/Iceberg DynamoDB-lock shape): ``acquire`` is a
+:class:`CASLockProvider` composes them into a LEASE: ``acquire`` is a
 ``put_if_absent`` of ``{owner, expires_at}``; a conflicting acquire
-GETs the lease and, once it is past expiry, issues a
-``delete_if_match`` of the EXACT stale value before retrying the put
-— conditional delete is what makes the steal single-winner (two
-stealers cannot both match; the loser re-observes). ``release`` is a
-``delete_if_match`` on the holder's own lease value, so a holder
-paused past its expiry whose lease was stolen can never delete the
-thief's lease. Commit critical sections are usually microsecond
-metadata steps (the data is staged outside the lock), so
-``lease_sec`` plays the same role as the file provider's staleness
-bound: crash recovery, not liveness negotiation. The exception is
-maintenance work that legitimately holds the lock across destructive
-I/O (``vacuum``'s segment deletes, a large ingest-history rollup) —
-those paths call :meth:`CASLockProvider.renew`, a ``put_if_match`` of
-the holder's own lease with an extended deadline: atomic against a
-concurrent steal (the steal's conditional delete and the renewal's
-conditional replace race at the service; exactly one wins), so a
-legitimately-slow commit survives past the original lease width
-instead of converting into an abort + orphan + full retry, while a
-STOLEN lease still renews to a loud failure.
+GETs the lease and, once it is past the expiry the HOLDER declared,
+issues a ``delete_if_match`` of the EXACT stale value before retrying
+the put — conditional delete is what makes the steal single-winner
+(two stealers cannot both match; the loser re-observes). The
+acquirer's own ``lease_sec`` never enters the steal decision, so two
+processes built with different settings agree on who holds the lock.
+``release`` is a ``delete_if_match`` on the holder's own lease value,
+so a holder paused past its expiry whose lease was stolen can never
+delete the thief's lease. Commit critical sections are usually
+microsecond metadata steps (the data is staged outside the lock), so
+``lease_sec`` bounds crash recovery, not liveness negotiation. The
+exception is maintenance work that legitimately holds the lock across
+destructive I/O (``vacuum``'s segment deletes, a large ingest-history
+rollup) — those paths call :meth:`CASLockProvider.renew`, a
+``put_if_match`` of the holder's own lease with an extended deadline:
+atomic against a concurrent steal (the steal's conditional delete and
+the renewal's conditional replace race at the store; exactly one
+wins), so a legitimately-slow commit survives past the original lease
+width instead of converting into an abort + orphan + full retry,
+while a STOLEN lease still renews to a loud failure.
 
 :class:`CASStore` is the in-process emulation used in tests: one
 JSON file per key under a scratch directory, mutated via
@@ -68,10 +69,12 @@ actually won — :meth:`CASLockProvider.acquire` does exactly that, so
 a lost-then-won race converges instead of deadlocking on its own
 lease.
 
-No part of :mod:`fintech_etl_spark.sinks.manifest` changes to use
-this: ``commit(..., lock=CASLockProvider(store))`` plugs it into the
-same injection point the race-test matrix drives for both providers
-(``tests/test_manifest.py``).
+The manifest layer sees only the provider:
+``commit(..., lock=CASLockProvider(store))`` swaps the store at the
+same injection point the race-test matrix drives
+(``tests/test_manifest.py``); without ``lock=`` every lake uses
+``manifest.DEFAULT_LOCK_PROVIDER``, the lease over a
+:class:`PosixCASStore`.
 """
 
 from __future__ import annotations
@@ -83,12 +86,129 @@ import time
 import uuid
 
 __all__ = [
+    "PosixCASStore",
     "CASStore",
     "CASLockProvider",
     "GCSCASStore",
     "S3CASStore",
     "DynamoDBCASStore",
 ]
+
+
+class PosixCASStore:
+    """The four primitives over a POSIX filesystem (also NFSv4 and
+    HDFS: anything with atomic ``link`` and ``rename``) — the default
+    store, process-safe with no server and no mutex. One JSON file per
+    key; keys are file paths, a relative key resolving under ``root``.
+    :class:`CASLockProvider`'s keys are absolute paths inside the
+    lake's ``_manifests/``, so the lease is ``_manifests/_commit.lock``
+    and the version claims are ``_manifests/claim-<version>``.
+
+    - ``put_if_absent``: the value is fsync-written to a private temp
+      file and published by ``os.link``, which fails when the key
+      exists — create-exclusive, and content-complete from the first
+      instant the key is visible (a crash leaves an unlinked temp,
+      never an empty key wedging a claim).
+    - ``get``: read and parse. A key that exists but does not parse —
+      an empty file, or a plain-text lock file written by an older
+      release — reads as ``{}``: no owner and no expiry, so the
+      provider judges it an expired lease and steals it.
+    - ``delete_if_match`` / ``put_if_match``: ``os.rename`` the key to
+      a unique grave — exactly one caller wins a rename, the service's
+      single-winner rule — then compare the grave's value with
+      ``expected``. A match deletes the grave (``put_if_match`` first
+      publishes the new value the way ``put_if_absent`` does); a
+      mismatch links the displaced value back.
+
+    Residual window, stated honestly: between the rename and the
+    publish or restore the key is absent, and a concurrent
+    ``put_if_absent`` can land there. A restore that finds the key
+    re-created drops the displaced value, so its holder's next
+    verify/renew fails loudly; a renewal that finds it re-created
+    returns False, so its holder aborts. The window costs a spurious
+    abort, never a second commit of one version — the version claim
+    stays single-winner. A plain read first skips the rename whenever
+    the value visibly differs, so a live lease is displaced only by a
+    race inside that microsecond window.
+    """
+
+    def __init__(self, root: str = "") -> None:
+        self.root = root
+        if root:
+            os.makedirs(root, exist_ok=True)
+
+    def _path(self, key: str) -> str:
+        return os.path.join(self.root, key)
+
+    @staticmethod
+    def _read(path: str) -> dict | None:
+        try:
+            with open(path, "rb") as fh:
+                raw = fh.read()
+        except OSError:
+            return None
+        try:
+            value = json.loads(raw)
+        except ValueError:  # includes undecodable bytes
+            return {}
+        return value if isinstance(value, dict) else {}
+
+    @staticmethod
+    def _publish(path: str, value: dict) -> bool:
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            json.dump(value, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        try:
+            os.link(tmp, path)
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+
+    def _take_if_match(self, path: str, expected: dict) -> str | None:
+        """Rename the key to a grave iff its value is ``expected``;
+        returns the grave path (the caller unlinks it) or None."""
+        if self._read(path) != expected:
+            return None
+        grave = f"{path}.grave-{uuid.uuid4().hex[:8]}"
+        try:
+            os.rename(path, grave)
+        except FileNotFoundError:
+            return None  # another conditional op won the rename
+        if self._read(grave) == expected:
+            return grave
+        try:
+            os.link(grave, path)  # displaced a different value: put it back
+        except FileExistsError:
+            pass
+        os.unlink(grave)
+        return None
+
+    def put_if_absent(self, key: str, value: dict) -> bool:
+        return self._publish(self._path(key), value)
+
+    def get(self, key: str) -> dict | None:
+        return self._read(self._path(key))
+
+    def delete_if_match(self, key: str, expected: dict) -> bool:
+        grave = self._take_if_match(self._path(key), expected)
+        if grave is None:
+            return False
+        os.unlink(grave)
+        return True
+
+    def put_if_match(self, key: str, expected: dict, value: dict) -> bool:
+        path = self._path(key)
+        grave = self._take_if_match(path, expected)
+        if grave is None:
+            return False
+        try:
+            return self._publish(path, value)
+        finally:
+            os.unlink(grave)
 
 
 class CASStore:
@@ -644,17 +764,21 @@ class DynamoDBCASStore:
 
 
 class CASLockProvider:
-    """Lease-based mutual exclusion over a :class:`CASStore` (or any
-    object with the same three primitives). Drop-in for the
-    ``lock=`` parameter of manifest ``commit``/``vacuum``/``restore``:
-    ``acquire(mdir)`` blocks until it holds the lease scoped to
-    ``mdir`` (RuntimeError on timeout), ``release(handle)`` drops
-    only a lease the caller still owns.
+    """Lease-based mutual exclusion over any store with the four
+    conditional primitives (see the module docstring) — the one
+    commit-lock provider. ``acquire(mdir)`` blocks until it holds the
+    lease scoped to ``mdir`` (RuntimeError on timeout),
+    ``release(handle)`` drops only a lease the caller still owns;
+    ``verify``/``renew`` guard long critical sections and
+    ``claim_version``/``read_claim``/``drop_claim`` keep the per-version
+    commit-point ledger in the same store. ``lease_sec`` is the width
+    THIS holder declares; whether to steal is always judged by the
+    width the current holder declared.
     """
 
     def __init__(
         self,
-        store: CASStore,
+        store,
         lease_sec: float = 60.0,
         timeout_sec: float = 120.0,
         poll_sec: float = 0.02,
@@ -665,7 +789,7 @@ class CASLockProvider:
         self.poll_sec = poll_sec
 
     def _lease_key(self, mdir: str) -> str:
-        return f"lease:{os.path.abspath(mdir)}"
+        return os.path.join(os.path.abspath(mdir), "_commit.lock")
 
     def acquire(self, mdir: str) -> tuple[str, dict]:
         key = self._lease_key(mdir)
@@ -768,7 +892,7 @@ class CASLockProvider:
         return None
 
     def _claim_key(self, mdir: str, version: int) -> str:
-        return f"claim:{os.path.abspath(mdir)}:{version}"
+        return os.path.join(os.path.abspath(mdir), f"claim-{version:010d}")
 
     def claim_version(self, mdir: str, version: int, manifest_name: str) -> bool:
         """The conditional COMMIT POINT (see manifest.commit): exactly

@@ -59,28 +59,31 @@ the history Delta-checkpoint-style:
 
 Contracts and limits (documented, not hidden):
 
-- CONCURRENT COMMITTERS are safe on filesystems with atomic
-  O_CREAT|O_EXCL (POSIX, NFSv4, HDFS): every commit runs its
-  read-modify-write of the manifest under a short-lived lock
-  (held only for the metadata step — microseconds — never across a
-  data rewrite), and compaction commits REMOVE+ADD deltas rather than
+- CONCURRENT COMMITTERS are safe: every commit runs its
+  read-modify-write of the manifest under a short-lived lease (held
+  only for the metadata step — microseconds — never across a data
+  rewrite), and compaction commits REMOVE+ADD deltas rather than
   wholesale replacements, so an ingest commit landing between a
   compactor's read and its commit is carried forward, not lost (the
-  Iceberg rewrite-commit shape). A crashed committer's lock is stolen
-  after a staleness timeout via an atomic RENAME (single winner), with
-  an owner token guarding release — see :class:`FileLockProvider`.
-- the lock is INJECTABLE (``lock=`` on :func:`commit` /
-  :func:`vacuum`): object stores without atomic create-exclusive
-  plug in a CAS/lease provider (DynamoDB for Delta-on-S3, etcd, a
-  database row) implementing the two-method ``acquire(mdir) ->
-  handle`` / ``release(handle)`` contract, instead of rewriting the
-  commit path.
+  Iceberg rewrite-commit shape).
+- there is ONE lock protocol, :class:`~fintech_etl_spark.sinks.locks.
+  CASLockProvider`: a lease of ``{owner, expires_at}`` over four
+  conditional primitives, stolen only after the expiry its HOLDER
+  declared (single-winner conditional delete), renewed atomically by
+  slow holders, released only by its owner, plus a per-version claim
+  as the conditional commit point. Only the STORE is pluggable
+  (``lock=`` on :func:`commit` / :func:`vacuum` / :func:`restore`):
+  the default :data:`DEFAULT_LOCK_PROVIDER` runs it over a
+  :class:`~fintech_etl_spark.sinks.locks.PosixCASStore`
+  (``_manifests/_commit.lock`` and ``_manifests/claim-<v>``); object
+  stores without atomic link/rename use the GCS, S3 or DynamoDB store
+  (the Delta-on-S3 LogStore posture) with no change to the commit
+  path.
 - ``vacuum`` retention: a reader holds the manifest it resolved for
   the duration of one scan, so only run ``vacuum(keep_last>=2)`` (or
   pause long scans for keep_last=1) — the same retention contract as
   Delta's VACUUM.
-- Works on any filesystem with atomic single-file rename (POSIX,
-  HDFS). Object stores without atomic rename need the CAS variant.
+- The pointer swap needs atomic single-file rename (POSIX, HDFS).
 
 The reference engine's landing path has the same lost-update blindness
 this closes (no processed-marker around its writes —
@@ -100,14 +103,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fintech_etl_spark.sinks.locks import CASLockProvider, PosixCASStore
+
 _MANIFESTS = "_manifests"
 _CURRENT = "_current"
 _SEGMENTS = "segments"
-_LOCK = "_commit.lock"
-#: commits hold the lock for the metadata step only (microseconds);
-#: a lock older than this belongs to a crashed committer and is stolen
-_LOCK_STALE_SEC = 60.0
-_LOCK_TIMEOUT_SEC = 120.0
 #: ingested-history layout: keys since the last rollup ride the
 #: manifest inline; beyond this the commit folds them into the
 #: hash-bucketed checkpoint files
@@ -126,7 +126,7 @@ class StaleSegmentError(RuntimeError):
 class CommitLockLostError(RuntimeError):
     """The committer's lock/lease was lost mid-critical-section, or the
     manifest pointer moved underneath it: a holder paused past the
-    staleness/lease bound (GC stall, slow FS) had its lock stolen and
+    lease it declared (GC stall, slow FS) had its lock stolen and
     a concurrent committer may have advanced the log. The pointer swap
     is last-writer-wins, so proceeding would silently discard the
     other committer's manifest — the exact lost-commit the lock exists
@@ -138,13 +138,12 @@ class CommitLockLostError(RuntimeError):
 
 
 def _verify_still_held(provider, handle, mdir: str, basis: str | None) -> None:
-    """Guard the commit point: re-check (a) the lock/lease is still
-    ours via the provider's ``verify`` hook, and (b) the pointer still
-    names the manifest this read-modify-write was based on (``basis``;
-    ``None`` = first commit, pointer must not exist yet). (b) catches
-    a lost commit even under a provider without ``verify``: a thief
-    that committed advanced the pointer, so the basis mismatch is loud
-    regardless of how mutual exclusion failed.
+    """Guard the commit point: re-check (a) the lease is still ours
+    via the provider's ``verify``, and (b) the pointer still names the
+    manifest this read-modify-write was based on (``basis``; ``None``
+    = first commit, pointer must not exist yet). (b) catches a lost
+    commit however mutual exclusion failed: a thief that committed
+    advanced the pointer, so the basis mismatch is loud.
 
     HONEST LIMIT (the r13 ADVICE finding): this is check-then-act —
     a steal landing between these reads and the ``os.replace`` would
@@ -157,13 +156,11 @@ def _verify_still_held(provider, handle, mdir: str, basis: str | None) -> None:
     write, the Delta-on-S3 DynamoDB-LogStore shape. This check stays
     as the cheap early-out that catches the common case before a
     claim entry is burned."""
-    verify = getattr(provider, "verify", None)
-    if verify is not None and not verify(handle):
+    if not provider.verify(handle):
         raise CommitLockLostError(
             f"manifest commit: lock/lease for {mdir!r} is no longer "
-            "held (stolen after a pause past the staleness bound, or "
-            "expired) — aborting before the pointer swap; retry from "
-            "a fresh read"
+            "held (stolen after a pause past the lease, or expired) — "
+            "aborting before the pointer swap; retry from a fresh read"
         )
     ptr = os.path.join(mdir, _CURRENT)
     try:
@@ -181,17 +178,12 @@ def _verify_still_held(provider, handle, mdir: str, basis: str | None) -> None:
 
 
 def _renew_or_die(provider, handle, mdir: str):
-    """Opt-in lease renewal inside a long critical section (vacuum's
-    destructive loop, a large ingest rollup): providers exposing
-    ``renew`` get their lease extended atomically; a renewal that
-    fails means the lease was stolen — abort loudly, exactly like a
-    failed verify. Providers without ``renew`` pass through unchanged
-    (their staleness bound is the whole contract). Returns the
-    (possibly refreshed) handle — callers MUST thread it through."""
-    renew = getattr(provider, "renew", None)
-    if renew is None:
-        return handle
-    new = renew(handle)
+    """Lease renewal inside a long critical section (vacuum's
+    destructive loop, a large ingest rollup): the lease is extended
+    atomically; a renewal that fails means the lease was stolen —
+    abort loudly, exactly like a failed verify. Returns the (possibly
+    refreshed) handle — callers MUST thread it through."""
+    new = provider.renew(handle)
     if new is None:
         raise CommitLockLostError(
             f"manifest commit: lock/lease for {mdir!r} could not be "
@@ -212,13 +204,8 @@ def _claim_version_or_die(provider, mdir: str, version: int, name: str) -> None:
     claim exists the commit is DURABLE even if the claimant crashes
     before the pointer swap: every later committer first rolls the
     pointer forward over committed claims (:func:`_recover_claims`),
-    so visibility lags at most one recovery, never silently forks.
-    Providers without ``claim_version`` keep the r13 verify-guarded
-    swap (documented residual window)."""
-    claim = getattr(provider, "claim_version", None)
-    if claim is None:
-        return
-    if not claim(mdir, version, name):
+    so visibility lags at most one recovery, never silently forks."""
+    if not provider.claim_version(mdir, version, name):
         raise CommitLockLostError(
             f"manifest commit: version {version} of {mdir!r} was "
             "already claimed by a concurrent committer — this "
@@ -248,11 +235,7 @@ def _recover_claims(provider, mdir: str) -> None:
     finish it by swapping the pointer forward, then look again. This
     is what makes the claim the true commit point: claimed ⇒
     committed, with visibility completed by the next participant (the
-    Delta LogStore recovery shape). No-op for providers without
-    claims and for clean histories."""
-    read_claim = getattr(provider, "read_claim", None)
-    if read_claim is None:
-        return
+    Delta LogStore recovery shape). No-op for clean histories."""
     while True:
         ptr = os.path.join(mdir, _CURRENT)
         try:
@@ -267,7 +250,7 @@ def _recover_claims(provider, mdir: str) -> None:
             # prevent
             with open(os.path.join(mdir, cur_name)) as fh:
                 v_next = json.load(fh)["version"] + 1
-        claimed = read_claim(mdir, v_next)
+        claimed = provider.read_claim(mdir, v_next)
         if claimed is None:
             return
         if not os.path.exists(os.path.join(mdir, claimed)):
@@ -308,7 +291,7 @@ def current(root: str) -> dict:
 
 
 def manifest_at(
-    root: str, version: int, lock: "FileLockProvider | None" = None
+    root: str, version: int, lock: CASLockProvider | None = None
 ) -> dict:
     """Load the manifest for a SPECIFIC version — time travel, within
     the vacuum retention window. Manifests are immutable and
@@ -321,13 +304,12 @@ def manifest_at(
 
     ``lock`` names the lake's lock provider so PHANTOM versions (two
     files claiming one version after a crashed lost-lock abort)
-    disambiguate through ITS claim ledger: a CAS-locked lake's claims
-    live in the external store (``CASLockProvider.read_claim``), not
-    on the filesystem — without the provider those lakes fell through
-    to the loud ValueError even though the claim data to resolve them
-    existed (the r14 audit's missing #2). The file-provider claim
-    path is always probed as a fallback, so a lake migrated between
-    providers resolves from either ledger."""
+    disambiguate through ITS claim ledger: a lake locked through an
+    external store keeps its claims there, not on the filesystem —
+    without the provider those lakes fell through to the loud
+    ValueError even though the claim data to resolve them existed (the
+    r14 audit's missing #2). The default provider's ledger is probed
+    as well, so a lake migrated between stores resolves from either."""
     mdir = manifests_dir(root)
     prefix = f"manifest-{version:010d}-"
     names = [n for n in os.listdir(mdir) if n.startswith(prefix)]
@@ -346,16 +328,9 @@ def manifest_at(
         except OSError:
             live = None
         provider = lock if lock is not None else DEFAULT_LOCK_PROVIDER
-        read_claim = getattr(provider, "read_claim", None)
-        claimed = read_claim(mdir, version) if read_claim is not None else None
-        if claimed is None:
-            # file-provider fallback: claims written by a file-locked
-            # committer live on disk regardless of the provider passed
-            try:
-                with open(os.path.join(mdir, f"claim-{version:010d}")) as fh:
-                    claimed = fh.read().strip()
-            except OSError:
-                pass
+        claimed = provider.read_claim(
+            mdir, version
+        ) or DEFAULT_LOCK_PROVIDER.read_claim(mdir, version)
         if live in names:
             names = [live]
         elif claimed in names:
@@ -400,223 +375,12 @@ def _fsync_write(path: str, body: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# commit lock — injectable provider
+# commit lock — the CAS lease over a POSIX store unless ``lock=`` says
+# otherwise
 # ---------------------------------------------------------------------------
 
 
-class FileLockProvider:
-    """Default commit-lock provider: an O_CREAT|O_EXCL lock file —
-    atomic on POSIX / NFSv4 / HDFS — carrying an OWNER TOKEN, with a
-    rename-based staleness steal.
-
-    The r10 steal (bare unlink + recreate) had a two-stealer race: A
-    and B both observe a stale lock; A unlinks and re-creates it; B's
-    unlink then removes A's FRESH lock and both run the metadata
-    read-modify-write concurrently. Here a steal must first WIN an
-    atomic ``os.rename`` of the stale lock to a unique grave name —
-    exactly one renamer succeeds, the loser loops back to observe
-    whatever lock exists next. Release verifies the owner token before
-    unlinking, so a paused-then-resumed holder whose lock was stolen
-    cannot remove the thief's lock.
-
-    Residual windows, stated honestly: (a) between the staleness stat
-    and the rename, the stale holder could release and a NEW committer
-    acquire — the stealer detects this by comparing the renamed file's
-    (inode, mtime) against what it judged stale and restores the
-    displaced lock via ``os.link`` (same inode, token intact); only if
-    a THIRD committer squeezes into that same microsecond window is
-    mutual exclusion briefly unguarded. (b) a holder paused for longer
-    than the staleness bound inside a microsecond-scale critical
-    section has already violated the lock's contract. Both require
-    multi-party races inside a window ~10⁶× smaller than the staleness
-    bound.
-
-    Object stores WITHOUT atomic create-exclusive (S3) cannot use file
-    locks at all — the same reason Delta-on-S3 needs DynamoDB. Inject
-    a provider backed by a CAS/lease service instead: ``acquire(mdir)``
-    must block until it holds a mutual-exclusion lease scoped to
-    ``mdir`` (raising RuntimeError on timeout) and return a handle;
-    ``release(handle)`` must drop only a lease the caller still owns.
-    """
-
-    #: ``None`` = read the module-level constants at call time (so the
-    #: test suite's monkeypatching of _LOCK_STALE_SEC/_LOCK_TIMEOUT_SEC
-    #: keeps steering the default provider)
-    def __init__(
-        self,
-        stale_sec: float | None = None,
-        timeout_sec: float | None = None,
-    ) -> None:
-        self.stale_sec = stale_sec
-        self.timeout_sec = timeout_sec
-
-    def acquire(self, mdir: str) -> tuple[str, str]:
-        stale = self.stale_sec if self.stale_sec is not None else _LOCK_STALE_SEC
-        timeout = (
-            self.timeout_sec
-            if self.timeout_sec is not None
-            else _LOCK_TIMEOUT_SEC
-        )
-        path = os.path.join(mdir, _LOCK)
-        owner = uuid.uuid4().hex
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                try:
-                    os.write(fd, owner.encode())
-                finally:
-                    os.close(fd)
-                return (path, owner)
-            except FileExistsError:
-                try:
-                    st = os.stat(path)
-                except OSError:
-                    continue  # holder just released — retry immediately
-                if time.time() - st.st_mtime > stale:
-                    self._steal(path, st)
-                    continue
-                if time.monotonic() > deadline:
-                    raise RuntimeError(
-                        f"manifest commit: lock {path!r} held for "
-                        f">{timeout}s — a committer is stuck inside "
-                        "what should be a microsecond metadata step"
-                    ) from None
-                time.sleep(0.02)
-
-    def _steal(self, path: str, stale_st: os.stat_result) -> None:
-        """Single-winner steal: atomically rename the stale lock to a
-        unique grave. Losers get ENOENT and loop. If the grave turns
-        out to be a DIFFERENT file than the one judged stale (released
-        + re-acquired between stat and rename), restore it by hard
-        link — same inode, owner token intact."""
-        grave = f"{path}.stale-{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(path, grave)
-        except OSError:
-            return  # another stealer won the rename — re-observe
-        try:
-            st = os.stat(grave)
-            if (st.st_ino, st.st_mtime) != (
-                stale_st.st_ino,
-                stale_st.st_mtime,
-            ):
-                # we displaced a LIVE lock — put it back (link keeps the
-                # holder's token); if a third party already re-created
-                # the path, the displaced holder's token-guarded release
-                # is a harmless no-op
-                try:
-                    os.link(grave, path)
-                except OSError:
-                    pass
-        except OSError:
-            pass
-        try:
-            os.unlink(grave)
-        except OSError:
-            pass
-
-    def verify(self, handle: tuple[str, str]) -> bool:
-        """True iff the lock file still exists and carries OUR owner
-        token — called by :func:`_verify_still_held` immediately before
-        every pointer swap / destructive phase, so a holder paused past
-        the staleness bound fails loudly instead of overwriting the
-        thief's commit."""
-        path, owner = handle
-        try:
-            with open(path) as fh:
-                return fh.read() == owner
-        except OSError:
-            return False
-
-    def renew(self, handle: tuple[str, str]) -> tuple[str, str] | None:
-        """Refresh the lock's mtime (the staleness clock) so a
-        legitimately-slow holder — vacuum's destructive phase over
-        many segments — does not cross the staleness bound mid-work
-        and get stolen from. OWNERSHIP IS CHECKED FIRST, always: the
-        mtime belongs to whatever lock file currently exists, and
-        after a steal that is the THIEF's fresh lock — an
-        mtime-before-token order would read it as "plenty of lease
-        left" and let a stolen holder keep mutating (the r14
-        self-review catch). Verify-then-utime keeps the same
-        microsecond residual window the steal path documents (a steal
-        landing exactly between the token read and the utime touches
-        the thief's lock's mtime — harmless: it only DELAYS the next
-        steal); the CAS provider's renew is fully atomic. Cheap-when-
-        early: OUR lock younger than half the staleness bound returns
-        unchanged without the utime. None = no longer ours."""
-        path, owner = handle
-        stale = self.stale_sec if self.stale_sec is not None else _LOCK_STALE_SEC
-        try:
-            with open(path) as fh:
-                if fh.read() != owner:
-                    return None  # stolen — never extend the thief's clock
-            if time.time() - os.path.getmtime(path) < stale * 0.5:
-                return handle
-            os.utime(path, None)
-            return handle
-        except OSError:
-            return None
-
-    @staticmethod
-    def _claim_path(mdir: str, version: int) -> str:
-        return os.path.join(mdir, f"claim-{version:010d}")
-
-    def claim_version(self, mdir: str, version: int, manifest_name: str) -> bool:
-        """The conditional COMMIT POINT (see :func:`commit`): an
-        atomic create-exclusive of ``claim-<version>`` naming the
-        manifest file — exactly one committer per version wins, so a
-        stalled holder whose lock was stolen can no longer
-        last-writer-win the pointer swap even inside the microsecond
-        verify-to-replace window (the r13 ADVICE residual). True =
-        this committer owns the version.
-
-        The claim appears CONTENT-COMPLETE or not at all: the name is
-        fsync-written to a private temp file first and published by
-        ``os.link`` (atomic create-exclusive on POSIX/NFSv4/HDFS, like
-        the lock file itself). A bare ``O_CREAT|O_EXCL``-then-write
-        would leave a crash window with an EMPTY claim on disk — one
-        that rolls nothing forward yet blocks every future claim of
-        that version, wedging the log (the r14 self-review catch)."""
-        claim = self._claim_path(mdir, version)
-        tmp = f"{claim}.tmp-{uuid.uuid4().hex[:8]}"
-        _fsync_write(tmp, manifest_name)
-        try:
-            os.link(tmp, claim)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-
-    def read_claim(self, mdir: str, version: int) -> str | None:
-        try:
-            with open(self._claim_path(mdir, version)) as fh:
-                return fh.read().strip() or None
-        except OSError:
-            return None
-
-    def drop_claim(self, mdir: str, version: int) -> None:
-        try:
-            os.unlink(self._claim_path(mdir, version))
-        except OSError:
-            pass
-
-    def release(self, handle: tuple[str, str]) -> None:
-        path, owner = handle
-        try:
-            with open(path) as fh:
-                if fh.read() != owner:
-                    return  # stolen from us — never remove the thief's lock
-            os.unlink(path)
-        except OSError:
-            pass
-
-
-DEFAULT_LOCK_PROVIDER = FileLockProvider()
+DEFAULT_LOCK_PROVIDER = CASLockProvider(PosixCASStore())
 
 
 # ---------------------------------------------------------------------------
@@ -737,7 +501,7 @@ def commit(
     dataset_meta: dict[str, dict] | None = None,
     dataset_meta_fn: dict | None = None,
     segment_stats: dict[str, dict[str, dict]] | None = None,
-    lock: FileLockProvider | None = None,
+    lock: CASLockProvider | None = None,
 ) -> dict:
     """Write the next manifest version and atomically swap the pointer.
 
@@ -792,11 +556,15 @@ def commit(
     Segments WITHOUT stats are always kept by any pruner (missing
     stats must mean must-scan, never may-skip).
 
-    ``lock`` injects the mutual-exclusion provider (default
-    :data:`DEFAULT_LOCK_PROVIDER`, a :class:`FileLockProvider`); the
-    whole read-modify-write runs under it, so concurrent committers
-    (an ingest stream and a cron compactor, the normal pair) serialize
-    on the metadata step only — data stays staged outside the lock.
+    ``lock`` injects the lease provider — a
+    :class:`~fintech_etl_spark.sinks.locks.CASLockProvider` over the
+    store the lake's committers share (default
+    :data:`DEFAULT_LOCK_PROVIDER`, the lease over a POSIX store in
+    ``_manifests/``). The whole read-modify-write runs under the
+    lease, so concurrent committers (an ingest stream and a cron
+    compactor, the normal pair) serialize on the metadata step only —
+    data stays staged outside the lock; the holder's declared lease
+    decides every steal, whatever the acquirer was built with.
 
     Segment paths are stored relative to ``root`` so the index
     directory can be moved. Returns the committed manifest. First
@@ -1059,7 +827,7 @@ def vacuum(
     root: str,
     keep_last: int = 2,
     orphan_grace_sec: float = 300.0,
-    lock: FileLockProvider | None = None,
+    lock: CASLockProvider | None = None,
 ) -> dict:
     """Garbage-collect segments referenced by NO kept manifest,
     ingested-checkpoint bucket files referenced by no kept manifest,
@@ -1142,40 +910,37 @@ def vacuum(
                 shutil.rmtree(full)
                 removed_segments.append(rel)
         removed_manifests = []
-        drop_claim = getattr(provider, "drop_claim", None)
         for n in names:
             if n not in keep:
                 handle = _renew_or_die(provider, handle, mdir)
                 os.remove(os.path.join(mdir, n))
                 removed_manifests.append(n)
-                if drop_claim is not None:
-                    # retention of the claim ledger follows its
-                    # manifest (remove manifest FIRST: a claim without
-                    # its manifest only matters at version current+1,
-                    # which a vacuumed version never is again)
-                    drop_claim(mdir, int(n.split("-")[1]))
+                # retention of the claim ledger follows its manifest
+                # (remove manifest FIRST: a claim without its manifest
+                # only matters at version current+1, which a vacuumed
+                # version never is again)
+                provider.drop_claim(mdir, int(n.split("-")[1]))
         removed_buckets = []
         # oldest manifest version still on disk after this pass: any
-        # file-provider claim BELOW it is dead weight — normally the
+        # on-disk claim (the default POSIX store's ledger, dropped
+        # through that store) BELOW it is dead weight — normally the
         # manifest-removal loop drops the pair together, but a crash
         # between os.remove(manifest) and drop_claim leaves a claim no
         # later vacuum would revisit (its manifest is already gone),
         # accumulating forever and tripping fsck's missing-manifest
         # check at the retention floor (the r14 ADVICE finding).
-        # CAS-store claims are not enumerable from here; their leak
-        # window closes the same way on the NEXT drop_claim for that
-        # version — which never recurs — so the module documents the
-        # external store as the operator's retention surface.
+        # Claims in an external store are not enumerable from here;
+        # that store is the operator's retention surface.
         kept_versions = sorted(int(n.split("-")[1]) for n in keep)
         floor_v = kept_versions[0] if kept_versions else 0
         for n in sorted(os.listdir(mdir)):
             if n.startswith("ingested-") and n not in live_buckets:
                 os.remove(os.path.join(mdir, n))
                 removed_buckets.append(n)
-            elif n.startswith("claim-") and ".tmp-" in n:
-                # an unpublished claim temp: its committer crashed
-                # before the atomic link (live committers can't be
-                # mid-claim — vacuum holds the commit lock)
+            elif n.startswith("claim-") and (".tmp-" in n or ".grave-" in n):
+                # an unpublished claim temp or an undeleted grave: its
+                # writer crashed mid-primitive (live committers can't
+                # be mid-claim — vacuum holds the commit lock)
                 try:
                     os.remove(os.path.join(mdir, n))
                 except OSError:
@@ -1186,10 +951,7 @@ def vacuum(
                 except (IndexError, ValueError):
                     continue
                 if cv < floor_v:
-                    try:
-                        os.remove(os.path.join(mdir, n))
-                    except OSError:
-                        pass
+                    DEFAULT_LOCK_PROVIDER.drop_claim(mdir, cv)
     finally:
         provider.release(handle)
     return {
@@ -1201,7 +963,7 @@ def vacuum(
 
 
 def restore(
-    root: str, version: int, lock: FileLockProvider | None = None
+    root: str, version: int, lock: CASLockProvider | None = None
 ) -> dict:
     """Roll the dataset back to a retained ``version`` — the Delta
     ``RESTORE TABLE`` shape: a NEW commit whose datasets, dataset
@@ -1298,15 +1060,16 @@ def fsck(root: str) -> dict:
       and ``orphan_segments`` (named by NO manifest — crashed
       stagings or in-flight writers; vacuum's grace window decides).
       Neither is an error: both are invisible by design.
-    - file-based version CLAIMS (the conditional commit point) are
+    - on-disk version CLAIMS (the conditional commit point, kept by
+      the default POSIX store and read through its ``read_claim``) are
       audited: a claim naming a manifest file that is missing while
       newer manifests still exist is an error (claims are written
       only after the manifest fsync — vacuum drops the pair
       together); a claim for the version AFTER the live one whose
       manifest exists is reported as ``pending_claims`` — a committer
       crashed between claim and pointer swap; the commit is durable
-      and the next commit/vacuum rolls the pointer forward. CAS-store
-      claims live in the external service and are not visible here.
+      and the next commit/vacuum rolls the pointer forward. Claims in
+      an external store are not visible here.
 
     Returns ``{ok, errors, superseded_segments, orphan_segments,
     versions_on_disk, pending_claims}``; ``ok`` is False iff errors
@@ -1402,18 +1165,14 @@ def fsck(root: str) -> dict:
     }
     min_v = min(by_version) if by_version else 0
     for n in sorted(os.listdir(mdir)):
-        if not n.startswith("claim-") or ".tmp-" in n:
-            continue  # tmp = a crashed committer's unpublished claim
+        if not n.startswith("claim-") or ".tmp-" in n or ".grave-" in n:
+            continue  # a crashed writer's unpublished temp or grave
         try:
             cv = int(n.split("-")[1])
         except (IndexError, ValueError):
             errors.append(f"malformed claim name {n!r}")
             continue
-        try:
-            with open(os.path.join(mdir, n)) as fh:
-                claimed_name = fh.read().strip()
-        except OSError:
-            claimed_name = ""
+        claimed_name = DEFAULT_LOCK_PROVIDER.read_claim(mdir, cv)
         if claimed_name not in manifest_names:
             if cv >= min_v:
                 errors.append(

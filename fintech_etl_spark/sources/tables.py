@@ -17,12 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from fintech_etl_spark.schemas import TABLE_NAMES
 from fintech_etl_spark.session import ensure_nanos_as_long
 
-#: Inferred-schema memo per live SparkSession: {abs path -> StructType}.
+#: Inferred-schema memo per live SparkSession:
+#: {(abs path, st_mtime_ns, st_size) -> StructType}.
 #: ``spark.read.parquet(path)`` re-infers the schema from parquet
 #: footers on EVERY call (~60-85 ms per table on local testdata, paid
-#: once per load_table call per query invocation); the schema of a
-#: star-schema table is immutable for the life of a session, so the
-#: first call infers and every later call passes the memoized schema
+#: once per load_table call per query invocation); an unchanged table
+#: keeps its schema, so the first call infers and every later call
+#: against the same mtime and size passes the memoized schema
 #: back through ``spark.read.schema(...)`` — identical analyzed schema
 #: (the memo IS the inference result), no footer re-read, and the file
 #: LISTING still happens per read (fresh attribute ids per call keep
@@ -43,8 +44,13 @@ def _read_parquet_memoized(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     # key on the ABSOLUTE path: a relative sf_dir + a later chdir must
     # not let two different files share one memo entry (a wrong
-    # user-supplied schema silently nulls mismatched columns)
-    key = os.path.abspath(path)
+    # user-supplied schema silently nulls mismatched columns); mtime and
+    # size invalidate the entry when the table is rewritten in-session
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)  # let the reader name the error
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     sch = memo.get(key)
     if sch is None:
         df = spark.read.parquet(path)

@@ -14,7 +14,10 @@ mutual-exclusion posture. Pinned here:
   instead of deadlocking on its own lease;
 - an expired holder whose lease was stolen cannot release the
   thief's lease (conditional delete on the OLD value is a no-op);
-- acquire times out loudly on a live (unexpired) foreign lease.
+- acquire times out loudly on a live (unexpired) foreign lease;
+- the HOLDER's declared lease decides every steal, whatever the
+  acquirer was built with, over the POSIX store and the emulation;
+- the default POSIX store serializes commits from separate processes.
 """
 
 from __future__ import annotations
@@ -22,13 +25,18 @@ from __future__ import annotations
 import os
 import threading
 import time
+import traceback
 
 import pytest
 
 import cas_contract  # tests/ is on sys.path under pytest
 
 from fintech_etl_spark.sinks import manifest as mf
-from fintech_etl_spark.sinks.locks import CASLockProvider, CASStore
+from fintech_etl_spark.sinks.locks import (
+    CASLockProvider,
+    CASStore,
+    PosixCASStore,
+)
 
 
 def test_cas_store_primitives(tmp_path):
@@ -76,7 +84,7 @@ def test_cas_commit_serializes_metadata_threads(tmp_path):
     assert cur["version"] == 32
     assert len(cur["datasets"]["d"]) == 32
     assert len(mf.ingested_keys(root)) == 32
-    # the file provider was never involved
+    # the default POSIX store was never involved
     assert not os.path.exists(
         os.path.join(mf.manifests_dir(root), "_commit.lock")
     )
@@ -267,14 +275,15 @@ def _gcs_store(tmp_path):
 
 
 @pytest.mark.parametrize("mk", [
+    lambda tp: PosixCASStore(str(tp / "posix")),
     lambda tp: CASStore(str(tp / "cas")),
     _gcs_store,
-], ids=["emulator", "gcs"])
+], ids=["posix", "emulator", "gcs"])
 def test_cas_store_contract(tmp_path, mk):
-    """The three-primitive contract BOTH stores must satisfy — the
-    emulation the race matrix drives and the real-service client
-    (over the generation-semantics fake) must be indistinguishable to
-    CASLockProvider. Body in tests/cas_contract.py — the SAME source
+    """The three-primitive contract every store must satisfy — the
+    default POSIX store, the emulation the race matrix drives and the
+    real-service client (over the generation-semantics fake) must be
+    indistinguishable to CASLockProvider. Body in tests/cas_contract.py — the SAME source
     of truth tests/test_cas_emulator.py runs against moto."""
     cas_contract.primitive_contract(mk(tmp_path))
 
@@ -583,11 +592,12 @@ def test_ddb_lock_provider_threads_lose_no_commit(tmp_path):
 
 
 @pytest.mark.parametrize("mk", [
+    lambda tp: PosixCASStore(str(tp / "posix")),
     lambda tp: CASStore(str(tp / "cas")),
     _gcs_store,
     _s3_store,
     lambda tp: _ddb_store(tp),
-], ids=["emulator", "gcs", "s3", "ddb"])
+], ids=["posix", "emulator", "gcs", "s3", "ddb"])
 def test_put_if_match_contract(tmp_path, mk):
     """The FOURTH primitive, identical across all four stores. Body in
     tests/cas_contract.py — the SAME source of truth the moto suite
@@ -596,11 +606,12 @@ def test_put_if_match_contract(tmp_path, mk):
 
 
 @pytest.mark.parametrize("mk", [
+    lambda tp: PosixCASStore(str(tp / "posix")),
     lambda tp: CASStore(str(tp / "cas")),
     _gcs_store,
     _s3_store,
     lambda tp: _ddb_store(tp),
-], ids=["emulator", "gcs", "s3", "ddb"])
+], ids=["posix", "emulator", "gcs", "s3", "ddb"])
 def test_renew_vs_steal_is_single_winner(tmp_path, mk):
     """The renewal race matrix: an EXPIRED lease being renewed by its
     slow-but-alive holder while a stealer conditional-deletes it —
@@ -745,3 +756,98 @@ def test_s3_409_conditional_conflict_retries_once_then_concedes(tmp_path):
     fake.conflicts = 1
     h = provider.acquire(str(tmp_path / "m2"))
     provider.release(h)
+
+
+# ---------------------------------------------------------------------------
+# one lease rule across stores and processes
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("mk", [
+    lambda tp: PosixCASStore(),
+    lambda tp: CASStore(str(tp / "cas")),
+], ids=["posix", "emulator"])
+def test_holder_declared_lease_decides_the_steal(tmp_path, mk):
+    """Two processes built with different lease settings must agree on
+    who holds the lock: staleness is the HOLDER's declared lease, never
+    the acquirer's own setting. A short-lease acquirer does not steal a
+    live 5 s lease; a long-lease acquirer steals an expired 0.05 s one
+    at once instead of waiting out its own 60 s."""
+    st = mk(tmp_path)
+    mdir = str(tmp_path / "m")
+    os.makedirs(mdir)
+    holder = CASLockProvider(st, lease_sec=5.0)
+    h = holder.acquire(mdir)
+    impatient = CASLockProvider(st, lease_sec=0.05, timeout_sec=0.3)
+    with pytest.raises(RuntimeError, match="CAS lease"):
+        impatient.acquire(mdir)
+    assert holder.verify(h)
+    holder.release(h)
+
+    short = CASLockProvider(st, lease_sec=0.05)
+    h_short = short.acquire(mdir)
+    patient = CASLockProvider(st, lease_sec=60.0)
+    t0 = time.monotonic()
+    h_patient = patient.acquire(mdir)
+    assert time.monotonic() - t0 < 1.0
+    assert not short.verify(h_short)
+    assert patient.verify(h_patient)
+    patient.release(h_patient)
+
+
+def _commit_keys_worker(root, wid, n, barrier, out):
+    """Spawned worker: after the start barrier, ``n`` commits of one
+    staged segment and one file key each through the DEFAULT provider;
+    reports the committed versions (or the error) on ``out``."""
+    try:
+        barrier.wait(timeout=120)
+        versions = []
+        for i in range(n):
+            seg = mf.new_segment_path(root)
+            os.makedirs(seg)
+            m = mf.commit(root, add={"d": [seg]}, file_keys=[f"w{wid}-{i}"])
+            versions.append(m["version"])
+        out.put(versions)
+    except Exception:  # noqa: BLE001 — surfaced by the parent
+        out.put(traceback.format_exc())
+
+
+def test_default_lock_serializes_commits_across_processes(tmp_path):
+    """The POSIX store is lock state separate processes actually share
+    (the emulation's threading.Lock cannot cross a process boundary):
+    spawned workers committing disjoint file keys to ONE lake through
+    the default provider leave a gapless version chain, every key
+    ingested exactly once, and no temp or grave file behind."""
+    import multiprocessing as mp
+
+    root = str(tmp_path / "ds")
+    mf.commit(root, replace={"d": []})
+    n_workers, per = 4, 10
+    ctx = mp.get_context("spawn")
+    barrier = ctx.Barrier(n_workers)
+    out = ctx.Queue()
+    procs = [
+        ctx.Process(
+            target=_commit_keys_worker, args=(root, w, per, barrier, out)
+        )
+        for w in range(n_workers)
+    ]
+    for p in procs:
+        p.start()
+    results = [out.get(timeout=180) for _ in procs]
+    for p in procs:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+    assert all(isinstance(r, list) for r in results), results
+    versions = sorted(v for r in results for v in r)
+    assert versions == list(range(1, n_workers * per + 1))
+    assert mf.current(root)["version"] == n_workers * per
+    keys = {f"w{w}-{i}" for w in range(n_workers) for i in range(per)}
+    assert mf.ingested_keys(root) == keys
+    assert mf.ingested_count(root) == len(keys)
+    assert len(mf.current(root)["datasets"]["d"]) == len(keys)
+    mdir = mf.manifests_dir(root)
+    assert not [
+        n for n in os.listdir(mdir) if ".tmp-" in n or ".grave-" in n
+    ]
+    assert mf.fsck(root)["ok"]

@@ -298,3 +298,20 @@ def test_footer_folds_handle_plain_file_roots(spark):
     assert {
         c: tuple(v) for c, v in _box_source_bounds(SF_SMOKE, li).items()
     } == scanned
+
+
+def test_footer_rows_raises_on_a_bad_root(tmp_path):
+    """A mistyped root must be loud, not a table of 0 rows: a path that
+    does not exist and a file that is not parquet both raise; an
+    existing empty directory (an empty dataset) still counts 0."""
+    from fintech_etl_spark.operators.layout import _footer_rows
+
+    with pytest.raises(FileNotFoundError):
+        _footer_rows(str(tmp_path / "no_such_table.parquet"))
+    not_parquet = tmp_path / "notes.csv"
+    not_parquet.write_text("a,b\n")
+    with pytest.raises(ValueError, match="not a .parquet"):
+        _footer_rows(str(not_parquet))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert _footer_rows(str(empty)) == 0

@@ -909,7 +909,7 @@ def test_layout_lifecycle_threads_cas_lock_provider(spark, tmp_path):
     assert provider.read_claim(mdir, 3) is not None  # rewrite claim
     assert run_due_compaction(spark, path, lock=provider) is None  # resolved
     assert read_zorder(spark, path).count() == 5000
-    # no file-provider claims anywhere — every commit went through
+    # no default-store claims anywhere — every commit went through
     # the injected store
     assert not [x for x in os.listdir(mdir) if x.startswith("claim-")]
 

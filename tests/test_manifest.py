@@ -33,7 +33,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fintech_etl_spark.sinks import manifest as mf
-from fintech_etl_spark.sinks.locks import CASLockProvider, CASStore
+from fintech_etl_spark.sinks.locks import (
+    CASLockProvider,
+    CASStore,
+    PosixCASStore,
+)
 from fintech_etl_spark.sinks.maintenance import (
     compact_ivf_pq_index,
     compact_lsh_index,
@@ -52,14 +56,14 @@ from tests.conftest import SF_SMOKE
 _CUT = 400
 
 
-@pytest.fixture(params=["file", "cas"])
+@pytest.fixture(params=["posix", "cas"])
 def lock_matrix(request, tmp_path, monkeypatch):
     """Route EVERY commit in the test (including those issued deep
-    inside build/append/compact/streaming helpers) through one of the
-    two lock providers — the POSIX O_EXCL file lock and the
-    conditional-put CAS lease (the object-store posture). The race
-    tests below take this fixture so the whole concurrency matrix
-    runs under both mutual-exclusion mechanisms."""
+    inside build/append/compact/streaming helpers) through the lease
+    over one of two stores — the default POSIX store (link/rename on
+    the lake's own filesystem) and the in-process CAS emulation (the
+    object-store posture). The race tests below take this fixture so
+    the whole concurrency matrix runs over both stores."""
     if request.param == "cas":
         provider = CASLockProvider(CASStore(str(tmp_path / "_cas_store")))
         monkeypatch.setattr(mf, "DEFAULT_LOCK_PROVIDER", provider)
@@ -1085,10 +1089,10 @@ def test_stolen_holder_cannot_release_thiefs_lock(tmp_path):
     must be a token-guarded no-op, never the removal of the thief's
     fresh lock."""
     mdir = str(tmp_path)
-    prov = mf.FileLockProvider(stale_sec=0.05, timeout_sec=5.0)
+    prov = CASLockProvider(PosixCASStore(), lease_sec=0.05, timeout_sec=5.0)
     h_victim = prov.acquire(mdir)
-    time.sleep(0.2)  # victim "pauses" past the staleness bound
-    h_thief = prov.acquire(mdir)  # steals via rename + re-create
+    time.sleep(0.2)  # victim "pauses" past the lease it declared
+    h_thief = prov.acquire(mdir)  # steals via conditional delete + put
     lock = os.path.join(mdir, "_commit.lock")
     assert os.path.exists(lock)
     prov.release(h_victim)  # token mismatch → must NOT unlink
@@ -1098,17 +1102,16 @@ def test_stolen_holder_cannot_release_thiefs_lock(tmp_path):
 
 
 def test_two_stealers_one_winner_under_threads(tmp_path):
-    """N waiters all observing the SAME stale lock: the rename-steal
-    admits exactly one committer at a time (the r10 unlink+recreate
-    steal admitted two). Overlap is detected with an in-critical-
-    section flag."""
+    """N waiters all observing the SAME stale lock (an empty lock file
+    reads as an expired lease): the rename-to-grave steal admits
+    exactly one committer at a time (the r10 unlink+recreate steal
+    admitted two). Overlap is detected with an in-critical-section
+    flag."""
     mdir = str(tmp_path)
     lock = os.path.join(mdir, "_commit.lock")
     open(lock, "w").close()
-    old = time.time() - 120
-    os.utime(lock, (old, old))
 
-    prov = mf.FileLockProvider(stale_sec=60.0, timeout_sec=30.0)
+    prov = CASLockProvider(PosixCASStore(), timeout_sec=30.0)
     inside = threading.Event()
     overlaps, errors = [], []
 
@@ -1134,31 +1137,30 @@ def test_two_stealers_one_winner_under_threads(tmp_path):
     assert not overlaps, "two committers were inside the lock at once"
 
 
-class _ContentiousLock:
-    """A deliberately contentious injectable provider: every acquire
-    spins a few times before granting, and the test can assert it was
-    actually consulted — the plug point an object-store CAS/lease
-    service implements (verdict r10 #7)."""
+class _ContentiousLock(CASLockProvider):
+    """A deliberately contentious injected provider: every acquire
+    spins before granting, and the test can assert it was actually
+    consulted — the plug point an object-store CAS/lease service
+    implements (verdict r10 #7)."""
 
-    def __init__(self):
+    def __init__(self, root: str):
+        super().__init__(CASStore(root))
         self.acquires = 0
         self.releases = 0
-        self._mutex = threading.Lock()
 
     def acquire(self, mdir: str):
         time.sleep(0.01)  # simulated CAS round-trips
-        self._mutex.acquire()
         self.acquires += 1
-        return ("fake-lease", mdir)
+        return super().acquire(mdir)
 
     def release(self, handle):
         self.releases += 1
-        self._mutex.release()
+        super().release(handle)
 
 
 def test_injected_lock_provider_is_used(tmp_path):
     root = str(tmp_path / "ds")
-    prov = _ContentiousLock()
+    prov = _ContentiousLock(str(tmp_path / "cas"))
     mf.commit(root, replace={"d": []}, lock=prov)
     mf.commit(root, file_keys=["k0"], lock=prov)
     mf.vacuum(root, keep_last=1, lock=prov)
@@ -1336,30 +1338,36 @@ def test_read_dataset_schema_drift_falls_back_to_union(spark, tmp_path):
 
 
 def test_commit_steals_stale_lock(tmp_path):
-    """A crashed committer's lock (older than the staleness bound) is
-    stolen; the next commit proceeds and releases cleanly."""
+    """A lock file that declares no lease — empty (a crash mid-write)
+    or unparsable (a plain owner-token lock written before the lease
+    protocol) — reads as an EXPIRED lease: the next commit steals it
+    at once instead of spinning until the timeout, and releases
+    cleanly. Both files are fresh, so no mtime could excuse them."""
     root = str(tmp_path / "ds")
     mf.commit(root, replace={"d": []})
     lock = os.path.join(mf.manifests_dir(root), "_commit.lock")
-    open(lock, "w").close()
-    old = time.time() - mf._LOCK_STALE_SEC - 10
-    os.utime(lock, (old, old))
-    m = mf.commit(root, file_keys=["k0"])
-    assert m["version"] == 1
-    assert not os.path.exists(lock)
+    for i, body in enumerate(["", "0f3a9c2e7b1d4e5f8a6b9c0d1e2f3a4b"]):
+        with open(lock, "w") as fh:
+            fh.write(body)
+        t0 = time.monotonic()
+        m = mf.commit(root, file_keys=[f"k{i}"])
+        assert time.monotonic() - t0 < 5.0, "spun on the stale lock"
+        assert m["version"] == i + 1
+        assert not os.path.exists(lock)
 
 
-def test_commit_times_out_on_held_lock(tmp_path, monkeypatch):
-    """A FRESH lock (live committer) is honored until the timeout, then
-    the waiter fails loudly instead of corrupting the metadata step."""
+def test_commit_times_out_on_held_lock(tmp_path):
+    """A LIVE lease (a committer inside its declared lease) is honored
+    until the timeout, then the waiter fails loudly instead of
+    corrupting the metadata step."""
     root = str(tmp_path / "ds")
     mf.commit(root, replace={"d": []})
-    lock = os.path.join(mf.manifests_dir(root), "_commit.lock")
-    open(lock, "w").close()  # fresh mtime — a live holder
-    monkeypatch.setattr(mf, "_LOCK_TIMEOUT_SEC", 0.3)
-    with pytest.raises(RuntimeError, match="lock .* held"):
-        mf.commit(root, file_keys=["k0"])
-    os.unlink(lock)
+    holder = CASLockProvider(PosixCASStore(), lease_sec=60.0)
+    h = holder.acquire(mf.manifests_dir(root))
+    waiter = CASLockProvider(PosixCASStore(), timeout_sec=0.3)
+    with pytest.raises(RuntimeError, match="CAS lease"):
+        mf.commit(root, file_keys=["k0"], lock=waiter)
+    holder.release(h)
     assert mf.commit(root, file_keys=["k0"])["version"] == 1
 
 
@@ -1368,22 +1376,32 @@ def test_commit_times_out_on_held_lock(tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
+def _store(kind: str, tmp_path):
+    """The lease's store for a ``provider_kind``: the default POSIX
+    store (claims and lease in the lake's ``_manifests/``) or the
+    in-process CAS emulation."""
+    if kind == "posix":
+        return PosixCASStore()
+    return CASStore(str(tmp_path / "cas"))
+
+
 def test_lock_provider_verify_semantics(tmp_path):
-    """verify() ground truth for both providers: True while held, False
-    once the lock file / lease is stolen, replaced, or expired."""
-    # file provider
+    """verify() ground truth over both stores: True while held, False
+    once the lease is stolen, replaced, or expired."""
+    # POSIX store: the lease is the lake's _commit.lock file
     mdir = str(tmp_path / "m1")
     os.makedirs(mdir)
-    fp = mf.FileLockProvider()
+    fp = CASLockProvider(PosixCASStore())
     h = fp.acquire(mdir)
     assert fp.verify(h) is True
-    with open(h[0], "w") as fh:  # a thief's token replaces ours
+    lock = os.path.join(mdir, "_commit.lock")
+    with open(lock, "w") as fh:  # a thief's token replaces ours
         fh.write("someone-else")
     assert fp.verify(h) is False
-    os.unlink(h[0])
+    os.unlink(lock)
     assert fp.verify(h) is False  # gone entirely
 
-    # CAS provider: ownership AND liveness
+    # emulated store: ownership AND liveness
     store = CASStore(str(tmp_path / "cas"))
     mdir2 = str(tmp_path / "m2")
     os.makedirs(mdir2)
@@ -1399,7 +1417,7 @@ def test_lock_provider_verify_semantics(tmp_path):
     thief.release(h3)
 
 
-@pytest.mark.parametrize("provider_kind", ["file", "cas"])
+@pytest.mark.parametrize("provider_kind", ["posix", "cas"])
 def test_stalled_committer_cannot_overwrite_thiefs_commit(
     tmp_path, monkeypatch, provider_kind
 ):
@@ -1412,13 +1430,9 @@ def test_stalled_committer_cannot_overwrite_thiefs_commit(
     segment is in the live manifest, victim's is not, and the version
     chain has no gap."""
     root = str(tmp_path / "ds")
-    if provider_kind == "cas":
-        store = CASStore(str(tmp_path / "cas"))
-        victim = CASLockProvider(store, lease_sec=0.05)
-        thief = CASLockProvider(store, lease_sec=60.0)
-    else:
-        victim = mf.FileLockProvider(stale_sec=0.05)
-        thief = mf.FileLockProvider(stale_sec=60.0)
+    store = _store(provider_kind, tmp_path)
+    victim = CASLockProvider(store, lease_sec=0.05)
+    thief = CASLockProvider(store, lease_sec=60.0)
     mf.commit(root, replace={"d": []}, lock=thief)
 
     thief_seg = mf.new_segment_path(root)
@@ -1508,7 +1522,7 @@ def test_fsck_flags_same_version_phantom_and_manifest_at_is_loud(tmp_path):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("provider_kind", ["file", "cas"])
+@pytest.mark.parametrize("provider_kind", ["posix", "cas"])
 def test_claim_closes_the_verify_check_then_act_window(
     tmp_path, monkeypatch, provider_kind
 ):
@@ -1520,13 +1534,9 @@ def test_claim_closes_the_verify_check_then_act_window(
     point) still aborts the victim: the thief owns the version, the
     victim raises, nothing is overwritten."""
     root = str(tmp_path / "ds")
-    if provider_kind == "cas":
-        store = CASStore(str(tmp_path / "cas"))
-        victim = CASLockProvider(store, lease_sec=0.05)
-        thief = CASLockProvider(store, lease_sec=60.0)
-    else:
-        victim = mf.FileLockProvider(stale_sec=0.05)
-        thief = mf.FileLockProvider(stale_sec=60.0)
+    store = _store(provider_kind, tmp_path)
+    victim = CASLockProvider(store, lease_sec=0.05)
+    thief = CASLockProvider(store, lease_sec=60.0)
     mf.commit(root, replace={"d": []}, lock=thief)
     thief_seg = mf.new_segment_path(root)
     os.makedirs(thief_seg)
@@ -1564,7 +1574,7 @@ def test_claim_closes_the_verify_check_then_act_window(
     assert claimants == [cur["_file"]]
 
 
-@pytest.mark.parametrize("provider_kind", ["file", "cas"])
+@pytest.mark.parametrize("provider_kind", ["posix", "cas"])
 def test_crash_after_claim_rolls_forward(tmp_path, provider_kind):
     """Claimed ⇒ committed: a committer that crashed between its claim
     and its pointer swap left a durable commit whose visibility lags.
@@ -1572,10 +1582,7 @@ def test_crash_after_claim_rolls_forward(tmp_path, provider_kind):
     (so the crashed commit's file keys stay exactly-once), then land on
     top; fsck reports the pending claim in the meantime."""
     root = str(tmp_path / "ds")
-    if provider_kind == "cas":
-        provider = CASLockProvider(CASStore(str(tmp_path / "cas")))
-    else:
-        provider = mf.FileLockProvider()
+    provider = CASLockProvider(_store(provider_kind, tmp_path))
     m0 = mf.commit(root, replace={"d": []}, lock=provider)
     mdir = mf.manifests_dir(root)
 
@@ -1594,7 +1601,7 @@ def test_crash_after_claim_rolls_forward(tmp_path, provider_kind):
     assert provider.claim_version(mdir, 1, name) is True
     assert mf.current(root)["_file"] == m0["_file"]  # pointer lags
 
-    if provider_kind == "file":  # file claims are fsck-visible
+    if provider_kind == "posix":  # on-disk claims are fsck-visible
         rep = mf.fsck(root)
         assert rep["ok"] and rep["pending_claims"] == [1]
 
@@ -1667,9 +1674,9 @@ def test_commit_renews_when_critical_section_outlives_lease(
     """A commit whose metadata step legitimately outlives lease_sec
     (slow FS fsyncs, a big ingest rollup): WITH renewal it completes —
     the heartbeat extends the un-stolen lease before the verify that
-    would otherwise see it expired; WITHOUT renewal (a provider that
-    opted out) the same commit aborts loudly. Slow is not dead, but
-    only the heartbeat can tell the lock that."""
+    would otherwise see it expired; WITHOUT renewal (renew stubbed to
+    return the handle unchanged) the same commit aborts loudly. Slow
+    is not dead, but only the heartbeat can tell the lock that."""
     store = CASStore(str(tmp_path / "cas"))
     root = str(tmp_path / "ds")
     mf.commit(root, replace={"d": []})
@@ -1685,15 +1692,10 @@ def test_commit_renews_when_critical_section_outlives_lease(
     m = mf.commit(root, file_keys=["slow-but-alive"], lock=provider)
     assert m["version"] == 1
 
-    class NoRenewCAS(CASLockProvider):
-        renew = None  # opted out: staleness bound is the whole contract
-
+    no_renew = CASLockProvider(store, lease_sec=0.2)
+    monkeypatch.setattr(no_renew, "renew", lambda handle, *a, **k: handle)
     with pytest.raises(mf.CommitLockLostError):
-        mf.commit(
-            root,
-            file_keys=["slow-and-unrenewed"],
-            lock=NoRenewCAS(store, lease_sec=0.2),
-        )
+        mf.commit(root, file_keys=["slow-and-unrenewed"], lock=no_renew)
     monkeypatch.setattr(mf, "_fsync_write", real_fsync)
     # the aborted commit left no phantom and the log still advances
     m2 = mf.commit(root, file_keys=["retry"], lock=provider)
@@ -1702,19 +1704,19 @@ def test_commit_renews_when_critical_section_outlives_lease(
 
 
 def test_file_renew_refuses_after_steal_even_with_fresh_thief_lock(tmp_path):
-    """r14 self-review catch: FileLockProvider.renew must check the
-    owner TOKEN before trusting the lock file's mtime — after a steal
-    the mtime on disk belongs to the THIEF's fresh lock, and an
-    mtime-first early-exit would tell the stolen holder its lease is
-    fine while the thief commits."""
+    """r14 self-review catch, over the POSIX store: renew must refuse
+    once the lease was stolen — the lock file on disk now holds the
+    THIEF's fresh lease, and a renewal that trusted the file's
+    freshness instead of its owner would tell the stolen holder its
+    lease is fine while the thief commits."""
     mdir = str(tmp_path / "m")
     os.makedirs(mdir)
-    victim = mf.FileLockProvider(stale_sec=0.05)
+    victim = CASLockProvider(PosixCASStore(), lease_sec=0.05)
     h = victim.acquire(mdir)
-    time.sleep(0.1)  # victim stalls past the staleness bound
-    thief = mf.FileLockProvider(stale_sec=0.05)
-    h2 = thief.acquire(mdir)  # steals; the thief's lock mtime is FRESH
-    assert victim.renew(h) is None  # fresh mtime must not mask the steal
+    time.sleep(0.1)  # victim stalls past the lease it declared
+    thief = CASLockProvider(PosixCASStore(), lease_sec=60.0)
+    h2 = thief.acquire(mdir)  # steals; the thief's lease is FRESH
+    assert victim.renew(h) is None  # a fresh lease must not mask the steal
     assert thief.renew(h2) == h2  # the rightful holder renews fine
     thief.release(h2)
 
@@ -1757,8 +1759,8 @@ def test_manifest_at_resolves_phantom_via_cas_claim(tmp_path):
     (two manifest files claiming one non-live version) used to fall
     through to the loud ValueError even though the claim data to
     disambiguate existed. manifest_at(lock=provider) now consults the
-    provider's claim ledger (file-provider claims stay the on-disk
-    fallback)."""
+    provider's claim ledger (the default store's on-disk claims stay
+    the fallback)."""
     root = str(tmp_path / "ds")
     store = CASStore(str(tmp_path / "cas"))
     provider = CASLockProvider(store)
@@ -1773,7 +1775,7 @@ def test_manifest_at_resolves_phantom_via_cas_claim(tmp_path):
     # committed (the CAS claim names the real file)
     with open(os.path.join(mdir, "manifest-0000000001-deadbeef.json"), "w") as f:
         json.dump({"version": 1, "datasets": {"d": []}}, f)
-    # no provider: file claim absent (claims are in the store) → loud
+    # no provider: on-disk claim absent (claims are in the store) → loud
     with pytest.raises(ValueError, match="AMBIGUOUS"):
         mf.manifest_at(root, 1)
     # with the lake's provider: the store's claim resolves it

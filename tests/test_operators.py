@@ -504,6 +504,28 @@ def test_load_table_schema_memo_is_metadata_only(spark):
     assert joined.count() == a.count()
 
 
+def test_load_table_schema_memo_sees_an_in_session_rewrite(spark, tmp_path):
+    """The memo is keyed on (path, mtime, size): a table rewritten in
+    the same session with an added column must load with the NEW
+    schema — a stale memoized schema would silently drop the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fintech_etl_spark.sources.tables import load_table
+
+    path = str(tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"c_custkey": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "customer").columns == [
+        "c_custkey"
+    ]
+    pq.write_table(
+        pa.table({"c_custkey": [1, 2], "c_name": ["a", "b"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "customer")
+    assert df.columns == ["c_custkey", "c_name"]
+    assert sorted(r.c_name for r in df.collect()) == ["a", "b"]
+
+
 def test_register_views_sql_surface(spark):
     """After register_views, plain spark.sql works against every table
     and agrees with the DataFrame loader."""

@@ -1065,7 +1065,7 @@ def test_receipts_lake_threads_cas_lock_provider(spark, tmp_path):
     out = maintain(spark, lake, webhook_sink=sink, lock=provider)
     assert out["outbox"]["batches"] == 1 and out["outbox"]["failed"] == 0
     assert provider.read_claim(mdir, 4) is not None  # drain remove-commit
-    # and no file-provider claims were minted anywhere along the way
+    # and no default-store claims were minted anywhere along the way
     assert not [x for x in _os.listdir(mdir) if x.startswith("claim-")]
 
 

@@ -17,6 +17,7 @@ from fintech_etl_spark.operators.layout import (
     zorder_write,
 )
 from fintech_etl_spark.sinks import manifest as mf
+from fintech_etl_spark.sinks.locks import CASLockProvider, PosixCASStore
 from fintech_etl_spark.streaming.layout import start_zorder_ingest
 
 _SCHEMA = "rowid long, x long, y long"
@@ -460,9 +461,9 @@ def test_commit_lock_lost_mid_stream_is_loud_then_exactly_once(
     root, land = layout
     _write_jsonl(_batch_rows(spark, 1000, 1100), land / "a.jsonl")
 
-    class LosesVerifyOnce(mf.FileLockProvider):
+    class LosesVerifyOnce(CASLockProvider):
         def __init__(self):
-            super().__init__()
+            super().__init__(PosixCASStore())
             self.tripped = False
 
         def verify(self, handle):
