@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,9 +38,26 @@ from fintech_etl_spark.sources.invoice_csv import ROW_IDX, SOURCE_PATH
 INVOICE_KEY = "Invoice Number"
 
 
+#: ``(gateway, Column)`` for :func:`line_item_struct`
+_LINE_ITEM_MEMO: tuple[object, F.Column] | None = None
+
+
 def line_item_struct() -> F.Column:
     """The 13-field LineItem struct (/root/reference/stream/schema.py:6-19)
-    computed entirely from column expressions."""
+    computed entirely from column expressions.
+
+    The tree takes no parameters, and building it costs ~2,000 py4j
+    calls, so it is built once per JVM gateway and the same Column is
+    returned after that. A different ``SparkContext._gateway`` (a new
+    JVM) rebuilds it: a Column is a handle into the JVM that made it."""
+    global _LINE_ITEM_MEMO
+    gateway = SparkContext._gateway
+    if _LINE_ITEM_MEMO is None or _LINE_ITEM_MEMO[0] is not gateway:
+        _LINE_ITEM_MEMO = (gateway, _build_line_item_struct())
+    return _LINE_ITEM_MEMO[1]
+
+
+def _build_line_item_struct() -> F.Column:
     name = R.trimmed("Product Description")
     return F.struct(
         name.alias("name"),

@@ -225,7 +225,7 @@ class PubSubSink:
     ) -> dict[str, int]:
         """Ledger-gated publish for streaming micro-batches: the
         cross-restart idempotency layer the webhook sink has
-        (``WebhookSink._send_with_ledger``), for Pub/Sub.
+        (``WebhookSink.send_batch`` with a ``batch_id``), for Pub/Sub.
 
         A parquet ledger at ``ledger_path`` (hive-partitioned by
         ``batch_id``, same layout/retention as the webhook ledger —

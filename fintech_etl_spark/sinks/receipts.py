@@ -28,6 +28,9 @@ _RECEIPTS_DS = "receipts"
 #: the transactional OUTBOX (one segment per published batch; removed
 #: by drain_webhook_outbox once every document in it is delivered)
 _OUTBOX_DS = "webhook_outbox"
+#: what an outbox segment holds; the drain reads it with this declared
+#: schema, so ``write_receipts_parquet`` refuses an outbox frame without it
+_OUTBOX_SCHEMA = "document_id string, payload string"
 
 
 class SchemaEvolutionError(ValueError):
@@ -553,6 +556,16 @@ def write_receipts_parquet(
         if skipped:
             receipts = receipts.filter(F.col(file_key_col).isin(todo))
         file_keys = todo
+    payloads = None
+    if outbox is not None:
+        payloads = outbox(receipts)
+        got = {f.name: f.dataType.simpleString() for f in payloads.schema.fields}
+        if got.get("document_id") != "string" or got.get("payload") != "string":
+            raise ValueError(
+                "write_receipts_parquet: outbox(receipts) must carry "
+                f"{_OUTBOX_SCHEMA!r} (the drain reads it with that "
+                f"declared schema); got {got}"
+            )
     seg = mf.new_segment_path(path)
     out = (
         _cluster_by_month(_with_month(receipts))
@@ -595,11 +608,11 @@ def write_receipts_parquet(
     if mode == "overwrite":
         kwargs["reset_ingested"] = True
     adds: dict = {_RECEIPTS_DS: [seg]}
-    if outbox is not None:
+    if payloads is not None:
         # stage the notification intent NEXT TO the data; the commit
         # below makes both visible in one pointer swap
         seg_o = mf.new_segment_path(path)
-        outbox(receipts).write.mode("overwrite").parquet(seg_o)
+        payloads.write.mode("overwrite").parquet(seg_o)
         adds[_OUTBOX_DS] = [seg_o]
     if partition_by_month:
         # per-segment month min/max ride the same commit (lexicographic
@@ -671,10 +684,8 @@ def _drop_ledger_partitions(ledger_path: str, batch_ids: list[int]) -> None:
     of the outbox dataset, so no future drain can consult them.
     Idempotent (a concurrent drain that lost the remove race deletes
     the same dirs); pure filesystem metadata work. When no partition
-    remains the whole ledger directory goes too — an empty dir with
-    only the writer's ``_SUCCESS`` marker would fail the next drain's
-    parquet read (UNABLE_TO_INFER_SCHEMA) instead of reading as the
-    fresh-ledger PATH_NOT_FOUND the sink handles."""
+    remains the whole ledger directory goes too, so the next drain
+    takes the sink's no-ledger path and skips the ledger join."""
     import shutil
 
     for b in batch_ids:
@@ -695,15 +706,17 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
 
     - each outbox segment is one published batch of ``(document_id,
       payload)`` rows with a deterministic ``batch_id`` derived from
-      the segment name (:func:`outbox_batch_id`); the sink's parquet
-      LEDGER anti-joins away documents already delivered by an
-      earlier attempt — a retry after a blip or a crash re-posts only
+      the segment name (:func:`outbox_batch_id`); documents the
+      sink's parquet LEDGER records as delivered by an earlier
+      attempt are skipped — a retry after a blip or a crash re-posts only
       the failures, with the ORIGINAL document_ids (the payloads were
       frozen at publish time). ALL pending segments ride ONE
-      ``sink.send_batches`` pass (union of the segment scans, one
-      anti-join, one delivery action), so a drain after a long
-      receiver outage is O(1) Spark jobs, not O(pending segments) —
-      per-batch skip/accounting semantics unchanged;
+      ``sink.send_batches`` call: one scan of every pending segment
+      with the declared outbox schema, left-joined to the ledger,
+      posted and appended to the ledger in a single Spark action that
+      also counts sent/failed/skipped per segment. A drain after a
+      long receiver outage is O(1) Spark jobs, not O(pending
+      segments);
     - a fully-delivered segment (``failed == 0``) is removed from the
       outbox dataset by a manifest commit (vacuum reclaims the files)
       — a concurrent drain racing the same segment loses the
@@ -747,8 +760,8 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
         totals["drained"] = []
         return totals
     ids = [outbox_batch_id(os.path.relpath(s, path)) for s in segs]
-    # ONE multi-path scan over every pending segment (outbox segments
-    # share one fixed schema, so the flat read is safe); the batch id
+    # ONE multi-path scan over every pending segment, with the outbox's
+    # declared schema (no schema-inference job); the batch id
     # is derived per-row from the file path via a literal
     # segment-dir → id map — a per-segment spark.read would cost one
     # schema-inference job EACH, putting the drain right back at
@@ -766,7 +779,7 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
     # and mis-key every row of a lake whose own root path contains a
     # 'segments' component (the r15 self-review catch)
     seg_dir = F.element_at(F.split(F.input_file_name(), "/"), -2)
-    payloads = spark.read.parquet(*segs).select(
+    payloads = spark.read.schema(_OUTBOX_SCHEMA).parquet(*segs).select(
         "document_id",
         "payload",
         F.element_at(id_map, seg_dir).cast("long").alias("batch_id"),

@@ -16,12 +16,18 @@ deps.
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Row
 
 Poster = Callable[[str, bytes, dict[str, str]], int]  # (url, body, headers) -> status
+
+#: the delivery ledger's columns; reads declare them, so building the
+#: skip frame runs no schema-inference job
+_LEDGER_SCHEMA = "document_id string, batch_id long, delivered_at timestamp"
 
 
 def _default_poster(url: str, body: bytes, headers: dict[str, str]) -> int:
@@ -30,6 +36,28 @@ def _default_poster(url: str, body: bytes, headers: dict[str, str]) -> int:
     req = urllib.request.Request(url, data=body, headers=headers, method="POST")
     with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
         return resp.status
+
+
+def _posted(poster: Poster, url: str, payload: str, headers: dict[str, str]) -> bool:
+    """POST one document; True on a 2xx. Any error is a failed post:
+    one bad document must not stop the rest of its partition."""
+    try:
+        status = poster(url, payload.encode("utf-8"), headers)
+    except Exception:  # noqa: BLE001 — per-doc isolation
+        return False
+    return 200 <= status < 300
+
+
+class _BatchCounts(AccumulatorParam):
+    """Merges the delivery tasks' ``{batch_id: [sent, failed, skipped]}``."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        for b, counts in value2.items():
+            value1[b] = [x + y for x, y in zip(value1.get(b, [0, 0, 0]), counts)]
+        return value1
 
 
 @dataclass
@@ -42,7 +70,7 @@ class WebhookSink:
     #: Without it, idempotency is receiver-side only (document_id key);
     #: with it, successfully delivered (document_id, batch_id) rows are
     #: appended after each attempt and future attempts for the SAME
-    #: batch_id anti-join them away — so a retry after a driver restart
+    #: batch_id skip them — so a retry after a driver restart
     #: (new sink instance, same ledger) re-posts only the failures.
     ledger_path: str | None = None
     #: r8: in-stream ledger retention. When set, every
@@ -68,12 +96,12 @@ class WebhookSink:
         a given (receipt, run_ts), so a re-sent document carries the
         SAME idempotency key.
 
-        With ``ledger_path`` configured and a ``batch_id`` given,
-        delivery goes through the persistent ledger: documents already
-        recorded for this batch_id are anti-joined away BEFORE any
-        post (so a retry after a driver restart — a brand-new sink
-        instance — re-sends only the failures), and this attempt's
-        successes are appended to the ledger parquet. The ledger is
+        With ``ledger_path`` configured and a ``batch_id`` given, this
+        is :meth:`send_batches` with the one id: documents the ledger
+        already records for this batch_id are skipped, not posted (so a
+        retry after a driver restart — a brand-new sink instance —
+        re-sends only the failures), and this attempt's successes are
+        appended to the ledger, all in one Spark action. The ledger is
         append-only and deduped on read; task-level retries can at
         worst re-post (at-least-once stands) but never double-record a
         skip decision.
@@ -83,7 +111,22 @@ class WebhookSink:
         a caller uses to decide whether to retry the batch.
         """
         if self.ledger_path is not None and batch_id is not None:
-            return self._send_with_ledger(payloads, batch_id)
+            from pyspark.sql import functions as F
+
+            res = self.send_batches(
+                payloads.withColumn("batch_id", F.lit(batch_id).cast("long")),
+                [batch_id],
+            )[batch_id]
+            if (
+                self.ledger_keep_batches is not None
+                and batch_id % self.maintenance_every == 0
+            ):
+                from fintech_etl_spark.sinks.maintenance import expire_ledger_batches
+
+                expire_ledger_batches(
+                    self.ledger_path, keep_last=self.ledger_keep_batches
+                )
+            return res
         url = self.url
         headers = {"Content-Type": "application/json", **(self.headers or {})}
         poster = self.poster or _default_poster
@@ -94,13 +137,9 @@ class WebhookSink:
         def deliver(rows: Iterator[Row]) -> None:
             sent = failed = 0
             for row in rows:
-                try:
-                    status = poster(url, row.payload.encode("utf-8"), headers)
-                    if 200 <= status < 300:
-                        sent += 1
-                    else:
-                        failed += 1
-                except Exception:  # noqa: BLE001 — per-doc isolation
+                if _posted(poster, url, row.payload, headers):
+                    sent += 1
+                else:
                     failed += 1
             sent_acc.add(sent)
             failed_acc.add(failed)
@@ -114,105 +153,33 @@ class WebhookSink:
         payloads.foreachPartition(deliver)
         return {"sent": sent_acc.value, "failed": failed_acc.value}
 
-    def _send_with_ledger(
-        self, payloads: DataFrame, batch_id: int
-    ) -> dict[str, int]:
-        """Ledger-gated delivery (see :meth:`send_batch`). One Spark
-        action does the posting (``mapInPandas`` → parquet append of
-        the successes); counts come from cheap metadata reads after."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        spark = payloads.sparkSession
-        url = self.url
-        headers = {"Content-Type": "application/json", **(self.headers or {})}
-        poster = self.poster or _default_poster
-
-        already = self._read_ledger(spark, batch_id)
-        n_total = payloads.count()
-        to_send = payloads
-        if already is not None:
-            # the per-batch delivered set is bounded by the batch size —
-            # broadcast it so the skip is a map-side anti join
-            to_send = payloads.join(F.broadcast(already), "document_id", "left_anti")
-
-        def deliver(pdfs):
-            for pdf in pdfs:
-                oks = []
-                for did, payload in zip(pdf["document_id"], pdf["payload"]):
-                    try:
-                        status = poster(url, payload.encode("utf-8"), headers)
-                        oks.append(200 <= status < 300)
-                    except Exception:  # noqa: BLE001 — per-doc isolation
-                        oks.append(False)
-                yield pd.DataFrame(
-                    {"document_id": pdf["document_id"], "ok": oks}
-                )
-
-        # pin the skipped/sent split BEFORE the ledger append: counting
-        # to_send afterwards would depend on whether Spark re-lists the
-        # ledger directory (non-contractual), undercounting sent
-        n_to_send = to_send.count() if already is not None else n_total
-        n_skipped = n_total - n_to_send
-
-        attempted = to_send.mapInPandas(deliver, "document_id string, ok boolean")
-        # the parquet append IS the action that drives delivery: only
-        # successes are recorded, so a crash between post and append
-        # degrades to at-least-once (receiver still dedupes on
-        # document_id), never to a lost skip
-        (
-            attempted.filter(F.col("ok"))
-            .select(
-                "document_id",
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.current_timestamp().alias("delivered_at"),
-            )
-            # partition by batch_id: the per-batch skip read prunes to
-            # ONE directory instead of scanning the whole ledger — an
-            # append-only ledger on a long-lived stream is otherwise an
-            # unbounded per-batch scan. Retention of delivered batches
-            # is sinks.maintenance.expire_ledger_batches.
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(self.ledger_path)
-        )
-        done = self._read_ledger(spark, batch_id)
-        n_done = done.count() if done is not None else 0
-        sent = n_done - n_skipped
-        if (
-            self.ledger_keep_batches is not None
-            and batch_id % self.maintenance_every == 0
-        ):
-            from fintech_etl_spark.sinks.maintenance import expire_ledger_batches
-
-            expire_ledger_batches(
-                self.ledger_path, keep_last=self.ledger_keep_batches
-            )
-        return {
-            "sent": sent,
-            "failed": n_to_send - sent,
-            "skipped": n_skipped,
-        }
-
     def send_batches(
         self, payloads: DataFrame, batch_ids: list[int]
     ) -> dict[int, dict[str, int]]:
-        """Ledger-gated delivery of MANY batches in one Spark pass —
+        """Ledger-gated delivery of many batches in ONE Spark action —
         the outbox drain's plan shape (``sinks.receipts.
-        drain_webhook_outbox``). ``payloads`` carries ``(document_id,
-        payload, batch_id)`` where ``batch_id`` ∈ ``batch_ids``; the
-        semantics per batch are exactly :meth:`send_batch`'s ledger
-        path (skip already-delivered ``(document_id, batch_id)``
-        pairs, post the rest, append successes partitioned by
-        batch_id), but the WORK is O(1) Spark jobs total instead of
-        O(batches): one ledger read pruned to the named partitions,
-        one anti-join, one ``mapInPandas`` delivery action, one
-        re-read for the accounting — after a receiver outage queued
-        hundreds of pending outbox segments, the drain no longer
-        issues hundreds of sequential driver-side jobs (the r14
-        verdict's drain-latency note). Returns per-batch accounting
-        ``{batch_id: {"sent", "failed", "skipped"}}`` (every id in
-        ``batch_ids`` present, zeros for ids with no payload rows)."""
+        drain_webhook_outbox``) and, with one id, :meth:`send_batch`'s
+        ledger path. ``payloads`` carries ``(document_id, payload,
+        batch_id)`` where ``batch_id`` ∈ ``batch_ids``.
+
+        The payloads are left-joined to the ledger, read with its
+        declared schema and pruned to the named ``batch_id=``
+        partitions, which marks the ``(document_id, batch_id)`` pairs an
+        earlier attempt delivered. One ``mapInPandas`` pass skips the
+        marked rows, posts the rest, and counts sent, failed and
+        skipped per batch into an accumulator; its successes are
+        appended to the ledger partitioned by batch_id, and that
+        append is the action. So a drain after a receiver outage
+        queued hundreds of pending outbox segments costs O(1) Spark
+        jobs, not O(batches). Only successes are recorded: a crash
+        between post and append degrades to at-least-once (receivers
+        dedupe on ``document_id``), never to a lost skip. A corrupt
+        ledger file fails the action before any post, because the join
+        reads the ledger side first.
+
+        Returns per-batch accounting ``{batch_id: {"sent", "failed",
+        "skipped"}}`` (every id in ``batch_ids`` present, zeros for ids
+        with no payload rows)."""
         import pandas as pd
         from pyspark.sql import functions as F
 
@@ -226,74 +193,51 @@ class WebhookSink:
         url = self.url
         headers = {"Content-Type": "application/json", **(self.headers or {})}
         poster = self.poster or _default_poster
+        counts = spark.sparkContext.accumulator({}, _BatchCounts())
 
-        def _per_batch(df) -> dict[int, int]:
-            rows = df.groupBy("batch_id").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
-            return {int(r["batch_id"]): int(r["n"]) for r in rows}
-
-        totals = _per_batch(payloads)
         already = self._read_ledger_multi(spark, batch_ids)
-        to_send = payloads
-        if already is not None:
-            # NO forced broadcast here (unlike the single-batch path,
-            # whose delivered set is bounded by one batch): after a
-            # long outage the union of hundreds of batches' ledgers
-            # can outgrow the driver — the ledger side is already
-            # partition-pruned to the named batch_ids, so let the
-            # optimizer/AQE pick broadcast when it actually fits
-            to_send = payloads.join(
-                already, ["document_id", "batch_id"], "left_anti"
-            )
-            n_to_send = _per_batch(to_send)
+        if already is None:
+            marked = payloads.withColumn("_done", F.lit(False))
         else:
-            n_to_send = dict(totals)
+            # NO forced broadcast: after a long outage the union of
+            # hundreds of batches' ledgers can outgrow the driver — the
+            # ledger side is already partition-pruned to the named
+            # batch_ids, so let the optimizer/AQE pick broadcast when
+            # it actually fits
+            marked = payloads.join(
+                already.withColumn("_done", F.lit(True)),
+                ["document_id", "batch_id"],
+                "left",
+            ).withColumn("_done", F.col("_done").isNotNull())
 
         def deliver(pdfs):
             for pdf in pdfs:
+                local: dict[int, list[int]] = {}
                 oks = []
-                for payload in pdf["payload"]:
-                    try:
-                        status = poster(url, payload.encode("utf-8"), headers)
-                        oks.append(200 <= status < 300)
-                    except Exception:  # noqa: BLE001 — per-doc isolation
-                        oks.append(False)
-                yield pd.DataFrame(
-                    {
-                        "document_id": pdf["document_id"],
-                        "batch_id": pdf["batch_id"],
-                        "ok": oks,
-                    }
-                )
+                for b, done, payload in zip(
+                    pdf["batch_id"], pdf["_done"], pdf["payload"]
+                ):
+                    n = local.setdefault(int(b), [0, 0, 0])
+                    ok = not done and _posted(poster, url, payload, headers)
+                    n[2 if done else 0 if ok else 1] += 1
+                    oks.append(ok)
+                counts.add(local)
+                yield pdf.loc[oks, ["document_id", "batch_id"]]
 
-        attempted = to_send.mapInPandas(
-            deliver, "document_id string, batch_id long, ok boolean"
-        )
-        # the partitioned append IS the delivery action (successes
-        # only): a crash between post and append degrades to
-        # at-least-once, never to a lost skip — same contract as
-        # _send_with_ledger, same per-batch partition pruning
         (
-            attempted.filter(F.col("ok"))
-            .select(
-                "document_id",
-                F.col("batch_id").cast("long").alias("batch_id"),
-                F.current_timestamp().alias("delivered_at"),
-            )
+            marked.mapInPandas(deliver, "document_id string, batch_id long")
+            .withColumn("delivered_at", F.current_timestamp())
+            # partition by batch_id: the per-batch skip read prunes to
+            # its own directories instead of scanning the whole ledger —
+            # an append-only ledger on a long-lived stream is otherwise
+            # an unbounded per-batch scan
             .write.mode("append")
             .partitionBy("batch_id")
             .parquet(self.ledger_path)
         )
-        done = self._read_ledger_multi(spark, batch_ids)
-        n_done = {} if done is None else _per_batch(done)
-        out: dict[int, dict[str, int]] = {}
-        for b in batch_ids:
-            total = totals.get(b, 0)
-            to_b = n_to_send.get(b, 0)
-            skipped = total - to_b
-            sent = n_done.get(b, 0) - skipped
-            out[b] = {"sent": sent, "failed": to_b - sent, "skipped": skipped}
+        out = {int(b): {"sent": 0, "failed": 0, "skipped": 0} for b in batch_ids}
+        for b, (sent, failed, skipped) in counts.value.items():
+            out[b] = {"sent": sent, "failed": failed, "skipped": skipped}
         return out
 
     def _read_ledger(self, spark, batch_id: int):
@@ -308,28 +252,20 @@ class WebhookSink:
 
     def _read_ledger_multi(self, spark, batch_ids: list[int]):
         """Distinct ``(document_id, batch_id)`` pairs recorded for any
-        of ``batch_ids``; None when the ledger doesn't exist yet. The
-        isin filter on the partition column prunes the listing to the
-        named ``batch_id=`` directories only."""
-        from pyspark.errors import AnalysisException
+        of ``batch_ids``; None when the ledger directory does not exist
+        yet. The isin filter on the partition column prunes the listing
+        to the named ``batch_id=`` directories only. The read declares
+        the ledger schema, so a corrupt footer is not met here but in
+        the action that scans the ledger, which then fails: it must
+        never read as "no ledger" and silently disable dedup."""
         from pyspark.sql import functions as F
 
-        try:
-            ledger = spark.read.parquet(self.ledger_path)
-        except AnalysisException as exc:
-            # same contract as the Pub/Sub ledger (r8 advice fix there):
-            # only path-not-found means "fresh ledger"; a transient FS
-            # error or corrupt footer must propagate, not silently
-            # disable dedup and re-post the whole batch
-            cond = getattr(exc, "getCondition", None) or getattr(
-                exc, "getErrorClass", None
-            )
-            cls = cond() if cond is not None else None
-            if cls == "PATH_NOT_FOUND" or "Path does not exist" in str(exc):
-                return None
-            raise
+        if not os.path.isdir(self.ledger_path):
+            return None
         return (
-            ledger.filter(F.col("batch_id").isin([int(b) for b in batch_ids]))
+            spark.read.schema(_LEDGER_SCHEMA)
+            .parquet(self.ledger_path)
+            .filter(F.col("batch_id").isin([int(b) for b in batch_ids]))
             .select("document_id", "batch_id")
             .distinct()
         )
