@@ -761,11 +761,9 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
         return totals
     ids = [outbox_batch_id(os.path.relpath(s, path)) for s in segs]
     # ONE multi-path scan over every pending segment, with the outbox's
-    # declared schema (no schema-inference job); the batch id
-    # is derived per-row from the file path via a literal
-    # segment-dir → id map — a per-segment spark.read would cost one
-    # schema-inference job EACH, putting the drain right back at
-    # O(pending segments) driver-side jobs
+    # declared schema (no schema-inference job); the batch id is
+    # derived per-row from the file path via a literal segment-dir → id
+    # map, so the plan holds one scan, not one union branch per segment
     id_map = F.create_map(
         *[
             x

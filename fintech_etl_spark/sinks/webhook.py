@@ -180,7 +180,6 @@ class WebhookSink:
         Returns per-batch accounting ``{batch_id: {"sent", "failed",
         "skipped"}}`` (every id in ``batch_ids`` present, zeros for ids
         with no payload rows)."""
-        import pandas as pd
         from pyspark.sql import functions as F
 
         if self.ledger_path is None:
@@ -219,7 +218,7 @@ class WebhookSink:
                 ):
                     n = local.setdefault(int(b), [0, 0, 0])
                     ok = not done and _posted(poster, url, payload, headers)
-                    n[2 if done else 0 if ok else 1] += 1
+                    n[2 if done else 0 if ok else 1] += 1  # sent, failed, skipped
                     oks.append(ok)
                 counts.add(local)
                 yield pdf.loc[oks, ["document_id", "batch_id"]]
