@@ -13,8 +13,11 @@ Commands mirror the reference endpoints:
   query         (new) run any registered analytics query by name
                 (`query` alone lists all 208 with their oracle status)
 
-Each command builds the same declarative pipeline; sinks are parquet
-(receipt lake) and optionally a webhook URL.
+Every intake command, and every HTTP intake endpoint, runs one
+pipeline (``process_invoices``): each batch is one manifest commit to
+the receipt lake, exactly-once per source file; with ``--webhook`` the
+notifications ride the same commit as an outbox, drained through the
+lake's delivery ledger.
 
 Usage:
   python -m fintech_etl_spark.cli backfill --landing /path/raw \\
@@ -34,17 +37,32 @@ from pyspark.sql import SparkSession
 from fintech_etl_spark.operators.receipts import build_receipts, to_webhook_payloads
 from fintech_etl_spark.session import build_session
 from fintech_etl_spark.sinks import WebhookSink, land_raw_files, write_receipts_parquet
+from fintech_etl_spark.sinks.receipts import drain_webhook_outbox
 from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
 
 
-def _process(
+def process_invoices(
     spark: SparkSession,
     csv_path: str | list[str],
     lake: str | None,
     webhook: str | None,
     gmail_id: str | None = None,
-    transactional_lake: bool = False,
+    poster=None,
 ) -> int:
+    """The one ingest pipeline behind the CLI and the HTTP service:
+    build receipts from the CSV(s), commit them to the lake, notify.
+    Returns the number of receipts built.
+
+    Exactly-once is PER SOURCE FILE (``file_key_col``), not per batch
+    digest: a re-run over the same files, a grown glob or a re-batched
+    replay appends only the genuinely new files' rows. With a webhook
+    the payloads (original document_ids pinned) ride the SAME commit
+    as the data — the transactional OUTBOX — and are then drained
+    through ``<lake>/_webhook_ledger``, so a network blip or a crash
+    between commit and send is retried by the next run's drain, and a
+    replay stages and sends nothing. Without a lake there is nothing
+    to anchor an outbox to: the payloads are posted directly, with no
+    ledger. ``poster`` is the webhook sink's injectable transport."""
     receipts = build_receipts(
         read_invoice_csv(spark, csv_path),
         gcs_bucket=os.environ.get("LANDING_BUCKET", ""),
@@ -57,50 +75,25 @@ def _process(
     receipts.persist()
     n = receipts.count()
     if lake:
-        if transactional_lake:
-            # first write creates the manifest log; every later write
-            # auto-detects and stays transactional. Exactly-once is
-            # PER SOURCE FILE (file_key_col), not per batch digest: a
-            # re-run over a grown glob or a re-batched replay appends
-            # only the genuinely new files' rows. With a webhook, the
-            # notification intent rides the SAME commit as the data
-            # (the transactional OUTBOX): payloads — original
-            # document_ids pinned — are staged atomically, then
-            # drained below through the delivery ledger, so a network
-            # blip or a crash between commit and send is retried by
-            # the next run's drain instead of silently lost (the r13
-            # ADVICE at-most-once finding), while a full replay
-            # stages nothing new and re-sends nothing
-            write_receipts_parquet(
-                receipts,
-                lake,
-                transactional=True,
-                file_key_col="source_file",
-                outbox=to_webhook_payloads if webhook else None,
+        write_receipts_parquet(
+            receipts,
+            lake,
+            file_key_col="source_file",
+            outbox=to_webhook_payloads if webhook else None,
+        )
+        if webhook:
+            sink = WebhookSink(
+                url=webhook,
+                poster=poster,
+                ledger_path=os.path.join(lake, "_webhook_ledger"),
             )
-            if webhook:
-                from fintech_etl_spark.sinks.receipts import (
-                    drain_webhook_outbox,
-                )
-
-                sink = WebhookSink(
-                    url=webhook,
-                    ledger_path=os.path.join(lake, "_webhook_ledger"),
-                )
-                stats = drain_webhook_outbox(spark, lake, sink)
-                if stats["failed"]:
-                    print(json.dumps({"webhook_outbox_pending": stats}))
-        else:
-            write_receipts_parquet(receipts, lake)
-            if webhook:
-                # plain-lake path: always-send (recoverable by re-run;
-                # receivers dedupe on document_id within one run_ts)
-                WebhookSink(url=webhook).send_batch(
-                    to_webhook_payloads(receipts)
-                )
+            stats = drain_webhook_outbox(spark, lake, sink)
+            if stats["failed"]:
+                print(json.dumps({"webhook_outbox_pending": stats}))
     elif webhook:
-        # no lake: nothing to anchor an outbox to — direct send
-        WebhookSink(url=webhook).send_batch(to_webhook_payloads(receipts))
+        WebhookSink(url=webhook, poster=poster).send_batch(
+            to_webhook_payloads(receipts)
+        )
     receipts.unpersist()
     return n
 
@@ -123,40 +116,16 @@ def main(argv: list[str] | None = None) -> int:
     ing.add_argument("--lake")
     ing.add_argument("--webhook")
     ing.add_argument("--gmail-id", default=None)
-    ing.add_argument(
-        "--transactional-lake",
-        action="store_true",
-        help="publish each receipts batch as an atomic manifest commit "
-        "(exactly-once per SOURCE FILE; readers never see a "
-        "partial batch). First write creates the manifest log; later "
-        "writes auto-detect",
-    )
 
     pc = sub.add_parser("process-csv", help="process one CSV (no landing)")
     pc.add_argument("csv")
     pc.add_argument("--lake")
     pc.add_argument("--webhook")
-    pc.add_argument(
-        "--transactional-lake",
-        action="store_true",
-        help="publish each receipts batch as an atomic manifest commit "
-        "(exactly-once per SOURCE FILE; readers never see a "
-        "partial batch). First write creates the manifest log; later "
-        "writes auto-detect",
-    )
 
     bf = sub.add_parser("backfill", help="process every CSV under a directory")
     bf.add_argument("--landing", required=True)
     bf.add_argument("--lake")
     bf.add_argument("--webhook")
-    bf.add_argument(
-        "--transactional-lake",
-        action="store_true",
-        help="publish each receipts batch as an atomic manifest commit "
-        "(exactly-once per SOURCE FILE; readers never see a "
-        "partial batch). First write creates the manifest log; later "
-        "writes auto-detect",
-    )
 
     lp = sub.add_parser("list-pending", help="list CSV objects in the landing dir")
     lp.add_argument("--landing", required=True)
@@ -165,14 +134,6 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--landing", required=True)
     st.add_argument("--lake", required=True)
     st.add_argument("--checkpoint", required=True)
-    st.add_argument(
-        "--transactional-lake",
-        action="store_true",
-        help="publish each receipts batch as an atomic manifest commit "
-        "(exactly-once per SOURCE FILE; readers never see a "
-        "partial batch). First write creates the manifest log; later "
-        "writes auto-detect",
-    )
     st.add_argument(
         "--pubsub-topic",
         help="also publish receipt events to this Pub/Sub topic "
@@ -498,7 +459,7 @@ def main(argv: list[str] | None = None) -> int:
 
     lkc = sub.add_parser(
         "lake-compact",
-        help="fold a fragmented transactional receipt lake into one "
+        help="fold a fragmented receipt lake into one "
         "month-partitioned segment (rewrite commit: a concurrent "
         "ingest is carried forward); month stats re-ride the commit "
         "so manifest pruning survives",
@@ -621,23 +582,16 @@ def main(argv: list[str] | None = None) -> int:
             ],
             os.path.join(args.landing, "_manifest"),
         )
-        n = _process(
-            spark, args.csv, args.lake, args.webhook, args.gmail_id,
-            transactional_lake=args.transactional_lake,
+        n = process_invoices(
+            spark, args.csv, args.lake, args.webhook, args.gmail_id
         )
         print(f"ingested 1 file, {n} receipts")
     elif args.cmd == "process-csv":
-        n = _process(
-            spark, args.csv, args.lake, args.webhook,
-            transactional_lake=args.transactional_lake,
-        )
+        n = process_invoices(spark, args.csv, args.lake, args.webhook)
         print(f"{n} receipts")
     elif args.cmd == "backfill":
         csvs = os.path.join(args.landing, "*.csv")
-        n = _process(
-            spark, csvs, args.lake, args.webhook,
-            transactional_lake=args.transactional_lake,
-        )
+        n = process_invoices(spark, csvs, args.lake, args.webhook)
         print(f"backfilled {n} receipts")
     elif args.cmd == "list-pending":
         from fintech_etl_spark.sources.tables import list_objects
@@ -670,20 +624,13 @@ def main(argv: list[str] | None = None) -> int:
             ledger = args.pubsub_ledger or args.checkpoint + "_pubsub_ledger"
 
         def on_receipts(receipts, batch_id):
-            if args.transactional_lake:
-                # exactly-once PER SOURCE FILE: a checkpoint-loss
-                # replay that re-lists and RE-GROUPS the same files
-                # into different micro-batches still skips every
-                # processed file (a whole-batch set digest would hash
-                # differently and double-write — the r13 review catch)
-                write_receipts_parquet(
-                    receipts,
-                    args.lake,
-                    transactional=True,
-                    file_key_col="source_file",
-                )
-            else:
-                write_receipts_parquet(receipts, args.lake)
+            # exactly-once PER SOURCE FILE, as in process_invoices: a
+            # checkpoint-loss replay that re-lists and RE-GROUPS the
+            # same files into different micro-batches still skips
+            # every processed file
+            write_receipts_parquet(
+                receipts, args.lake, file_key_col="source_file"
+            )
             if sink is not None:
                 from fintech_etl_spark.operators.receipts import to_pubsub_events
 
@@ -846,11 +793,9 @@ def main(argv: list[str] | None = None) -> int:
 
         if not mfst.is_transactional(args.path):
             print(
-                f"lake-compact: {args.path!r} is not a manifest-backed "
-                "lake (no _manifests/_current pointer) — build it with "
-                "write_receipts_parquet(transactional=True) / "
-                "--transactional-lake; plain directories have no "
-                "segment list to fold"
+                f"lake-compact: {args.path!r} is not a receipt lake (no "
+                "_manifests/_current pointer) — a plain parquet "
+                "directory has no segment list to fold"
             )
             return 2
         if args.when_segments_above is not None:

@@ -235,7 +235,7 @@ def receipts_lake_tx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake = _scratch_lake(sf_dir, "rlake")
     a = receipts.filter(F.col("receipt_id") % 2 == 0)
     b = receipts.filter(F.col("receipt_id") % 2 == 1)
-    write_receipts_parquet(a, lake, transactional=True, batch_key="batch-a")
+    write_receipts_parquet(a, lake, batch_key="batch-a")
     write_receipts_parquet(b, lake, batch_key="batch-b")
     write_receipts_parquet(b, lake, batch_key="batch-b")  # replay: no-op
     version = mf.current(lake)["version"]
@@ -310,7 +310,7 @@ def receipts_lake_schema_evolution(
         F.col("o_orderpriority").alias("channel"),
     )
     lake = _scratch_lake(sf_dir, "rlake_se")
-    write_receipts_parquet(a, lake, transactional=True, batch_key="se-a")
+    write_receipts_parquet(a, lake, batch_key="se-a")
     refused = 0
     try:
         write_receipts_parquet(b, lake, batch_key="se-b")
@@ -420,7 +420,7 @@ def receipts_lake_nested_evolution(
     legacy = docs(False).filter(F.col("receipt_id") % 2 == 0)
     evolved = docs(True).filter(F.col("receipt_id") % 2 == 1)
     lake = _scratch_lake(sf_dir, "rlake_ne")
-    write_receipts_parquet(legacy, lake, transactional=True, batch_key="ne-a")
+    write_receipts_parquet(legacy, lake, batch_key="ne-a")
     add_refused = 0
     try:
         write_receipts_parquet(evolved, lake, batch_key="ne-b")

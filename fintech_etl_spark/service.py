@@ -19,13 +19,16 @@ Endpoint parity with the reference FastAPI app:
   GET  /list-pending            — pending *.csv in the landing dir
   POST /process-all-pending     — fan out processing of all pending
 
-Design stance (SURVEY §2.7): the HTTP layer is plumbing. Every handler
-delegates to the same functions the CLI uses — ``build_receipts`` /
-``land_raw_files`` / ``write_receipts_parquet`` — so there is exactly
-one processing path to test. Background work runs on a single-thread
-executor (the reference's BackgroundTasks analogue); ``drain()`` blocks
-until queued work finishes, which is both the graceful-shutdown hook
-and what makes the behavior deterministic under test.
+Design stance (SURVEY §2.7): the HTTP layer is plumbing. Intake lands
+payloads with ``land_raw_files`` and processes every CSV through
+``cli.process_invoices``, the CLI's own ingest function: one manifest
+commit per batch, exactly-once per source file, and — with a webhook
+and a lake — delivery through the lake's outbox and ledger. A
+re-processed file therefore adds no rows and posts nothing twice.
+Background work runs on a single-thread executor (the reference's
+BackgroundTasks analogue); ``drain()`` blocks until queued work
+finishes, which is both the graceful-shutdown hook and what makes the
+behavior deterministic under test.
 """
 
 from __future__ import annotations
@@ -43,9 +46,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from fintech_etl_spark.operators.receipts import build_receipts, to_webhook_payloads
-from fintech_etl_spark.sinks import WebhookSink, land_raw_files, write_receipts_parquet
-from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
+from fintech_etl_spark.cli import process_invoices
+from fintech_etl_spark.sinks import WebhookSink, land_raw_files
 
 _log = logging.getLogger(__name__)
 
@@ -86,24 +88,14 @@ class EtlHttpService:
     # -- engine delegation ------------------------------------------------
 
     def _process(self, csv_path: str | list[str], gmail_id: str | None = None) -> int:
-        receipts = build_receipts(
-            read_invoice_csv(self.spark, csv_path),
-            gcs_bucket=os.environ.get("LANDING_BUCKET", ""),
-            gmail_id=gmail_id,
-            run_date=dt.date.today(),
-            run_ts=int(time.time()),
-            per_file=True,
+        return process_invoices(
+            self.spark,
+            csv_path,
+            self.lake_dir,
+            self.webhook_url,
+            gmail_id,
+            poster=self.webhook_poster,
         )
-        receipts.persist()
-        n = receipts.count()
-        if self.lake_dir:
-            write_receipts_parquet(receipts, self.lake_dir)
-        if self.webhook_url:
-            WebhookSink(url=self.webhook_url, poster=self.webhook_poster).send_batch(
-                to_webhook_payloads(receipts)
-            )
-        receipts.unpersist()
-        return n
 
     def _test_webhook(self, url: str | None) -> dict:
         """POST one deterministic sample receipt through the REAL sink

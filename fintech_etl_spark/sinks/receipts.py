@@ -2,15 +2,13 @@
 
 The reference *claims* a processed-receipt GCS store (PROCESSED_BUCKET,
 /root/reference/README.md:65,80,184) but no code writes it (SURVEY S7).
-Here it's real: month-partitioned parquet with an optional
-transactional mode sharing ``sinks/manifest.py`` with the ANN indexes
-and the z-order layouts — each batch is staged as an immutable
-partitioned segment and published by one atomic pointer swap, so a
-reader listing mid-write can never see a partial batch (the window
-the plain directory append leaves open, and exactly the one r10/r11
-closed for the other two manifest clients). ``batch_key`` rides the
-manifest's ingested-file dedup history for exactly-once per batch
-across checkpoint-loss replays.
+Here it's real: a month-partitioned parquet lake sharing
+``sinks/manifest.py`` with the ANN indexes and the z-order layouts —
+each batch is staged as an immutable partitioned segment and published
+by one atomic pointer swap, so a reader listing mid-write can never see
+a partial batch. ``batch_key`` / ``file_key_col`` ride the manifest's
+ingested-file dedup history for exactly-once across checkpoint-loss
+replays and re-runs over the same files.
 """
 
 from __future__ import annotations
@@ -34,9 +32,9 @@ _OUTBOX_SCHEMA = "document_id string, payload string"
 
 
 class SchemaEvolutionError(ValueError):
-    """A transactional write's schema is incompatible with the lake's
-    committed schema: a column — or a nested field at any depth — was
-    retyped (always refused — casts are the writer's job), or new
+    """A write's schema is incompatible with the lake's committed
+    schema: a column — or a nested field at any depth — was retyped
+    (always refused — casts are the writer's job), or new
     columns/nested fields arrived without ``merge_schema=True``
     (refused so a typo'd name cannot silently fork the lake schema —
     Delta's ``mergeSchema`` posture)."""
@@ -313,7 +311,8 @@ def _validate_schema_against(
 
 def _has_parquet(path: str) -> bool:
     """True if ``path`` holds any parquet data OUTSIDE a manifest's
-    segments — i.e. a plain directory lake a tx write would orphan."""
+    segments — i.e. a plain directory lake a first commit would
+    orphan."""
     if not os.path.isdir(path):
         return False
     for dirpath, dirnames, filenames in os.walk(path):
@@ -390,14 +389,14 @@ def write_receipts_parquet(
     *,
     mode: str = "append",
     partition_by_month: bool = True,
-    transactional: bool | None = None,
+    transactional: bool = True,
     batch_key: str | None = None,
     file_key_col: str | None = None,
     outbox=None,
     merge_schema: bool = False,
     lock=None,
 ) -> dict:
-    """Write receipts, partitioned by transaction month.
+    """Commit receipts to the lake, partitioned by transaction month.
 
     Month (not day) keeps partition counts sane at scale: a 100 TB /
     multi-year receipt lake gets tens of partitions of file-sized
@@ -405,24 +404,22 @@ def write_receipts_parquet(
     on transaction_date still prune via the month directory plus
     parquet row-group stats inside it.
 
-    ``transactional=True`` makes the lake a manifest-backed dataset:
-    the batch is staged under ``path/segments/<uuid>/`` (still
+    Every batch is staged under ``path/segments/<uuid>/`` (still
     month-partitioned INSIDE the segment — ``read_segments`` unions
     partition-pruned scans, so directory pruning survives) and
-    published with one atomic pointer swap; ``mode="append"`` is an
-    add-commit, ``mode="overwrite"`` a replace-commit that ALSO resets
-    the ingested-key history (a rebuild discards the rows the old keys
+    published with one atomic pointer swap; the first write creates
+    the manifest log. ``mode="append"`` is an add-commit,
+    ``mode="overwrite"`` a replace-commit that ALSO resets the
+    ingested-key history (a rebuild discards the rows the old keys
     describe — keeping them would make a later replay/re-drop of those
     sources silently skipped forever, the same loss class the ANN and
-    layout rebuilds close with ``reset_ingested``). The default
-    ``transactional=None`` auto-detects: an already manifest-backed
-    ``path`` stays transactional, a plain directory stays plain.
-    Passing an EXPLICIT ``transactional=False`` against a
-    manifest-backed lake is refused loudly — an append there would
-    write rows the manifest-resolved reader never returns, and an
-    overwrite would destroy the commit log itself.
+    layout rebuilds close with ``reset_ingested``). A first write into
+    a directory that already holds parquet outside a manifest is
+    refused: those files would be invisible to ``read_receipts``.
+    ``transactional=False`` is refused: the plain-directory lake it
+    selected was removed.
 
-    Exactly-once, two granularities (transactional only):
+    Exactly-once, two granularities:
 
     - ``batch_key``: one key for the whole frame — for callers that
       control batch identity (one commit per calendar month, a
@@ -440,8 +437,8 @@ def write_receipts_parquet(
       and their keys ride the same atomic commit — a mixed batch
       appends exactly the new files, like the z-order/ANN ingests.
 
-    ``outbox`` (transactional only) is a callable mapping the
-    PUBLISHED receipts frame to a ``(document_id, payload)`` frame
+    ``outbox`` is a callable mapping the PUBLISHED receipts frame to
+    a ``(document_id, payload)`` frame
     (``operators.receipts.to_webhook_payloads`` in the CLI pipeline).
     The payloads are staged as their own segment and committed in the
     SAME atomic pointer swap as the receipts — the transactional
@@ -455,12 +452,12 @@ def write_receipts_parquet(
     even though a re-run of the pipeline would mint new run_ts-derived
     ids. Delivery itself is :func:`drain_webhook_outbox`.
 
-    Schema evolution (transactional only): every commit records the
-    lake's column→type contract (plus the ``month_partitioned`` shape
-    flag) in the manifest's ``dataset_meta`` — one atomic fact with
-    the segments. An append whose frame RETYPES a committed column —
-    or any field at any NESTING depth — is always refused loudly; one
-    that ADDS columns, or fields INSIDE a committed struct /
+    Schema evolution: every commit records the lake's column→type
+    contract (plus the ``month_partitioned`` shape flag) in the
+    manifest's ``dataset_meta`` — one atomic fact with the segments.
+    An append whose frame RETYPES a committed column — or any field
+    at any NESTING depth — is always refused loudly; one that ADDS
+    columns, or fields INSIDE a committed struct /
     array<struct> (the receipt document's own ``line_items`` shape),
     is refused unless ``merge_schema=True`` (Delta's ``mergeSchema``
     posture — a typo'd name must never silently fork the schema); a
@@ -476,9 +473,9 @@ def write_receipts_parquet(
     a column's type. ``mode="overwrite"`` resets the contract to the
     batch's schema. See :class:`SchemaEvolutionError`.
 
-    ``lock`` (transactional only) injects the manifest commit-lock
-    provider (default: the module file-lock) — a lake whose other
-    committers serialize through a CAS/object-store lease
+    ``lock`` injects the manifest commit-lock provider (default: the
+    CAS lease over the POSIX store) — a lake whose other committers
+    serialize through a CAS/object-store lease
     (``sinks.locks.CASLockProvider``) must pass the SAME provider
     here, or a mixed-provider pair would not mutually exclude (the
     r14 ADVICE finding).
@@ -488,24 +485,21 @@ def write_receipts_parquet(
     ``file_key_col``) so callers can gate side effects — e.g. skip
     webhook re-sends for a replayed batch.
     """
-    tx = mf.is_transactional(path) if transactional is None else transactional
-    if tx and not mf.is_transactional(path) and _has_parquet(path):
+    if not transactional:
+        raise ValueError(
+            "write_receipts_parquet: transactional=False selected the "
+            "plain-directory lake, which was removed — every batch is a "
+            "manifest commit; drop the argument"
+        )
+    live = mf.is_transactional(path)
+    if not live and _has_parquet(path):
         raise ValueError(
             f"write_receipts_parquet: {path!r} already holds a PLAIN "
-            "parquet lake — making it transactional now would leave the "
-            "existing files invisible to read_receipts (the manifest "
+            "parquet lake — committing a manifest over it would leave "
+            "the existing files invisible to read_receipts (the manifest "
             "names only committed segments). Migrate explicitly: write "
-            "the old lake's rows as the first transactional batch into "
-            "a fresh path (mode='overwrite'), then retire the plain dir"
-        )
-    if not tx and mf.is_transactional(path):
-        raise ValueError(
-            f"write_receipts_parquet: {path!r} is a manifest-backed "
-            "lake but transactional=False was passed — a plain append "
-            "would write rows read_receipts (which resolves the "
-            "manifest) never returns, and a plain overwrite would "
-            "destroy the commit log. Drop the explicit flag (the "
-            "default auto-detects) or migrate to a fresh plain path"
+            "the old lake's rows as the first batch into a fresh path "
+            "(mode='overwrite'), then retire the plain dir"
         )
     if batch_key is not None and file_key_col is not None:
         raise ValueError(
@@ -513,17 +507,9 @@ def write_receipts_parquet(
             "not both — they are two granularities of the same "
             "exactly-once mechanism"
         )
-    if not tx:
-        out = receipts
-        writer = out.write.mode(mode)
-        if partition_by_month:
-            out = _cluster_by_month(_with_month(receipts))
-            writer = out.write.mode(mode).partitionBy("transaction_month")
-        writer.parquet(path)
-        return {"published": True}
     file_keys: list[str] | None = [batch_key] if batch_key is not None else None
     skipped: list[str] = []
-    if batch_key is not None and mf.is_transactional(path):
+    if batch_key is not None and live:
         if mf.ingested_contains(path, [batch_key]):
             # replayed batch — already published, exactly-once
             return {"published": False}
@@ -542,7 +528,7 @@ def write_receipts_parquet(
         )
         done = (
             mf.ingested_contains(path, files)
-            if mf.is_transactional(path) and mode != "overwrite"
+            if live and mode != "overwrite"
             else set()
         )
         todo = [f for f in files if f not in done]
@@ -587,7 +573,7 @@ def write_receipts_parquet(
             committed, incoming, partition_by_month, merge_schema
         )
 
-    if mode != "overwrite" and mf.is_transactional(path):
+    if mode != "overwrite" and live:
         # fail fast BEFORE staging any data (unlocked snapshot — a
         # refused batch leaves nothing on disk); the AUTHORITATIVE
         # check is the same body re-run under the commit lock via
@@ -752,7 +738,7 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
     if not mf.is_transactional(path):
         raise ValueError(
             f"drain_webhook_outbox: {path!r} is not a manifest-backed "
-            "lake — the outbox is a transactional-lake feature"
+            "receipt lake — write it with write_receipts_parquet"
         )
     totals = {"batches": 0, "sent": 0, "failed": 0, "skipped": 0}
     segs = mf.dataset_segments(path, _OUTBOX_DS)
@@ -826,8 +812,8 @@ def compact_receipts_lake(
     *,
     lock=None,
 ) -> dict:
-    """Fold a fragmented transactional receipt lake (one segment per
-    committed batch — 10⁴ after a streaming day) back into ONE
+    """Fold a fragmented receipt lake (one segment per committed
+    batch — 10⁴ after a streaming day) back into ONE
     month-partitioned segment via the generic manifest rewrite commit
     (``compact_transactional``: remove what was read + add the
     rewrite, so an ingest landing mid-compaction is carried forward,
@@ -888,36 +874,39 @@ def read_receipts(
     version: int | None = None,
     lock=None,
 ) -> DataFrame:
-    """Scan the receipt lake. A transactional lake resolves the
-    manifest pointer per call — atomic snapshots, no partial batches —
-    and the per-segment partition-pruned scans keep
-    ``transaction_month`` directory pruning intact (pinned by
-    tests/test_plan_quality.py). A plain lake is a direct read.
+    """Scan the receipt lake. Every read resolves the manifest pointer
+    — atomic snapshots, no partial batches — and the per-segment
+    partition-pruned scans keep ``transaction_month`` directory
+    pruning intact (pinned by tests/test_plan_quality.py). A path
+    without a ``_manifests/_current`` pointer (missing, or a bare
+    parquet directory) raises ``ValueError`` instead of reading as
+    whatever files happen to be there.
 
     ``months=("2024-01", "2024-06")`` (inclusive, 'yyyy-MM') applies
-    the month filter AND, on a transactional lake, first excludes
-    whole segments whose committed month stats miss the range — one
-    pointer read instead of 10⁴ directory listings on a fragmented
-    streaming lake (segments without stats are always kept:
-    must-scan, never may-skip). The result is EXACTLY the unpruned
+    the month filter AND first excludes whole segments whose
+    committed month stats miss the range — one pointer read instead
+    of 10⁴ directory listings on a fragmented streaming lake
+    (segments without stats are always kept: must-scan, never
+    may-skip). The result is EXACTLY the unpruned
     filter's; the equivalence is pinned by tests.
 
-    ``version`` time-travels a transactional lake to an earlier
-    committed snapshot (within the vacuum retention window — the same
+    ``version`` time-travels the lake to an earlier committed
+    snapshot (within the vacuum retention window — the same
     immutable-manifest mechanics as ``read_zorder(version=)``);
     month pruning then uses THAT version's segment stats. ``lock``
     names the lake's lock provider so a CAS-locked lake's phantom
     versions disambiguate via the store's claim ledger (see
     ``manifest.manifest_at``)."""
+    if not mf.is_transactional(path):
+        raise ValueError(
+            f"read_receipts: {path!r} is not a receipt lake (no "
+            "_manifests/_current pointer) — write it with "
+            "write_receipts_parquet"
+        )
     lo = hi = None
     if months is not None:
         lo, hi = months
     if version is not None:
-        if not mf.is_transactional(path):
-            raise ValueError(
-                f"read_receipts: {path!r} is a plain directory — only "
-                "manifest-backed lakes keep version history"
-            )
         m = mf.manifest_at(path, version, lock=lock)
         st_by_seg = (m.get("segment_stats") or {}).get(_RECEIPTS_DS, {})
         rels = m["datasets"].get(_RECEIPTS_DS, [])
@@ -927,18 +916,13 @@ def read_receipts(
                 f"no {_RECEIPTS_DS!r} segments"
             )
         pairs = [(os.path.join(path, r), st_by_seg.get(r)) for r in rels]
-    elif mf.is_transactional(path):
+    else:
         pairs = mf.dataset_segments_with_stats(path, _RECEIPTS_DS)
         if not pairs:
             raise ValueError(
                 f"read_receipts: {path!r} is manifest-backed but its "
                 f"live manifest names no {_RECEIPTS_DS!r} segments"
             )
-    else:
-        df = spark.read.parquet(path)
-        if months is not None:
-            df = _apply_month_filter(df, lo, hi)
-        return df
     segs = [p for p, _ in pairs]
     if months is not None:
         kept = [

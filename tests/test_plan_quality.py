@@ -178,13 +178,12 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-@pytest.mark.parametrize("transactional", [False, True])
-def test_partition_pruning_on_receipt_lake(spark, tmp_path, transactional):
+def test_partition_pruning_on_receipt_lake(spark, tmp_path):
     """The month-partitioned receipt sink supports partition pruning:
     a transaction_month filter turns into a directory-level prune, not
-    a full scan — in BOTH lake modes. The transactional lake resolves
-    segments through the manifest (read_receipts), and each
-    per-segment scan still carries the PartitionFilters prune."""
+    a full scan. The lake resolves segments through the manifest
+    (read_receipts), and each per-segment scan still carries the
+    PartitionFilters prune."""
     import datetime as dt
 
     from fintech_etl_spark.operators.receipts import build_receipts
@@ -198,25 +197,18 @@ def test_partition_pruning_on_receipt_lake(spark, tmp_path, transactional):
         read_invoice_csv(spark, str(fixture)), run_date=dt.date(2024, 6, 1)
     )
     lake = str(tmp_path / "lake")
-    write_receipts_parquet(receipts, lake, transactional=transactional)
-    if transactional:
-        # a second committed batch: the union path must prune per segment
-        write_receipts_parquet(receipts, lake)
-        df = read_receipts(spark, lake).filter(
-            F.col("transaction_month") == "2024-06"
-        )
-        expected = 4
-    else:
-        df = spark.read.parquet(lake).filter(
-            F.col("transaction_month") == "2024-06"
-        )
-        expected = 2
+    write_receipts_parquet(receipts, lake)
+    # a second committed batch: the union path must prune per segment
+    write_receipts_parquet(receipts, lake)
+    df = read_receipts(spark, lake).filter(
+        F.col("transaction_month") == "2024-06"
+    )
     plan = plan_of(df)
     assert "PartitionFilters" in plan
     for line in plan.splitlines():
         if "PartitionFilters" in line:
             assert "transaction_month" in line, plan
-    assert df.count() == expected
+    assert df.count() == 4
 
 
 def test_months_filter_pushes_down_on_non_partitioned_lake(spark, tmp_path):
@@ -224,8 +216,7 @@ def test_months_filter_pushes_down_on_non_partitioned_lake(spark, tmp_path):
     column; read_receipts(months=) translates the range to HALF-OPEN
     transaction_date comparisons precisely so parquet row-group stats
     can prune — a date_format() wrapper would defeat pushdown. Pinned:
-    the scan carries PushedFilters on transaction_date (both plain and
-    transactional shapes)."""
+    the scan carries PushedFilters on transaction_date."""
     import datetime as dt
 
     from fintech_etl_spark.operators.receipts import build_receipts
@@ -238,19 +229,16 @@ def test_months_filter_pushes_down_on_non_partitioned_lake(spark, tmp_path):
     receipts = build_receipts(
         read_invoice_csv(spark, str(fixture)), run_date=dt.date(2024, 6, 1)
     )
-    for transactional in (False, True):
-        lake = str(tmp_path / f"lake_{transactional}")
-        write_receipts_parquet(
-            receipts, lake, partition_by_month=False,
-            transactional=transactional,
-            **({"batch_key": "b0"} if transactional else {}),
-        )
-        df = read_receipts(spark, lake, months=("2024-06", "2024-06"))
-        plan = plan_of(df)
-        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-        assert pushed, plan
-        assert any("transaction_date" in l for l in pushed), plan
-        assert df.count() == 2
+    lake = str(tmp_path / "lake")
+    write_receipts_parquet(
+        receipts, lake, partition_by_month=False, batch_key="b0"
+    )
+    df = read_receipts(spark, lake, months=("2024-06", "2024-06"))
+    plan = plan_of(df)
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    assert pushed, plan
+    assert any("transaction_date" in l for l in pushed), plan
+    assert df.count() == 2
 
 
 def test_partition_pruning_on_webhook_ledger(spark, tmp_path):

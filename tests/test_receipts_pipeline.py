@@ -261,11 +261,11 @@ def test_receipt_lake_readers_never_see_partial_batches(spark, tmp_path):
 
 
 def test_cli_transactional_lake_exactly_once(spark, tmp_path, capsys, monkeypatch):
-    """`process-csv --transactional-lake` twice on the SAME csv: the
-    second run's content-derived batch key matches and publishes
-    nothing (exactly-once per source-file set); a different csv
-    appends. The guard refuses to force tx mode onto an existing
-    plain lake."""
+    """`process-csv` twice on the SAME csv: the second run's source
+    file is already in the ingested history, so nothing publishes
+    (exactly-once per source file); a different csv appends. A first
+    commit over an existing plain parquet directory is refused, and
+    reading one (or a missing path) is loud, not a raw scan."""
     from fintech_etl_spark import cli
     from fintech_etl_spark.sinks import manifest as mf
     from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
@@ -273,34 +273,32 @@ def test_cli_transactional_lake_exactly_once(spark, tmp_path, capsys, monkeypatc
     monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
     csv = _write_fixture(tmp_path)
     lake = str(tmp_path / "lake")
-    assert cli.main(
-        ["process-csv", csv, "--lake", lake, "--transactional-lake"]
-    ) == 0
+    assert cli.main(["process-csv", csv, "--lake", lake]) == 0
     assert mf.is_transactional(lake)
     n = read_receipts(spark, lake).count()
     v = mf.current(lake)["version"]
-    # same file again — flag not even needed, the lake auto-detects,
-    # but the CLI passes the same content key so nothing publishes
-    assert cli.main(
-        ["process-csv", csv, "--lake", lake, "--transactional-lake"]
-    ) == 0
+    # same file again: its key is already ingested, nothing publishes
+    assert cli.main(["process-csv", csv, "--lake", lake]) == 0
     assert read_receipts(spark, lake).count() == n
     assert mf.current(lake)["version"] == v
     # a different file appends
     other = tmp_path / "other.csv"
     other.write_text(HEADER + "\n" + ROWS[0] + "\n")
-    assert cli.main(
-        ["process-csv", str(other), "--lake", lake, "--transactional-lake"]
-    ) == 0
+    assert cli.main(["process-csv", str(other), "--lake", lake]) == 0
     assert read_receipts(spark, lake).count() > n
     assert mf.current(lake)["version"] == v + 1
 
-    # migration guard: tx mode onto an existing plain lake is loud
+    # migration guard: a first commit onto an existing plain lake is loud
     plain = str(tmp_path / "plain_lake")
     receipts = _golden_receipts(spark, tmp_path)
-    write_receipts_parquet(receipts, plain)
+    receipts.write.parquet(plain)
     with pytest.raises(ValueError, match="PLAIN parquet lake"):
-        write_receipts_parquet(receipts, plain, transactional=True)
+        write_receipts_parquet(receipts, plain)
+    # no read falls through to a raw scan of the directory
+    with pytest.raises(ValueError, match="not a receipt lake"):
+        read_receipts(spark, plain)
+    with pytest.raises(ValueError, match="not a receipt lake"):
+        read_receipts(spark, str(tmp_path / "no_such_lake"))
 
 
 def test_receipt_lake_month_range_manifest_pruning(spark, tmp_path):
@@ -351,9 +349,8 @@ def test_months_filter_on_non_month_partitioned_lake(spark, tmp_path):
     """A lake written with partition_by_month=False has NO
     transaction_month column; months= used to raise an
     unresolved-column AnalysisException (r12 ADVICE). It must instead
-    translate to half-open transaction_date bounds — in BOTH the plain
-    and the transactional shapes — and return exactly the rows a
-    month-partitioned lake's filter would."""
+    translate to half-open transaction_date bounds and return exactly
+    the rows a month-partitioned lake's filter would."""
     from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
 
     base = _golden_receipts(spark, tmp_path)  # 2024-06
@@ -361,24 +358,19 @@ def test_months_filter_on_non_month_partitioned_lake(spark, tmp_path):
         "transaction_date", F.add_months(F.col("transaction_date"), 6)
     )  # 2024-12
     both = base.unionByName(shifted)
-    plain = str(tmp_path / "plain_nm")
-    tx = str(tmp_path / "tx_nm")
-    write_receipts_parquet(both, plain, partition_by_month=False)
-    write_receipts_parquet(
-        both, tx, partition_by_month=False, transactional=True, batch_key="b0"
-    )
+    lake = str(tmp_path / "flat_lake")
+    write_receipts_parquet(both, lake, partition_by_month=False, batch_key="b0")
     want = sorted(r.receipt_id for r in shifted.collect())
-    for lake in (plain, tx):
-        got = read_receipts(spark, lake, months=("2024-10", "2024-12"))
-        assert "transaction_month" not in got.columns
-        assert sorted(r.receipt_id for r in got.collect()) == want
+    got = read_receipts(spark, lake, months=("2024-10", "2024-12"))
+    assert "transaction_month" not in got.columns
+    assert sorted(r.receipt_id for r in got.collect()) == want
     # December edge: the hi month's last day is INSIDE the range
     # (half-open translation must not clip it) and January is outside
     assert (
-        read_receipts(spark, plain, months=("2024-12", "2024-12")).count()
+        read_receipts(spark, lake, months=("2024-12", "2024-12")).count()
         == shifted.count()
     )
-    assert read_receipts(spark, plain, months=("2025-01", "2025-02")).count() == 0
+    assert read_receipts(spark, lake, months=("2025-01", "2025-02")).count() == 0
 
 
 def test_receipt_lake_compaction_time_travel_vacuum(
@@ -408,7 +400,7 @@ def test_receipt_lake_compaction_time_travel_vacuum(
 
     # a plain (non-manifest) lake is loud, not a FileNotFoundError
     plain = str(tmp_path / "plain_for_compact")
-    write_receipts_parquet(base, plain)
+    base.write.parquet(plain)
     assert cli.main(["lake-compact", "--path", plain]) == 2
     capsys.readouterr()
 
@@ -455,8 +447,7 @@ def test_file_key_exactly_once_survives_rebatching_and_glob_growth(
     replay RE-BATCHES the same files or a backfill glob GROWS. The
     per-file granularity (file_key_col) must: append only the new
     files' rows from a mixed batch, skip a re-batched full replay
-    entirely, report what it did (for side-effect gating), and refuse
-    the reverse plain-write on a manifest-backed lake."""
+    entirely, and report what it did (for side-effect gating)."""
     from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
 
     base = _golden_receipts(spark, tmp_path)
@@ -495,10 +486,8 @@ def test_file_key_exactly_once_survives_rebatching_and_glob_growth(
 
     assert mf2.ingested_count(lake) == 2
 
-    # reverse-migration guard: an explicit plain write on a
-    # manifest-backed lake is refused (append would hide rows,
-    # overwrite would destroy the commit log)
-    with pytest.raises(ValueError, match="manifest-backed"):
+    # the plain-directory lake is gone: asking for it is refused
+    with pytest.raises(ValueError, match="plain-directory lake"):
         write_receipts_parquet(fa, lake, transactional=False)
     # and the two exactly-once granularities are mutually exclusive
     with pytest.raises(ValueError, match="not both"):
@@ -675,7 +664,7 @@ def test_webhook_outbox_atomic_intent_and_recoverable_delivery(
 
 
 def test_cli_webhook_outbox_end_to_end(spark, tmp_path, capsys, monkeypatch):
-    """process-csv --transactional-lake --webhook: delivery goes
+    """process-csv --webhook: delivery goes
     through the outbox + ledger; a replay run sends nothing; a batch
     left undelivered by a 'crash' (staged, never drained) is delivered
     by the NEXT run's drain — recoverability the old gate-on-published
@@ -703,15 +692,14 @@ def test_cli_webhook_outbox_end_to_end(spark, tmp_path, capsys, monkeypatch):
     monkeypatch.setattr(
         cli,
         "WebhookSink",
-        lambda url, **kw: real_sink(url=url, poster=poster, **kw),
+        lambda url, **kw: real_sink(url=url, **{**kw, "poster": poster}),
     )
 
     csv = _write_fixture(tmp_path)
     lake = str(tmp_path / "lake")
     hook = "http://example.invalid/hook"
     assert cli.main(
-        ["process-csv", csv, "--lake", lake, "--transactional-lake",
-         "--webhook", hook]
+        ["process-csv", csv, "--lake", lake, "--webhook", hook]
     ) == 0
     delivered = set(_os.listdir(store))
     assert len(delivered) == 2  # INV1, INV2
@@ -719,8 +707,7 @@ def test_cli_webhook_outbox_end_to_end(spark, tmp_path, capsys, monkeypatch):
 
     # replay: publishes nothing, sends nothing
     assert cli.main(
-        ["process-csv", csv, "--lake", lake, "--transactional-lake",
-         "--webhook", hook]
+        ["process-csv", csv, "--lake", lake, "--webhook", hook]
     ) == 0
     assert set(_os.listdir(store)) == delivered
 
@@ -739,8 +726,7 @@ def test_cli_webhook_outbox_end_to_end(spark, tmp_path, capsys, monkeypatch):
     other = tmp_path / "other.csv"
     other.write_text(HEADER + "\n" + ROWS[0] + "\n")
     assert cli.main(
-        ["process-csv", str(other), "--lake", lake, "--transactional-lake",
-         "--webhook", hook]
+        ["process-csv", str(other), "--lake", lake, "--webhook", hook]
     ) == 0
     assert mf.dataset_segments(lake, _OUTBOX_DS) == []  # all drained
     # orphan's 2 docs + other.csv's 1 doc joined the receiver store

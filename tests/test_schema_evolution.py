@@ -188,19 +188,6 @@ def test_pre_record_lake_adopts_incoming_schema(spark, tmp_path):
     assert "schema" in mf.get_dataset_meta(lake, _RECEIPTS_DS)
 
 
-def test_plain_lake_is_out_of_scope(spark, tmp_path):
-    """Schema records are a transactional feature: a plain directory
-    lake has no manifest to carry the contract, and Spark's plain
-    multi-file read resolves one footer's schema anyway — evolution
-    there means migrating to a transactional lake."""
-    lake = str(tmp_path / "plain")
-    write_receipts_parquet(_base(spark), lake, transactional=False)
-    # no error, no record — documented plain-lake behavior
-    write_receipts_parquet(
-        _with_channel(spark), lake, transactional=False
-    )
-
-
 def test_racing_evolvers_cannot_fork_a_type_under_the_lock(
     spark, tmp_path, monkeypatch
 ):

@@ -11,6 +11,7 @@ import urllib.request
 
 import pytest
 
+from fintech_etl_spark.sinks import read_receipts
 from tests.test_receipts_pipeline import HEADER, ROWS
 
 CSV_BODY = (HEADER + "\n" + "\n".join(ROWS) + "\n").encode()
@@ -108,7 +109,7 @@ def test_ingest_lands_and_processes(service, spark, tmp_path):
     manifest = spark.read.parquet(str(landing / "_manifest"))
     assert manifest.count() == 1
     # the receipt lake holds the processed docs
-    lake = spark.read.parquet(str(tmp_path / "lake"))
+    lake = read_receipts(spark, str(tmp_path / "lake"))
     assert sorted(r.receipt_id for r in lake.collect()) == ["INV1", "INV2"]
 
 
@@ -125,14 +126,16 @@ def test_list_pending_and_process_all(service, spark, tmp_path):
     status, body = _req(base + "/process-all-pending", "POST", b"")
     assert status == 200 and body["status"] == "accepted"
     svc.drain()  # background queue → deterministic assertion
-    lake = spark.read.parquet(str(tmp_path / "lake"))
+    lake = str(tmp_path / "lake")
     # both files processed through the same pipeline: 2 receipts each
-    assert lake.count() == 4
+    assert read_receipts(spark, lake).count() == 4
 
     status, body = _req(base + "/process-all-pending", "POST", b"")
     # files remain pending (no tombstoning in the facade) — re-accepted
     assert body["status"] == "accepted"
     svc.drain()
+    # ...but re-processing is exactly-once per source file: no new rows
+    assert read_receipts(spark, lake).count() == 4
 
 
 def test_process_csv_single(service, spark, tmp_path):
@@ -146,12 +149,61 @@ def test_process_csv_single(service, spark, tmp_path):
     )
     assert status == 200 and body["status"] == "accepted"
     svc.drain()
-    lake = spark.read.parquet(str(tmp_path / "lake"))
-    assert lake.count() == 2
+    assert read_receipts(spark, str(tmp_path / "lake")).count() == 2
 
     with pytest.raises(urllib.error.HTTPError) as exc:
         _req(base + "/process-csv", "POST", b"not json", {})
     assert exc.value.code == 400
+
+
+def test_process_csv_twice_posts_each_document_once(spark, tmp_path):
+    """With a lake and a webhook, the service delivers through the
+    lake's outbox and delivery ledger: /process-csv sent twice for the
+    same file adds its rows once and posts each document once. Poster
+    calls cross the executor boundary via the filesystem: one file per
+    call, so a second post of a document_id is visible."""
+    import os
+    import uuid
+
+    from fintech_etl_spark.service import EtlHttpService
+
+    hooks = tmp_path / "hooks"
+    hooks.mkdir()
+
+    def poster(url, body, headers, _dir=str(hooks)):
+        doc = json.loads(body)
+        name = f"{doc['document_id']}.{uuid.uuid4().hex}"
+        with open(os.path.join(_dir, name), "w") as f:
+            f.write(body.decode())
+        return 200
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    csv = landing / "solo.csv"
+    csv.write_bytes(CSV_BODY)
+    lake = str(tmp_path / "lake")
+    svc = EtlHttpService(
+        spark,
+        landing_dir=str(landing),
+        lake_dir=lake,
+        webhook_url="http://configured.invalid/hook",
+        webhook_poster=poster,
+    )
+    base = f"http://127.0.0.1:{svc.start()}"
+    try:
+        for _ in range(2):
+            status, body = _req(
+                base + "/process-csv", "POST",
+                json.dumps({"path": str(csv)}).encode(),
+                {"Content-Type": "application/json"},
+            )
+            assert status == 200 and body["status"] == "accepted"
+            svc.drain()
+    finally:
+        svc.shutdown()
+    posted = [name.rsplit(".", 1)[0] for name in os.listdir(hooks)]
+    assert len(posted) == 2 and len(set(posted)) == 2
+    assert read_receipts(spark, lake).count() == 2
 
 
 def test_test_webhook_endpoint(spark, tmp_path):

@@ -30,7 +30,7 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
     out = str(tmp_path / "receipts_out")
     (landing / "a.csv").write_text(HEADER + "\n" + "\n".join(ROWS[:3]) + "\n")
 
-    from fintech_etl_spark.sinks import write_receipts_parquet
+    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
     from fintech_etl_spark.streaming import start_invoice_stream
 
     def on_receipts(receipts, batch_id):
@@ -40,7 +40,7 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
         spark, str(landing), ckpt, on_receipts, run_date=RUN_DATE, run_ts=1
     )
     q.awaitTermination()
-    first = spark.read.parquet(out).collect()
+    first = read_receipts(spark, out).collect()
     assert [r.receipt_id for r in first] == ["INV2"]
     assert first[0].item_count == 3
 
@@ -52,7 +52,7 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
         spark, str(landing), ckpt, on_receipts, run_date=RUN_DATE, run_ts=1
     )
     q2.awaitTermination()
-    rows = spark.read.parquet(out).collect()
+    rows = read_receipts(spark, out).collect()
     ids = sorted(r.receipt_id for r in rows)
     assert ids == ["INV1", "INV2"]  # INV2 exactly once
 
@@ -196,8 +196,10 @@ def test_landing_sink_object_names(spark, tmp_path):
 
 def test_cli_backfill_and_list(spark, tmp_path, capsys, monkeypatch):
     """Drive the CLI surface end-to-end (§2.7): backfill a landing dir
-    into the receipt lake, then list pending objects."""
+    into the receipt lake — twice, and the second run adds nothing
+    (exactly-once per source file) — then list pending objects."""
     from fintech_etl_spark import cli
+    from fintech_etl_spark.sinks import read_receipts
 
     landing = tmp_path / "raw"
     landing.mkdir()
@@ -207,11 +209,12 @@ def test_cli_backfill_and_list(spark, tmp_path, capsys, monkeypatch):
 
     # reuse the test session instead of building a second one
     monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
-    rc = cli.main(["backfill", "--landing", str(landing), "--lake", lake])
-    assert rc == 0
-    assert "backfilled 2 receipts" in capsys.readouterr().out
-    lake_df = spark.read.parquet(lake)
-    assert sorted(r.receipt_id for r in lake_df.collect()) == ["INV1", "INV2"]
+    for _ in range(2):
+        rc = cli.main(["backfill", "--landing", str(landing), "--lake", lake])
+        assert rc == 0
+        assert "backfilled 2 receipts" in capsys.readouterr().out
+        lake_df = read_receipts(spark, lake)
+        assert sorted(r.receipt_id for r in lake_df.collect()) == ["INV1", "INV2"]
 
     rc = cli.main(["list-pending", "--landing", str(landing)])
     out = capsys.readouterr().out
@@ -344,7 +347,7 @@ def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
     """Reference parity: each file is an independent processing unit, so
     the same invoice number in two files in ONE micro-batch must emit
     two receipts."""
-    from fintech_etl_spark.sinks import write_receipts_parquet
+    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
     from fintech_etl_spark.streaming import start_invoice_stream
 
     landing = tmp_path / "landing"
@@ -362,7 +365,7 @@ def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
         run_ts=1,
     )
     q.awaitTermination()
-    rows = spark.read.parquet(out).collect()
+    rows = read_receipts(spark, out).collect()
     assert len(rows) == 2
     assert {r.receipt_id for r in rows} == {"INV2"}
     assert {r.item_count for r in rows} == {1}
@@ -1018,6 +1021,7 @@ def test_cli_stream_with_pubsub(spark, tmp_path, capsys, monkeypatch):
     full advertised pipeline — landing CSVs → receipt lake AND
     ledger-gated Pub/Sub events — without cloud dependencies."""
     from fintech_etl_spark import cli
+    from fintech_etl_spark.sinks import read_receipts
     from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator
 
     landing = tmp_path / "raw"
@@ -1042,7 +1046,7 @@ def test_cli_stream_with_pubsub(spark, tmp_path, capsys, monkeypatch):
     )
     assert msgs == ["INV1", "INV2"]
     assert sorted(
-        r.receipt_id for r in spark.read.parquet(lake).collect()
+        r.receipt_id for r in read_receipts(spark, lake).collect()
     ) == ["INV1", "INV2"]
 
 

@@ -112,7 +112,6 @@ def main() -> int:
             F.date_format("transaction_date", "yyyy-MM") == months[0]
         ),
         lake,
-        transactional=True,
         batch_key=f"month-{months[0]}",
     )
     t_r = threading.Thread(target=reader)

@@ -76,9 +76,7 @@ def main() -> int:
             F.date_format("transaction_date", "yyyy-MM") == m
         )
         t0 = time.time()
-        write_receipts_parquet(
-            batch, lake, transactional=True, batch_key=f"month-{m}"
-        )
+        write_receipts_parquet(batch, lake, batch_key=f"month-{m}")
         commit_walls.append(time.time() - t0)
 
     def med(xs):

@@ -96,9 +96,7 @@ def main() -> int:
         batch = receipts.filter(
             F.date_format("transaction_date", "yyyy-MM") == m
         )
-        write_receipts_parquet(
-            batch, lake, transactional=True, batch_key=f"month-{m}"
-        )
+        write_receipts_parquet(batch, lake, batch_key=f"month-{m}")
         versions_by_batch[i + 1] = mf.current(lake)["version"]
 
     v_mid = versions_by_batch[N_MONTHS // 2]
