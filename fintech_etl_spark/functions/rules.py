@@ -319,15 +319,6 @@ def landing_object_name(
     )
 
 
-def extract_email_id(gcs_path: ColumnOrName) -> Column:
-    """Second ``_``-separated part of the path's filename; < 2 parts →
-    'unknown' (/root/reference/stream/processor.py:106-113, dead code in
-    the reference but kept for parity)."""
-    fname = F.element_at(F.split(_c(gcs_path), "/"), -1)
-    parts = F.split(fname, "_")
-    return F.when(F.size(parts) >= 2, parts.getItem(1)).otherwise("unknown")
-
-
 def source_file(
     gcs_bucket: str, gcs_path: ColumnOrName, google_drive_url: str | None = None
 ) -> Column:
@@ -350,7 +341,3 @@ def vendor_name(col: ColumnOrName) -> Column:
 
 def invoice_amount(col: ColumnOrName) -> Column:
     return safe_num(col, 0.0)
-
-
-def invoice_item_count(col: ColumnOrName) -> Column:
-    return safe_int(col, 0.0)

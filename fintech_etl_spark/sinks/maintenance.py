@@ -335,6 +335,8 @@ def compact_transactional(
     files_per_partition: int = 1,
     stats_cols: dict[str, list[str]] | None = None,
     lock=None,
+    *,
+    manifest: dict | None = None,
 ) -> dict:
     """Manifest-mode compaction (sinks/manifest.py): rewrite each
     dataset's committed segments into ONE fresh segment with the same
@@ -349,24 +351,44 @@ def compact_transactional(
     :func:`compact_partitioned` documents. The manifest's ingest
     dedup history is carried by the commit itself.
 
+    Every dataset's meta, segments and declared read schema
+    (:func:`~fintech_etl_spark.sinks.manifest.declared_schema`) come
+    from ONE manifest resolution — ``manifest`` when the caller already
+    resolved one, else ``current(root)`` — so a schema-evolving commit
+    landing mid-compaction cannot pair new segments with an old schema.
+    A dataset whose meta declares a schema is read with it: no
+    schema-inference job per input segment.
+
     ``stats_cols`` ({dataset: [col, ...]}) re-derives per-segment
     min/max manifest stats for the rewritten segment in the SAME
     commit — without it a compaction silently downgrades a
     stats-pruned dataset (the receipt lake's month range, any future
     client's key bounds) to must-scan: correct, but every ranged read
     loses its manifest-level skip until the next stats-bearing
-    commit. ``lock`` injects the manifest commit-lock provider — a
+    commit. Each stats column must be one of the dataset's partition
+    columns (``ValueError`` otherwise): its min/max are read from the
+    rewritten segment's ``col=value`` directory names and the row
+    count from its parquet footers, so nothing re-reads the data just
+    written. ``lock`` injects the manifest commit-lock provider — a
     CAS-locked dataset's compactor must serialize through the same
     store as its writers. Returns per-dataset {files_before,
     files_after, rows}."""
+    from fintech_etl_spark.operators.layout import _footer_rows
     from fintech_etl_spark.sinks import manifest as mfst
 
+    for name, cols in (stats_cols or {}).items():
+        if set(cols) - set(datasets.get(name, [])):
+            raise ValueError(
+                f"compact_transactional: stats_cols {cols} of {name!r} "
+                f"must be among its partition columns {datasets.get(name)}"
+            )
+    m = manifest if manifest is not None else mfst.current(root)
     stats: dict = {}
     add: dict[str, list[str]] = {}
     remove: dict[str, list[str]] = {}
     seg_stats: dict[str, dict] = {}
     for name, pcols in datasets.items():
-        meta = mfst.get_dataset_meta(root, name)
+        meta = (m.get("dataset_meta") or {}).get(name)
         if meta is not None and {"cols", "bits", "bounds"} <= set(meta):
             # a z-order layout: a plain rewrite preserves rows but
             # destroys the per-file curve clustering SILENTLY — every
@@ -378,43 +400,26 @@ def compact_transactional(
                 "operators.layout.zorder_compact, which re-clusters "
                 "along the curve instead of flattening it"
             )
-        segs = mfst.dataset_segments(root, name)
+        segs = [os.path.join(root, s) for s in m["datasets"].get(name, [])]
         if not segs:
             stats[name] = {"files_before": 0, "files_after": 0, "rows": 0}
             continue
         files_before = sum(_parquet_file_count(s) for s in segs)
         # flat-plan scan over a fragmented dataset (hundreds of ingest
         # segments between compactions) — see manifest.read_segments
-        df = mfst.read_segments(spark, segs)
+        df = mfst.read_segments(spark, segs, mfst.declared_schema(meta))
         out = _compaction_layout(df, pcols, files_per_partition, root)
         seg = mfst.new_segment_path(root)
         out.write.mode("overwrite").partitionBy(*pcols).parquet(seg)
         add[name] = [seg]
         remove[name] = segs
-        # ONE pass over the freshly written segment yields both the
-        # row count and the min/max stats — aggregating `out` here
-        # would lazily re-scan every OLD fragmented segment a second
-        # time just to recompute bounds the rewrite already touched
-        # (the r12 ADVICE finding); partition-column min/max resolves
-        # from directory values, not data
-        from pyspark.sql import functions as F
-
-        cols = (stats_cols or {}).get(name) or []
-        aggs = [F.count(F.lit(1)).alias("_rows_")]
-        aggs += [F.min(c).alias(f"lo_{c}") for c in cols]
-        aggs += [F.max(c).alias(f"hi_{c}") for c in cols]
-        agg = spark.read.parquet(seg).agg(*aggs).first()
-        per = {
-            c: [agg[f"lo_{c}"], agg[f"hi_{c}"]]
-            for c in cols
-            if agg[f"lo_{c}"] is not None
-        }
+        per = mfst.partition_bounds(seg, (stats_cols or {}).get(name) or [])
         if per:
             seg_stats[name] = {seg: per}
         stats[name] = {
             "files_before": files_before,
             "files_after": _parquet_file_count(seg),
-            "rows": agg["_rows_"],
+            "rows": _footer_rows(seg),
         }
     if add:
         # remove exactly what was read + add the rewrite — a CONCURRENT

@@ -100,6 +100,7 @@ import os
 import shutil
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -762,8 +763,56 @@ def dataset_segments_with_stats(
     ]
 
 
-def read_segments(spark: SparkSession, segs: list[str]) -> DataFrame:
-    """One scan over many segment dirs, with a FLAT plan either way:
+def declared_schema(meta: dict | None):
+    """The read schema a dataset's committed meta declares, or ``None``
+    when it declares none. The receipt lake records its user columns as
+    ``schema_struct`` (a ``StructType.jsonValue``) and its partitioning
+    as ``month_partitioned``; the derived ``transaction_month string``
+    partition column is appended when the flag is set, after dropping
+    any stale recorded copy so the column is never duplicated. A record
+    without ``schema_struct`` (written before nested evolution existed)
+    returns ``None``: its segments are read with inferred schemas."""
+    from pyspark.sql import types as T
+
+    rec = (meta or {}).get("schema_struct")
+    if rec is None:
+        return None
+    recorded = T.StructType.fromJson(rec).fields
+    fields = [f for f in recorded if f.name != "transaction_month"]
+    if meta.get("month_partitioned"):
+        fields.append(T.StructField("transaction_month", T.StringType()))
+    return T.StructType(fields)
+
+
+def partition_bounds(seg: str, cols: list[str]) -> dict[str, list[str]]:
+    """``{col: [min, max]}`` of a partitioned segment's ``col=value``
+    directory names: a driver listing, not a Spark job over the files.
+    Hive's null partition (``__HIVE_DEFAULT_PARTITION__``) is skipped,
+    matching a null-ignoring min/max. Values compare as the strings
+    Spark wrote, which is exact for string partition columns such as
+    the receipt lake's 'yyyy-MM' ``transaction_month``. A column with
+    no non-null partition is absent from the result."""
+    vals: dict[str, set[str]] = {c: set() for c in cols}
+    for _dirpath, dirs, _files in os.walk(seg):
+        for d in dirs:
+            col, eq, v = d.partition("=")
+            if eq and col in vals and v != "__HIVE_DEFAULT_PARTITION__":
+                vals[col].add(unquote(v))
+    return {c: [min(v), max(v)] for c, v in vals.items() if v}
+
+
+def read_segments(
+    spark: SparkSession, segs: list[str], schema=None
+) -> DataFrame:
+    """One scan over many segment dirs, with a FLAT plan either way.
+
+    ``schema`` (a ``StructType``, typically :func:`declared_schema` of
+    the same manifest the segments came from) is used for EVERY
+    per-segment scan, so building the DataFrame runs no
+    schema-inference job: 0 Spark jobs however many segments there
+    are. A segment written before a column or nested field was added
+    reads it as null. Without ``schema`` each segment's schema is
+    inferred, one job per segment.
 
     - UNPARTITIONED segments (no ``key=value`` subdirs) become ONE
       multi-path ``spark.read.parquet(*segs)`` — a single FileScan
@@ -775,13 +824,15 @@ def read_segments(spark: SparkSession, segs: list[str]) -> DataFrame:
       (CombineUnions) into ONE Union node of N partition-pruned scans:
       O(1) plan depth, O(segments) width, pruning intact per segment.
 
-    Schema drift across segments (an old segment written before a
-    column was added) also routes to the union path with
-    ``allowMissingColumns`` — the multi-path read would silently
-    resolve one segment's schema for all. Plan shapes pinned by the
-    50-segment tests in tests/test_manifest.py."""
+    The union path is also taken WITHOUT a declared schema when the
+    inferred schemas drift across segments (an old segment written
+    before a column was added), with ``allowMissingColumns`` — the
+    multi-path read would silently resolve one segment's schema for
+    all. Plan shapes pinned by the 50-segment tests in
+    tests/test_manifest.py."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if len(segs) == 1:
-        return spark.read.parquet(segs[0])
+        return reader.parquet(segs[0])
 
     def _partitioned(seg: str) -> bool:
         try:
@@ -793,16 +844,17 @@ def read_segments(spark: SparkSession, segs: list[str]) -> DataFrame:
         except OSError:
             return False
 
-    dfs = [spark.read.parquet(s) for s in segs]
+    dfs = [reader.parquet(s) for s in segs]
     # FULL schema equality (simpleString covers nested struct/array
     # fields), not just top-level names: two segments with the same
     # columns but drifted NESTED fields (the receipt lake's nested
     # schema evolution) must take the union-by-name path — the
     # multi-path read would silently resolve one segment's nested
-    # shape for all and drop the evolved fields
+    # shape for all and drop the evolved fields. Under a declared
+    # schema every segment's schema is that one
     fields = {d.schema.simpleString() for d in dfs}
-    if len(fields) == 1 and not _partitioned(segs[0]):
-        return spark.read.parquet(*segs)
+    if len(fields) == 1 and not any(map(_partitioned, segs)):
+        return reader.parquet(*segs)
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)

@@ -145,9 +145,9 @@ def _validate_schema_against(
       array<struct> — → refused unless ``merge_schema=True`` (so a
       typo can't silently add one), then recorded as a widened
       schema. Old segments simply lack the column/field;
-      ``read_segments`` unions by name with ``allowMissingColumns``
-      so their rows read as null — no rewrite of committed data,
-      which is the entire point at 100 TB.
+      ``read_receipts`` scans every segment with the recorded schema
+      (``manifest.declared_schema``), so their rows read as null — no
+      rewrite of committed data, which is the entire point at 100 TB.
     - a batch MISSING committed columns is allowed (its rows read as
       null for those columns) — the record keeps them.
     - the contract covers the USER's columns only: the derived
@@ -609,22 +609,10 @@ def write_receipts_parquet(
         # transaction_month is the segment's PARTITION column, so its
         # per-segment min/max ARE the 'transaction_month=...' directory
         # names the write just created — a driver listing, not another
-        # Spark job over the freshly written files (the old read-back
-        # agg was one task per written file: 80 tasks to learn two
-        # directory names). Hive's null partition dir is skipped,
-        # matching the agg's null-ignoring min/max exactly.
-        months = sorted(
-            e.split("=", 1)[1]
-            for e in os.listdir(seg)
-            if e.startswith("transaction_month=")
-            and not e.endswith("__HIVE_DEFAULT_PARTITION__")
-        )
+        # Spark job over the freshly written files
+        months = mf.partition_bounds(seg, ["transaction_month"])
         if months:
-            kwargs["segment_stats"] = {
-                _RECEIPTS_DS: {
-                    seg: {"transaction_month": [months[0], months[-1]]}
-                }
-            }
+            kwargs["segment_stats"] = {_RECEIPTS_DS: {seg: months}}
     if mode == "overwrite":
         # the RECEIPTS dataset is replaced (that is what a rebuild
         # means) but the outbox segment is still an ADD: pending
@@ -826,7 +814,8 @@ def compact_receipts_lake(
     Returns {files_before, files_after, rows}."""
     from fintech_etl_spark.sinks.maintenance import compact_transactional
 
-    meta = mf.get_dataset_meta(path, _RECEIPTS_DS) or {}
+    m = mf.current(path)
+    meta = (m.get("dataset_meta") or {}).get(_RECEIPTS_DS) or {}
     monthly = meta.get("month_partitioned")
     if monthly is None:
         # pre-flag lake: infer from the committed schema record the
@@ -843,6 +832,7 @@ def compact_receipts_lake(
         files_per_partition=files_per_partition,
         stats_cols={_RECEIPTS_DS: cols},
         lock=lock,
+        manifest=m,
     )[_RECEIPTS_DS]
 
 
@@ -896,48 +886,44 @@ def read_receipts(
     month pruning then uses THAT version's segment stats. ``lock``
     names the lake's lock provider so a CAS-locked lake's phantom
     versions disambiguate via the store's claim ledger (see
-    ``manifest.manifest_at``)."""
+    ``manifest.manifest_at``).
+
+    The segments, their month stats and the schema every segment is
+    scanned with come from ONE manifest resolution (``current`` or
+    ``manifest_at``), so a commit landing mid-call can never pair one
+    version's segments with another's columns, and building the
+    DataFrame runs no Spark job."""
     if not mf.is_transactional(path):
         raise ValueError(
             f"read_receipts: {path!r} is not a receipt lake (no "
             "_manifests/_current pointer) — write it with "
             "write_receipts_parquet"
         )
-    lo = hi = None
-    if months is not None:
-        lo, hi = months
-    if version is not None:
-        m = mf.manifest_at(path, version, lock=lock)
-        st_by_seg = (m.get("segment_stats") or {}).get(_RECEIPTS_DS, {})
-        rels = m["datasets"].get(_RECEIPTS_DS, [])
-        if not rels:
-            raise ValueError(
-                f"read_receipts: version {version} of {path!r} holds "
-                f"no {_RECEIPTS_DS!r} segments"
-            )
-        pairs = [(os.path.join(path, r), st_by_seg.get(r)) for r in rels]
-    else:
-        pairs = mf.dataset_segments_with_stats(path, _RECEIPTS_DS)
-        if not pairs:
-            raise ValueError(
-                f"read_receipts: {path!r} is manifest-backed but its "
-                f"live manifest names no {_RECEIPTS_DS!r} segments"
-            )
-    segs = [p for p, _ in pairs]
-    if months is not None:
-        kept = [
-            p
-            for p, st in pairs
-            if st is None
-            or "transaction_month" not in st
-            or (st["transaction_month"][0] <= hi
-                and st["transaction_month"][1] >= lo)
-        ]
-        if not kept:
-            # schema-only scan of one segment, always-false filter
-            return mf.read_segments(spark, segs[:1]).filter(F.lit(False))
-        segs = kept
-    df = mf.read_segments(spark, segs)
-    if months is not None:
-        df = _apply_month_filter(df, lo, hi)
-    return df
+    m = (
+        mf.current(path)
+        if version is None
+        else mf.manifest_at(path, version, lock=lock)
+    )
+    rels = m["datasets"].get(_RECEIPTS_DS, [])
+    if not rels:
+        raise ValueError(
+            f"read_receipts: version {m['version']} of {path!r} names "
+            f"no {_RECEIPTS_DS!r} segments"
+        )
+    schema = mf.declared_schema(
+        (m.get("dataset_meta") or {}).get(_RECEIPTS_DS)
+    )
+    if months is None:
+        segs = [os.path.join(path, r) for r in rels]
+        return mf.read_segments(spark, segs, schema)
+    lo, hi = months
+    stats = (m.get("segment_stats") or {}).get(_RECEIPTS_DS, {})
+    span = {r: (stats.get(r) or {}).get("transaction_month") for r in rels}
+    kept = [
+        r for r in rels
+        if span[r] is None or (span[r][0] <= hi and span[r][1] >= lo)
+    ]
+    # no segment in range: a schema-only scan of one, always-false filter
+    segs = [os.path.join(path, r) for r in (kept or rels[:1])]
+    df = mf.read_segments(spark, segs, schema)
+    return _apply_month_filter(df, lo, hi) if kept else df.filter(F.lit(False))

@@ -892,6 +892,75 @@ def test_outbox_drain_is_constant_jobs_in_pending_segments(spark, tmp_path):
     assert jr <= 3, jr
 
 
+def _counted(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by job group."""
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{_uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _segmented_lake(spark, lake, n_segments):
+    """A month-partitioned lake of ``n_segments`` committed batches of
+    3 receipts each, batch i dated in month 1 + i % 6 of 2024."""
+    from fintech_etl_spark.sinks import write_receipts_parquet
+
+    for i in range(n_segments):
+        batch = spark.createDataFrame(
+            [
+                (f"R{i}-{j}", dt.date(2024, 1 + i % 6, 1 + j), float(j))
+                for j in range(3)
+            ],
+            "receipt_id string, transaction_date date, total_amount double",
+        )
+        write_receipts_parquet(batch, lake, batch_key=f"b{i}")
+
+
+def test_read_receipts_builds_its_scan_with_no_job(spark, tmp_path):
+    """Every segment is scanned with the schema the manifest records,
+    so constructing ``read_receipts`` runs no schema-inference job:
+    0 jobs at 2 segments and at 6, with and without ``months=``."""
+    from fintech_etl_spark.sinks import read_receipts
+
+    for n in (2, 6):
+        lake = str(tmp_path / f"lake_read_{n}")
+        _segmented_lake(spark, lake, n)
+        df, jobs = _counted(spark, lambda: read_receipts(spark, lake))
+        assert jobs == 0, (n, jobs)
+        assert df.count() == 3 * n
+        ranged, jobs = _counted(
+            spark,
+            lambda: read_receipts(spark, lake, months=("2024-02", "2024-03")),
+        )
+        assert jobs == 0, (n, jobs)
+        assert ranged.count() == 3 * len(
+            [i for i in range(n) if 1 + i % 6 in (2, 3)]
+        )
+
+
+def test_compaction_is_constant_jobs_in_segments(spark, tmp_path):
+    """Compaction reads its input with the recorded schema and takes
+    its row count and month range from the written segment's footers
+    and directory names: the same job count at 2 and 6 segments, and
+    at most 2 (the rewrite's shuffle and its write)."""
+    from fintech_etl_spark.sinks.receipts import compact_receipts_lake
+
+    jobs = {}
+    for n in (2, 6):
+        lake = str(tmp_path / f"lake_compact_{n}")
+        _segmented_lake(spark, lake, n)
+        res, jobs[n] = _counted(spark, lambda: compact_receipts_lake(spark, lake))
+        assert res["rows"] == 3 * n
+    assert jobs[2] == jobs[6], jobs
+    assert jobs[2] <= 2, jobs
+
+
 def test_delivery_accounting_matches_ledger_and_posts(spark, tmp_path):
     """The per-batch counts come from an accumulator inside the one
     delivery action, so pin them to what happened on disk and on the

@@ -294,6 +294,162 @@ def test_flat_lake_compaction_works(spark, tmp_path):
     assert mf.fsck(lake)["ok"]
 
 
+def _null_date_batch(spark):
+    """One receipt with a null transaction_date: it lands in Hive's
+    default partition on a month-partitioned lake."""
+    return _frame(
+        spark,
+        [(90, None, 9.0)],
+        "receipt_id long, transaction_date date, total_amount double",
+    )
+
+
+def test_compaction_stats_equal_an_explicit_aggregate(spark, tmp_path):
+    """Compaction takes ``rows`` from the rewritten segment's footers
+    and its month range from the ``transaction_month=`` directory
+    names. Both must equal an explicit count/min/max over that
+    segment, with a null-month row in Hive's default partition; a flat
+    lake gets the same row count and no stats."""
+    import os
+
+    from fintech_etl_spark.sinks.maintenance import compact_transactional
+
+    def explicit(seg, monthly):
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if monthly:
+            aggs += [
+                F.min("transaction_month").alias("lo"),
+                F.max("transaction_month").alias("hi"),
+            ]
+        return spark.read.parquet(seg).agg(*aggs).first()
+
+    monthly = str(tmp_path / "monthly")
+    write_receipts_parquet(_base(spark, month=1), monthly, transactional=True)
+    write_receipts_parquet(_null_date_batch(spark), monthly)
+    write_receipts_parquet(_base(spark, month=3), monthly)
+    res = compact_receipts_lake(spark, monthly)
+    ((seg, st),) = mf.dataset_segments_with_stats(monthly, _RECEIPTS_DS)
+    assert any(
+        d.endswith("__HIVE_DEFAULT_PARTITION__") for d in os.listdir(seg)
+    )
+    agg = explicit(seg, True)
+    assert res["rows"] == agg.n == 9
+    assert st == {"transaction_month": [agg.lo, agg.hi]}
+    assert st["transaction_month"] == ["2024-01", "2024-03"]
+
+    flat = str(tmp_path / "flat")
+    write_receipts_parquet(
+        _base(spark), flat, transactional=True, partition_by_month=False
+    )
+    write_receipts_parquet(
+        _null_date_batch(spark), flat, partition_by_month=False
+    )
+    res = compact_receipts_lake(spark, flat)
+    ((seg, st),) = mf.dataset_segments_with_stats(flat, _RECEIPTS_DS)
+    assert res["rows"] == explicit(seg, False).n == 5
+    assert st is None
+
+    # a stats column that is not a partition column is refused before
+    # anything is staged
+    version = mf.current(monthly)["version"]
+    staged = set(os.listdir(os.path.join(monthly, "segments")))
+    with pytest.raises(ValueError, match="partition columns"):
+        compact_transactional(
+            spark,
+            monthly,
+            {_RECEIPTS_DS: ["transaction_month"]},
+            stats_cols={_RECEIPTS_DS: ["total_amount"]},
+        )
+    assert mf.current(monthly)["version"] == version
+    assert set(os.listdir(os.path.join(monthly, "segments"))) == staged
+
+
+def test_pre_r15_record_reads_and_compacts_to_the_same_rows(
+    spark, tmp_path
+):
+    """A record without ``schema_struct`` declares no read schema: the
+    lake is read with inferred schemas, as before, and compacts to the
+    same rows."""
+    lake = str(tmp_path / "lake")
+    write_receipts_parquet(_base(spark, month=1), lake, transactional=True)
+    write_receipts_parquet(_with_channel(spark, month=2), lake, merge_schema=True)
+    meta = mf.get_dataset_meta(lake, _RECEIPTS_DS)
+    flat = {k: v for k, v in meta.items() if k != "schema_struct"}
+    mf.commit(lake, dataset_meta={_RECEIPTS_DS: flat})
+
+    def rows():
+        return sorted(
+            (r.receipt_id, r.total_amount, r.channel, r.transaction_month)
+            for r in read_receipts(spark, lake).collect()
+        )
+
+    before = rows()
+    assert len(before) == 8
+    res = compact_receipts_lake(spark, lake)
+    assert res["rows"] == 8
+    assert rows() == before
+    assert "schema_struct" not in mf.get_dataset_meta(lake, _RECEIPTS_DS)
+
+
+def test_read_and_compaction_resolve_the_manifest_once(
+    spark, tmp_path, monkeypatch
+):
+    """A ``merge_schema=True`` batch adding ``channel`` commits right
+    after the first ``manifest.current`` call returns. ``read_receipts``
+    must still return one version whole (the old rows and columns, or
+    the new ones), and a compaction must not drop the new column's
+    values from the batch it carries forward."""
+    real_current = mf.current
+
+    def arm(lake):
+        fired = []
+
+        def current(root):
+            m = real_current(root)
+            if not fired:
+                fired.append(True)
+                write_receipts_parquet(
+                    _with_channel(spark), lake, merge_schema=True
+                )
+            return m
+
+        monkeypatch.setattr(mf, "current", current)
+        return fired
+
+    lake = str(tmp_path / "read")
+    write_receipts_parquet(_base(spark), lake, transactional=True)
+    old = read_receipts(spark, lake)
+    old_version = (set(old.columns), {r.receipt_id for r in old.collect()})
+    fired = arm(lake)
+    df = read_receipts(spark, lake)
+    got = (set(df.columns), {r.receipt_id for r in df.collect()})
+    monkeypatch.setattr(mf, "current", real_current)
+    assert fired
+    new = read_receipts(spark, lake)
+    new_version = (set(new.columns), {r.receipt_id for r in new.collect()})
+    assert "channel" in new_version[0] and "channel" not in old_version[0]
+    assert got in (old_version, new_version), got
+
+    lake = str(tmp_path / "compact")
+    write_receipts_parquet(_base(spark, month=1), lake, transactional=True)
+    write_receipts_parquet(
+        _base(spark, month=3).withColumn("receipt_id", F.col("receipt_id") + 10),
+        lake,
+    )
+    fired = arm(lake)
+    res = compact_receipts_lake(spark, lake)
+    monkeypatch.setattr(mf, "current", real_current)
+    assert fired
+    channel = {
+        r.receipt_id: r.channel for r in read_receipts(spark, lake).collect()
+    }
+    assert len(channel) == 12
+    assert {k: v for k, v in channel.items() if k >= 100} == {
+        100 + i: f"web-{i}" for i in range(4)
+    }
+    assert res["rows"] == 8  # the compaction rewrote the two old batches
+
+
 def test_meta_fn_returning_non_dict_is_refused_not_poisoning(tmp_path):
     """A dataset_meta_fn with a missing return would otherwise write
     dataset_meta: null and crash every FUTURE commit's carry-forward,
