@@ -163,14 +163,6 @@ def main(argv: list[str] | None = None) -> int:
         help="IVF coarse cells (default: auto ⌈N/512⌉ so probe cost "
         "stays flat as the corpus grows)",
     )
-    ib.add_argument(
-        "--transactional",
-        action="store_true",
-        help="manifest-backed index (atomic pointer commits): ingest "
-        "becomes exactly-once per source file and compaction becomes "
-        "a race-free snapshot swap; append/ingest/compact/serve "
-        "auto-detect the mode",
-    )
 
     ia = sub.add_parser(
         "index-append",
@@ -191,10 +183,8 @@ def main(argv: list[str] | None = None) -> int:
         "ingest-vectors",
         help="checkpointed streaming ingest: watch a JSONL glob of new "
         "vectors and append each micro-batch into an existing index. "
-        "Crash-replay dedup is keyed per SOURCE FILE: exactly-once on "
-        "a manifest-backed index (file keys commit atomically with the "
-        "appended segment); at-least-once across the append-to-marker "
-        "window on a plain directory index",
+        "Crash-replay dedup is keyed per SOURCE FILE: exactly-once "
+        "(file keys commit atomically with the appended segment)",
     )
     iv.add_argument("kind", choices=("ivf-pq", "lsh"))
     iv.add_argument("--vectors-glob", required=True)
@@ -204,11 +194,8 @@ def main(argv: list[str] | None = None) -> int:
     ic = sub.add_parser(
         "index-compact",
         help="compact an index's partition dirs after appends (row "
-        "multiset preserved). Manifest-backed indexes (index-build "
-        "--transactional) swap snapshots atomically and may compact "
-        "WHILE serving; plain directories use a two-rename swap — run "
-        "those between serving drains (cron-style availableNow "
-        "serving makes the gap natural)",
+        "multiset preserved): one atomic snapshot-swap commit, safe "
+        "to run WHILE serving",
     )
     ic.add_argument("kind", choices=("ivf-pq", "lsh"))
     ic.add_argument("--index", required=True)
@@ -222,7 +209,7 @@ def main(argv: list[str] | None = None) -> int:
     ic.add_argument(
         "--vacuum-keep",
         type=int,
-        help="after a transactional compaction, garbage-collect "
+        help="after the compaction, garbage-collect "
         "segments not referenced by the newest N manifest versions "
         "(keep >= 2 while any scan may be in flight — the Delta "
         "VACUUM retention rule); omit to keep everything",
@@ -325,14 +312,6 @@ def main(argv: list[str] | None = None) -> int:
         "--cols", required=True, help="comma-separated z-order key columns"
     )
     lb.add_argument("--num-files", type=int, default=32)
-    lb.add_argument(
-        "--transactional",
-        action="store_true",
-        help="manifest-backed layout (atomic pointer commits): appends "
-        "stage invisible segments, re-clustering is a race-free "
-        "snapshot swap, streaming ingest becomes exactly-once per "
-        "source file; append/compact/read auto-detect the mode",
-    )
 
     la = sub.add_parser(
         "layout-append",
@@ -651,19 +630,13 @@ def main(argv: list[str] | None = None) -> int:
             from fintech_etl_spark.streaming.ann import build_ivf_pq_index
 
             counts = build_ivf_pq_index(
-                spark,
-                args.sf_dir,
-                args.index,
-                k=args.k_cells,
-                transactional=args.transactional,
+                spark, args.sf_dir, args.index, k=args.k_cells
             )
             print(json.dumps({"index": args.index, **counts}))
         else:
             from fintech_etl_spark.streaming.ann import build_lsh_index
 
-            n = build_lsh_index(
-                spark, args.sf_dir, args.index, transactional=args.transactional
-            )
+            n = build_lsh_index(spark, args.sf_dir, args.index)
             print(json.dumps({"index": args.index, "index_rows": n}))
     elif args.cmd == "index-append":
         new_vecs = spark.read.parquet(args.vectors)
@@ -720,7 +693,6 @@ def main(argv: list[str] | None = None) -> int:
             [c.strip() for c in args.cols.split(",") if c.strip()],
             args.path,
             num_files=args.num_files,
-            transactional=args.transactional,
         )
         print(json.dumps({"layout": args.path, "rows": n}))
     elif args.cmd == "layout-append":
@@ -865,20 +837,14 @@ def main(argv: list[str] | None = None) -> int:
             prune_segments,
             read_zorder_box,
         )
-        from fintech_etl_spark.sinks import manifest as mfst
 
         box: dict[str, tuple[int, int]] = {}
         for part in args.box.split(","):
             col, _, rng = part.strip().partition("=")
             lo, _, hi = rng.partition(":")
             box[col] = (int(lo), int(hi))
-        if mfst.is_transactional(args.path):
-            kept, total = prune_segments(args.path, box)
-            print(
-                json.dumps(
-                    {"segments_total": total, "segments_kept": len(kept)}
-                )
-            )
+        kept, total = prune_segments(args.path, box)
+        print(json.dumps({"segments_total": total, "segments_kept": len(kept)}))
         df = read_zorder_box(spark, args.path, box)
         if args.out:
             df.write.mode("overwrite").parquet(args.out)

@@ -15,21 +15,16 @@ integer math — ``(k − min) · (2^bits − 1) div (max − min)`` — then th
 scaled keys' bits interleave with shifts/masks. No UDFs, no doubles,
 no engine-specific rounding.
 
-Durability (r10 audit "What's missing #1", closed here): the layout
-family is the manifest layer's SECOND client. ``zorder_write(...,
-transactional=True)`` stages the clustered files as an immutable
-manifest segment and commits them together with the frozen curve
-bounds in ONE atomic pointer swap (``sinks/manifest.py``) — so a
+Durability: every layout is a manifest dataset (the manifest layer's
+SECOND client). ``zorder_write`` stages the clustered files as an
+immutable manifest segment and commits them together with the frozen
+curve bounds in ONE atomic pointer swap (``sinks/manifest.py``) — so a
 reader racing an append or re-cluster sees the old layout or the new
 one, never a partial batch, and the bounds can never be observed out
-of sync with the segments they cluster. Appends auto-detect the mode
-(:func:`fintech_etl_spark.sinks.manifest.is_transactional`), exactly
-like the ANN index lifecycle; ``zorder_compact`` re-clusters with the
-remove+add commit shape, so a concurrent append is carried forward,
-never lost. Plain-directory mode remains for throwaway layouts, with
-the ``_zbounds.json`` sidecar now written atomically (temp +
-``os.replace`` — a crash mid-write can no longer corrupt the frozen
-bounds).
+of sync with the segments they cluster. ``zorder_compact`` re-clusters
+with the remove+add commit shape, so a concurrent append is carried
+forward, never lost. A path without a manifest is refused with
+``ValueError``; it is never read as a plain parquet directory.
 
 The reference engine has no layout surface at all (CSV-in, JSON-out —
 /root/reference/stream/processor.py); this is lake-scale gap-fill,
@@ -38,9 +33,8 @@ same as the rest of the analytics registry.
 
 from __future__ import annotations
 
-import json
+import functools
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -51,7 +45,11 @@ from fintech_etl_spark.sources.tables import load_table
 #: curve resolution: 12 bits/key → a 4096×4096 grid, 24-bit z-values.
 _Z_BITS = 12
 
-#: the manifest dataset name a transactional layout lives under
+#: ``percentile_approx`` accuracy of the z-value cuts that split a
+#: layout into files (rank error ≤ 1/accuracy of the rows)
+_CUT_ACCURACY = 10_000
+
+#: the manifest dataset name a layout lives under
 _LAYOUT_DS = "layout"
 
 
@@ -146,18 +144,50 @@ def _freeze_bounds(df: DataFrame, cols: list[str], who: str) -> dict:
     return {c: (agg[f"lo_{c}"], agg[f"hi_{c}"]) for c in cols}
 
 
+@functools.lru_cache(maxsize=None)
+def _spread_keys(n: int) -> tuple[int, ...]:
+    """``keys[i]`` is a long that Spark's hash partitioning over ``n``
+    partitions — ``pmod(hash(key), n)``, the same in every session —
+    sends to partition ``i``, so ``repartition(n, keys[part])`` gives
+    every part a partition of its own (two parts sharing one would
+    become one file with the bounding box of both)."""
+    rows = (
+        SparkSession.active()
+        .range(64 * n)
+        .groupBy(F.pmod(F.hash("id"), F.lit(n)).alias("p"))
+        .agg(F.min("id").alias("k"))
+        .collect()
+    )
+    got = {r.p: r.k for r in rows}
+    return tuple(got[i] for i in range(n))
+
+
 def _cluster_write(
-    df: DataFrame, meta: dict, out_path: str, num_files: int, mode: str
+    df: DataFrame, meta: dict, out_path: str, num_files: int
 ) -> None:
     """The shared physical step: z-value against frozen ``meta``
-    bounds, range-partition + sort, drop, write ``num_files`` files."""
+    bounds, cut the z-range at its ``num_files``-quantiles, sort each
+    part by z and write it as one file into the fresh segment
+    ``out_path``. The cuts come from ``percentile_approx`` over the
+    data, not from ``repartitionByRange``'s boundary sample, which
+    Spark seeds with the session's RDD counter: the same rows give the
+    same files in any session, and on small inputs the cuts are exact.
+    An empty frame has no cuts and writes no rows."""
     bounds = {c: tuple(v) for c, v in meta["bounds"].items()}
     z = with_zvalue(df, meta["cols"], out="_z", bits=meta["bits"], bounds=bounds)
+    probs = [i / num_files for i in range(1, num_files)]
+    cuts = []
+    if probs:
+        cuts = z.agg(F.percentile_approx("_z", probs, _CUT_ACCURACY)).first()[0]
+    part = F.lit(0)
+    for c in cuts or []:
+        part = part + (F.col("_z") >= F.lit(int(c))).cast("int")
+    keys = F.array(*[F.lit(k).cast("long") for k in _spread_keys(num_files)])
     (
-        z.repartitionByRange(num_files, F.col("_z"))
+        z.repartition(num_files, F.element_at(keys, part + 1))
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(out_path)
     )
 
@@ -235,44 +265,19 @@ def _footer_bounds(root: str, cols: list[str]) -> dict | None:
     return out or None
 
 
-def _write_sidecar(path: str, meta: dict) -> None:
-    """Atomic ``_zbounds.json`` write: temp + ``os.replace``, so a
-    crash mid-write leaves the previous bounds intact instead of a
-    truncated JSON corrupting the layout's frozen curve (the r10
-    audit's half-state window)."""
-    final = os.path.join(path, "_zbounds.json")
-    tmp = os.path.join(path, f"_zbounds.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, final)
-
-
 def zorder_bounds(path: str) -> dict:
-    """The layout's frozen curve metadata ``{cols, bits, bounds}`` —
-    from the live manifest (transactional layouts: the same pointer
-    read that names the segments) or the ``_zbounds.json`` sidecar
-    (plain layouts). Loud when neither exists."""
-    if mf.is_transactional(path):
-        meta = mf.get_dataset_meta(path, _LAYOUT_DS)
-        if meta is None:
-            raise ValueError(
-                f"zorder_bounds: {path!r} is manifest-backed but its "
-                f"{_LAYOUT_DS!r} dataset carries no zbounds meta — not "
-                "a zorder_write layout"
-            )
-        return meta
-    sidecar = os.path.join(path, "_zbounds.json")
-    if not os.path.exists(sidecar):
+    """The layout's frozen curve metadata ``{cols, bits, bounds}``,
+    from the live manifest — the same pointer read that names the
+    segments. Loud when ``path`` has no manifest or its manifest is not
+    a zorder_write layout."""
+    meta = mf.get_dataset_meta(path, _LAYOUT_DS)
+    if meta is None:
         raise ValueError(
-            f"zorder_bounds: {path!r} has no _zbounds.json sidecar and "
-            "no manifest — the layout predates frozen-bounds support "
-            "(or is not a zorder_write layout); re-cluster it with "
-            "zorder_write once to record the curve bounds"
+            f"zorder_bounds: {path!r} is manifest-backed but its "
+            f"{_LAYOUT_DS!r} dataset carries no zbounds meta — not "
+            "a zorder_write layout"
         )
-    with open(sidecar) as fh:
-        return json.load(fh)
+    return meta
 
 
 def zorder_drift(path: str) -> dict:
@@ -312,15 +317,12 @@ def zorder_drift(path: str) -> dict:
     exactly there; any such column is listed in
     ``unassessed_columns`` and pins drift to 1.0 the same way. The
     state converges: a compaction rewrite commits stats for
-    everything it writes, after which drift is measured again.
-    Transactional layouts only — a plain directory keeps no
-    per-batch stats to assess without scanning."""
+    everything it writes, after which drift is measured again."""
     if not mf.is_transactional(path):
         raise ValueError(
             f"zorder_drift: {path!r} is not manifest-backed — drift is "
-            "computed from committed segment stats (zorder_write "
-            "transactional=True); scan-and-compare a plain layout "
-            "manually if you must"
+            "computed from committed segment stats; build the layout "
+            "with zorder_write"
         )
     meta = zorder_bounds(path)
     pairs = mf.dataset_segments_with_stats(path, _LAYOUT_DS)
@@ -420,8 +422,6 @@ def mark_compaction_due(
 
 def compaction_due(path: str) -> dict | None:
     """The live compaction-due marker, or None — one pointer read."""
-    if not mf.is_transactional(path):
-        return None
     m = mf.current(path)
     return ((m.get("dataset_meta") or {}).get(_MAINT_DS) or {}).get(
         "compaction_due"
@@ -483,49 +483,32 @@ def run_due_compaction(
 def read_zorder(
     spark: SparkSession, path: str, version: int | None = None, lock=None
 ) -> DataFrame:
-    """Scan a z-ordered layout. Transactional layouts resolve the
-    manifest pointer per call — an append or re-cluster landing
-    mid-stream is seen atomically at the next read, and a racing
-    reader can never observe a partial batch (the plain-directory
-    listing could). Plain layouts are a direct parquet read. Footer
-    pruning works identically in both: segments are just parquet
-    files, the manifest only names which ones are live.
+    """Scan a z-ordered layout. The manifest pointer is resolved per
+    call — an append or re-cluster landing mid-stream is seen
+    atomically at the next read, and a racing reader can never observe
+    a partial batch. Footer pruning works inside every segment:
+    segments are just parquet files, the manifest only names which
+    ones are live.
 
-    ``version`` time-travels a transactional layout to an earlier
-    committed snapshot (within the vacuum retention window) — the
-    manifest log makes this free: version-named immutable manifests +
-    superseded segments kept on disk until vacuum. Plain layouts have
-    no history to travel; passing a version there is loud. ``lock``
-    names the layout's lock provider so a CAS-locked layout's phantom
-    versions disambiguate via the store's claim ledger (see
-    ``manifest.manifest_at``)."""
-    if version is not None:
-        if not mf.is_transactional(path):
-            raise ValueError(
-                f"read_zorder: {path!r} is a plain directory — only "
-                "manifest-backed layouts keep the version history "
-                "time travel reads (zorder_write transactional=True)"
-            )
-        m = mf.manifest_at(path, version, lock=lock)
-        segs = [
-            os.path.join(path, s) for s in m["datasets"].get(_LAYOUT_DS, [])
-        ]
-        if not segs:
-            raise ValueError(
-                f"read_zorder: version {version} of {path!r} holds no "
-                f"{_LAYOUT_DS!r} segments"
-            )
-        return mf.read_segments(spark, segs)
-    if mf.is_transactional(path):
-        segs = mf.dataset_segments(path, _LAYOUT_DS)
-        if not segs:
-            raise ValueError(
-                f"read_zorder: {path!r} is manifest-backed but its "
-                f"live manifest names no {_LAYOUT_DS!r} segments — not "
-                "a zorder_write layout (or every segment was removed)"
-            )
-        return mf.read_segments(spark, segs)
-    return spark.read.parquet(path)
+    ``version`` time-travels the layout to an earlier committed
+    snapshot (within the vacuum retention window) — the manifest log
+    makes this free: version-named immutable manifests + superseded
+    segments kept on disk until vacuum. ``lock`` names the layout's
+    lock provider so a CAS-locked layout's phantom versions
+    disambiguate via the store's claim ledger (see
+    ``manifest.manifest_at``). A path without a manifest raises
+    ``ValueError``."""
+    m = mf.current(path) if version is None else mf.manifest_at(
+        path, version, lock=lock
+    )
+    segs = [os.path.join(path, s) for s in m["datasets"].get(_LAYOUT_DS, [])]
+    if not segs:
+        raise ValueError(
+            f"read_zorder: version {m['version']} of {path!r} names no "
+            f"{_LAYOUT_DS!r} segments — not a zorder_write layout (or "
+            "every segment was removed)"
+        )
+    return mf.read_segments(spark, segs)
 
 
 def prune_segments(
@@ -559,35 +542,32 @@ def read_zorder_box(
     spark: SparkSession, path: str, box: dict[str, tuple[int, int]]
 ) -> DataFrame:
     """Box-predicate scan of a z-ordered layout with every pruning
-    layer engaged: on a manifest-backed layout, segments are excluded
-    driver-side from the manifest's stats (:func:`prune_segments`),
-    then the box filter is pushed into the scan of the kept segments
-    (footer min/max skip files inside them). Plain layouts get the
-    filtered directory read (footer pruning only). Results are
-    EXACTLY the unpruned filter's — pinned by parity tests."""
+    layer engaged: segments are excluded driver-side from the
+    manifest's stats (:func:`prune_segments`), then the box filter is
+    pushed into the scan of the kept segments (footer min/max skip
+    files inside them). Results are EXACTLY the unpruned filter's —
+    pinned by parity tests. A path without a manifest raises
+    ``ValueError``."""
     filt = None
     for c, (lo, hi) in box.items():
         cond = F.col(c).between(lo, hi)
         filt = cond if filt is None else (filt & cond)
     if filt is None:
         raise ValueError("read_zorder_box: empty box")
-    if mf.is_transactional(path):
-        kept, _total = prune_segments(path, box)
-        if not kept:
-            # every segment excluded: scan nothing — one segment with
-            # an always-false filter keeps the schema without a
-            # hand-written DDL (footers of one segment, no row reads)
-            segs = mf.dataset_segments(path, _LAYOUT_DS)
-            if not segs:
-                raise ValueError(
-                    f"read_zorder_box: {path!r} is manifest-backed but "
-                    f"its live manifest names no {_LAYOUT_DS!r} segments "
-                    "— not a zorder_write layout (or every segment was "
-                    "removed)"
-                )
-            return mf.read_segments(spark, segs[:1]).filter(F.lit(False))
+    kept, _total = prune_segments(path, box)
+    if kept:
         return mf.read_segments(spark, kept).filter(filt)
-    return spark.read.parquet(path).filter(filt)
+    # every segment excluded: scan nothing — one segment with an
+    # always-false filter keeps the schema without a hand-written DDL
+    # (footers of one segment, no row reads)
+    segs = mf.dataset_segments(path, _LAYOUT_DS)
+    if not segs:
+        raise ValueError(
+            f"read_zorder_box: {path!r} is manifest-backed but its live "
+            f"manifest names no {_LAYOUT_DS!r} segments — not a "
+            "zorder_write layout (or every segment was removed)"
+        )
+    return mf.read_segments(spark, segs[:1]).filter(F.lit(False))
 
 
 def zorder_write(
@@ -596,72 +576,59 @@ def zorder_write(
     path: str,
     bits: int = _Z_BITS,
     num_files: int = 32,
-    transactional: bool | None = None,
     lock=None,
     bounds: dict[str, tuple[int, int]] | None = None,
 ) -> int:
     """Write ``df`` as ``num_files`` parquet files clustered along the
-    Morton curve of ``cols``: range-partition + sort on the z-value,
-    drop it, write. Each output file then covers a compact box of the
+    Morton curve of ``cols``: split the z-range at its quantiles, sort
+    each part on the z-value, drop it, write. Each output file then covers a compact box of the
     key space, so min/max stats prune it for predicates on ANY of the
     interleaved columns — pinned by the footer-stats pruning test in
     tests/test_layout.py and receipted at sf0.1
     (SCALE_RECEIPT_r09_zorder.json). Returns the row count.
 
-    ``transactional=True`` makes the layout a manifest-backed dataset:
-    the clustered files are staged as an immutable segment under
-    ``path/segments/`` and committed — segments AND frozen bounds —
-    in one atomic pointer swap, so readers racing this write (or any
-    later append/re-cluster) see a consistent snapshot. On an already
-    manifest-backed path a write is a full REBUILD: a ``replace``
-    commit swaps the whole segment list (superseded segments stay on
-    disk for in-flight readers until ``sinks.maintenance.vacuum``).
-    Like a transactional ANN rebuild, it defines the layout's entire
-    new content — don't run concurrent appends across one; their
-    segments would be dropped from the list (orphaned, vacuumed),
-    which is the rebuild contract, not a race. ``None`` auto-detects
-    (stay transactional once transactional — the ANN lifecycle rule).
+    The layout is a manifest dataset: the clustered files are staged
+    as an immutable segment under ``path/segments/`` and committed —
+    segments AND frozen bounds — in one atomic ``replace`` pointer
+    swap, so readers racing this write (or any later append/
+    re-cluster) see a consistent snapshot, and :func:`zorder_append`
+    clusters LATER batches against the same frozen curve. The first
+    write creates the manifest log; on an existing layout a write is a
+    full REBUILD (superseded segments stay on disk for in-flight
+    readers until ``sinks.manifest.vacuum``). Like an ANN rebuild, it
+    defines the layout's entire new content — don't run concurrent
+    appends across one; their segments would be dropped from the list
+    (orphaned, vacuumed), which is the rebuild contract, not a race.
 
-    Plain mode persists the scaling bounds in a ``_zbounds.json``
-    sidecar (underscore-prefixed — invisible to parquet reads),
-    written atomically, so :func:`zorder_append` can cluster LATER
-    batches against the same frozen curve.
-
-    ``lock`` injects the manifest commit-lock provider (transactional
-    only) — a layout whose other committers serialize through a
-    CAS/object-store lease must pass the SAME provider here, the
-    receipts-lake contract extended to the layout client (r15).
+    ``lock`` injects the manifest commit-lock provider — a layout
+    whose other committers serialize through a CAS/object-store lease
+    must pass the SAME provider here, the receipts-lake contract
+    extended to the layout client.
 
     ``bounds`` optionally passes pre-computed ``{col: (lo, hi)}``
     min/max to freeze (they MUST be the frame's true bounds — callers
     that already ran the identical min/max agg, like the box-query
     operators, skip the duplicate full-scan pass; anything else would
     clamp keys and corrupt the curve)."""
-    if transactional is None:
-        transactional = mf.is_transactional(path)
     if bounds is None:
         bounds = _freeze_bounds(df, cols, "zorder_write")
     meta = {"cols": cols, "bits": bits, "bounds": bounds}
-    if transactional:
-        seg = mf.new_segment_path(path)
-        _cluster_write(df, meta, seg, num_files, "overwrite")
-        mf.commit(
-            path,
-            replace={_LAYOUT_DS: [seg]},
-            dataset_meta={_LAYOUT_DS: meta},
-            # manifest-level stats: this segment holds the whole frame,
-            # so its min/max ARE the frozen bounds
-            segment_stats={
-                _LAYOUT_DS: {seg: {c: list(v) for c, v in bounds.items()}}
-            },
-            **({"lock": lock} if lock is not None else {}),
-        )
-        # the replace-commit makes this segment the ENTIRE layout, so
-        # its parquet footers carry the exact row count — no re-scan
-        return _footer_rows(seg)
-    _cluster_write(df, meta, path, num_files, "overwrite")
-    _write_sidecar(path, meta)
-    return _footer_rows(path)
+    seg = mf.new_segment_path(path)
+    _cluster_write(df, meta, seg, num_files)
+    mf.commit(
+        path,
+        replace={_LAYOUT_DS: [seg]},
+        dataset_meta={_LAYOUT_DS: meta},
+        # manifest-level stats: this segment holds the whole frame, so
+        # its min/max ARE the frozen bounds
+        segment_stats={
+            _LAYOUT_DS: {seg: {c: list(v) for c, v in bounds.items()}}
+        },
+        **({"lock": lock} if lock is not None else {}),
+    )
+    # the replace-commit makes this segment the ENTIRE layout, so its
+    # parquet footers carry the exact row count — no re-scan
+    return _footer_rows(seg)
 
 
 def zorder_append(
@@ -683,52 +650,37 @@ def zorder_append(
     stay prunable for in-range predicates; a periodic re-cluster
     refreshes the bounds — the same rhythm as index compaction).
 
-    On a manifest-backed layout the batch stages as a NEW segment and
-    lands via an ``add`` commit — invisible until the pointer swap, so
-    a reader mid-append sees the old layout or old+batch, never a
-    partial file listing (the half-state window the r10 audit charged
-    the plain-directory append with; that mode remains for throwaway
-    layouts and is exactly as atomic as a bare parquet append).
+    The batch stages as a NEW segment and lands via an ``add`` commit
+    — invisible until the pointer swap, so a reader mid-append sees
+    the old layout or old+batch, never a partial file listing.
     ``file_keys`` records source-file identities into the manifest's
     ingested history IN THE SAME COMMIT as the segment — the
-    exactly-once hook the streaming ingest rides (transactional
-    layouts only; the plain directory has no history to record into).
-    Returns appended row count."""
+    exactly-once hook the streaming ingest rides. A path without a
+    manifest raises ``ValueError``. Returns appended row count."""
     meta = zorder_bounds(path)
-    if mf.is_transactional(path):
-        seg = mf.new_segment_path(path)
-        _cluster_write(df, meta, seg, num_files, "overwrite")
-        # the batch's ACTUAL min/max (not the clamped curve bounds),
-        # read from the staged files' own parquet footers — no second
-        # pass over the batch. Fallback to the agg when footer stats
-        # are unusable; both paths raise on an all-NULL/empty batch,
-        # which could not be placed on the curve anyway (the staged
-        # segment is then an uncommitted orphan, reclaimed by vacuum)
-        batch_bounds = _footer_bounds(seg, meta["cols"])
-        if batch_bounds is None:
-            batch_bounds = _freeze_bounds(df, meta["cols"], "zorder_append")
-        mf.commit(
-            path,
-            add={_LAYOUT_DS: [seg]},
-            file_keys=file_keys,
-            segment_stats={
-                _LAYOUT_DS: {
-                    seg: {c: list(v) for c, v in batch_bounds.items()}
-                }
-            },
-            **({"lock": lock} if lock is not None else {}),
-        )
-        # footers of the staged segment == rows appended (exact), no
-        # recompute of the batch lineage just to return a count
-        return _footer_rows(seg)
-    if file_keys:
-        raise ValueError(
-            "zorder_append: file_keys needs a manifest-backed "
-            "layout (zorder_write transactional=True) — the plain "
-            "directory has no ingested history to record into"
-        )
-    _cluster_write(df, meta, path, num_files, "append")
-    return df.count()
+    seg = mf.new_segment_path(path)
+    _cluster_write(df, meta, seg, num_files)
+    # the batch's ACTUAL min/max (not the clamped curve bounds), read
+    # from the staged files' own parquet footers — no second pass over
+    # the batch. Fallback to the agg when footer stats are unusable;
+    # both paths raise on an all-NULL/empty batch, which could not be
+    # placed on the curve anyway (the staged segment is then an
+    # uncommitted orphan, reclaimed by vacuum)
+    batch_bounds = _footer_bounds(seg, meta["cols"])
+    if batch_bounds is None:
+        batch_bounds = _freeze_bounds(df, meta["cols"], "zorder_append")
+    mf.commit(
+        path,
+        add={_LAYOUT_DS: [seg]},
+        file_keys=file_keys,
+        segment_stats={
+            _LAYOUT_DS: {seg: {c: list(v) for c, v in batch_bounds.items()}}
+        },
+        **({"lock": lock} if lock is not None else {}),
+    )
+    # footers of the staged segment == rows appended (exact), no
+    # recompute of the batch lineage just to return a count
+    return _footer_rows(seg)
 
 
 def _stats_bounds(
@@ -797,8 +749,8 @@ def zorder_compact(
     layout re-freezes its curve bounds from the live data."""
     if not mf.is_transactional(path):
         raise ValueError(
-            f"zorder_compact: {path!r} is not manifest-backed — plain "
-            "layouts re-cluster with zorder_write(transactional=False)"
+            f"zorder_compact: {path!r} is not manifest-backed — build "
+            "the layout with zorder_write"
         )
     old_segs = mf.dataset_segments(path, _LAYOUT_DS)
     meta = zorder_bounds(path)
@@ -826,7 +778,7 @@ def zorder_compact(
     if refresh_bounds:
         meta = {"cols": meta["cols"], "bits": meta["bits"], "bounds": actual}
     seg = mf.new_segment_path(path)
-    _cluster_write(cur, meta, seg, num_files, "overwrite")
+    _cluster_write(cur, meta, seg, num_files)
     dm: dict[str, dict] = {_LAYOUT_DS: meta}
     if refresh_bounds:
         # a full bounds-refreshing compaction RESOLVES any pending
@@ -966,7 +918,8 @@ _ZQ_ORACLE = """
     _ZQ_ORACLE,
     doc=(
         "End-to-end Z-order scan: zorder_write materializes lineitem "
-        "as 32 parquet files clustered on the Morton curve of "
+        "as a single-commit manifest layout of 32 parquet files "
+        "clustered on the Morton curve of "
         "(l_partkey, l_suppkey), then a box predicate spanning the "
         "center quarter of BOTH key ranges is answered FROM THE "
         "Z-CLUSTERED LAYOUT — the read path a stats-aware scan prunes "
@@ -984,7 +937,7 @@ _ZQ_ORACLE = """
 )
 def layout_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    import os
+    import shutil
     import tempfile
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -993,13 +946,16 @@ def layout_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = _box_source_bounds(sf_dir, li)
     (p_lo, p_hi), (s_lo, s_hi) = _box_edges(bounds)
 
-    # materialize the clustered layout (idempotent overwrite, one path
-    # per sf_dir) and answer the box from IT, not from the source table
+    # materialize the clustered layout (a fresh single-commit layout,
+    # one path per sf_dir — wiped first so repeated calls do not pile
+    # up superseded segments) and answer the box from IT, not from the
+    # source table
     path = os.path.join(
         tempfile.gettempdir(),
         "fintech_etl_zbox_"
         + hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12],
     )
+    shutil.rmtree(path, ignore_errors=True)
     # the box agg above already computed the exact min/max — hand the
     # bounds to zorder_write so it skips its own identical agg pass
     zorder_write(
@@ -1026,11 +982,11 @@ def layout_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "layout_zorder_box_query_tx",
     _ZQ_ORACLE,
     doc=(
-        "The transactional twin of layout_zorder_box_query: the "
-        "z-clustered layout is MANIFEST-BACKED (zorder_write "
-        "transactional=True — clustered files staged as an immutable "
-        "segment, committed with the frozen curve bounds in one atomic "
-        "pointer swap, sinks/manifest.py), an incremental "
+        "The multi-commit twin of layout_zorder_box_query: the "
+        "z-clustered layout is built from 7/8 of the rows (zorder_write "
+        "— clustered files staged as an immutable segment, committed "
+        "with the frozen curve bounds in one atomic pointer swap, "
+        "sinks/manifest.py), an incremental "
         "zorder_append lands a second segment via an add commit, and "
         "the box is answered through read_zorder_box — manifest-level "
         "segment-stats pruning first (the Iceberg manifest-file-stats "
@@ -1069,9 +1025,7 @@ def layout_zorder_box_query_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     seed = li.filter(F.col("l_orderkey") % 8 != 0)
     batch = li.filter(F.col("l_orderkey") % 8 == 0)
-    zorder_write(
-        seed, ["l_partkey", "l_suppkey"], path, num_files=28, transactional=True
-    )
+    zorder_write(seed, ["l_partkey", "l_suppkey"], path, num_files=28)
     zorder_append(batch, path, num_files=4)
     # the box goes through read_zorder_box, so the driver's oracle gate
     # exercises ALL pruning layers every round: manifest segment stats
@@ -1167,10 +1121,7 @@ def layout_zorder_drift_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     shutil.rmtree(path, ignore_errors=True)
     seed = li.filter(F.col("l_orderkey") % 8 != 0)
-    zorder_write(
-        seed, ["l_partkey", "l_suppkey"], path, num_files=8,
-        transactional=True,
-    )
+    zorder_write(seed, ["l_partkey", "l_suppkey"], path, num_files=8)
     fb = zorder_bounds(path)["bounds"]
     shift_p = fb["l_partkey"][1] - fb["l_partkey"][0]
     shift_s = fb["l_suppkey"][1] - fb["l_suppkey"][0]

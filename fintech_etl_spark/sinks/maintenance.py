@@ -1,17 +1,16 @@
 """Lake maintenance: keyed upsert and small-file compaction.
 
-Plain-parquet equivalents of what a table format (Delta/Iceberg) gives
-you managed — included because a receipt lake fed by per-file
-micro-batches accumulates both duplicate keys (webhook retries,
-reprocessed files) and small files (one parquet per micro-batch), and
-at 100 TB both quietly dominate read cost.
+Equivalents of what a table format (Delta/Iceberg) gives you managed —
+included because a receipt lake fed by per-file micro-batches
+accumulates both duplicate keys (webhook retries, reprocessed files)
+and small files (one segment per micro-batch), and at 100 TB both
+quietly dominate read cost. Compaction of manifest datasets swaps
+snapshots with one atomic pointer commit (``sinks/manifest.py``).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -210,19 +209,14 @@ def expire_outbox_ledger(
     return sorted(removed)
 
 # ---------------------------------------------------------------------------
-# Partition-layout-preserving compaction (the ANN-index append lifecycle)
+# Partition-layout-preserving compaction of manifest datasets
 # ---------------------------------------------------------------------------
 # compact_parquet above rewrites an UNPARTITIONED directory to target-
-# sized files and leaves the swap to the caller. The functions below are
-# the partitionBy-layout twin used by the ANN index maintenance loop
-# (append_lsh_index / append_ivf_pq_index write batch-sized files into
-# partition dirs): hash-repartition on the partition keys -> exactly
-# files_per_partition files per dir, row multiset preserved, in-place
-# directory swap (two renames -- POSIX/HDFS atomicity; an object store
-# or concurrent readers want a table-format transaction instead, same
-# Spark plan, different commit protocol). Serving streams re-list the
-# index per micro-batch, so they pick the compacted layout up at the
-# next batch.
+# sized files and leaves the swap to the caller. compact_transactional
+# is the partitionBy-layout twin for manifest datasets (the ANN indexes'
+# append segments, the receipt lake's batch segments): hash-repartition
+# on the partition keys -> at most files_per_partition files per dir,
+# row multiset preserved, swapped in by one atomic pointer commit.
 
 def _parquet_file_count(root: str) -> int:
     n = 0
@@ -237,16 +231,13 @@ def _compaction_layout(
     files_per_partition: int,
     what: str,
 ) -> DataFrame:
-    """Shared rewrite shape for both compaction modes: hash-repartition
-    on the partition keys (plus a deterministic payload salt when more
-    than one file per partition dir is wanted) so the partitioned write
-    emits AT MOST ``files_per_partition`` files per dir."""
-    if not partition_cols:
-        # FLAT dataset (e.g. a receipts lake written with
-        # partition_by_month=False): no partition dirs to preserve —
-        # the rewrite just folds the fragments into
-        # ``files_per_partition`` files total
-        return df.repartition(files_per_partition)
+    """The rewrite shape of :func:`compact_transactional`:
+    hash-repartition on the partition keys (plus a deterministic
+    payload salt when more than one file per partition dir is wanted)
+    so the partitioned write emits AT MOST ``files_per_partition``
+    files per dir (the salt is a payload hash modulo the target, so
+    collisions — or partitions with fewer distinct payload rows than
+    the target — yield fewer files; the target is an upper bound)."""
     keys = [F.col(c) for c in partition_cols]
     payload = [c for c in df.columns if c not in partition_cols]
     if not payload:
@@ -273,61 +264,6 @@ def _compaction_layout(
     return df.repartition(*keys)
 
 
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    files_per_partition: int = 1,
-) -> dict:
-    """Compact a ``partitionBy(partition_cols)`` parquet dataset in
-    place to AT MOST ``files_per_partition`` files per partition dir
-    (the salt is a payload hash modulo the target, so collisions — or
-    partitions with fewer distinct payload rows than the target —
-    yield fewer files; the target is an upper bound, not an exact
-    count). Returns {files_before, files_after, rows}. Row multiset is
-    preserved bit-for-bit (pinned by tests/test_index_maintenance.py).
-    Underscore-prefixed entries directly under ``path`` (e.g. the
-    ``_ingest_ledger`` crash-replay markers, which parquet reads never
-    see) are carried into the compacted layout — compaction must not
-    erase the dedup history the ingest path relies on.
-
-    Concurrency caveat — the swap is two renames, NOT a transaction:
-    a reader that lists ``path`` in the instant between them sees no
-    dataset, and a reader that listed the old files can lose them to
-    the cleanup mid-scan. Run compaction when no query is in flight
-    (the serve streams' per-batch re-listing means the next batch
-    picks the new layout up; a batch racing the swap can fail and the
-    stream must be restarted). A crash between the renames leaves the
-    data in the ``.old-*`` dir — recovery is renaming it back. Both
-    windows are CLOSED by the manifest-backed mode: build the index
-    with ``transactional=True`` and :func:`compact_transactional`
-    swaps snapshots with one atomic pointer commit, safe to run WHILE
-    serving (tests/test_manifest.py pins the race)."""
-    files_before = _parquet_file_count(path)
-    df = spark.read.parquet(path)
-    out = _compaction_layout(df, partition_cols, files_per_partition, path)
-
-    tmp = f"{path.rstrip('/')}.compact-{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    rows = spark.read.parquet(tmp).count()
-
-    old = f"{path.rstrip('/')}.old-{uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    # carry underscore-prefixed metadata (ingest ledger markers, etc.)
-    # into the new layout BEFORE it becomes live: parquet reads ignore
-    # them, but the ingest path's crash-replay dedup depends on them
-    for entry in os.listdir(old):
-        if entry.startswith("_") and not os.path.exists(os.path.join(tmp, entry)):
-            shutil.move(os.path.join(old, entry), os.path.join(tmp, entry))
-    shutil.move(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": _parquet_file_count(path),
-        "rows": rows,
-    }
-
-
 def compact_transactional(
     spark: SparkSession,
     root: str,
@@ -347,9 +283,9 @@ def compact_transactional(
     until :func:`fintech_etl_spark.sinks.manifest.vacuum`), a scan
     after it sees only the compacted layout — so compaction can run
     CONCURRENTLY with serving (pinned by the race test in
-    tests/test_manifest.py), closing the directory-swap caveat
-    :func:`compact_partitioned` documents. The manifest's ingest
-    dedup history is carried by the commit itself.
+    tests/test_manifest.py). The manifest's ingest dedup history is
+    carried by the commit itself. Row multiset is preserved
+    bit-for-bit (pinned by tests/test_index_maintenance.py).
 
     Every dataset's meta, segments and declared read schema
     (:func:`~fintech_etl_spark.sinks.manifest.declared_schema`) come
@@ -438,40 +374,20 @@ def compact_transactional(
 
 
 def compact_lsh_index(spark: SparkSession, index_path: str, **kw) -> dict:
-    """Compact an LSH index's (band, bucket) partition layout.
-    Manifest-backed indexes take the transactional snapshot-swap path;
-    plain directories take the two-rename swap (run those between
-    serving drains — see :func:`compact_partitioned`)."""
-    from fintech_etl_spark.sinks import manifest as mfst
-
-    if mfst.is_transactional(index_path):
-        return compact_transactional(
-            spark, index_path, {"index": ["band", "bucket"]}, **kw
-        )["index"]
-    return compact_partitioned(spark, index_path, ["band", "bucket"], **kw)
+    """Compact an LSH index's (band, bucket) partition layout with one
+    snapshot-swap commit (safe WHILE serving)."""
+    return compact_transactional(
+        spark, index_path, {"index": ["band", "bucket"]}, **kw
+    )["index"]
 
 
 def compact_ivf_pq_index(spark: SparkSession, index_path: str, **kw) -> dict:
     """Compact an IVF-PQ index's per-cell codes and vectors datasets
-    (coarse/codebooks are single tiny files — never compacted). On a
-    manifest-backed index BOTH datasets swap in one atomic commit."""
-    from fintech_etl_spark.sinks import manifest as mfst
-
-    if mfst.is_transactional(index_path):
-        return compact_transactional(
-            spark,
-            index_path,
-            {"codes": ["cell"], "vectors": ["cell"]},
-            **kw,
-        )
-    return {
-        "codes": compact_partitioned(
-            spark, index_path + "/codes", ["cell"], **kw
-        ),
-        "vectors": compact_partitioned(
-            spark, index_path + "/vectors", ["cell"], **kw
-        ),
-    }
+    (coarse/codebooks are single tiny files — never compacted); BOTH
+    datasets swap in one atomic commit."""
+    return compact_transactional(
+        spark, index_path, {"codes": ["cell"], "vectors": ["cell"]}, **kw
+    )
 
 
 def maintain(
@@ -608,9 +524,6 @@ def maintain(
                "segments": n_segs, "threshold": when_segments_above}
         if n_segs > when_segments_above:
             fn = compact_ivf_pq_index if ivf else compact_lsh_index
-            # maintain() only accepts manifest-backed roots, so the fn
-            # always takes the transactional path, where **lock_kw
-            # reaches compact_transactional's commit
             out.update({"compacted": fn(
                 spark, root, files_per_partition=files_per_partition,
                 **lock_kw,

@@ -274,17 +274,30 @@ def manifests_dir(root: str) -> str:
 
 def is_transactional(root: str) -> bool:
     """A dataset root is manifest-backed iff a committed pointer
-    exists. Every lifecycle entry point auto-detects via this, so one
-    ``transactional=True`` at build time upgrades append / ingest /
-    compact / serve with no call-site changes."""
+    exists. Used to detect a first commit and to refuse; it never
+    selects a read or write path."""
     return os.path.exists(os.path.join(manifests_dir(root), _CURRENT))
 
 
+def _no_manifest(root: str) -> ValueError:
+    return ValueError(
+        f"{root!r} is not a manifest-backed dataset (no "
+        "_manifests/_current pointer) — a plain directory of parquet "
+        "files is never read as one"
+    )
+
+
 def current(root: str) -> dict:
-    """Resolve the pointer and load the live manifest."""
+    """Resolve the pointer and load the live manifest. A root with no
+    pointer (missing, or a bare parquet directory) raises
+    ``ValueError`` naming it: every layout, index and lake reader goes
+    through here, so none of them can read a mistyped root as parquet."""
     mdir = manifests_dir(root)
-    with open(os.path.join(mdir, _CURRENT)) as fh:
-        name = fh.read().strip()
+    try:
+        with open(os.path.join(mdir, _CURRENT)) as fh:
+            name = fh.read().strip()
+    except FileNotFoundError:
+        raise _no_manifest(root) from None
     with open(os.path.join(mdir, name)) as fh:
         m = json.load(fh)
     m["_file"] = name
@@ -313,7 +326,11 @@ def manifest_at(
     as well, so a lake migrated between stores resolves from either."""
     mdir = manifests_dir(root)
     prefix = f"manifest-{version:010d}-"
-    names = [n for n in os.listdir(mdir) if n.startswith(prefix)]
+    try:
+        listing = os.listdir(mdir)
+    except FileNotFoundError:
+        raise _no_manifest(root) from None
+    names = [n for n in listing if n.startswith(prefix)]
     if len(names) > 1:
         # two files claim the same version: a committer crashed inside
         # the lost-lock abort window (normally the abort unlinks its
@@ -326,7 +343,7 @@ def manifest_at(
         # past retention anyway).
         try:
             live = current(root)["_file"]
-        except OSError:
+        except (OSError, ValueError):
             live = None
         provider = lock if lock is not None else DEFAULT_LOCK_PROVIDER
         claimed = provider.read_claim(
@@ -347,7 +364,7 @@ def manifest_at(
     if not names:
         have = sorted(
             int(n.split("-")[1])
-            for n in os.listdir(mdir)
+            for n in listing
             if n.startswith("manifest-")
         )
         raise ValueError(
@@ -529,7 +546,7 @@ def commit(
     the Iceberg table-properties shape. It rides the SAME atomic
     pointer swap as the segment list, which is the whole point: a
     layout's frozen scaling bounds (the z-order family's
-    ``_zbounds``) must never be observable out of sync with the
+    ``bounds``) must never be observable out of sync with the
     segments they cluster. Meta for datasets not named is carried
     forward unchanged; naming a dataset overwrites its whole dict.
 
@@ -865,9 +882,9 @@ def read_dataset(
     spark: SparkSession, root: str, dataset: str, empty_schema: str
 ) -> DataFrame:
     """The manifest-resolved scan: :func:`read_segments` over the
-    segments the live manifest names. Resolving the pointer per call
-    is the transactional analogue of the serve streams' per-batch
-    re-listing: appends and compactions land at the next micro-batch
+    segments the live manifest names (an empty ``empty_schema`` frame
+    when it names none). Serve streams resolve the pointer per
+    micro-batch, so appends and compactions land at the next batch
     with no restart."""
     segs = dataset_segments(root, dataset)
     if not segs:
@@ -904,8 +921,7 @@ def vacuum(
     if not is_transactional(root):
         raise ValueError(
             f"vacuum: {root!r} is not a manifest-backed dataset "
-            "(no _manifests/_current pointer) — nothing to vacuum; "
-            "plain-directory indexes clean up via compact_partitioned"
+            "(no _manifests/_current pointer) — nothing to vacuum"
         )
     mdir = manifests_dir(root)
     provider = lock if lock is not None else DEFAULT_LOCK_PROVIDER

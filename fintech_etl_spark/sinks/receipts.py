@@ -119,7 +119,6 @@ def _merge_datatype(
 def _validate_schema_against(
     committed_meta: dict | None,
     incoming: "dict[str, object]",
-    month_partitioned: bool,
     merge_schema: bool,
 ) -> dict:
     """Validate an incoming batch's schema against the lake's committed
@@ -153,9 +152,9 @@ def _validate_schema_against(
     - the contract covers the USER's columns only: the derived
       ``transaction_month`` partition column never enters it (it would
       read as a confusing "typo" the caller never wrote); instead the
-      partitioning SHAPE is recorded as ``month_partitioned`` and a
-      flip of it is refused outright — mixing month-partitioned and
-      flat segments in one lake needs an explicit rebuild.
+      partitioning SHAPE is recorded as ``month_partitioned: true``. A
+      lake recorded as flat (a shape no longer written) is refused —
+      it needs an explicit rebuild.
     - ``mode="overwrite"`` resets the record to the batch's schema (a
       rebuild defines a new contract, like ``reset_ingested``) and is
       therefore validated against nothing.
@@ -198,19 +197,16 @@ def _validate_schema_against(
     if prev_shape is None and committed is not None:
         # a lake recorded before the shape flag existed: the old
         # writer's record included the derived transaction_month
-        # column iff the lake was month-partitioned, so the flip guard
-        # protects UPGRADED lakes too (the r14 review catch) — and the
-        # stale derived column is migrated out of the contract below
+        # column iff the lake was month-partitioned, so the flat-lake
+        # guard protects UPGRADED lakes too — and the stale derived
+        # column is migrated out of the contract below
         prev_shape = "transaction_month" in committed
-    if prev_shape is not None and prev_shape != month_partitioned:
-        want = "month-partitioned" if prev_shape else "flat"
-        got = "month-partitioned" if month_partitioned else "flat"
+    if prev_shape is False:
         raise SchemaEvolutionError(
-            f"write_receipts_parquet: this lake's committed segments "
-            f"are {want} but the batch would write {got} "
-            f"(partition_by_month={month_partitioned}) — mixing "
-            "partitioning shapes in one lake is refused; keep the "
-            "committed shape, or rebuild with mode='overwrite'"
+            "write_receipts_parquet: this lake's committed segments "
+            "are flat but every batch is month-partitioned — mixing "
+            "partitioning shapes in one lake is refused; rebuild it "
+            "with mode='overwrite'"
         )
     if committed is None:
         # pre-record lake: adopt the batch schema as the initial record
@@ -218,7 +214,7 @@ def _validate_schema_against(
         meta["schema_struct"] = T.StructType(
             [T.StructField(c, t, True) for c, t in incoming.items()]
         ).jsonValue()
-        meta["month_partitioned"] = month_partitioned
+        meta["month_partitioned"] = True
         return meta
     # migrate pre-flag records: old writers recorded the derived
     # partition column; the contract covers user columns only
@@ -305,7 +301,7 @@ def _validate_schema_against(
         # alone — keep the flat record; the structured twin appears on
         # the first commit covering every committed column
         meta.pop("schema_struct", None)
-    meta["month_partitioned"] = month_partitioned
+    meta["month_partitioned"] = True
     return meta
 
 
@@ -388,7 +384,6 @@ def write_receipts_parquet(
     path: str,
     *,
     mode: str = "append",
-    partition_by_month: bool = True,
     transactional: bool = True,
     batch_key: str | None = None,
     file_key_col: str | None = None,
@@ -460,8 +455,8 @@ def write_receipts_parquet(
     columns, or fields INSIDE a committed struct /
     array<struct> (the receipt document's own ``line_items`` shape),
     is refused unless ``merge_schema=True`` (Delta's ``mergeSchema``
-    posture — a typo'd name must never silently fork the schema); a
-    flip of the partitioning shape is refused outright. With
+    posture — a typo'd name must never silently fork the schema); an
+    append to a lake recorded as flat is refused outright. With
     ``merge_schema=True`` the record widens and old segments are NOT
     rewritten — ``read_receipts`` unions segments by name (nested
     fields included), so pre-evolution rows read as null for the new
@@ -553,11 +548,7 @@ def write_receipts_parquet(
                 f"declared schema); got {got}"
             )
     seg = mf.new_segment_path(path)
-    out = (
-        _cluster_by_month(_with_month(receipts))
-        if partition_by_month
-        else receipts
-    )
+    out = _cluster_by_month(_with_month(receipts))
     if lock is not None:
         commit_kwargs: dict = {"lock": lock}
     else:
@@ -569,9 +560,7 @@ def write_receipts_parquet(
     incoming = {f.name: f.dataType for f in receipts.schema.fields}
 
     def _meta_fn(committed: dict | None) -> dict:
-        return _validate_schema_against(
-            committed, incoming, partition_by_month, merge_schema
-        )
+        return _validate_schema_against(committed, incoming, merge_schema)
 
     if mode != "overwrite" and live:
         # fail fast BEFORE staging any data (unlocked snapshot — a
@@ -580,10 +569,7 @@ def write_receipts_parquet(
         # dataset_meta_fn below, which a racing evolver cannot slip
         # past — its abort orphans the staged segment for vacuum
         _meta_fn(mf.get_dataset_meta(path, _RECEIPTS_DS))
-    writer = out.write.mode("overwrite")
-    if partition_by_month:
-        writer = writer.partitionBy("transaction_month")
-    writer.parquet(seg)
+    out.write.mode("overwrite").partitionBy("transaction_month").parquet(seg)
     kwargs: dict = {"file_keys": file_keys} if file_keys is not None else {}
     if mode == "overwrite":
         # a rebuild defines a new contract — validated against nothing,
@@ -600,19 +586,18 @@ def write_receipts_parquet(
         seg_o = mf.new_segment_path(path)
         payloads.write.mode("overwrite").parquet(seg_o)
         adds[_OUTBOX_DS] = [seg_o]
-    if partition_by_month:
-        # per-segment month min/max ride the same commit (lexicographic
-        # on 'yyyy-MM' ≡ chronological): a month-ranged read excludes
-        # whole segments from ONE pointer read, before any listing —
-        # at 10^4 streaming batches between compactions, the same
-        # manifest-stats win the z-order layout receipted at 43x.
-        # transaction_month is the segment's PARTITION column, so its
-        # per-segment min/max ARE the 'transaction_month=...' directory
-        # names the write just created — a driver listing, not another
-        # Spark job over the freshly written files
-        months = mf.partition_bounds(seg, ["transaction_month"])
-        if months:
-            kwargs["segment_stats"] = {_RECEIPTS_DS: {seg: months}}
+    # per-segment month min/max ride the same commit (lexicographic on
+    # 'yyyy-MM' ≡ chronological): a month-ranged read excludes whole
+    # segments from ONE pointer read, before any listing — at 10^4
+    # streaming batches between compactions, the same manifest-stats
+    # win the z-order layout receipted at 43x. transaction_month is
+    # the segment's PARTITION column, so its per-segment min/max ARE
+    # the 'transaction_month=...' directory names the write just
+    # created — a driver listing, not another Spark job over the
+    # freshly written files
+    months = mf.partition_bounds(seg, ["transaction_month"])
+    if months:
+        kwargs["segment_stats"] = {_RECEIPTS_DS: {seg: months}}
     if mode == "overwrite":
         # the RECEIPTS dataset is replaced (that is what a rebuild
         # means) but the outbox segment is still an ADD: pending
@@ -807,24 +792,13 @@ def compact_receipts_lake(
     rewrite, so an ingest landing mid-compaction is carried forward,
     never lost). The rewritten segment's ``transaction_month`` min/max
     stats ride the same commit, so month-ranged manifest pruning
-    survives compaction. A FLAT lake (``partition_by_month=False``,
-    per the committed ``month_partitioned`` flag) is compacted without
-    the partition column it never had — hardcoding it crashed here
-    before the shape flag existed (the r14 review catch).
+    survives compaction. A lake recorded as flat raises ``ValueError``.
     Returns {files_before, files_after, rows}."""
     from fintech_etl_spark.sinks.maintenance import compact_transactional
 
     m = mf.current(path)
-    meta = (m.get("dataset_meta") or {}).get(_RECEIPTS_DS) or {}
-    monthly = meta.get("month_partitioned")
-    if monthly is None:
-        # pre-flag lake: infer from the committed schema record the
-        # old writer kept (it included the derived column iff
-        # partitioned); a lake with no record defaults to the writer's
-        # own default shape, month-partitioned
-        sch = meta.get("schema")
-        monthly = True if sch is None else ("transaction_month" in sch)
-    cols = ["transaction_month"] if monthly else []
+    _refuse_flat(path, m, "compact_receipts_lake")
+    cols = ["transaction_month"]
     return compact_transactional(
         spark,
         path,
@@ -836,25 +810,17 @@ def compact_receipts_lake(
     )[_RECEIPTS_DS]
 
 
-def _apply_month_filter(df: DataFrame, lo: str, hi: str) -> DataFrame:
-    """Inclusive 'yyyy-MM' range filter that works on BOTH lake
-    shapes. A month-partitioned lake filters the partition column
-    (directory pruning). A lake written with
-    ``partition_by_month=False`` has no ``transaction_month`` column
-    at all — filtering it would raise an unresolved-column
-    AnalysisException (the r12 ADVICE finding) — so the range is
-    translated to HALF-OPEN ``transaction_date`` bounds instead:
-    plain comparisons against the raw column, which parquet row-group
-    min/max stats can prune (a ``date_format()`` wrapper would defeat
-    pushdown)."""
-    if "transaction_month" in df.columns:
-        return df.filter(F.col("transaction_month").between(lo, hi))
-    y, m = int(hi[:4]), int(hi[5:7])
-    nxt = f"{y + (m == 12)}-{(m % 12) + 1:02d}-01"
-    return df.filter(
-        (F.col("transaction_date") >= F.lit(f"{lo}-01").cast("date"))
-        & (F.col("transaction_date") < F.lit(nxt).cast("date"))
-    )
+def _refuse_flat(path: str, m: dict, who: str) -> None:
+    """Raise when manifest ``m`` records its receipts as flat (not
+    month-partitioned): a shape this module no longer reads, writes or
+    compacts."""
+    meta = (m.get("dataset_meta") or {}).get(_RECEIPTS_DS) or {}
+    if meta.get("month_partitioned") is False:
+        raise ValueError(
+            f"{who}: {path!r} is recorded as a flat receipt lake (not "
+            "month-partitioned), a shape that is no longer supported — "
+            "rebuild it with write_receipts_parquet(mode='overwrite')"
+        )
 
 
 def read_receipts(
@@ -904,6 +870,7 @@ def read_receipts(
         if version is None
         else mf.manifest_at(path, version, lock=lock)
     )
+    _refuse_flat(path, m, "read_receipts")
     rels = m["datasets"].get(_RECEIPTS_DS, [])
     if not rels:
         raise ValueError(
@@ -926,4 +893,6 @@ def read_receipts(
     # no segment in range: a schema-only scan of one, always-false filter
     segs = [os.path.join(path, r) for r in (kept or rels[:1])]
     df = mf.read_segments(spark, segs, schema)
-    return _apply_month_filter(df, lo, hi) if kept else df.filter(F.lit(False))
+    if not kept:
+        return df.filter(F.lit(False))
+    return df.filter(F.col("transaction_month").between(lo, hi))

@@ -58,20 +58,19 @@ _IVF_SCHEMAS = {
 
 
 def _read_lsh_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """The index scan both the serve stream and build-count use:
-    manifest-backed roots resolve the `_current` pointer (a consistent
-    snapshot no compaction can tear), plain roots list the directory."""
-    if mf.is_transactional(index_path):
-        return mf.read_dataset(spark, index_path, "index", _LSH_SCHEMA)
-    return spark.read.parquet(index_path)
+    """The index scan both the serve stream and build-count use: it
+    resolves the `_current` pointer (a consistent snapshot no
+    compaction can tear); a path without a manifest raises
+    ``ValueError``."""
+    return mf.read_dataset(spark, index_path, "index", _LSH_SCHEMA)
 
 
 def _read_ivf_dataset(
     spark: SparkSession, index_path: str, name: str
 ) -> DataFrame:
-    if mf.is_transactional(index_path):
-        return mf.read_dataset(spark, index_path, name, _IVF_SCHEMAS[name])
-    return spark.read.parquet(index_path + "/" + name)
+    """The manifest-resolved scan of an IVF-PQ index's ``codes`` or
+    ``vectors`` dataset (``ValueError`` without a manifest)."""
+    return mf.read_dataset(spark, index_path, name, _IVF_SCHEMAS[name])
 
 
 def _bucketed_units(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -108,8 +107,6 @@ def build_lsh_index(
     spark: SparkSession,
     sf_dir: str,
     index_path: str,
-    *,
-    transactional: bool = False,
 ) -> int:
     """Materialize the corpus LSH index: (band, bucket, neighbor_id, u)
     parquet partitioned by (band, bucket) — with 4 sign bits per band
@@ -118,36 +115,27 @@ def build_lsh_index(
     (the serving path pushes the collected pairs as literal filters;
     at a wider bucket space the second key becomes a bucket PREFIX,
     same mechanics). Returns the number of index rows (= corpus size ×
-    bands). Linear single pass; idempotent overwrite.
+    bands). Linear single pass.
 
-    ``transactional=True`` builds a manifest-backed index
-    (sinks/manifest.py): data lands in an immutable staged segment and
-    becomes visible via one atomic pointer swap; every downstream
-    lifecycle call (append / ingest / compact / serve) auto-detects the
-    mode, upgrading compaction to a race-free snapshot swap and ingest
-    to exactly-once per source file."""
+    The index is a manifest dataset (sinks/manifest.py): data lands in
+    an immutable staged segment and becomes visible via one atomic
+    ``replace`` pointer swap, so compaction is a race-free snapshot
+    swap and ingest is exactly-once per source file. A rebuild also
+    resets the ingested-file history (``reset_ingested``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _bucketed_units(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         "u",
         F.posexplode("bks").alias("band", "bucket"),
     )
-    if transactional:
-        seg = mf.new_segment_path(index_path)
-        idx.write.mode("overwrite").partitionBy("band", "bucket").parquet(seg)
-        # a REBUILD from the corpus tables discards previously STREAMED
-        # vectors, so the ingest dedup history must reset with it —
-        # otherwise a checkpoint-loss replay of those source files is
-        # skipped as "already processed" and the vectors stay missing
-        # forever (plain-directory rebuilds get this via the overwrite
-        # wiping _ingest_ledger; the manifest mode must match)
-        mf.commit(
-            index_path, replace={"index": [seg]}, reset_ingested=True
-        )
-    else:
-        idx.write.mode("overwrite").partitionBy("band", "bucket").parquet(
-            index_path
-        )
+    seg = mf.new_segment_path(index_path)
+    idx.write.mode("overwrite").partitionBy("band", "bucket").parquet(seg)
+    # a REBUILD from the corpus tables discards previously STREAMED
+    # vectors, so the ingest dedup history must reset with it —
+    # otherwise a checkpoint-loss replay of those source files is
+    # skipped as "already processed" and the vectors stay missing
+    # forever
+    mf.commit(index_path, replace={"index": [seg]}, reset_ingested=True)
     return _read_lsh_index(spark, index_path).count()
 
 
@@ -161,11 +149,11 @@ def append_lsh_index(
     an index is APPENDED, never rebuilt. The hyperplanes are
     deterministic and data-independent, so hashing a new batch needs
     nothing from the existing index: bucket the batch with the same
-    Arrow matmul, explode to (band, bucket, neighbor_id, u), and
-    append-write into the existing (band, bucket) partition layout.
-    Cost is linear in the BATCH (one narrow pass + a partitioned
-    append); the corpus-side index is never read or rewritten, and
-    serving probes see the new rows on their next directory listing.
+    Arrow matmul, explode to (band, bucket, neighbor_id, u), and stage
+    it as a new (band, bucket)-partitioned segment. Cost is linear in
+    the BATCH (one narrow pass + a partitioned write); the corpus-side
+    index is never read or rewritten, and serving probes see the new
+    rows at their next pointer resolution.
 
     Bit-equality contract (pinned by tests/test_index_append.py):
     ``build(A ∪ B) == append(B) ∘ build(A)`` — exactly, because every
@@ -178,11 +166,12 @@ def append_lsh_index(
     idempotency ledger upstream. Returns appended index rows
     (batch × bands).
 
-    On a manifest-backed index (``build_lsh_index(transactional=
-    True)``) the batch is STAGED as a new segment and committed with
-    one atomic pointer swap — ``file_keys`` (source-file identities,
-    supplied by the ingest stream) land in the same commit, making
-    append + dedup-marker a single transaction."""
+    The staged segment is committed with one atomic pointer swap —
+    ``file_keys`` (source-file identities, supplied by the ingest
+    stream) land in the same commit, making append + dedup-marker a
+    single transaction. A path without a manifest raises
+    ``ValueError`` before anything is written."""
+    mf.current(index_path)  # refuses a path that is not an index
     n = new_vectors.count()
     if n == 0:
         return 0
@@ -194,16 +183,9 @@ def append_lsh_index(
             F.posexplode("bks").alias("band", "bucket"),
         )
     )
-    if mf.is_transactional(index_path):
-        seg = mf.new_segment_path(index_path)
-        new_rows.write.mode("overwrite").partitionBy("band", "bucket").parquet(
-            seg
-        )
-        mf.commit(index_path, add={"index": [seg]}, file_keys=file_keys)
-    else:
-        new_rows.write.mode("append").partitionBy("band", "bucket").parquet(
-            index_path
-        )
+    seg = mf.new_segment_path(index_path)
+    new_rows.write.mode("overwrite").partitionBy("band", "bucket").parquet(seg)
+    mf.commit(index_path, add={"index": [seg]}, file_keys=file_keys)
     return n * _N_BANDS
 
 
@@ -228,21 +210,15 @@ def start_vector_ingest(
     over new files would have its first batches silently swallowed by
     a bare-batch-id ledger) and never on whole-batch digests (a replay
     may recompose the same files into different batches). A batch
-    whose files were all processed is skipped; a MIXED batch appends
-    only the rows from unprocessed files.
-
-    - **Manifest-backed index** (``build_*_index(transactional=
-      True)``): the appended segment and its file keys land in ONE
-      atomic pointer-swap commit — exactly-once per file with no
-      append-to-marker window at all. A crash before the commit leaves
-      an invisible orphan segment (``manifest.vacuum`` collects it);
-      the retry appends cleanly.
-    - **Plain directory index**: one ``_ingest_ledger/file-<digest>``
-      marker per source file (underscore-prefixed → invisible to every
-      index read), written AFTER the append commits. The residual
-      window is the driver dying between append and marker — there the
-      retry re-appends, i.e. the cross-crash contract is
-      AT-LEAST-ONCE, the same posture as the webhook/Pub/Sub sinks.
+    whose files are all in the manifest's ingested history
+    (``ingested_contains``) is skipped; a MIXED batch appends only the
+    rows from unprocessed files. The appended segment and its file
+    keys land in ONE atomic pointer-swap commit — exactly-once per
+    file with no append-to-marker window at all. A crash before the
+    commit leaves an invisible orphan segment (``manifest.vacuum``
+    collects it); the retry appends cleanly. ``index_path`` must be a
+    built index: a path without a manifest raises ``ValueError``
+    before the stream starts.
 
     Serve streams re-resolve the index per batch, so vectors flow
     file → index → query results with no rebuild and no restart
@@ -255,7 +231,7 @@ def start_vector_ingest(
     forever — both strictly worse than a halted ingest."""
     if family not in ("lsh", "ivf-pq"):
         raise ValueError(f"unknown index family {family!r}")
-    ledger = index_path.rstrip("/") + "/_ingest_ledger"
+    mf.current(index_path)  # refuses a path that is not an index
 
     incoming = (
         spark.readStream.schema("vec_id long, embedding array<double>")
@@ -264,17 +240,9 @@ def start_vector_ingest(
         .json(vectors_glob)
     )
 
-    def _digest(uri: str) -> str:
-        import hashlib
-
-        return hashlib.sha256(uri.encode()).hexdigest()[:24]
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         from pyspark import StorageLevel
 
-        transactional = mf.is_transactional(index_path)
         # tag rows with their source file BEFORE caching — both
         # inputFiles() and a post-cache input_file_name() come back
         # empty on a micro-batch frame
@@ -285,24 +253,12 @@ def start_vector_ingest(
             files = sorted(
                 r["_src"] for r in tagged.select("_src").distinct().collect()
             )
-            # ledger/manifest live on the index's filesystem (local/NFS
-            # here; an object-store deployment routes these through the
-            # Hadoop FS API — same protocol, different client)
-            if transactional:
-                # bucket-probing membership: loads |history|/buckets
-                # keys per probe, so this per-batch check stays flat
-                # as the lifetime file count grows (mf.ingested_keys
-                # would reload the whole history every micro-batch)
-                done = mf.ingested_contains(index_path, files)
-                todo = [f for f in files if f not in done]
-            else:
-                todo = [
-                    f
-                    for f in files
-                    if not os.path.exists(
-                        os.path.join(ledger, f"file-{_digest(f)}")
-                    )
-                ]
+            # bucket-probing membership: loads |history|/buckets keys per
+            # probe, so this per-batch check stays flat as the lifetime
+            # file count grows (mf.ingested_keys would reload the whole
+            # history every micro-batch)
+            done = mf.ingested_contains(index_path, files)
+            todo = [f for f in files if f not in done]
             if not todo:
                 return  # crash-retry of files whose append committed
             b = tagged
@@ -334,20 +290,11 @@ def start_vector_ingest(
             if chk["n"] == 0:
                 return
             if family == "lsh":
-                n = append_lsh_index(
-                    b, index_path, file_keys=todo if transactional else None
-                )
+                n = append_lsh_index(b, index_path, file_keys=todo)
             else:
                 n = append_ivf_pq_index(
-                    spark,
-                    b,
-                    index_path,
-                    file_keys=todo if transactional else None,
+                    spark, b, index_path, file_keys=todo
                 )["appended_vectors"]
-            if not transactional:
-                os.makedirs(ledger, exist_ok=True)
-                for f in todo:
-                    open(os.path.join(ledger, f"file-{_digest(f)}"), "w").close()
             if on_batch is not None:
                 on_batch(batch_id, n)
         finally:
@@ -376,12 +323,11 @@ def start_ann_queries(
     rank) top-k rows to ``on_results``. availableNow trigger — drains
     pending files then stops (cron-style serving; swap the trigger for
     continuous). The index is re-resolved per micro-batch (the read
-    sits inside the handler): a plain directory is re-listed, a
-    manifest-backed index resolves the ``_current`` pointer — so rows
-    landed by ``append_lsh_index``, or a compacted layout, are served
-    WITHOUT a stream restart; on the manifest path a compaction can
-    even commit WHILE a batch scans (snapshot isolation — the race is
-    pinned in tests/test_manifest.py). Listing cost is bounded by the
+    sits inside the handler and resolves the ``_current`` pointer) — so
+    rows landed by ``append_lsh_index``, or a compacted layout, are
+    served WITHOUT a stream restart, and a compaction can even commit
+    WHILE a batch scans (snapshot isolation — the race is pinned in
+    tests/test_manifest.py). Listing cost is bounded by the
     bucket directory count, not the corpus."""
     from pyspark.sql.window import Window as W
 
@@ -393,7 +339,7 @@ def start_ann_queries(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # fresh listing (or manifest-pointer resolution) per batch
+        # fresh manifest-pointer resolution per batch
         index = _read_lsh_index(spark, index_path)
         q = _bucketed_units(batch_df.filter(F.col("embedding").isNotNull()))
         qx = q.select(
@@ -556,7 +502,6 @@ def build_ivf_pq_index(
     index_path: str,
     k: int | None = _KM_K,
     *,
-    transactional: bool = False,
     cell_cap: int | None = None,
 ) -> dict:
     """Materialize the IVF-PQ index the batch ``ann_ivf_pq`` trains per
@@ -583,12 +528,13 @@ def build_ivf_pq_index(
     nearest-of-whatever-``coarse/``-holds. Default ``None`` keeps the
     build bit-identical to the batch ``ann_ivf_pq`` tier.
 
-    ``transactional=True`` makes codes/ and vectors/ manifest-backed
-    datasets under ONE commit log at the index root (coarse/codebooks
-    stay plain immutable files — the append contract freezes them, so
-    they need no transaction): appends stage both datasets and commit
-    them atomically together, and compaction becomes a race-free
-    snapshot swap. See sinks/manifest.py.
+    codes/ and vectors/ are manifest datasets under ONE commit log at
+    the index root, published by one ``replace`` commit that also
+    resets the ingested-file history (coarse/codebooks stay immutable
+    parquet files — the append contract freezes them, so they need no
+    transaction): appends stage both datasets and commit them
+    atomically together, and compaction is a race-free snapshot swap.
+    See sinks/manifest.py.
     """
     from fintech_etl_spark.operators.similarity import kmeans_fit, pq_fit
 
@@ -624,34 +570,24 @@ def build_ivf_pq_index(
         .join(ivf, "vec_id")
         .withColumnRenamed("ivf_cell", "cell")
     )
-    if transactional:
-        # quantizers land BEFORE the commit that makes codes visible,
-        # so on-disk coarse/codebooks are never older than any
-        # committed assignment (a rebuild under live serving still
-        # needs a serving restart — streams freeze quantizers at start)
-        coarse_cent.write.mode("overwrite").parquet(index_path + "/coarse")
-        pq_cent.write.mode("overwrite").parquet(index_path + "/codebooks")
-        seg_c = mf.new_segment_path(index_path)
-        seg_v = mf.new_segment_path(index_path)
-        codes_out.write.mode("overwrite").partitionBy("cell").parquet(seg_c)
-        vecs_out.write.mode("overwrite").partitionBy("cell").parquet(seg_v)
-        # rebuild-resets-history: see build_lsh_index — the replaced
-        # datasets no longer hold the streamed vectors the ingest
-        # history describes
-        mf.commit(
-            index_path,
-            replace={"codes": [seg_c], "vectors": [seg_v]},
-            reset_ingested=True,
-        )
-    else:
-        codes_out.write.mode("overwrite").partitionBy("cell").parquet(
-            index_path + "/codes"
-        )
-        vecs_out.write.mode("overwrite").partitionBy("cell").parquet(
-            index_path + "/vectors"
-        )
-        coarse_cent.write.mode("overwrite").parquet(index_path + "/coarse")
-        pq_cent.write.mode("overwrite").parquet(index_path + "/codebooks")
+    # quantizers land BEFORE the commit that makes codes visible, so
+    # on-disk coarse/codebooks are never older than any committed
+    # assignment (a rebuild under live serving still needs a serving
+    # restart — streams freeze quantizers at start)
+    coarse_cent.write.mode("overwrite").parquet(index_path + "/coarse")
+    pq_cent.write.mode("overwrite").parquet(index_path + "/codebooks")
+    seg_c = mf.new_segment_path(index_path)
+    seg_v = mf.new_segment_path(index_path)
+    codes_out.write.mode("overwrite").partitionBy("cell").parquet(seg_c)
+    vecs_out.write.mode("overwrite").partitionBy("cell").parquet(seg_v)
+    # rebuild-resets-history: see build_lsh_index — the replaced
+    # datasets no longer hold the streamed vectors the ingest history
+    # describes
+    mf.commit(
+        index_path,
+        replace={"codes": [seg_c], "vectors": [seg_v]},
+        reset_ingested=True,
+    )
     return {
         "codes": _read_ivf_dataset(spark, index_path, "codes").count(),
         "vectors": _read_ivf_dataset(spark, index_path, "vectors").count(),
@@ -670,15 +606,17 @@ def append_ivf_pq_index(
 ) -> dict:
     """Incremental IVF-PQ index maintenance: assign a NEW vector batch
     against the index's FROZEN coarse centroids and PQ codebooks —
-    quantizers are never retrained on append — and append-write the
-    codes and raw vectors into the existing per-cell partition layout.
+    quantizers are never retrained on append — and stage the codes and
+    raw vectors as two new per-cell partitioned segments, committed
+    together in ONE pointer swap (with ``file_keys`` in the same
+    commit), so they become visible together or not at all.
 
     This is the production cadence at lake scale: train once (or
     re-train on a slow schedule), then every arriving batch pays one
     assignment pass over the BATCH — k·d + subs·k_pq doubles of frozen
     parameters are the only thing read from the index side; the
-    existing codes/vectors partitions are untouched. Serving probes
-    see appended vectors on their next directory listing with no index
+    existing codes/vectors segments are untouched. Serving probes
+    see appended vectors at their next pointer resolution with no index
     restart (``start_ivf_pq_queries`` reads coarse/codebooks at start;
     those are exactly the files append never modifies).
 
@@ -705,7 +643,8 @@ def append_ivf_pq_index(
     ``IVF.add()`` after ``train()``.
 
     Caller contract: ids must be fresh (an appended duplicate would
-    serve twice). Returns per-batch counts.
+    serve twice). A path without a manifest raises ``ValueError``
+    before anything is read or written. Returns per-batch counts.
 
     ``barrier`` picks the materialization strategy for the
     twice-consumed assignment frame via the shared policy in
@@ -713,8 +652,8 @@ def append_ivf_pq_index(
     checkpoint whenever the SparkContext has a checkpoint dir — the
     executor-loss-safe cluster posture; executor-local truncation only
     as the local-mode fast path). The blast radius of a lost barrier
-    is one batch-sized frame, and the ingest ledger makes a retry
-    safe — but the append path rides the same posture switch as the
+    is one batch-sized frame, and the manifest's ingested-file history
+    makes a retry safe — but the append path rides the same posture switch as the
     ranking family rather than hard-coding the local tier."""
     from fintech_etl_spark.barrier import materialization_barrier
     from fintech_etl_spark.operators.similarity import (
@@ -725,6 +664,7 @@ def append_ivf_pq_index(
 
     from fintech_etl_spark.operators.similarity import _PQ_SUBS
 
+    mf.current(index_path)  # refuses a path that is not an index
     n = new_vectors.count()
     if n == 0:
         return {"appended_vectors": 0, "appended_code_rows": 0}
@@ -748,34 +688,17 @@ def append_ivf_pq_index(
     )
     vecs_out = vecs.join(ivf, "vec_id").withColumnRenamed("ivf_cell", "cell")
     codes_out = codes.join(ivf, "vec_id").withColumnRenamed("ivf_cell", "cell")
-    if mf.is_transactional(index_path):
-        # manifest mode: stage BOTH datasets, then one atomic commit —
-        # codes and vectors become visible together or not at all, so
-        # no half-state ordering argument is needed
-        seg_v = mf.new_segment_path(index_path)
-        seg_c = mf.new_segment_path(index_path)
-        vecs_out.write.mode("overwrite").partitionBy("cell").parquet(seg_v)
-        codes_out.write.mode("overwrite").partitionBy("cell").parquet(seg_c)
-        mf.commit(
-            index_path,
-            add={"vectors": [seg_v], "codes": [seg_c]},
-            file_keys=file_keys,
-        )
-    else:
-        # vectors FIRST, codes second: the two appends are not one
-        # transaction, and the half-states differ in kind. A vectors
-        # row without codes is merely unsearchable until the retry
-        # completes (never ADC-ranked); a codes row without vectors
-        # would be RANKED into the shortlist and then silently dropped
-        # at the exact-refine join — an inconsistent index. Writing
-        # vectors first makes every crash window the harmless
-        # half-state.
-        vecs_out.write.mode("append").partitionBy("cell").parquet(
-            index_path + "/vectors"
-        )
-        codes_out.write.mode("append").partitionBy("cell").parquet(
-            index_path + "/codes"
-        )
+    # stage BOTH datasets, then one atomic commit — codes and vectors
+    # become visible together or not at all
+    seg_v = mf.new_segment_path(index_path)
+    seg_c = mf.new_segment_path(index_path)
+    vecs_out.write.mode("overwrite").partitionBy("cell").parquet(seg_v)
+    codes_out.write.mode("overwrite").partitionBy("cell").parquet(seg_c)
+    mf.commit(
+        index_path,
+        add={"vectors": [seg_v], "codes": [seg_c]},
+        file_keys=file_keys,
+    )
     return {"appended_vectors": n, "appended_code_rows": n * _PQ_SUBS}
 
 

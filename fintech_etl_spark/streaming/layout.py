@@ -76,19 +76,11 @@ def start_zorder_ingest(
     into the manifest-backed z-order layout at ``layout_path`` —
     exactly-once per source file (see module docstring).
 
-    Requires a TRANSACTIONAL layout (``zorder_write(...,
-    transactional=True)``): the exactly-once contract IS the manifest
-    commit; a plain directory has neither the atomic segment swap nor
-    the ingested-file history, so ingesting into one would silently
-    be at-least-once — loud error instead. availableNow trigger
-    (cron-style ingest)."""
-    if not mf.is_transactional(layout_path):
-        raise ValueError(
-            f"start_zorder_ingest: {layout_path!r} is not a "
-            "manifest-backed layout — build it with "
-            "zorder_write(transactional=True); the plain directory "
-            "mode cannot provide exactly-once file ingest"
-        )
+    ``layout_path`` must be a :func:`zorder_write` layout: the
+    exactly-once contract IS the manifest commit, so any other path
+    raises ``ValueError`` before the stream starts. availableNow
+    trigger (cron-style ingest)."""
+    zorder_bounds(layout_path)  # raises unless a manifest layout
     if compact_when_drift_above is not None and not (
         0 < compact_when_drift_above <= 1
     ):

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 from fintech_etl_spark.sources.tables import load_table
 from fintech_etl_spark.streaming.ann import (
+    _read_ivf_dataset,
+    _read_lsh_index,
     append_ivf_pq_index,
     append_lsh_index,
     build_ivf_pq_index,
@@ -47,7 +49,7 @@ def _split(spark, tmp_path):
 def _lsh_rows(spark, path):
     return {
         (r.neighbor_id, r.band, r.bucket, tuple(r.u))
-        for r in spark.read.parquet(path).collect()
+        for r in _read_lsh_index(spark, path).collect()
     }
 
 
@@ -67,14 +69,14 @@ def test_lsh_append_bit_equals_full_rebuild(spark, tmp_path):
 def _codes_rows(spark, path):
     return {
         (r.vec_id, r.sub, r.pq_cell, r.cell)
-        for r in spark.read.parquet(path + "/codes").collect()
+        for r in _read_ivf_dataset(spark, path, "codes").collect()
     }
 
 
 def _vector_rows(spark, path):
     return {
         (r.vec_id, tuple(r.v), r.cell)
-        for r in spark.read.parquet(path + "/vectors").collect()
+        for r in _read_ivf_dataset(spark, path, "vectors").collect()
     }
 
 
@@ -336,44 +338,6 @@ def test_streaming_vector_ingest_rejects_null_rows(spark, tmp_path):
     assert _lsh_rows(spark, idx) == rows_before
 
 
-def test_streaming_vector_ingest_ledger_skips_replayed_batches(spark, tmp_path):
-    """Crash-retry idempotency: if the streaming checkpoint is lost
-    AFTER appends committed (batches re-delivered with the same ids),
-    the _ingest_ledger markers make the replay a no-op."""
-    from fintech_etl_spark.streaming.ann import start_vector_ingest
-
-    a_dir, a, b = _split(spark, tmp_path)
-    idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx)
-
-    vdir = tmp_path / "vectors"
-    vdir.mkdir()
-    _write_jsonl(b.collect(), vdir / "f0.jsonl")
-    q = start_vector_ingest(
-        spark, str(vdir / "*.jsonl"), str(tmp_path / "ckpt"), idx
-    )
-    q.awaitTermination()
-    rows = _lsh_rows(spark, idx)
-    assert len(rows) == 500 * 12
-
-    # fresh checkpoint → the file re-delivers as batch 0 again; the
-    # ledger marker must swallow it
-    replays = []
-    q = start_vector_ingest(
-        spark,
-        str(vdir / "*.jsonl"),
-        str(tmp_path / "ckpt_lost"),
-        idx,
-        on_batch=lambda bid, n: replays.append((bid, n)),
-    )
-    q.awaitTermination()
-    assert replays == []  # skipped before any append
-    assert _lsh_rows(spark, idx) == rows
-
-    # and the underscore-prefixed ledger dir is invisible to index reads
-    assert spark.read.parquet(idx).count() == len(rows)
-
-
 def test_cli_index_append(spark, tmp_path, capsys, monkeypatch):
     """CLI `index-append` drives both families against an existing
     index: new-batch parquet in, per-batch counts out."""
@@ -397,7 +361,7 @@ def test_cli_index_append(spark, tmp_path, capsys, monkeypatch):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["appended_vectors"] == b.count()
-    n = spark.read.parquet(ivf + "/vectors").count()
+    n = _read_ivf_dataset(spark, ivf, "vectors").count()
     assert n == load_table(spark, SF_SMOKE, "embeddings").count()
 
 
@@ -457,7 +421,7 @@ def test_cell_cap_splits_hot_cell(spark, tmp_path):
     counts = build_ivf_pq_index(spark, sf, idx, k=None, cell_cap=128)
     assert counts["vectors"] == 1200
     sizes = (
-        spark.read.parquet(idx + "/vectors")
+        _read_ivf_dataset(spark, idx, "vectors")
         .groupBy("cell")
         .count()
         .collect()
@@ -474,7 +438,7 @@ def test_cell_cap_splits_hot_cell(spark, tmp_path):
     )
     got = append_ivf_pq_index(spark, extra, idx)
     assert got["appended_vectors"] == 5
-    assert spark.read.parquet(idx + "/vectors").count() == 1205
+    assert _read_ivf_dataset(spark, idx, "vectors").count() == 1205
 
 
 def test_cell_cap_none_is_bit_identical(spark, tmp_path):

@@ -1,12 +1,12 @@
 """Index maintenance: append visibility inside a running serve stream,
 and small-file compaction (fintech_etl_spark/sinks/maintenance.py).
 
-Appends write small files into the per-(band,bucket) / per-cell
-partition dirs; at lake scale the maintenance loop is append →
+Appends commit small per-(band,bucket) / per-cell partitioned
+segments; at lake scale the maintenance loop is append →
 (periodically) compact. Pinned here:
 
 - a RUNNING LSH serve stream picks up rows appended BETWEEN
-  micro-batches (the corpus side is re-listed per batch) — batch 0
+  micro-batches (the corpus side is re-resolved per batch) — batch 0
   serves the pre-append index, batch 1 serves the appended one, each
   matching the batch-tier oracle for its corpus;
 - compaction rewrites every partition down to the target file count
@@ -25,9 +25,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from fintech_etl_spark.sinks.maintenance import compact_partitioned
+from fintech_etl_spark.sinks import manifest as mf
+from fintech_etl_spark.sinks.maintenance import (
+    compact_lsh_index,
+    compact_transactional,
+)
 from fintech_etl_spark.sources.tables import load_table
 from fintech_etl_spark.streaming.ann import (
+    _read_ivf_dataset,
+    _read_lsh_index,
     append_lsh_index,
     build_lsh_index,
     start_ann_queries,
@@ -48,18 +54,22 @@ def _split(spark, tmp_path):
 
 
 def _parquet_files_per_dir(root: str) -> dict[str, int]:
+    """Parquet files per (band, bucket) dir, summed over the index's
+    live segments (superseded ones stay on disk until vacuum)."""
     out: dict[str, int] = {}
-    for dirpath, _dirs, files in os.walk(root):
-        n = sum(1 for f in files if f.endswith(".parquet"))
-        if n:
-            out[os.path.relpath(dirpath, root)] = n
+    for seg in mf.dataset_segments(root, "index"):
+        for dirpath, _dirs, files in os.walk(seg):
+            n = sum(1 for f in files if f.endswith(".parquet"))
+            if n:
+                key = os.path.relpath(dirpath, seg)
+                out[key] = out.get(key, 0) + n
     return out
 
 
 def _rows(spark, path):
     return sorted(
         (r.neighbor_id, r.band, r.bucket, tuple(r.u))
-        for r in spark.read.parquet(path).collect()
+        for r in _read_lsh_index(spark, path).collect()
     )
 
 
@@ -76,7 +86,7 @@ def test_compaction_restores_file_counts_and_preserves_rows(spark, tmp_path):
     before_files = _parquet_files_per_dir(idx)
     assert max(before_files.values()) > 1, "appends should add files"
 
-    stats = compact_partitioned(spark, idx, ["band", "bucket"])
+    stats = compact_lsh_index(spark, idx)
     after_files = _parquet_files_per_dir(idx)
     assert max(after_files.values()) == 1
     assert _rows(spark, idx) == before_rows
@@ -90,7 +100,7 @@ def test_compaction_files_per_partition_salt(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_lsh_index(spark, a_dir, idx)
     before_rows = _rows(spark, idx)
-    compact_partitioned(spark, idx, ["band", "bucket"], files_per_partition=2)
+    compact_lsh_index(spark, idx, files_per_partition=2)
     after = _parquet_files_per_dir(idx)
     assert max(after.values()) <= 2
     assert _rows(spark, idx) == before_rows
@@ -166,7 +176,7 @@ def test_running_stream_sees_mid_stream_append_then_compacted_index(
     assert got[1] == {k: v for k, v in want_full.items() if k[0] in batch1_qids}
 
     # compact, then a fresh drain of BOTH files matches A ∪ B exactly
-    compact_partitioned(spark, idx, ["band", "bucket"])
+    compact_lsh_index(spark, idx)
     got2: dict = {}
 
     def on_results2(df, batch_id):
@@ -206,33 +216,14 @@ def test_cli_index_compact(spark, tmp_path, capsys, monkeypatch):
     ivf = str(tmp_path / "ivf")
     build_ivf_pq_index(spark, a_dir, ivf)
     append_ivf_pq_index(spark, b, ivf)
-    n_codes = spark.read.parquet(ivf + "/codes").count()
-    n_vecs = spark.read.parquet(ivf + "/vectors").count()
+    n_codes = _read_ivf_dataset(spark, ivf, "codes").count()
+    n_vecs = _read_ivf_dataset(spark, ivf, "vectors").count()
     rc = cli.main(["index-compact", "ivf-pq", "--index", ivf])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["codes"]["files_after"] <= out["codes"]["files_before"]
-    assert spark.read.parquet(ivf + "/codes").count() == n_codes
-    assert spark.read.parquet(ivf + "/vectors").count() == n_vecs
-
-
-def test_compaction_preserves_ingest_ledger_markers(spark, tmp_path):
-    """Compaction rewrites the data layout but must NOT erase the
-    underscore-prefixed `_ingest_ledger` markers: parquet reads ignore
-    them, and without this carry-over a checkpoint-loss replay after a
-    compaction would re-append every batch the markers had swallowed."""
-    a_dir, a, b = _split(spark, tmp_path)
-    idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx)
-    append_lsh_index(b, idx)
-    ledger = os.path.join(idx, "_ingest_ledger")
-    os.makedirs(ledger)
-    open(os.path.join(ledger, "batch-deadbeef1234"), "w").close()
-    before = _rows(spark, idx)
-
-    compact_partitioned(spark, idx, ["band", "bucket"])
-    assert os.path.exists(os.path.join(ledger, "batch-deadbeef1234"))
-    assert _rows(spark, idx) == before
+    assert _read_ivf_dataset(spark, ivf, "codes").count() == n_codes
+    assert _read_ivf_dataset(spark, ivf, "vectors").count() == n_vecs
 
 
 def test_compaction_all_partition_columns_rejected_loudly(spark, tmp_path):
@@ -241,8 +232,12 @@ def test_compaction_all_partition_columns_rejected_loudly(spark, tmp_path):
     descriptive ValueError up front instead of an AnalysisException
     from inside the staged rewrite."""
     p = str(tmp_path / "kv")
+    seg = mf.new_segment_path(p)
     spark.createDataFrame(
         [(i % 3, i % 2, i) for i in range(24)], "k int, v int, x int"
-    ).write.partitionBy("k", "v").parquet(p)
+    ).write.partitionBy("k", "v").parquet(seg)
+    mf.commit(p, add={"kv": [seg]})
     with pytest.raises(ValueError, match="covers every column"):
-        compact_partitioned(spark, p, ["k", "v", "x"], files_per_partition=4)
+        compact_transactional(
+            spark, p, {"kv": ["k", "v", "x"]}, files_per_partition=4
+        )

@@ -16,9 +16,11 @@ from pyspark.sql import functions as F
 
 from fintech_etl_spark.operators.layout import (
     interleave_expr,
+    read_zorder,
     with_zvalue,
     zorder_write,
 )
+from fintech_etl_spark.sinks import manifest as mf
 from fintech_etl_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -48,14 +50,25 @@ def test_with_zvalue_scales_before_interleaving(spark):
     assert z[(100, 9)] == 0b10101010  # only the b-lane (odd bits)
 
 
-def _files_overlapping_box(path, plo, phi, slo, shi):
+def _parquet_in(path):
+    return glob.glob(os.path.join(path, "*.parquet"))
+
+
+def _layout_files(zpath):
+    """The parquet files of a z-order layout's live segments."""
+    return [
+        f for seg in mf.dataset_segments(zpath, "layout") for f in _parquet_in(seg)
+    ]
+
+
+def _files_overlapping_box(files, plo, phi, slo, shi):
     """Count parquet files whose footer min/max stats admit rows in
     the box — exactly the pruning decision a stats-aware scan makes.
     Empty files (range repartitioning may emit empty partitions) prune
     trivially and are excluded; a non-empty file missing stats could
     never be pruned and counts as admitted."""
     hit, total = 0, 0
-    for f in glob.glob(os.path.join(path, "*.parquet")):
+    for f in files:
         meta = pq.ParquetFile(f).metadata
         if meta.num_rows == 0:
             continue
@@ -114,8 +127,8 @@ def test_zorder_write_prunes_box_predicates_on_both_keys(spark, tmp_path):
             plo = b.plo + int((0.1 + 0.3 * gi) * pspan)
             slo = b.slo + int((0.1 + 0.3 * gj) * sspan)
             box = (plo, plo + int(0.15 * pspan), slo, slo + int(0.15 * sspan))
-            nh, nt = _files_overlapping_box(natural, *box)
-            zh, zt = _files_overlapping_box(zpath, *box)
+            nh, nt = _files_overlapping_box(_parquet_in(natural), *box)
+            zh, zt = _files_overlapping_box(_layout_files(zpath), *box)
             nat_hits.append(nh)
             z_hits.append(zh)
             totals.append((nt, zt))
@@ -127,9 +140,36 @@ def test_zorder_write_prunes_box_predicates_on_both_keys(spark, tmp_path):
     assert sum(z_hits) <= sum(nat_hits) / 2, (z_hits, nat_hits)
 
     # and the layouts hold identical data
-    got = spark.read.parquet(zpath)
+    got = read_zorder(spark, zpath)
     assert got.count() == n
     assert got.exceptAll(li).count() == 0 and li.exceptAll(got).count() == 0
+
+
+def test_zorder_files_are_equal_quantile_parts_in_any_session(spark, tmp_path):
+    """The z-range is cut at its quantiles computed from the data, not
+    at a boundary sample Spark seeds with the session's RDD counter:
+    the same rows give the same files whatever ran before, and each of
+    the ``num_files`` files holds an equal share of the rows."""
+    df = spark.range(20000).select(
+        F.col("id").alias("rowid"),
+        (F.abs(F.xxhash64("id")) % 997).cast("long").alias("x"),
+        (F.abs(F.xxhash64("id", F.lit(1))) % 983).cast("long").alias("y"),
+    )
+
+    def footer(f):
+        md = pq.ParquetFile(f).metadata
+        st = [md.row_group(0).column(i).statistics for i in (1, 2)]
+        return (md.num_rows, *[(s.min, s.max) for s in st])
+
+    layouts = []
+    for i in range(2):
+        spark.sparkContext.parallelize(range(i + 1)).count()  # advance RDD ids
+        root = str(tmp_path / f"z{i}")
+        zorder_write(df, ["x", "y"], root, num_files=16)
+        layouts.append(sorted(footer(f) for f in _layout_files(root)))
+    assert layouts[0] == layouts[1]
+    assert len(layouts[0]) == 16
+    assert all(abs(n - 1250) <= 10 for n, *_ in layouts[0]), layouts[0]
 
 
 def test_zorder_box_query_results_unchanged(spark, tmp_path):
@@ -145,7 +185,7 @@ def test_zorder_box_query_results_unchanged(spark, tmp_path):
         & (F.col("l_suppkey").between(3, 7))
     )
     want = sorted(map(tuple, li.filter(pred).collect()))
-    got = sorted(map(tuple, spark.read.parquet(zpath).filter(pred).collect()))
+    got = sorted(map(tuple, read_zorder(spark, zpath).filter(pred).collect()))
     assert got == want and want, "box must be non-empty"
 
 
@@ -179,7 +219,7 @@ def test_zorder_append_preserves_data_and_box_queries(spark, tmp_path):
     n2 = zorder_append(rest.filter(F.col("l_partkey") % 2 == 1), zpath)
     assert n1 + n2 == rest.count()
 
-    got = spark.read.parquet(zpath)
+    got = read_zorder(spark, zpath)
     assert got.count() == li.count()
     assert got.exceptAll(li).count() == 0 and li.exceptAll(got).count() == 0
 
@@ -210,7 +250,7 @@ def test_zorder_append_files_stay_box_compact(spark, tmp_path):
     zorder_append(rest, zpath, num_files=4)
 
     stats = []
-    for f in glob.glob(os.path.join(zpath, "*.parquet")):
+    for f in _layout_files(zpath):
         meta = pq.ParquetFile(f).metadata
         s: dict = {}
         for rg in range(meta.num_row_groups):
@@ -267,7 +307,7 @@ def test_zorder_append_clamps_out_of_range_keys(spark, tmp_path):
         "l_orderkey long, l_partkey long, l_suppkey long",
     )
     assert zorder_append(drift, zpath, num_files=1) == 20
-    got = spark.read.parquet(zpath)
+    got = read_zorder(spark, zpath)
     assert got.count() == 520
     assert got.filter(F.col("l_partkey") >= 1_000_000).count() == 20
 

@@ -2,17 +2,15 @@
 (operators/layout.py + sinks/manifest.py) — the r10 audit's last
 half-state windows, closed and pinned:
 
-- transactional build/append/compact hold the same data as plain mode
-  (the layout is a physical detail);
 - a reader racing an append sees the OLD snapshot until the commit,
   then old+batch — never a partial file listing;
 - the frozen bounds ride the manifest pointer (never observable out
-  of sync with the segments) and the plain-mode sidecar write is
-  atomic (a crash mid-write leaves the previous bounds intact);
+  of sync with the segments);
 - zorder_compact commits remove+add: a concurrent append is carried
   forward, a superseded rewrite aborts with StaleSegmentError;
 - pruning still works through the manifest-resolved read (the segment
-  files carry the same footer stats as a plain layout).
+  files carry box-compact footer stats);
+- a path without a manifest is refused, never read as parquet.
 """
 
 from __future__ import annotations
@@ -26,7 +24,6 @@ from pyspark.sql import functions as F
 
 from fintech_etl_spark.operators.layout import (
     _LAYOUT_DS,
-    _write_sidecar,
     read_zorder,
     zorder_append,
     zorder_bounds,
@@ -48,35 +45,19 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_transactional_build_matches_plain(spark, tmp_path):
-    df = _frame(spark)
-    plain, tx = str(tmp_path / "plain"), str(tmp_path / "tx")
-    n_plain = zorder_write(df, ["x", "y"], plain, num_files=8)
-    n_tx = zorder_write(df, ["x", "y"], tx, num_files=8, transactional=True)
-    assert n_plain == n_tx == 4000
-    assert _rows(read_zorder(spark, plain)) == _rows(read_zorder(spark, tx))
-    # bounds identical, manifest-resolved vs sidecar
-    assert zorder_bounds(tx)["bounds"] == {
-        c: list(v) if isinstance(v, list) else v
-        for c, v in zorder_bounds(plain)["bounds"].items()
-    }
-    assert mf.is_transactional(tx) and not mf.is_transactional(plain)
-
-
 def test_append_is_atomic_to_readers(spark, tmp_path):
     """The r10 half-state window: stage the batch WITHOUT committing —
     a reader must see exactly the old snapshot; after the commit,
     exactly old+batch."""
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4)
     meta = zorder_bounds(root)
 
     # stage a batch the way zorder_append does, but crash before commit
     from fintech_etl_spark.operators.layout import _cluster_write
 
     seg = mf.new_segment_path(root)
-    _cluster_write(_frame(spark, 500, offset=2000), meta, seg, 2, "overwrite")
+    _cluster_write(_frame(spark, 500, offset=2000), meta, seg, 2)
     assert read_zorder(spark, root).count() == 2000  # staged = invisible
 
     # the retry (full append) commits segment + pointer atomically
@@ -92,37 +73,12 @@ def test_append_is_atomic_to_readers(spark, tmp_path):
     assert read_zorder(spark, root).count() == 2500
 
 
-def test_plain_sidecar_write_is_atomic(tmp_path, monkeypatch):
-    """A crash mid-sidecar-write (simulated: fsync raises after the
-    temp file is partially on disk) leaves the ORIGINAL bounds
-    readable — the non-atomic open(...,'w') the r10 audit charged
-    would have truncated them."""
-    path = str(tmp_path)
-    good = {"cols": ["x"], "bits": 4, "bounds": {"x": [0, 10]}}
-    _write_sidecar(path, good)
-
-    real_fsync = os.fsync
-
-    def boom(fd):
-        real_fsync(fd)
-        raise OSError("simulated crash before replace")
-
-    monkeypatch.setattr(os, "fsync", boom)
-    with pytest.raises(OSError, match="simulated crash"):
-        _write_sidecar(path, {"cols": ["x"], "bits": 4, "bounds": {"x": [0, 99]}})
-    monkeypatch.undo()
-    with open(os.path.join(path, "_zbounds.json")) as fh:
-        assert json.load(fh) == good
-
-
 def test_bounds_ride_the_pointer(spark, tmp_path):
     """After a bounds-refreshing compaction, segments and bounds come
     from the SAME manifest version — there is no file pair to observe
-    out of sync (plain mode: data commit and sidecar replace are two
-    steps)."""
+    out of sync."""
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4)
     v0 = mf.current(root)["version"]
     before = zorder_bounds(root)
     # append data whose keys extend past the frozen range
@@ -148,15 +104,14 @@ def test_compact_carries_concurrent_append_forward(spark, tmp_path):
     """The Iceberg rewrite-commit shape, layout edition: an append
     landing between the compactor's read and its commit survives."""
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4)
     old_segs = mf.dataset_segments(root, _LAYOUT_DS)
     meta = zorder_bounds(root)
     # compactor stages its rewrite of the CURRENT snapshot...
     from fintech_etl_spark.operators.layout import _cluster_write
 
     seg = mf.new_segment_path(root)
-    _cluster_write(mf.read_segments(spark, old_segs), meta, seg, 4, "overwrite")
+    _cluster_write(mf.read_segments(spark, old_segs), meta, seg, 4)
     # ...an append lands first...
     zorder_append(_frame(spark, 300, offset=1000), root, num_files=1)
     # ...then the compactor commits remove(read)+add(rewrite)
@@ -172,8 +127,7 @@ def test_compact_carries_concurrent_append_forward(spark, tmp_path):
 
 def test_superseded_compaction_aborts(spark, tmp_path):
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 800), ["x", "y"], root, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 800), ["x", "y"], root, num_files=2)
     old_segs = mf.dataset_segments(root, _LAYOUT_DS)
     # a faster compactor wins
     zorder_compact(spark, root, num_files=2)
@@ -185,7 +139,7 @@ def test_superseded_compaction_aborts(spark, tmp_path):
 def test_pruning_through_manifest_read(spark, tmp_path):
     """Footer-stats pruning is unchanged by the manifest layer: a box
     predicate through read_zorder admits a minority of the segment's
-    files, same as the plain-layout pruning test."""
+    files, same as the tests/test_layout.py pruning test."""
     root = str(tmp_path / "lay")
     # hash-scattered keys: the arithmetic-lattice frame used elsewhere
     # puts points on a line pattern whose per-file boxes are wide and
@@ -198,8 +152,7 @@ def test_pruning_through_manifest_read(spark, tmp_path):
             (F.abs(F.xxhash64("id", F.lit(1))) % 983).cast("long").alias("y"),
         )
 
-    zorder_write(scattered(20000), ["x", "y"], root, num_files=16,
-                 transactional=True)
+    zorder_write(scattered(20000), ["x", "y"], root, num_files=16)
     box = read_zorder(spark, root).filter(
         F.col("x").between(450, 550) & F.col("y").between(400, 500)
     )
@@ -233,15 +186,14 @@ def test_pruning_through_manifest_read(spark, tmp_path):
 
 
 def test_auto_detect_stays_transactional(spark, tmp_path):
-    """transactional=None on an existing manifest-backed layout keeps
-    the mode (the ANN lifecycle rule) — and the rebuild resets the
-    segment list via a replace commit."""
+    """A write onto an existing layout is a rebuild: it stays a
+    manifest layout and resets the segment list via a replace
+    commit."""
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=2)
     zorder_append(_frame(spark, 100, offset=500), root, num_files=1)
     assert len(mf.dataset_segments(root, _LAYOUT_DS)) == 2
-    # rebuild (auto-detected transactional): one fresh segment
+    # rebuild: one fresh segment
     zorder_write(_frame(spark, 700), ["x", "y"], root, num_files=2)
     assert len(mf.dataset_segments(root, _LAYOUT_DS)) == 1
     assert read_zorder(spark, root).count() == 700
@@ -249,7 +201,7 @@ def test_auto_detect_stays_transactional(spark, tmp_path):
 
 def test_compact_plain_layout_is_loud(spark, tmp_path):
     path = str(tmp_path / "plain")
-    zorder_write(_frame(spark, 100), ["x", "y"], path, num_files=1)
+    _frame(spark, 100).write.parquet(path)
     with pytest.raises(ValueError, match="not manifest-backed"):
         zorder_compact(spark, path)
 
@@ -261,8 +213,7 @@ def test_generic_compaction_rejects_layouts(spark, tmp_path):
     from fintech_etl_spark.sinks.maintenance import compact_transactional
 
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 300), ["x", "y"], root, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 300), ["x", "y"], root, num_files=2)
     with pytest.raises(ValueError, match="zorder_compact"):
         compact_transactional(spark, root, {_LAYOUT_DS: []})
 
@@ -278,8 +229,7 @@ def test_three_key_curve_round_trip(spark, tmp_path):
         (F.col("id") * 53 % 769).cast("long").alias("w"),
     )
     root = str(tmp_path / "lay3")
-    assert zorder_write(df, ["x", "y", "w"], root, num_files=8,
-                        transactional=True) == 5000
+    assert zorder_write(df, ["x", "y", "w"], root, num_files=8) == 5000
     box = (
         F.col("x").between(200, 400)
         & F.col("y").between(200, 400)
@@ -307,7 +257,7 @@ def test_manifest_segment_stats_prune(spark, tmp_path):
         (F.col("id") % 500).cast("long").alias("x"),
         (F.col("id") % 400).cast("long").alias("y"),
     )
-    zorder_write(base, ["x", "y"], root, num_files=2, transactional=True)
+    zorder_write(base, ["x", "y"], root, num_files=2)
     # three appends in disjoint x-bands (keys clamp on the curve but
     # stats record ACTUAL values, so pruning sees the real ranges)
     for i, (lo_x, n) in enumerate([(1000, 200), (2000, 200), (3000, 200)]):
@@ -342,8 +292,7 @@ def test_segment_stats_follow_lifecycle(spark, tmp_path):
     from fintech_etl_spark.operators.layout import prune_segments
 
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=1,
-                 transactional=True)
+    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=1)
     zorder_append(_frame(spark, 100, offset=500), root, num_files=1)
     m = mf.current(root)
     assert len(m["segment_stats"][_LAYOUT_DS]) == 2
@@ -371,8 +320,7 @@ def test_incremental_compaction(spark, tmp_path):
     from fintech_etl_spark.operators.layout import prune_segments
 
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 3000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 3000), ["x", "y"], root, num_files=4)
     base_seg = mf.dataset_segments(root, _LAYOUT_DS)[0]
     bounds0 = zorder_bounds(root)
     for i in range(4):  # four tiny appends
@@ -406,10 +354,9 @@ def test_time_travel_reads(spark, tmp_path):
     """Version-named immutable manifests + retained superseded
     segments = free time travel: every kept version reads as the
     exact snapshot that was live at its commit; vacuumed versions and
-    plain layouts fail loudly."""
+    bare parquet directories fail loudly."""
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 400), ["x", "y"], root, num_files=1,
-                 transactional=True)  # v0: 400 rows
+    zorder_write(_frame(spark, 400), ["x", "y"], root, num_files=1)  # v0: 400 rows
     zorder_append(_frame(spark, 100, offset=400), root, num_files=1)  # v1
     zorder_compact(spark, root, num_files=1)  # v2: rewritten
 
@@ -427,9 +374,9 @@ def test_time_travel_reads(spark, tmp_path):
     with pytest.raises(ValueError, match="vacuumed"):
         read_zorder(spark, root, version=0)
     assert read_zorder(spark, root, version=1).count() == 500
-    # plain layouts have no history
+    # a bare parquet directory has no history
     plain = str(tmp_path / "plain")
-    zorder_write(_frame(spark, 10), ["x", "y"], plain, num_files=1)
+    _frame(spark, 10).write.parquet(plain)
     with pytest.raises(ValueError, match="plain directory"):
         read_zorder(spark, plain, version=0)
 
@@ -441,8 +388,7 @@ def test_fsck(spark, tmp_path, capsys, monkeypatch):
     import shutil
 
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 300), ["x", "y"], root, num_files=1,
-                 transactional=True)
+    zorder_write(_frame(spark, 300), ["x", "y"], root, num_files=1)
     zorder_append(_frame(spark, 50, offset=300), root, num_files=1)
     zorder_compact(spark, root, num_files=1)  # leaves superseded segs
     # a crashed staging: the path handed out, the dir created, no commit
@@ -492,8 +438,7 @@ def test_zorder_drift_metric_and_compact_restore(spark, tmp_path):
 
     root = str(tmp_path / "lay")
     # x spans [0, 996], y [0, 982] (mod arithmetic over 4000 ids)
-    zorder_write(_frame(spark, 4000), ["x", "y"], root, num_files=8,
-                 transactional=True)
+    zorder_write(_frame(spark, 4000), ["x", "y"], root, num_files=8)
     d0 = zorder_drift(root)
     assert d0["drift"] == 0.0 and d0["segments"] == 1
     assert d0["segments_without_stats"] == 0
@@ -528,7 +473,7 @@ def test_zorder_drift_requires_manifest(spark, tmp_path):
     from fintech_etl_spark.operators.layout import zorder_drift
 
     plain = str(tmp_path / "plain")
-    zorder_write(_frame(spark, 1000), ["x", "y"], plain, num_files=2)
+    _frame(spark, 1000).write.parquet(plain)
     with pytest.raises(ValueError, match="not manifest-backed"):
         zorder_drift(plain)
 
@@ -543,7 +488,7 @@ def test_zorder_drift_fraction_clamped_when_live_range_left_the_box(
 
     root = str(tmp_path / "lay")
     zorder_write(
-        _frame(spark, 1000), ["x", "y"], root, num_files=2, transactional=True
+        _frame(spark, 1000), ["x", "y"], root, num_files=2
     )
     orig = mf.dataset_segments(root, _LAYOUT_DS)
     seg = mf.new_segment_path(root)
@@ -582,7 +527,7 @@ def test_zorder_drift_no_stats_segment_is_conservative_not_silent(
 
     root = str(tmp_path / "lay")
     zorder_write(
-        _frame(spark, 1000), ["x", "y"], root, num_files=2, transactional=True
+        _frame(spark, 1000), ["x", "y"], root, num_files=2
     )
     assert zorder_drift(root)["drift"] == 0.0
     # a (massively drifted) segment committed WITHOUT stats
@@ -620,7 +565,7 @@ def test_zorder_drift_partial_stats_is_conservative_per_column(
 
     root = str(tmp_path / "lay")
     zorder_write(
-        _frame(spark, 1000), ["x", "y"], root, num_files=2, transactional=True
+        _frame(spark, 1000), ["x", "y"], root, num_files=2
     )
     assert zorder_drift(root)["drift"] == 0.0
     # a drifted-on-y segment whose committed stats cover x ONLY (an
@@ -658,8 +603,7 @@ def test_cli_layout_drift_report_and_threshold(
 
     monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4)
     rc = cli.main(["layout-drift", "--path", root, "--max-drift", "0.25"])
     assert rc == 0
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -690,8 +634,7 @@ def test_cli_layout_maintain_handoff(spark, tmp_path, capsys, monkeypatch):
 
     monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 2000), ["x", "y"], root, num_files=4)
     # nothing due: no-op, safe at any cron frequency
     assert cli.main(["layout-maintain", "--path", root]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -739,8 +682,7 @@ def test_run_due_compaction_remarks_when_drift_survives_the_rewrite(
     from fintech_etl_spark.operators import layout as lay
 
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=2)
     zorder_append(
         _frame(spark, 300, offset=1000).select(
             "rowid", (F.col("x") + 5000).alias("x"),
@@ -804,8 +746,7 @@ def test_unified_maintain_verb_covers_all_three_clients(
 
     # --- layout: marker-due ---
     lay = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 1500), ["x", "y"], lay, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 1500), ["x", "y"], lay, num_files=2)
     mark_compaction_due(lay, drift=0.7, threshold=0.5)
     out = maintain(spark, lay)
     assert out["kind"] == "layout" and out["ran"]
@@ -830,7 +771,7 @@ def test_unified_maintain_verb_covers_all_three_clients(
     ).select(F.col("transaction_date").cast("date").alias("transaction_date"),
              "total")
     for i in range(3):
-        write_receipts_parquet(rows, lake, transactional=True,
+        write_receipts_parquet(rows, lake,
                                batch_key=f"b{i}")
     out = maintain(spark, lake, when_segments_above=5)
     assert out == {"kind": "lake", "ran": False, "segments": 3,
@@ -845,7 +786,7 @@ def test_unified_maintain_verb_covers_all_three_clients(
     from fintech_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    build_lsh_index(spark, SF_SMOKE, idx, transactional=True)
+    build_lsh_index(spark, SF_SMOKE, idx)
     append_lsh_index(
         emb.filter(F.col("vec_id") < 5).select(
             (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
@@ -891,8 +832,7 @@ def test_layout_lifecycle_threads_cas_lock_provider(spark, tmp_path):
     provider = CASLockProvider(store)
     path = str(tmp_path / "layout_cas")
     zorder_write(
-        _frame(spark), ["x", "y"], path, num_files=4,
-        transactional=True, lock=provider,
+        _frame(spark), ["x", "y"], path, num_files=4, lock=provider,
     )
     mdir = mf.manifests_dir(path)
     assert provider.read_claim(mdir, 0) is not None  # build claim
@@ -926,7 +866,7 @@ def test_compact_bounds_from_stats_match_scan_and_fall_back(spark, tmp_path):
 
     path = str(tmp_path / "lake")
     zorder_write(
-        _frame(spark), ["x", "y"], path, num_files=4, transactional=True
+        _frame(spark), ["x", "y"], path, num_files=4
     )
     zorder_append(_frame(spark, n=1000, offset=5000), path, num_files=2)
     segs = mf.dataset_segments(path, _LAYOUT_DS)
@@ -975,7 +915,7 @@ def test_append_stats_from_footers_match_agg(spark, tmp_path):
 
     path = str(tmp_path / "lake")
     zorder_write(
-        _frame(spark), ["x", "y"], path, num_files=4, transactional=True
+        _frame(spark), ["x", "y"], path, num_files=4
     )
     batch = _frame(spark, n=777, offset=9000).select(
         "rowid", (F.col("x") + 1500).alias("x"), (F.col("y") - 700).alias("y")

@@ -4,19 +4,18 @@ transactional ANN index lifecycle built on them. Pinned here:
 - commit/pointer mechanics: versions increase, the pointer resolves
   atomically, duplicate file keys are rejected, vacuum collects only
   unreferenced segments and old manifests;
-- a transactional LSH build/append holds the same rows as the plain
-  directory layout (the manifest changes WHERE bytes live, never WHAT
-  a reader sees);
+- an LSH build(A) + append(B) holds the same rows as a build of
+  A ∪ B (the manifest changes WHERE bytes live, never WHAT a reader
+  sees);
 - THE RACE: compaction running concurrently with a draining serve
   stream never fails a batch and never shows a half-state — every
-  batch matches the batch-tier oracle (the directory-swap mode
-  documents exactly this failure; the manifest mode closes it);
+  batch matches the batch-tier oracle;
 - ingest is exactly-once per source file: a crash between segment
   stage and commit leaves the index unchanged (orphan collected by
   vacuum) and the retry appends once; a replay after the commit is
   skipped; compaction preserves the dedup history; a NEW file arriving
   under a reused batch_id 0 is appended, not swallowed (the r9 ADVICE
-  silent-loss scenario) — in BOTH modes;
+  silent-loss scenario);
 - IVF-PQ transactional appends are all-or-nothing across codes and
   vectors (one commit covers both datasets).
 """
@@ -153,28 +152,28 @@ def test_vacuum_retention_and_orphans(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# transactional LSH lifecycle parity
+# LSH lifecycle parity
 # ---------------------------------------------------------------------------
 
 
 def test_transactional_build_append_matches_plain(spark, tmp_path):
     a_dir, a, b = _split(spark, tmp_path)
     tx = str(tmp_path / "idx_tx")
-    plain = str(tmp_path / "idx_plain")
+    full = str(tmp_path / "idx_full")
 
-    n_tx = build_lsh_index(spark, a_dir, tx, transactional=True)
+    n_tx = build_lsh_index(spark, a_dir, tx)
     assert mf.is_transactional(tx)
-    n_plain = build_lsh_index(spark, SF_SMOKE, plain)
+    n_full = build_lsh_index(spark, SF_SMOKE, full)
     append_lsh_index(b, tx)
     assert mf.current(tx)["version"] == 1
-    assert _lsh_rows(spark, tx) == _lsh_rows(spark, plain)
-    assert n_tx == a.count() * 12 and n_plain == 500 * 12
+    assert _lsh_rows(spark, tx) == _lsh_rows(spark, full)
+    assert n_tx == a.count() * 12 and n_full == 500 * 12
 
 
 def test_transactional_compaction_bit_preserving(spark, tmp_path):
     a_dir, a, b = _split(spark, tmp_path)
     tx = str(tmp_path / "idx_tx")
-    build_lsh_index(spark, a_dir, tx, transactional=True)
+    build_lsh_index(spark, a_dir, tx)
     for lo, hi in ((_CUT, _CUT + 50), (_CUT + 50, 500)):
         append_lsh_index(
             b.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)), tx
@@ -204,7 +203,7 @@ def test_serving_races_compaction_without_half_states(spark, tmp_path, lock_matr
 
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, SF_SMOKE, idx, transactional=True)
+    build_lsh_index(spark, SF_SMOKE, idx)
     # several appended segments so compaction has real work each round
     # (appends of disjoint slices of an ALREADY-indexed corpus would
     # duplicate rows, so instead pre-split the committed layout by
@@ -289,7 +288,7 @@ def test_ingest_crash_before_commit_then_retry_is_exactly_once(
 
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
     rows_a = _lsh_rows(spark, idx)
 
     vdir = tmp_path / "vectors"
@@ -358,7 +357,7 @@ def test_ingest_crash_before_commit_then_retry_is_exactly_once(
 def test_ingest_dedup_survives_compaction(spark, tmp_path):
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
 
     vdir = tmp_path / "vectors"
     vdir.mkdir()
@@ -384,16 +383,13 @@ def test_ingest_dedup_survives_compaction(spark, tmp_path):
     assert replays == [] and _lsh_rows(spark, idx) == rows
 
 
-@pytest.mark.parametrize("transactional", [False, True])
-def test_new_file_under_reused_batch_id_is_not_swallowed(
-    spark, tmp_path, transactional
-):
+def test_new_file_under_reused_batch_id_is_not_swallowed(spark, tmp_path):
     """The r9 ADVICE silent-loss scenario: a SECOND ingest stream (new
     checkpoint → batch ids restart at 0) over NEW files must append
     them — a ledger keyed on bare batch ids swallowed them forever."""
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=transactional)
+    build_lsh_index(spark, a_dir, idx)
 
     b_rows = b.collect()
     d1 = tmp_path / "wave1"
@@ -429,7 +425,7 @@ def test_mixed_batch_appends_only_unprocessed_files(spark, tmp_path):
     digest would re-append both)."""
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
 
     b_rows = b.collect()
     vdir = tmp_path / "vectors"
@@ -487,8 +483,7 @@ def test_ivfpq_transactional_append_is_all_or_nothing(
 ):
     a_dir, a, b = _split(spark, tmp_path)
     tx = str(tmp_path / "idx_tx")
-    plain = str(tmp_path / "idx_plain")
-    build_ivf_pq_index(spark, a_dir, tx, transactional=True)
+    build_ivf_pq_index(spark, a_dir, tx)
 
     codes_before = _codes_rows(spark, tx)
     vecs_before = _vector_rows(spark, tx)
@@ -506,16 +501,7 @@ def test_ivfpq_transactional_append_is_all_or_nothing(
     assert _codes_rows(spark, tx) == codes_before
     assert _vector_rows(spark, tx) == vecs_before
 
-    # the retry lands both, and matches the plain-directory twin built
-    # from the same frozen quantizers
-    import shutil as _sh
-
-    _sh.copytree(
-        os.path.join(tx, "coarse"), os.path.join(plain, "coarse")
-    )
-    _sh.copytree(
-        os.path.join(tx, "codebooks"), os.path.join(plain, "codebooks")
-    )
+    # the retry lands both
     append_ivf_pq_index(spark, b, tx)
     assert {v for v, *_ in _codes_rows(spark, tx)} == {
         r.vec_id for r in load_table(spark, SF_SMOKE, "embeddings").collect()
@@ -528,8 +514,8 @@ def test_ivfpq_transactional_append_is_all_or_nothing(
 
 
 def test_cli_transactional_lifecycle(spark, tmp_path, capsys, monkeypatch):
-    """CLI end-to-end on a manifest-backed index: index-build
-    --transactional -> index-append -> index-compact --vacuum-keep."""
+    """CLI end-to-end on a manifest-backed index: index-build ->
+    index-append -> index-compact --vacuum-keep."""
     from fintech_etl_spark import cli
 
     a_dir, a, b = _split(spark, tmp_path)
@@ -537,8 +523,7 @@ def test_cli_transactional_lifecycle(spark, tmp_path, capsys, monkeypatch):
 
     idx = str(tmp_path / "lsh_tx")
     rc = cli.main(
-        ["index-build", "lsh", "--sf-dir", a_dir, "--index", idx,
-         "--transactional"]
+        ["index-build", "lsh", "--sf-dir", a_dir, "--index", idx]
     )
     assert rc == 0 and mf.is_transactional(idx)
 
@@ -828,8 +813,76 @@ def test_zorder_append_without_sidecar_is_loud(spark, tmp_path):
 
     p = str(tmp_path / "plain")
     spark.createDataFrame([(1, 2)], "a long, b long").write.parquet(p)
-    with pytest.raises(ValueError, match="_zbounds.json"):
+    with pytest.raises(ValueError, match="not a manifest-backed"):
         zorder_append(spark.createDataFrame([(1, 2)], "a long, b long"), p)
+
+
+def test_storage_writers_have_no_format_knob(spark, tmp_path, capsys, monkeypatch):
+    """Layouts and ANN indexes have ONE storage format: no writer takes
+    a ``transactional`` switch and the CLI offers no --transactional."""
+    import inspect
+
+    from fintech_etl_spark import cli
+    from fintech_etl_spark.operators.layout import zorder_write
+
+    for fn in (zorder_write, build_lsh_index, build_ivf_pq_index):
+        assert "transactional" not in inspect.signature(fn).parameters, fn
+    monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
+    none = str(tmp_path / "none")
+    for argv in (
+        ["layout-build", "t", "--sf-dir", none, "--path", none,
+         "--cols", "x,y", "--transactional"],
+        ["index-build", "lsh", "--sf-dir", none, "--index", none,
+         "--transactional"],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv)
+        assert exc.value.code == 2, argv
+        assert "--transactional" in capsys.readouterr().err
+
+
+def test_bare_parquet_dir_is_never_read_as_a_layout_or_index(spark, tmp_path):
+    """A root without a manifest — a mistyped path, or a bare parquet
+    directory — is refused with a ValueError naming it by every layout
+    and index reader, appender, ingest and compactor; it is never read
+    as parquet."""
+    import re
+
+    from fintech_etl_spark.operators.layout import (
+        read_zorder,
+        read_zorder_box,
+        zorder_append,
+    )
+    from fintech_etl_spark.streaming.ann import (
+        _read_ivf_dataset,
+        _read_lsh_index,
+    )
+
+    bare = str(tmp_path / "bare")
+    rows = spark.createDataFrame([(1, 2)], "x long, y long")
+    rows.write.parquet(bare)
+    vecs = load_table(spark, SF_SMOKE, "embeddings").limit(3)
+    calls = {
+        "read_zorder": lambda: read_zorder(spark, bare),
+        "read_zorder@v0": lambda: read_zorder(spark, bare, version=0),
+        "read_zorder_box": lambda: read_zorder_box(spark, bare, {"x": (0, 9)}),
+        "zorder_append": lambda: zorder_append(rows, bare),
+        "append_lsh_index": lambda: append_lsh_index(vecs, bare),
+        "append_ivf_pq_index": lambda: append_ivf_pq_index(spark, vecs, bare),
+        "lsh serve read": lambda: _read_lsh_index(spark, bare),
+        "ivf codes read": lambda: _read_ivf_dataset(spark, bare, "codes"),
+        "ivf vectors read": lambda: _read_ivf_dataset(spark, bare, "vectors"),
+        "compact_lsh_index": lambda: compact_lsh_index(spark, bare),
+        "compact_ivf_pq_index": lambda: compact_ivf_pq_index(spark, bare),
+        "start_vector_ingest": lambda: start_vector_ingest(
+            spark, str(tmp_path / "*.jsonl"), str(tmp_path / "ck"), bare
+        ),
+    }
+    for call in calls.values():
+        with pytest.raises(ValueError, match=re.escape(bare)):
+            call()
+    # nothing was staged or committed into the bare directory
+    assert not {"_manifests", "segments"} & set(os.listdir(bare))
 
 
 # ---------------------------------------------------------------------------
@@ -846,7 +899,7 @@ def test_concurrent_ingest_and_compaction_lose_nothing(spark, tmp_path, lock_mat
     union, bit-for-bit, and the ingest dedup history survives."""
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
 
     vdir = tmp_path / "vectors"
     vdir.mkdir()
@@ -963,7 +1016,7 @@ def test_ivfpq_serving_races_compaction(spark, tmp_path, lock_matrix):
 
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_ivf_pq_index(spark, a_dir, idx, transactional=True)
+    build_ivf_pq_index(spark, a_dir, idx)
     append_ivf_pq_index(spark, b, idx)  # fragment: 2 segments/dataset
     assert len(mf.dataset_segments(idx, "codes")) == 2
 
@@ -1039,7 +1092,7 @@ def test_transactional_ivfpq_streaming_ingest_exactly_once(spark, tmp_path):
     with the segments)."""
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_ivf_pq_index(spark, a_dir, idx, transactional=True)
+    build_ivf_pq_index(spark, a_dir, idx)
     n_before = len(_vector_rows(spark, idx))
 
     vdir = tmp_path / "vectors"
@@ -1246,7 +1299,7 @@ def test_rebuild_resets_ingested_history(spark, tmp_path):
     them instead of skipping them forever."""
     a_dir, a, b = _split(spark, tmp_path)
     idx = str(tmp_path / "idx")
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
 
     vdir = tmp_path / "vectors"
     vdir.mkdir()
@@ -1258,7 +1311,7 @@ def test_rebuild_resets_ingested_history(spark, tmp_path):
     assert mf.ingested_count(idx) == 1
 
     # full rebuild from the batch corpus at a_dir: streamed vectors gone
-    build_lsh_index(spark, a_dir, idx, transactional=True)
+    build_lsh_index(spark, a_dir, idx)
     assert mf.ingested_count(idx) == 0, "rebuild kept a stale history"
 
     # the replay now re-ingests f0 — the index converges to the union

@@ -211,36 +211,6 @@ def test_partition_pruning_on_receipt_lake(spark, tmp_path):
     assert df.count() == 4
 
 
-def test_months_filter_pushes_down_on_non_partitioned_lake(spark, tmp_path):
-    """A lake written with partition_by_month=False has no partition
-    column; read_receipts(months=) translates the range to HALF-OPEN
-    transaction_date comparisons precisely so parquet row-group stats
-    can prune — a date_format() wrapper would defeat pushdown. Pinned:
-    the scan carries PushedFilters on transaction_date."""
-    import datetime as dt
-
-    from fintech_etl_spark.operators.receipts import build_receipts
-    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
-    from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
-    from tests.test_receipts_pipeline import HEADER, ROWS
-
-    fixture = tmp_path / "f.csv"
-    fixture.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
-    receipts = build_receipts(
-        read_invoice_csv(spark, str(fixture)), run_date=dt.date(2024, 6, 1)
-    )
-    lake = str(tmp_path / "lake")
-    write_receipts_parquet(
-        receipts, lake, partition_by_month=False, batch_key="b0"
-    )
-    df = read_receipts(spark, lake, months=("2024-06", "2024-06"))
-    plan = plan_of(df)
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert pushed, plan
-    assert any("transaction_date" in l for l in pushed), plan
-    assert df.count() == 2
-
-
 def test_partition_pruning_on_webhook_ledger(spark, tmp_path):
     """The delivery ledger is batch_id-partitioned, so the per-batch
     skip read (`_read_ledger`) is a directory prune — one partition,

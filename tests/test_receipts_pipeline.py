@@ -345,34 +345,6 @@ def test_receipt_lake_month_range_manifest_pruning(spark, tmp_path):
     assert with_foreign.count() == base.count()
 
 
-def test_months_filter_on_non_month_partitioned_lake(spark, tmp_path):
-    """A lake written with partition_by_month=False has NO
-    transaction_month column; months= used to raise an
-    unresolved-column AnalysisException (r12 ADVICE). It must instead
-    translate to half-open transaction_date bounds and return exactly
-    the rows a month-partitioned lake's filter would."""
-    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
-
-    base = _golden_receipts(spark, tmp_path)  # 2024-06
-    shifted = base.withColumn(
-        "transaction_date", F.add_months(F.col("transaction_date"), 6)
-    )  # 2024-12
-    both = base.unionByName(shifted)
-    lake = str(tmp_path / "flat_lake")
-    write_receipts_parquet(both, lake, partition_by_month=False, batch_key="b0")
-    want = sorted(r.receipt_id for r in shifted.collect())
-    got = read_receipts(spark, lake, months=("2024-10", "2024-12"))
-    assert "transaction_month" not in got.columns
-    assert sorted(r.receipt_id for r in got.collect()) == want
-    # December edge: the hi month's last day is INSIDE the range
-    # (half-open translation must not clip it) and January is outside
-    assert (
-        read_receipts(spark, lake, months=("2024-12", "2024-12")).count()
-        == shifted.count()
-    )
-    assert read_receipts(spark, lake, months=("2025-01", "2025-02")).count() == 0
-
-
 def test_receipt_lake_compaction_time_travel_vacuum(
     spark, tmp_path, capsys, monkeypatch
 ):
@@ -494,59 +466,6 @@ def test_file_key_exactly_once_survives_rebatching_and_glob_growth(
         write_receipts_parquet(
             fa, lake, batch_key="x", file_key_col="source_file"
         )
-
-
-def test_month_bounds_translation_equivalence_property(spark):
-    """Property: for ANY inclusive 'yyyy-MM' range, the half-open
-    transaction_date translation (_apply_month_filter on a lake
-    without the month column) selects exactly the rows the
-    month-string filter would — including December year-rollover and
-    single-month ranges."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from fintech_etl_spark.sinks.receipts import _apply_month_filter
-
-    # one static frame spanning 4 years of month edges: the 1st, the
-    # 28th, and every month's LAST day (the clipping hazard)
-    import datetime as dt2
-
-    dates = []
-    d = dt2.date(2022, 1, 1)
-    while d < dt2.date(2026, 1, 1):
-        nxt = (d.replace(day=28) + dt2.timedelta(days=4)).replace(day=1)
-        dates += [d, d.replace(day=28), nxt - dt2.timedelta(days=1)]
-        d = nxt
-    df = spark.createDataFrame(
-        [(i, x) for i, x in enumerate(dates)],
-        "receipt_id long, transaction_date date",
-    ).cache()
-    df.count()
-
-    months_st = st.tuples(
-        st.integers(2022, 2025), st.integers(1, 12)
-    ).map(lambda t: f"{t[0]}-{t[1]:02d}")
-
-    @settings(max_examples=20, deadline=None)
-    @given(lo=months_st, hi=months_st)
-    def check(lo, hi):
-        if lo > hi:
-            lo, hi = hi, lo
-        got = sorted(
-            r.receipt_id for r in _apply_month_filter(df, lo, hi).collect()
-        )
-        want = sorted(
-            r.receipt_id
-            for r in df.filter(
-                F.date_format("transaction_date", "yyyy-MM").between(lo, hi)
-            ).collect()
-        )
-        assert got == want, (lo, hi)
-
-    try:
-        check()
-    finally:
-        df.unpersist()
 
 
 def test_webhook_outbox_atomic_intent_and_recoverable_delivery(

@@ -209,11 +209,11 @@ def test_racing_evolvers_cannot_fork_a_type_under_the_lock(
     real = rmod._validate_schema_against
     calls = {"n": 0}
 
-    def blinded(committed, incoming, month_partitioned, merge_schema):
+    def blinded(committed, incoming, merge_schema):
         calls["n"] += 1
         if calls["n"] == 1:  # the unlocked pre-check: sees nothing
-            return real(None, incoming, month_partitioned, merge_schema)
-        return real(committed, incoming, month_partitioned, merge_schema)
+            return real(None, incoming, merge_schema)
+        return real(committed, incoming, merge_schema)
 
     monkeypatch.setattr(rmod, "_validate_schema_against", blinded)
     bad = _base(spark).withColumn("channel", F.lit(7))  # int vs string
@@ -238,60 +238,35 @@ def test_racing_evolvers_cannot_fork_a_type_under_the_lock(
 
 
 def test_partition_shape_flip_is_refused(spark, tmp_path):
-    """The derived transaction_month column never enters the contract
-    (it would read as a baffling 'typo' the caller never wrote) — the
-    partitioning SHAPE is its own recorded flag, and flipping it is
-    refused in BOTH directions without a rebuild."""
-    flat = str(tmp_path / "flat")
-    write_receipts_parquet(
-        _base(spark), flat, transactional=True, partition_by_month=False
+    """Every batch is month-partitioned and the derived
+    transaction_month column never enters the contract (it would read
+    as a baffling 'typo' the caller never wrote) — the SHAPE is its
+    own recorded flag. A lake whose record says flat is refused by
+    read, append (the monthly batch would flip its shape) and
+    compaction alike; a rebuild may replace it."""
+    lake = str(tmp_path / "lake")
+    write_receipts_parquet(_base(spark), lake, transactional=True)
+    meta = mf.get_dataset_meta(lake, _RECEIPTS_DS)
+    assert meta["month_partitioned"] is True
+    assert "transaction_month" not in meta["schema"]
+    mf.commit(
+        lake,
+        dataset_meta={_RECEIPTS_DS: {**meta, "month_partitioned": False}},
     )
+    version = mf.current(lake)["version"]
+    with pytest.raises(ValueError, match="flat"):
+        read_receipts(spark, lake)
     with pytest.raises(SchemaEvolutionError, match="partition"):
-        write_receipts_parquet(_base(spark), flat)  # default True
-    monthly = str(tmp_path / "monthly")
-    write_receipts_parquet(_base(spark), monthly, transactional=True)
-    with pytest.raises(SchemaEvolutionError, match="partition"):
-        write_receipts_parquet(
-            _base(spark), monthly, partition_by_month=False
-        )
-    # a rebuild may change the shape — it defines a new contract
-    write_receipts_parquet(
-        _base(spark), monthly, mode="overwrite", partition_by_month=False
-    )
+        write_receipts_parquet(_base(spark), lake)
+    with pytest.raises(ValueError, match="flat"):
+        compact_receipts_lake(spark, lake)
+    assert mf.current(lake)["version"] == version
+    # a rebuild defines a new contract, month-partitioned again
+    write_receipts_parquet(_base(spark), lake, mode="overwrite")
     assert (
-        mf.get_dataset_meta(monthly, _RECEIPTS_DS)["month_partitioned"]
-        is False
+        mf.get_dataset_meta(lake, _RECEIPTS_DS)["month_partitioned"] is True
     )
-    # and the contract never mentions the derived column
-    assert "transaction_month" not in mf.get_dataset_meta(
-        monthly, _RECEIPTS_DS
-    )["schema"]
-
-
-def test_flat_lake_compaction_works(spark, tmp_path):
-    """compact_receipts_lake reads the committed shape flag: a FLAT
-    lake (partition_by_month=False) is folded without the partition
-    column it never had — hardcoding transaction_month crashed here
-    (the r14 review catch)."""
-    lake = str(tmp_path / "flat")
-    for i in range(3):
-        write_receipts_parquet(
-            _base(spark, month=1 + i), lake,
-            transactional=True, partition_by_month=False,
-        )
-    before = {
-        (r.receipt_id, r.total_amount)
-        for r in read_receipts(spark, lake).collect()
-    }
-    res = compact_receipts_lake(spark, lake)
-    assert res["rows"] == 12 and res["files_after"] <= res["files_before"]
-    assert len(mf.dataset_segments(lake, _RECEIPTS_DS)) == 1
-    after = {
-        (r.receipt_id, r.total_amount)
-        for r in read_receipts(spark, lake).collect()
-    }
-    assert after == before
-    assert mf.fsck(lake)["ok"]
+    assert read_receipts(spark, lake).count() == 4
 
 
 def _null_date_batch(spark):
@@ -308,20 +283,17 @@ def test_compaction_stats_equal_an_explicit_aggregate(spark, tmp_path):
     """Compaction takes ``rows`` from the rewritten segment's footers
     and its month range from the ``transaction_month=`` directory
     names. Both must equal an explicit count/min/max over that
-    segment, with a null-month row in Hive's default partition; a flat
-    lake gets the same row count and no stats."""
+    segment, with a null-month row in Hive's default partition."""
     import os
 
     from fintech_etl_spark.sinks.maintenance import compact_transactional
 
-    def explicit(seg, monthly):
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if monthly:
-            aggs += [
-                F.min("transaction_month").alias("lo"),
-                F.max("transaction_month").alias("hi"),
-            ]
-        return spark.read.parquet(seg).agg(*aggs).first()
+    def explicit(seg):
+        return spark.read.parquet(seg).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("transaction_month").alias("lo"),
+            F.max("transaction_month").alias("hi"),
+        ).first()
 
     monthly = str(tmp_path / "monthly")
     write_receipts_parquet(_base(spark, month=1), monthly, transactional=True)
@@ -332,22 +304,10 @@ def test_compaction_stats_equal_an_explicit_aggregate(spark, tmp_path):
     assert any(
         d.endswith("__HIVE_DEFAULT_PARTITION__") for d in os.listdir(seg)
     )
-    agg = explicit(seg, True)
+    agg = explicit(seg)
     assert res["rows"] == agg.n == 9
     assert st == {"transaction_month": [agg.lo, agg.hi]}
     assert st["transaction_month"] == ["2024-01", "2024-03"]
-
-    flat = str(tmp_path / "flat")
-    write_receipts_parquet(
-        _base(spark), flat, transactional=True, partition_by_month=False
-    )
-    write_receipts_parquet(
-        _null_date_batch(spark), flat, partition_by_month=False
-    )
-    res = compact_receipts_lake(spark, flat)
-    ((seg, st),) = mf.dataset_segments_with_stats(flat, _RECEIPTS_DS)
-    assert res["rows"] == explicit(seg, False).n == 5
-    assert st is None
 
     # a stats column that is not a partition column is refused before
     # anything is staged
@@ -468,22 +428,22 @@ def test_pre_flag_lake_shape_is_inferred_from_the_old_record(
     spark, tmp_path
 ):
     """Lakes recorded before the month_partitioned flag existed kept
-    the derived transaction_month column in their schema record — the
-    flip guard infers the shape from it (so upgraded lakes are
-    protected too) and migrates the derived column out of the
-    contract on the next commit."""
+    the derived transaction_month column in their schema record iff
+    they were month-partitioned — the flat-lake guard infers the shape
+    from it (so upgraded lakes are protected too) and migrates the
+    derived column out of the contract on the next commit."""
     lake = str(tmp_path / "lake")
     write_receipts_parquet(_base(spark), lake, transactional=True)
-    # simulate the pre-flag record: derived column in, flag absent
+    # simulate a pre-flag FLAT record: flag absent, no derived column
     meta = dict(mf.get_dataset_meta(lake, _RECEIPTS_DS))
     meta.pop("month_partitioned", None)
+    mf.commit(lake, dataset_meta={_RECEIPTS_DS: meta})
+    # the append is refused on the inferred shape
+    with pytest.raises(SchemaEvolutionError, match="partition"):
+        write_receipts_parquet(_base(spark), lake)
+    # the pre-flag MONTHLY record: derived column in, flag absent
     meta["schema"] = {**meta["schema"], "transaction_month": "string"}
     mf.commit(lake, dataset_meta={_RECEIPTS_DS: meta})
-    # the flip is refused on the inferred shape
-    with pytest.raises(SchemaEvolutionError, match="partition"):
-        write_receipts_parquet(
-            _base(spark), lake, partition_by_month=False
-        )
     # a same-shape append passes and migrates the record
     write_receipts_parquet(_base(spark), lake)
     rec = mf.get_dataset_meta(lake, _RECEIPTS_DS)

@@ -47,8 +47,7 @@ def _batch_rows(spark, lo, hi):
 @pytest.fixture
 def layout(spark, tmp_path):
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4,
-                 transactional=True)
+    zorder_write(_frame(spark, 1000), ["x", "y"], root, num_files=4)
     land = tmp_path / "land"
     land.mkdir()
     return root, land
@@ -102,7 +101,7 @@ def test_checkpoint_loss_replay_is_exactly_once(spark, tmp_path, layout):
 
 def test_ingest_requires_transactional(spark, tmp_path):
     plain = str(tmp_path / "plain")
-    zorder_write(_frame(spark, 100), ["x", "y"], plain, num_files=1)
+    _frame(spark, 100).write.parquet(plain)
     with pytest.raises(ValueError, match="manifest-backed"):
         start_zorder_ingest(
             spark, str(tmp_path / "*.jsonl"), str(tmp_path / "ck"), plain,
@@ -134,7 +133,7 @@ def test_ingested_segments_prune_like_built_ones(spark, tmp_path, layout):
 
 
 def test_cli_layout_lifecycle(spark, tmp_path, capsys, monkeypatch):
-    """CLI layout-build --transactional → layout-append →
+    """CLI layout-build → layout-append →
     ingest-rows → layout-compact --vacuum-keep: the whole durable
     lifecycle from the operator surface a user drives."""
     import json as _json
@@ -151,7 +150,7 @@ def test_cli_layout_lifecycle(spark, tmp_path, capsys, monkeypatch):
 
     rc = cli.main([
         "layout-build", "base", "--sf-dir", str(sf), "--path", root,
-        "--cols", "x,y", "--num-files", "4", "--transactional",
+        "--cols", "x,y", "--num-files", "4",
     ])
     assert rc in (0, None)
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -211,8 +210,7 @@ def test_cli_layout_query_prunes(spark, tmp_path, capsys, monkeypatch):
 
     monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
     root = str(tmp_path / "lay")
-    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=2,
-                 transactional=True)
+    zorder_write(_frame(spark, 500), ["x", "y"], root, num_files=2)
     # disjoint-band append: the box below hits only this segment
     import pyspark.sql.functions as _F
 
@@ -378,11 +376,11 @@ def test_ingest_keeps_flowing_while_handed_off_compaction_runs(
     entered = threading.Event()
     maint_tid: dict = {"id": None}
 
-    def slow_cluster(df, meta, dest, num_files, mode):
+    def slow_cluster(df, meta, dest, num_files):
         if threading.get_ident() == maint_tid["id"]:
             entered.set()
             _time.sleep(3.0)  # the minutes-long rewrite, scaled down
-        real_cluster(df, meta, dest, num_files, mode)
+        real_cluster(df, meta, dest, num_files)
 
     err: list[BaseException] = []
 

@@ -34,7 +34,7 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
     from fintech_etl_spark.streaming import start_invoice_stream
 
     def on_receipts(receipts, batch_id):
-        write_receipts_parquet(receipts, out, partition_by_month=False)
+        write_receipts_parquet(receipts, out)
 
     q = start_invoice_stream(
         spark, str(landing), ckpt, on_receipts, run_date=RUN_DATE, run_ts=1
@@ -360,7 +360,7 @@ def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
         spark,
         str(landing),
         str(tmp_path / "ckpt"),
-        lambda r, _bid: write_receipts_parquet(r, out, partition_by_month=False),
+        lambda r, _bid: write_receipts_parquet(r, out),
         run_date=RUN_DATE,
         run_ts=1,
     )
@@ -1060,6 +1060,7 @@ def test_streaming_ivf_pq_matches_batch(spark, tmp_path):
     from fintech_etl_spark.operators.similarity import _N_QUERIES, ann_ivf_pq
     from fintech_etl_spark.sources.tables import load_table
     from fintech_etl_spark.streaming.ann import (
+        _read_ivf_dataset,
         build_ivf_pq_index,
         start_ivf_pq_queries,
     )
@@ -1073,7 +1074,7 @@ def test_streaming_ivf_pq_matches_batch(spark, tmp_path):
     assert counts["codebook_rows"] == 8 * 16
 
     # partition pruning: a probed-cells IN filter reads only those dirs
-    pruned = spark.read.parquet(index + "/codes").filter(
+    pruned = _read_ivf_dataset(spark, index, "codes").filter(
         F.col("cell").isin([1, 2])
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -1129,14 +1130,18 @@ def test_lsh_index_probe_is_partition_pruned(spark, tmp_path):
     relaxation read nearly every directory once a batch touched most
     buckets) still lands in PartitionFilters, reading ONLY the probed
     pairs."""
-    from fintech_etl_spark.streaming.ann import build_lsh_index, _N_PLANES
+    from fintech_etl_spark.streaming.ann import (
+        _N_PLANES,
+        _read_lsh_index,
+        build_lsh_index,
+    )
 
     index = str(tmp_path / "index")
     build_lsh_index(spark, "/root/testdata/sf0.001", index)
     n_buckets = 1 << _N_PLANES
     pairs = [(0, 1), (3, 7)]
     keys = sorted(b * n_buckets + k for b, k in pairs)
-    pruned = spark.read.parquet(index).filter(
+    pruned = _read_lsh_index(spark, index).filter(
         (F.col("band") * n_buckets + F.col("bucket")).isin(keys)
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()

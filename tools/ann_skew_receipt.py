@@ -119,6 +119,7 @@ def _measure(spark, sf: str, idx: str, work: str, tag: str, cell_cap):
     from fintech_etl_spark.operators.dedup import cosine
     from fintech_etl_spark.sources.tables import load_table
     from fintech_etl_spark.streaming.ann import (
+        _read_ivf_dataset,
         build_ivf_pq_index,
         start_ivf_pq_queries,
     )
@@ -128,7 +129,7 @@ def _measure(spark, sf: str, idx: str, work: str, tag: str, cell_cap):
     build_s = round(time.time() - t0, 3)
 
     # cell profile from the committed codes layout
-    codes = spark.read.parquet(idx + "/codes")
+    codes = _read_ivf_dataset(spark, idx, "codes")
     prof = (
         codes.groupBy("cell")
         .agg((F.count(F.lit(1)) / 8).alias("n"))  # 8 sub-rows per vector

@@ -74,9 +74,7 @@ def main() -> int:
         part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
         shutil.move(os.path.join(tmp, part), os.path.join(land, name))
 
-    lay.zorder_write(
-        frame(BASE_ROWS), ["x", "y"], root, num_files=32, transactional=True
-    )
+    lay.zorder_write(frame(BASE_ROWS), ["x", "y"], root, num_files=32)
     # one drifted file trips the signal through the real ingest path
     write_jsonl(
         frame(BATCH_ROWS, offset=BASE_ROWS, shift=50_000), "drift.jsonl"

@@ -73,9 +73,7 @@ def main() -> int:
         shutil.move(os.path.join(tmp, part), os.path.join(land, name))
         shutil.rmtree(tmp, ignore_errors=True)
 
-    lay.zorder_write(
-        frame(BASE_ROWS), ["x", "y"], root, num_files=16, transactional=True
-    )
+    lay.zorder_write(frame(BASE_ROWS), ["x", "y"], root, num_files=16)
 
     stop = threading.Event()
     errors: dict[str, list[str]] = {"reader": [], "maint": []}

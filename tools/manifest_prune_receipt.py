@@ -67,10 +67,7 @@ def main() -> int:
     root = os.path.join(work, "lay")
     res: dict = {"metric": "manifest_segment_prune", "sf_dir": SF}
     try:
-        zorder_write(
-            base, ["l_orderkey", "l_partkey"], root, num_files=16,
-            transactional=True,
-        )
+        zorder_write(base, ["l_orderkey", "l_partkey"], root, num_files=16)
         band = (hi - hi // 2) // N_APPENDS + 1
         t0 = time.perf_counter()
         for i in range(N_APPENDS):

@@ -29,8 +29,15 @@ N_FILES = 32
 def _grid_admitted(path: str, b) -> tuple[int, int]:
     import pyarrow.parquet as pq
 
+    from fintech_etl_spark.sinks import manifest as mf
+
     stats = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
+    files = [
+        f
+        for seg in mf.dataset_segments(path, "layout")
+        for f in glob.glob(os.path.join(seg, "*.parquet"))
+    ]
+    for f in files:
         meta = pq.ParquetFile(f).metadata
         s: dict = {}
         for rg in range(meta.num_row_groups):
@@ -63,7 +70,11 @@ def _grid_admitted(path: str, b) -> tuple[int, int]:
 def main() -> int:
     from pyspark.sql import functions as F
 
-    from fintech_etl_spark.operators.layout import zorder_append, zorder_write
+    from fintech_etl_spark.operators.layout import (
+        read_zorder,
+        zorder_append,
+        zorder_write,
+    )
     from fintech_etl_spark.session import build_session
     from fintech_etl_spark.sources.tables import load_table
 
@@ -94,8 +105,8 @@ def main() -> int:
 
         admitted, total = _grid_admitted(zpath, b)
         union_ok = (
-            spark.read.parquet(zpath).count() == n
-            and spark.read.parquet(zpath).exceptAll(li).count() == 0
+            read_zorder(spark, zpath).count() == n
+            and read_zorder(spark, zpath).exceptAll(li).count() == 0
         )
 
         t0 = time.perf_counter()

@@ -102,10 +102,7 @@ def main() -> int:
     base = li.filter(F.col("l_orderkey") % (N_BATCHES + 1) == 0)
     work = tempfile.mkdtemp(prefix="zdrift_")
     root = os.path.join(work, "layout")
-    zorder_write(
-        base, ["l_partkey", "l_suppkey"], root, num_files=32,
-        transactional=True,
-    )
+    zorder_write(base, ["l_partkey", "l_suppkey"], root, num_files=32)
 
     def probe_box(i: int) -> dict:
         # narrow box at the center of batch i's (shifted) key region —

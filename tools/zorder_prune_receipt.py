@@ -61,6 +61,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from fintech_etl_spark.operators.layout import zorder_write
+    from fintech_etl_spark.sinks import manifest as mf
     from fintech_etl_spark.session import build_session
     from fintech_etl_spark.sources.tables import load_table
 
@@ -86,7 +87,9 @@ def main() -> int:
 
         cols = ["l_partkey", "l_suppkey"]
         nat_stats = _file_stats(natural, cols)
-        z_stats = _file_stats(zpath, cols)
+        # the layout is one committed segment: its files are the layout's
+        (zseg,) = mf.dataset_segments(zpath, "layout")
+        z_stats = _file_stats(zseg, cols)
 
         def admitted(stats, plo, phi, slo, shi) -> int:
             return sum(

@@ -90,7 +90,13 @@ def main() -> int:
         "fintech_etl_zbox_"
         + hashlib.md5(os.path.abspath(SF).encode()).hexdigest()[:12],
     )
-    files = glob.glob(os.path.join(path, "*.parquet"))
+    from fintech_etl_spark.sinks import manifest as mf
+
+    files = [
+        f
+        for seg in mf.dataset_segments(path, "layout")
+        for f in glob.glob(os.path.join(seg, "*.parquet"))
+    ]
     admitted = 0
     for f in files:
         meta = pq.ParquetFile(f).metadata
