@@ -1,13 +1,16 @@
 """Benchmark runner — the driver's per-round performance probe.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line:  {"metric": ..., "value": N, "unit": "sec", "queries":
-{...}, "sf": ...}.
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints two
+JSON lines: the per-query detail, then the compact summary
+{"metric": ..., "value": N, "unit": "sec", ..., "queries": {...}}
+whose ``queries`` maps each query to its warm time in integer ms (see
+:func:`summary_line`).
 
-Each query is executed twice; the second (warm) run is recorded so JVM
-startup / code-compilation noise doesn't swamp the numbers. ``value``
-is the summed warm wall-clock across the suite.
+Each query runs once to warm up and then three timed times, back to
+back; the fastest timed run is recorded so JVM startup and
+code-compilation noise don't swamp the numbers. ``value`` is the
+summed warm wall-clock across the suite.
 """
 
 from __future__ import annotations
@@ -163,6 +166,52 @@ HEADLINE = (
 _INDEX_BUILD = frozenset({"ann_pq_adc", "ann_ivf_pq", "ann_ivf_pq_auto"})
 
 
+def summary_record(
+    timings: dict[str, float],
+    medians: dict[str, float],
+    sf: float,
+    load_at_start: float | None,
+    load_at_end: float | None,
+) -> dict:
+    """The suite totals of the summary line, from the per-query min
+    (``timings``) and median (``medians``) warm seconds."""
+    total = round(sum(timings.values()), 3)
+    # r8 split (round-7 verdict #8): the ANN index-build entries train
+    # both quantizers per invocation BY DESIGN (that is the production
+    # build shape) — ~10 s of the suite that is training tax, not query
+    # regression. Separate sums let round-over-round comparison track
+    # the query core without eating the training cost.
+    build_sum = round(
+        sum(timings[n] for n in _INDEX_BUILD if n in timings), 3
+    )
+    return {
+        "metric": "headline_suite_warm_sec",
+        "value": total,
+        "unit": "sec",
+        "value_median": round(sum(medians.values()), 3),
+        "headline_core_sec": round(total - build_sum, 3),
+        "headline_index_build_sec": build_sum,
+        "n_queries": len(timings),
+        "sf": sf,
+        "load_per_cpu_at_start": load_at_start,
+        "load_per_cpu_at_end": load_at_end,
+    }
+
+
+def summary_line(summary: dict, timings: dict[str, float]) -> str:
+    """The LAST stdout line, which the driver parses from a ~2000-char
+    tail buffer: ``summary`` plus ``queries``, each query's min warm
+    time in integer ms. A headline query is keyed by its position in
+    ``HEADLINE`` (append-only, so a key names the same query in every
+    round) and any other query by its name. Name keys overflowed the
+    buffer by r9 (BENCH_r{9,10} parsed:null): the 60 headline names
+    alone take 1,258 chars. The detail line and BENCH_DETAIL_r{N}.json
+    carry the names."""
+    pos = {n: str(i) for i, n in enumerate(HEADLINE)}
+    ms = {pos.get(n, n): round(t * 1000) for n, t in timings.items()}
+    return json.dumps({**summary, "queries": ms}, separators=(",", ":"))
+
+
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -215,42 +264,13 @@ def main() -> int:
         timings[name] = round(runs[0], 3)
         medians[name] = round(runs[len(runs) // 2], 3)
 
-    total = round(sum(timings.values()), 3)
-    total_median = round(sum(medians.values()), 3)
-    # r8 split (round-7 verdict #8): the ANN index-build entries train
-    # both quantizers per invocation BY DESIGN (that is the production
-    # build shape) — ~10 s of the suite that is training tax, not query
-    # regression. Separate sums let round-over-round comparison track
-    # the query core without eating the training cost.
-    build_sum = round(
-        sum(timings[n] for n in _INDEX_BUILD if n in timings), 3
-    )
-    core_sum = round(total - build_sum, 3)
     detail = {
         "metric": "headline_suite_detail",
         "queries": timings,
         "queries_median": medians,
         "load_per_cpu_per_query": query_load,
     }
-    # The driver parses the LAST JSON line of stdout into a ~2000-char
-    # tail buffer. r7 overflowed it with one giant line; the r8 "compact
-    # summary" fix put per-query timings back on the summary and the
-    # suite outgrew the buffer AGAIN by r9 (BENCH_r{9,10} both
-    # parsed:null). Per-query timings now live ONLY on the detail line
-    # and in BENCH_DETAIL_r{N}.json — the summary stays a few hundred
-    # chars no matter how many queries the suite grows to.
-    summary = {
-        "metric": "headline_suite_warm_sec",
-        "value": total,
-        "unit": "sec",
-        "value_median": total_median,
-        "headline_core_sec": core_sum,
-        "headline_index_build_sec": build_sum,
-        "n_queries": len(names),
-        "sf": sf,
-        "load_per_cpu_at_start": load_per_cpu,
-        "load_per_cpu_at_end": _load(),
-    }
+    summary = summary_record(timings, medians, sf, load_per_cpu, _load())
     # Medians + per-query load go to a sidecar AND an early stdout line:
     # round 7's driver bench came back parsed:null because everything
     # shared ONE final JSON line that outgrew the driver's tail buffer.
@@ -289,7 +309,7 @@ def main() -> int:
     except OSError:
         pass
     print(json.dumps(detail))
-    print(json.dumps(summary))
+    print(summary_line(summary, timings))
     return 0
 
 

@@ -610,6 +610,7 @@ def zorder_write(
     that already ran the identical min/max agg, like the box-query
     operators, skip the duplicate full-scan pass; anything else would
     clamp keys and corrupt the curve)."""
+    mf.refuse_orphaning_commit(path, "zorder_write")
     if bounds is None:
         bounds = _freeze_bounds(df, cols, "zorder_write")
     meta = {"cols": cols, "bits": bits, "bounds": bounds}

@@ -99,6 +99,24 @@ def build_session(
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", "1024"
         )
+        # Generated-code cache: every whole-stage and expression class
+        # is compiled once and reused while it stays cached. The
+        # default keeps 100 classes, below the engine's working set
+        # (distinct classes, measured with a large cache: 167 for the
+        # 12-query perfbench star mix, 868 for the 60-query headline
+        # suite and 2,350 for the full 214-query registry, both at
+        # sf0.01), so an interleaved mix evicted and recompiled nearly
+        # every class on every pass and re-warmed the JIT for each.
+        # 4096 covers the whole registry with ~1.7x margin. This is a
+        # static, per-JVM setting: the driver and every executor JVM
+        # hold their own cache, the first session in a JVM fixes its
+        # size, and at 100 TB an evicted class is recompiled in each
+        # executor that runs the next stage needing it. Metaspace is
+        # the cost: 208 MiB after a full-registry pass with every class
+        # cached, and 188 MiB (vs 200 MiB at the default, whose evicted
+        # classes churn through new class loaders) after two headline
+        # passes; driver VmHWM 2.96 GB vs 3.07 GB at the default.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -279,6 +279,42 @@ def is_transactional(root: str) -> bool:
     return os.path.exists(os.path.join(manifests_dir(root), _CURRENT))
 
 
+def _has_parquet(root: str, own: tuple[str, ...] = ()) -> bool:
+    """True if ``root`` holds parquet files outside a manifest's
+    ``segments/`` and ``_manifests/`` and outside the writer's ``own``
+    top-level directories."""
+    if not os.path.isdir(root):
+        return False
+    for dirpath, dirnames, filenames in os.walk(root):
+        skip = (_SEGMENTS, _MANIFESTS) + (own if dirpath == root else ())
+        dirnames[:] = [d for d in dirnames if d not in skip]
+        if any(f.endswith(".parquet") for f in filenames):
+            return True
+    return False
+
+
+def refuse_orphaning_commit(
+    root: str, writer: str, own: tuple[str, ...] = ()
+) -> None:
+    """Raise ``ValueError`` naming ``root`` when a FIRST commit there
+    would orphan existing parquet: readers resolve only the segments a
+    manifest names, and ``vacuum`` only collects ``segments/``, so files
+    written before the manifest would stay on disk, invisible and never
+    reclaimed. Every manifest writer calls this before it writes
+    anything; ``own`` names the writer's own top-level directories
+    (e.g. an index's frozen quantizers) that a retried first build may
+    already have written."""
+    if not is_transactional(root) and _has_parquet(root, own):
+        raise ValueError(
+            f"{writer}: {root!r} already holds a PLAIN parquet lake "
+            "(parquet files outside any manifest segment) — a first "
+            "commit would leave them invisible to every reader and "
+            "beyond vacuum. Write to a fresh path (re-writing the old "
+            "rows there as the first batch if they are wanted), then "
+            "retire the plain directory"
+        )
+
+
 def _no_manifest(root: str) -> ValueError:
     return ValueError(
         f"{root!r} is not a manifest-backed dataset (no "

@@ -305,21 +305,6 @@ def _validate_schema_against(
     return meta
 
 
-def _has_parquet(path: str) -> bool:
-    """True if ``path`` holds any parquet data OUTSIDE a manifest's
-    segments — i.e. a plain directory lake a first commit would
-    orphan."""
-    if not os.path.isdir(path):
-        return False
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [
-            d for d in dirnames if d not in ("segments", "_manifests")
-        ]
-        if any(f.endswith(".parquet") for f in filenames):
-            return True
-    return False
-
-
 def _with_month(receipts: DataFrame) -> DataFrame:
     return receipts.withColumn(
         "transaction_month", F.date_format("transaction_date", "yyyy-MM")
@@ -486,16 +471,8 @@ def write_receipts_parquet(
             "plain-directory lake, which was removed — every batch is a "
             "manifest commit; drop the argument"
         )
+    mf.refuse_orphaning_commit(path, "write_receipts_parquet")
     live = mf.is_transactional(path)
-    if not live and _has_parquet(path):
-        raise ValueError(
-            f"write_receipts_parquet: {path!r} already holds a PLAIN "
-            "parquet lake — committing a manifest over it would leave "
-            "the existing files invisible to read_receipts (the manifest "
-            "names only committed segments). Migrate explicitly: write "
-            "the old lake's rows as the first batch into a fresh path "
-            "(mode='overwrite'), then retire the plain dir"
-        )
     if batch_key is not None and file_key_col is not None:
         raise ValueError(
             "write_receipts_parquet: pass batch_key OR file_key_col, "

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from fintech_etl_spark.operators.layout import _footer_rows
 from fintech_etl_spark.operators.similarity import (
     _DIM,
     _KM_K,
@@ -122,6 +123,7 @@ def build_lsh_index(
     ``replace`` pointer swap, so compaction is a race-free snapshot
     swap and ingest is exactly-once per source file. A rebuild also
     resets the ingested-file history (``reset_ingested``)."""
+    mf.refuse_orphaning_commit(index_path, "build_lsh_index")
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _bucketed_units(emb).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -136,7 +138,9 @@ def build_lsh_index(
     # skipped as "already processed" and the vectors stay missing
     # forever
     mf.commit(index_path, replace={"index": [seg]}, reset_ingested=True)
-    return _read_lsh_index(spark, index_path).count()
+    # the replace-commit makes this segment the whole index, so its
+    # footers carry the exact row count — no re-scan
+    return _footer_rows(seg)
 
 
 def append_lsh_index(
@@ -538,6 +542,12 @@ def build_ivf_pq_index(
     """
     from fintech_etl_spark.operators.similarity import kmeans_fit, pq_fit
 
+    # coarse/ and codebooks/ are this index's own: a first build that
+    # crashed before its commit may have left them, and a retry must
+    # still build
+    mf.refuse_orphaning_commit(
+        index_path, "build_ivf_pq_index", own=("coarse", "codebooks")
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     if k is None:  # the auto-k lake contract, as in ivf_pq_search
         k = max(1, -(-emb.count() // 512))
@@ -588,11 +598,12 @@ def build_ivf_pq_index(
         replace={"codes": [seg_c], "vectors": [seg_v]},
         reset_ingested=True,
     )
+    # exact counts from the footers of what was just written, no job
     return {
-        "codes": _read_ivf_dataset(spark, index_path, "codes").count(),
-        "vectors": _read_ivf_dataset(spark, index_path, "vectors").count(),
-        "coarse_cells": spark.read.parquet(index_path + "/coarse").count(),
-        "codebook_rows": spark.read.parquet(index_path + "/codebooks").count(),
+        "codes": _footer_rows(seg_c),
+        "vectors": _footer_rows(seg_v),
+        "coarse_cells": _footer_rows(index_path + "/coarse"),
+        "codebook_rows": _footer_rows(index_path + "/codebooks"),
     }
 
 

@@ -885,6 +885,63 @@ def test_bare_parquet_dir_is_never_read_as_a_layout_or_index(spark, tmp_path):
     assert not {"_manifests", "segments"} & set(os.listdir(bare))
 
 
+def test_first_commit_over_bare_parquet_is_refused_by_every_writer(
+    spark, tmp_path
+):
+    """A first commit over a directory that already holds parquet would
+    leave those files invisible to readers and beyond vacuum, so every
+    manifest writer refuses it with a ValueError naming the path before
+    it writes anything."""
+    import re
+
+    from fintech_etl_spark.operators.layout import zorder_write
+    from fintech_etl_spark.sinks import write_receipts_parquet
+
+    bare = str(tmp_path / "bare")
+    rows = spark.createDataFrame([(1, 2)], "x long, y long")
+    rows.write.parquet(bare)
+    calls = {
+        "write_receipts_parquet": lambda: write_receipts_parquet(rows, bare),
+        "zorder_write": lambda: zorder_write(rows, ["x", "y"], bare),
+        "build_lsh_index": lambda: build_lsh_index(spark, SF_SMOKE, bare),
+        "build_ivf_pq_index": lambda: build_ivf_pq_index(spark, SF_SMOKE, bare),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=re.escape(bare)):
+            call()
+        assert not {"_manifests", "segments"} & set(os.listdir(bare)), name
+
+
+def test_index_builds_count_rows_from_footers(spark, tmp_path):
+    """The counts an index build returns, taken from the footers of
+    what it wrote, equal explicit counts of what it committed. An
+    IVF-PQ build retried after a crash before its first commit, which
+    left its own coarse/ and codebooks/ behind, still builds."""
+    from fintech_etl_spark.streaming.ann import (
+        _read_ivf_dataset,
+        _read_lsh_index,
+    )
+
+    a_dir, a, _b = _split(spark, tmp_path)
+    lsh = str(tmp_path / "lsh")
+    assert build_lsh_index(spark, a_dir, lsh) == _read_lsh_index(
+        spark, lsh
+    ).count() == a.count() * 12
+
+    ivf = str(tmp_path / "ivf")
+    junk = spark.createDataFrame([(0,)], "c int")
+    junk.write.parquet(os.path.join(ivf, "coarse"))
+    junk.write.parquet(os.path.join(ivf, "codebooks"))
+    counts = build_ivf_pq_index(spark, a_dir, ivf, k=4)
+    assert counts == {
+        "codes": _read_ivf_dataset(spark, ivf, "codes").count(),
+        "vectors": _read_ivf_dataset(spark, ivf, "vectors").count(),
+        "coarse_cells": spark.read.parquet(ivf + "/coarse").count(),
+        "codebook_rows": spark.read.parquet(ivf + "/codebooks").count(),
+    }
+    assert counts["vectors"] == a.count() and counts["coarse_cells"] == 4
+
+
 # ---------------------------------------------------------------------------
 # concurrent committers: ingest stream racing a compaction churn thread
 # ---------------------------------------------------------------------------

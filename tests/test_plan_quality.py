@@ -557,3 +557,59 @@ def test_no_unbounded_single_partition_window_anywhere(spark, specs):
     )
     stale = _GLOBAL_WINDOW_ALLOWLIST - used_allowlist
     assert not stale, f"allowlist entries no longer needed: {stale}"
+
+
+# the perfbench star mix (perfbench/workloads.py STAR_MIX), copied so
+# the engine's tests do not depend on the benchmark package
+_STAR_MIX = (
+    "q1_pricing_summary",
+    "q3_segment_topk_revenue",
+    "q5_region_revenue",
+    "q7_nation_volume",
+    "q8_market_share",
+    "q13_order_count_distribution",
+    "q21_waiting_suppliers",
+    "window_topk_per_customer",
+    "window_lag_sessionize",
+    "events_hourly_rollup",
+    "receipt_order_rollup",
+    "agg_percentiles",
+)
+
+
+def test_star_mix_compiles_each_generated_class_once(spark, specs):
+    """A second pass of the interleaved star mix reuses the classes the
+    first pass compiled: ``build_session`` sizes the generated-code
+    cache above the mix's working set (~170 classes), where the
+    default 100-entry cache evicts and recompiles nearly all of them
+    on every pass.
+
+    The cache size is a static, per-JVM setting fixed by the first
+    session in the JVM — a second session here cannot resize it, so
+    the test checks the size this suite's own ``build_session`` chose.
+    The cache is emptied first (through reflection on Spark's private
+    field) so the first pass compiles the mix's whole working set
+    whatever earlier tests in this JVM left cached."""
+    jvm = spark._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in _STAR_MIX:
+            specs[name].fn(spark, SF_SMOKE).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return compiles.getCount() - before
+
+    first, second = one_pass(), one_pass()
+    assert first > len(_STAR_MIX), first
+    assert second <= 0.1 * first, (
+        f"second pass recompiled {second} of the {first} generated "
+        "classes the first pass compiled — the codegen cache is "
+        "smaller than the mix's working set"
+    )
