@@ -16,7 +16,11 @@ rows), so the plan scales linearly with executors.
 
 Fidelity notes (SURVEY §2.2, §2.4):
   - pandas ``groupby`` drops NaN keys → explicit ``isNotNull`` filter.
-  - pandas emits groups in ascending key order → final ``orderBy``.
+  - pandas emits groups in ascending key order; here emission order is
+    unspecified, since no commit-path consumer reads it (the lake
+    write clusters by month, the webhook drain posts per partition,
+    the Pub/Sub sink sorts each ordering key itself). A consumer that
+    needs key order sorts for itself.
   - "first row" header extraction is file order → ``min_by(col, _row_idx)``
     over the scan-assigned row index.
   - ``total_amount`` is the first row's *Invoice Amount* field while
@@ -166,7 +170,7 @@ def build_receipts(
         R.document_id(
             F.lit(gmail_id) if gmail_id is not None else None, receipt_no, run_ts
         ).alias("document_id"),
-    ).orderBy("receipt_id")
+    )
 
 
 def _wire_document() -> F.Column:

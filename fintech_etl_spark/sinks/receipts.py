@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from fintech_etl_spark.sinks import manifest as mf
@@ -412,10 +412,14 @@ def write_receipts_parquet(
       batch key breaks the moment a replay RE-BATCHES the same files
       (checkpoint loss re-lists and regroups by maxFilesPerTrigger)
       or a backfill glob GROWS ({a,b} vs {a,b,c} hash differently —
-      a and b would be appended twice). Here already-ingested files'
-      rows are filtered out, only unprocessed files' rows are staged,
-      and their keys ride the same atomic commit — a mixed batch
-      appends exactly the new files, like the z-order/ANN ingests.
+      a and b would be appended twice). Here the batch's keys are
+      probed before anything is staged, already-ingested files' rows
+      are filtered out, only unprocessed files' rows are staged, and
+      their keys ride the same atomic commit — a mixed batch appends
+      exactly the new files, like the z-order/ANN ingests, and a full
+      replay stages nothing. The keys are collected by an
+      ``Observation`` on a no-op write of the key column: one Spark
+      job, no shuffle, no output.
 
     ``outbox`` is a callable mapping the PUBLISHED receipts frame to
     a ``(document_id, payload)`` frame
@@ -487,17 +491,20 @@ def write_receipts_parquet(
             return {"published": False}
     if file_key_col is not None:
         # per-FILE granularity: probe the history, keep only rows from
-        # unprocessed files (bounded driver pull: one row per source
-        # file in the batch, Spark's own unit of file-stream work).
+        # unprocessed files — before anything is staged, so a replay
+        # writes nothing. The keys (bounded: one per source file, Spark's
+        # own unit of file-stream work) ride an Observation on a no-op
+        # write of the key column: one job, no shuffle and no output,
+        # where a distinct() collect is two jobs under AQE.
         # A REBUILD (mode="overwrite") resets that history in its own
         # commit, so probing it would no-op the rebuild against keys
         # describing rows the rebuild is about to discard — every
         # incoming file is new by definition there
-        files = sorted(
-            r[0]
-            for r in receipts.select(file_key_col).distinct().collect()
-            if r[0] is not None
-        )
+        seen = Observation()
+        receipts.select(file_key_col).observe(
+            seen, F.collect_set(file_key_col).alias("keys")
+        ).write.format("noop").mode("overwrite").save()
+        files = sorted(seen.get["keys"])
         done = (
             mf.ingested_contains(path, files)
             if live and mode != "overwrite"

@@ -46,8 +46,11 @@ def start_invoice_stream(
 
     The streaming scan needs a declared schema (no inference mid-stream),
     which binds positionally — acceptable here because the landing zone
-    is produced by our own intake writer (one vendor export format);
-    heterogeneous uploads go through the batch path instead.
+    is produced by our own intake writer (one vendor export format).
+    A heterogeneous upload goes through the batch path one file at a
+    time (``process-csv``), which binds by header name; a multi-file
+    batch there refuses any file whose header differs from the
+    batch's first file.
 
     ``maxFilesPerTrigger`` bounds micro-batch size so a backfill burst
     of thousands of files doesn't become one giant batch.

@@ -761,7 +761,7 @@ def test_webhook_retry_after_midbatch_failure_no_double_delivery(spark, tmp_path
     fixture.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
     payloads = to_webhook_payloads(
         build_receipts(read_invoice_csv(spark, str(fixture)), run_date=RUN_DATE)
-    ).coalesce(1)  # one partition → deterministic INV1-then-INV2 order
+    ).coalesce(1)  # one partition → both docs share one deliver() call
 
     wire_log = tmp_path / "wire.log"  # every POST that reached the endpoint
     store = tmp_path / "store"  # receiver state, keyed by document_id
@@ -886,7 +886,7 @@ def test_webhook_ledger_survives_driver_restart(spark, tmp_path):
     fixture.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
     payloads = to_webhook_payloads(
         build_receipts(read_invoice_csv(spark, str(fixture)), run_date=RUN_DATE)
-    ).coalesce(1)  # one partition → deterministic INV1-then-INV2 order
+    ).coalesce(1)  # one partition → both docs share one deliver() call
 
     wire_log = tmp_path / "wire.log"
     outage_marker = tmp_path / "outage_done"
