@@ -13,11 +13,14 @@ Commands mirror the reference endpoints:
   query         (new) run any registered analytics query by name
                 (`query` alone lists all 208 with their oracle status)
 
-Every intake command, and every HTTP intake endpoint, runs one
-pipeline (``process_invoices``): each batch is one manifest commit to
-the receipt lake, exactly-once per source file; with ``--webhook`` the
-notifications ride the same commit as an outbox, drained through the
-lake's delivery ledger.
+Every intake ends in one pipeline (``process_invoices``): the four
+intake commands, the three HTTP intake endpoints, and each micro-batch
+of files that ``stream`` discovers. Each batch is one manifest commit
+to the receipt lake, exactly-once per source file. Notifications —
+``--webhook`` on the batch commands, ``--pubsub-topic`` on ``stream``
+— ride the same commit as an outbox and are drained through the
+lake's delivery ledger (``<lake>/_webhook_ledger`` or
+``<lake>/_pubsub_ledger``).
 
 Usage:
   python -m fintech_etl_spark.cli backfill --landing /path/raw \\
@@ -30,14 +33,13 @@ import argparse
 import datetime as dt
 import json
 import os
-import time
 
 from pyspark.sql import SparkSession
 
 from fintech_etl_spark.operators.receipts import build_receipts, to_webhook_payloads
 from fintech_etl_spark.session import build_session
 from fintech_etl_spark.sinks import WebhookSink, land_raw_files, write_receipts_parquet
-from fintech_etl_spark.sinks.receipts import drain_webhook_outbox
+from fintech_etl_spark.sinks.receipts import drain_outbox
 from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
 
 
@@ -45,30 +47,34 @@ def process_invoices(
     spark: SparkSession,
     csv_path: str | list[str],
     lake: str | None,
-    webhook: str | None,
+    sink=None,
     gmail_id: str | None = None,
-    poster=None,
 ) -> int:
-    """The one ingest pipeline behind the CLI and the HTTP service:
-    build receipts from the CSV(s), commit them to the lake, notify.
-    Returns the number of receipts built.
+    """The one ingest pipeline behind the CLI, the HTTP service and
+    the ``stream`` command: build receipts from the CSV(s), commit them
+    to the lake, notify ``sink`` (a ``WebhookSink``, a ``PubSubSink``
+    or None). Returns the number of receipts built.
 
     Exactly-once is PER SOURCE FILE (``file_key_col``), not per batch
     digest: a re-run over the same files, a grown glob or a re-batched
-    replay appends only the genuinely new files' rows. With a webhook
-    the payloads (original document_ids pinned) ride the SAME commit
-    as the data — the transactional OUTBOX — and are then drained
-    through ``<lake>/_webhook_ledger``, so a network blip or a crash
-    between commit and send is retried by the next run's drain, and a
-    replay stages and sends nothing. Without a lake there is nothing
-    to anchor an outbox to: the payloads are posted directly, with no
-    ledger. ``poster`` is the webhook sink's injectable transport."""
+    replay appends only the genuinely new files' rows. With a sink the
+    documents ride the SAME commit as the data — the sink's
+    transactional OUTBOX — and every pending document of that outbox
+    is then drained through the sink's ledger under the lake, so a
+    network blip or a crash between commit and send is retried by the
+    next run's drain, and a replay stages and sends nothing. Without a
+    lake there is nothing to anchor an outbox to: a webhook's payloads
+    are posted directly, with no ledger, and Pub/Sub is refused."""
+    if lake is None and sink is not None and not hasattr(sink, "send_batch"):
+        raise ValueError(
+            "process_invoices: Pub/Sub delivery runs through the lake's "
+            "outbox — pass a lake"
+        )
     receipts = build_receipts(
         read_invoice_csv(spark, csv_path),
         gcs_bucket=os.environ.get("LANDING_BUCKET", ""),
         gmail_id=gmail_id,
         run_date=dt.date.today(),
-        run_ts=int(time.time()),
         # a glob spans many files: keep per-file receipt identity
         per_file=True,
     )
@@ -79,21 +85,14 @@ def process_invoices(
             receipts,
             lake,
             file_key_col="source_file",
-            outbox=to_webhook_payloads if webhook else None,
+            outbox={sink.OUTBOX: to_webhook_payloads} if sink else None,
         )
-        if webhook:
-            sink = WebhookSink(
-                url=webhook,
-                poster=poster,
-                ledger_path=os.path.join(lake, "_webhook_ledger"),
-            )
-            stats = drain_webhook_outbox(spark, lake, sink)
+        if sink is not None:
+            stats = drain_outbox(spark, lake, sink)
             if stats["failed"]:
-                print(json.dumps({"webhook_outbox_pending": stats}))
-    elif webhook:
-        WebhookSink(url=webhook, poster=poster).send_batch(
-            to_webhook_payloads(receipts)
-        )
+                print(json.dumps({"outbox_pending": {sink.OUTBOX: stats}}))
+    elif sink is not None:
+        sink.send_batch(to_webhook_payloads(receipts))
     receipts.unpersist()
     return n
 
@@ -137,16 +136,13 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument(
         "--pubsub-topic",
         help="also publish receipt events to this Pub/Sub topic "
-        "(ledger-gated; the reference README's receipt-processing stage)",
+        "(through the lake's outbox and <lake>/_pubsub_ledger; the "
+        "reference README's receipt-processing stage)",
     )
     st.add_argument(
         "--pubsub-spool",
         help="spool-directory emulator transport instead of the real "
         "client (local/dev; the real client needs google-cloud-pubsub)",
-    )
-    st.add_argument(
-        "--pubsub-ledger",
-        help="publish-ledger parquet path (default: <checkpoint>_pubsub_ledger)",
     )
 
     ib = sub.add_parser(
@@ -546,6 +542,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     spark = build_session("fintech_etl_cli", master=args.master)
 
+    hook = WebhookSink(url=args.webhook) if getattr(args, "webhook", None) else None
     if args.cmd == "ingest":
         with open(args.csv, "rb") as f:
             body = f.read()
@@ -561,16 +558,14 @@ def main(argv: list[str] | None = None) -> int:
             ],
             os.path.join(args.landing, "_manifest"),
         )
-        n = process_invoices(
-            spark, args.csv, args.lake, args.webhook, args.gmail_id
-        )
+        n = process_invoices(spark, args.csv, args.lake, hook, args.gmail_id)
         print(f"ingested 1 file, {n} receipts")
     elif args.cmd == "process-csv":
-        n = process_invoices(spark, args.csv, args.lake, args.webhook)
+        n = process_invoices(spark, args.csv, args.lake, hook)
         print(f"{n} receipts")
     elif args.cmd == "backfill":
         csvs = os.path.join(args.landing, "*.csv")
-        n = process_invoices(spark, csvs, args.lake, args.webhook)
+        n = process_invoices(spark, csvs, args.lake, hook)
         print(f"backfilled {n} receipts")
     elif args.cmd == "list-pending":
         from fintech_etl_spark.sources.tables import list_objects
@@ -584,46 +579,33 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{r.path}\t{r.length}")
         print(f"{len(rows)} pending")
     elif args.cmd == "stream":
+        from fintech_etl_spark.sinks import manifest as mfst
         from fintech_etl_spark.streaming import start_invoice_stream
 
         sink = None
-        ledger = None
         if args.pubsub_topic:
-            from fintech_etl_spark.sinks.pubsub import (
-                FilePubSubEmulator,
-                PubSubSink,
+            from fintech_etl_spark.sinks import pubsub
+
+            sink = pubsub.PubSubSink(
+                args.pubsub_topic,
+                # None → the real client, loud if not installed
+                transport=(
+                    pubsub.FilePubSubEmulator(args.pubsub_spool)
+                    if args.pubsub_spool
+                    else None
+                ),
             )
 
-            transport = (
-                FilePubSubEmulator(args.pubsub_spool)
-                if args.pubsub_spool
-                else None  # None → real client, loud if not installed
-            )
-            sink = PubSubSink(args.pubsub_topic, transport=transport)
-            ledger = args.pubsub_ledger or args.checkpoint + "_pubsub_ledger"
+        def on_files(paths: list[str]) -> None:
+            n = process_invoices(spark, paths, args.lake, sink)
+            print(json.dumps({"stream_batch": {"files": len(paths), "receipts": n}}))
 
-        def on_receipts(receipts, batch_id):
-            # exactly-once PER SOURCE FILE, as in process_invoices: a
-            # checkpoint-loss replay that re-lists and RE-GROUPS the
-            # same files into different micro-batches still skips
-            # every processed file
-            write_receipts_parquet(
-                receipts, args.lake, file_key_col="source_file"
-            )
-            if sink is not None:
-                from fintech_etl_spark.operators.receipts import to_pubsub_events
-
-                stats = sink.publish_with_ledger(
-                    to_pubsub_events(receipts), batch_id, ledger,
-                    order_by=["receipt_id"],
-                )
-                print(json.dumps({"pubsub": {"batch_id": batch_id, **stats}}))
-
-        q = start_invoice_stream(
-            spark, args.landing, args.checkpoint, on_receipts,
-            run_date=dt.date.today(), run_ts=int(time.time()),
-        )
-        q.awaitTermination()
+        start_invoice_stream(
+            spark, args.landing, args.checkpoint, on_files
+        ).awaitTermination()
+        if sink is not None and mfst.is_transactional(args.lake):
+            # retries what an earlier run left pending, new files or not
+            print(json.dumps({"drain": drain_outbox(spark, args.lake, sink)}))
         print("stream drained")
     elif args.cmd == "index-build":
         if args.kind == "ivf-pq":

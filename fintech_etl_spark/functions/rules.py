@@ -272,22 +272,33 @@ def notes(
 def document_id(
     gmail_id: ColumnOrName | None,
     invoice_number: ColumnOrName,
-    run_ts: int,
+    origin: ColumnOrName | int,
     reference_parity: bool = False,
 ) -> Column:
-    """``fnt-{gmail_id}-{invoice}-{unix_seconds}``
-    (/root/reference/stream/processor.py:24-30); timestamp injected.
+    """``fnt-{gmail_id}-{invoice}-{file hash}``: the receipt document's
+    identity, the same on every run over the same file and distinct
+    across files (the reference's ``{unix_seconds}`` suffix,
+    the reference's stream/processor.py:24-30, is neither).
 
-    Default mode diverges deliberately (pinned by test): with a null
-    gmail_id the reference f-string renders the literal ``'None'`` and
-    with a falsy invoice it drops the segment entirely; ``concat_ws``
-    instead skips null segments and keeps empty strings. The reference
-    behavior is a stringification accident, not a format contract, and
-    the skip-null form yields stable ids for the idempotency key.
+    In the default mode ``origin`` is the source-file key column
+    (``source_file``), rendered as its ``xxhash64`` in 16 lower-case
+    hex digits.
+    The id is the idempotency key every delivery ledger and receiver
+    dedupes on, so it must name one document: two files that carry
+    the same invoice number are two documents, and a re-run of a file
+    must not mint new ids.
 
-    ``reference_parity=True`` reproduces the f-string branches
-    byte-for-byte for golden-comparison against reference output:
-    null gmail_id → ``'None'``, null/empty invoice → 3-part id.
+    Default mode also diverges from the reference's rendering
+    (pinned by test): with a null gmail_id the reference f-string
+    renders the literal ``'None'`` and with a falsy invoice it drops
+    the segment entirely; ``concat_ws`` instead skips null segments
+    and keeps empty strings. The reference behavior is a
+    stringification accident, not a format contract.
+
+    ``reference_parity=True`` reproduces the reference byte-for-byte
+    for golden comparison against its output: ``origin`` is then the
+    run's unix seconds (an int), a null gmail_id renders ``'None'`` and
+    a null/empty invoice gives the 3-part id.
     """
     gid = _c(gmail_id) if gmail_id is not None else F.lit(None).cast("string")
     if reference_parity:
@@ -297,10 +308,14 @@ def document_id(
             inv.isNotNull() & (inv != ""), F.concat(F.lit("-"), inv)
         ).otherwise(F.lit(""))
         return F.concat(
-            F.lit("fnt-"), gid_str, inv_seg, F.lit(f"-{int(run_ts)}")
+            F.lit("fnt-"), gid_str, inv_seg, F.lit(f"-{int(origin)}")
         )
     return F.concat_ws(
-        "-", F.lit("fnt"), gid, _c(invoice_number), F.lit(str(int(run_ts)))
+        "-",
+        F.lit("fnt"),
+        gid,
+        _c(invoice_number),
+        F.lower(F.lpad(F.hex(F.xxhash64(_c(origin))), 16, "0")),
     )
 
 

@@ -19,7 +19,7 @@ Fidelity notes (SURVEY §2.2, §2.4):
   - pandas emits groups in ascending key order; here emission order is
     unspecified, since no commit-path consumer reads it (the lake
     write clusters by month, the webhook drain posts per partition,
-    the Pub/Sub sink sorts each ordering key itself). A consumer that
+    the Pub/Sub drain sorts each ordering key itself). A consumer that
     needs key order sorts for itself.
   - "first row" header extraction is file order → ``min_by(col, _row_idx)``
     over the scan-assigned row index.
@@ -116,6 +116,11 @@ def build_receipts(
     reference processes each file independently, so the same invoice
     number appearing in two files must yield two receipts, not one
     merged across files.
+
+    ``document_id`` is derived from ``source_file`` and the invoice
+    number (``rules.document_id``), so it is distinct across files and
+    equal across runs. ``run_ts`` no longer enters any column; it is
+    accepted because the benchmark harness passes it.
     """
     first = lambda c: F.min_by(c, F.col(ROW_IDX))  # first row in file order
 
@@ -150,6 +155,7 @@ def build_receipts(
     path_col = (
         F.col(SOURCE_PATH) if per_file else F.lit(gcs_path)
     )
+    source_file = R.source_file(gcs_bucket, path_col, google_drive_url)
     return grouped.select(
         receipt_no.alias("receipt_id"),
         R.vendor_name("_vendor").alias("vendor"),
@@ -161,22 +167,22 @@ def build_receipts(
         F.col("_subtotal").alias("subtotal"),
         F.col("item_count"),
         F.col("line_items"),
-        R.source_file(gcs_bucket, path_col, google_drive_url).alias(
-            "source_file"
-        ),
+        source_file.alias("source_file"),
         F.lit(processed_at).alias("processed_at"),
         F.lit(gcs_bucket).alias("gcs_bucket"),
         path_col.alias("gcs_path"),
         R.document_id(
-            F.lit(gmail_id) if gmail_id is not None else None, receipt_no, run_ts
+            F.lit(gmail_id) if gmail_id is not None else None,
+            receipt_no,
+            source_file,
         ).alias("document_id"),
     )
 
 
 def _wire_document() -> F.Column:
     """The receipt wire document (/root/reference/stream/util.py:64-94):
-    rename/reshape + date→ISO string — shared by the webhook payload
-    and the Pub/Sub event projections."""
+    rename/reshape + date→ISO string. Both sinks carry it: the webhook
+    posts it, and Pub/Sub publishes it as the message data."""
     return F.struct(
         F.col("receipt_id").alias("receiptId"),
         F.col("vendor"),
@@ -192,29 +198,10 @@ def _wire_document() -> F.Column:
 
 
 def to_webhook_payloads(receipts: DataFrame) -> DataFrame:
-    """Webhook wire projection (/root/reference/stream/util.py:64-94):
-    one JSON document per receipt."""
+    """The outbox projection (the reference's stream/util.py:64-94):
+    one JSON document per receipt, keyed by ``document_id``. Every
+    sink's outbox stages it."""
     return receipts.select(
         F.col("document_id"),
         F.to_json(_wire_document()).alias("payload"),
-    )
-
-
-def to_pubsub_events(receipts: DataFrame) -> DataFrame:
-    """Pub/Sub event projection for the reference's advertised
-    "Processing → Pub/Sub" stage (/root/reference/README.md:66,192 —
-    topic ``receipt-processing``; the reference ships NO implementing
-    code, so the event reuses the webhook wire document). The ordering
-    key is ``source_file`` so a downstream consumer sees each source
-    file's receipts in receipt order (``receipt_id`` is the within-key
-    sort the sink applies); attributes carry the ``document_id``
-    idempotency key for receiver-side dedupe under at-least-once."""
-    return receipts.select(
-        F.col("source_file").alias("ordering_key"),
-        F.col("receipt_id"),
-        F.to_json(_wire_document()).alias("data"),
-        F.create_map(
-            F.lit("document_id"), F.col("document_id"),
-            F.lit("source_file"), F.col("source_file"),
-        ).alias("attributes"),
     )

@@ -88,14 +88,12 @@ class EtlHttpService:
     # -- engine delegation ------------------------------------------------
 
     def _process(self, csv_path: str | list[str], gmail_id: str | None = None) -> int:
-        return process_invoices(
-            self.spark,
-            csv_path,
-            self.lake_dir,
-            self.webhook_url,
-            gmail_id,
-            poster=self.webhook_poster,
+        sink = (
+            WebhookSink(url=self.webhook_url, poster=self.webhook_poster)
+            if self.webhook_url
+            else None
         )
+        return process_invoices(self.spark, csv_path, self.lake_dir, sink, gmail_id)
 
     def _test_webhook(self, url: str | None) -> dict:
         """POST one deterministic sample receipt through the REAL sink

@@ -70,115 +70,28 @@ def compact_parquet(
     return staged
 
 
-def expire_ledger_batches(ledger_path: str, *, keep_last: int) -> list[int]:
-    """Retention for the webhook delivery ledger: drop all but the most
-    recent ``keep_last`` ``batch_id=`` partitions. Returns the batch
-    ids removed (sorted).
-
-    The ledger's only job is making a RETRY of a batch skip already-
-    delivered documents; once the streaming checkpoint has committed
-    past a batch it can never be retried, so its partition is dead
-    weight that every future `_read_ledger` listing must still index.
-    Deletion is scoped to ``batch_id=<n>`` directories directly under
-    ``ledger_path`` — nothing else in the lake is touchable from here.
-    Pure filesystem metadata work: no Spark job, no data read.
-
-    SCOPE: keep-last order is only meaningful for MONOTONE batch ids
-    (the streaming paths' epoch numbers). A webhook-OUTBOX ledger's
-    ids are segment-name hashes (``sinks.receipts.outbox_batch_id``)
-    with no time order at all — "oldest N" there is a random subset
-    that can include a STILL-PENDING segment's skip records (silently
-    downgrading retry-only-failures to re-post-the-whole-batch, the
-    r14 verdict's sharpest latent edge). Refused loudly, pointing at
-    the membership-keyed :func:`expire_outbox_ledger` instead, when
-    the target IS an outbox ledger: the well-known
-    ``<lake>/_webhook_ledger`` path of an outbox-bearing lake, or any
-    ledger holding a partition for a segment currently PENDING in
-    such a lake's outbox. A differently-named streaming ledger that
-    merely LIVES inside an outbox lake keeps working — the in-stream
-    ``ledger_keep_batches`` retention must not start crashing
-    micro-batches because the lake once committed an outbox (the r15
-    self-review catch)."""
-    import os
-    import re
-    import shutil
-
-    if keep_last < 0:
-        raise ValueError("keep_last must be >= 0")
-    parent = os.path.dirname(os.path.abspath(ledger_path.rstrip("/")))
-    from fintech_etl_spark.sinks import manifest as mfst
-
-    if mfst.is_transactional(parent):
-        from fintech_etl_spark.sinks.receipts import (
-            _OUTBOX_DS,
-            outbox_batch_id,
-        )
-
-        datasets = mfst.current(parent)["datasets"]
-        if _OUTBOX_DS in datasets:
-            pending_ids = {
-                outbox_batch_id(rel) for rel in datasets[_OUTBOX_DS]
-            }
-            is_default_outbox_ledger = (
-                os.path.basename(ledger_path.rstrip("/"))
-                == "_webhook_ledger"
-            )
-            holds_pending = any(
-                os.path.isdir(os.path.join(ledger_path, f"batch_id={b}"))
-                for b in pending_ids
-            )
-            if is_default_outbox_ledger or holds_pending:
-                raise ValueError(
-                    f"expire_ledger_batches: {ledger_path!r} is a "
-                    "webhook-OUTBOX delivery ledger of the manifest-"
-                    f"backed lake {parent!r} — its batch ids are "
-                    "segment-name HASHES with no keep-last order, so "
-                    "expiring the numerically smallest ids could "
-                    "delete a PENDING segment's skip records while "
-                    "keeping delivered ones. Use "
-                    "expire_outbox_ledger(lake) (membership-keyed on "
-                    "the manifest's outbox dataset); the drain "
-                    "already self-retains this ledger"
-                )
-    if not os.path.isdir(ledger_path):
-        return []
-    parts: dict[int, str] = {}
-    for name in os.listdir(ledger_path):
-        m = re.fullmatch(r"batch_id=(-?\d+)", name)
-        if m and os.path.isdir(os.path.join(ledger_path, name)):
-            parts[int(m.group(1))] = os.path.join(ledger_path, name)
-    doomed = sorted(parts)[: max(0, len(parts) - keep_last)]
-    for b in doomed:
-        shutil.rmtree(parts[b])
-    return doomed
-
-
-def expire_outbox_ledger(
-    lake_root: str, ledger_path: str | None = None
-) -> list[int]:
-    """Retention for a webhook-OUTBOX delivery ledger, keyed on the
-    only thing that is actually meaningful for hash-derived batch ids:
-    MEMBERSHIP in the lake manifest's live ``webhook_outbox`` dataset.
-    A ``batch_id=`` partition whose id maps to NO pending outbox
-    segment belongs to a delivered (or vacuumed) batch that can never
-    be retried — dead listing weight; one that DOES map to a pending
-    segment holds the skip records the next drain's
-    retry-only-failures contract depends on and is never touched,
-    regardless of its numeric id. This is the manual sweep for
-    residue the drain's own in-line retention missed (a crash between
-    its remove-commit and partition drop, or a ledger written by the
-    pre-r15 per-segment drain); ``maintain --webhook-url`` runs it
-    from the cron. Default ``ledger_path`` is the CLI's
-    ``<lake>/_webhook_ledger``. Returns the batch ids removed
-    (sorted). Pure filesystem metadata work."""
+def expire_outbox_ledger(lake_root: str) -> list[int]:
+    """Retention for the lake's webhook delivery ledger
+    (``<lake>/_webhook_ledger``), keyed on the only thing that is
+    meaningful for hash-derived batch ids: MEMBERSHIP in the lake
+    manifest's live ``webhook_outbox`` dataset. A ``batch_id=``
+    partition whose id maps to NO pending outbox segment belongs to a
+    delivered (or vacuumed) batch that can never be retried — dead
+    listing weight; one that DOES map to a pending segment holds the
+    skip records the next drain depends on and is never touched,
+    regardless of its numeric id. This is the sweep for residue the
+    drain's own in-line retention missed (a crash between its
+    remove-commit and partition drop); ``maintain --webhook-url`` runs
+    it from the cron. Returns the batch ids removed (sorted). Pure
+    filesystem metadata work."""
     import re
 
     from fintech_etl_spark.sinks import manifest as mfst
     from fintech_etl_spark.sinks.receipts import (
-        _OUTBOX_DS,
         _drop_ledger_partitions,
         outbox_batch_id,
     )
+    from fintech_etl_spark.sinks.webhook import WebhookSink
 
     if not mfst.is_transactional(lake_root):
         raise ValueError(
@@ -186,13 +99,12 @@ def expire_outbox_ledger(
             "backed lake — only transactional lakes carry the outbox "
             "dataset this retention is keyed on"
         )
-    if ledger_path is None:
-        ledger_path = os.path.join(lake_root, "_webhook_ledger")
+    ledger_path = os.path.join(lake_root, WebhookSink.LEDGER)
     if not os.path.isdir(ledger_path):
         return []
     pending = {
         outbox_batch_id(rel)
-        for rel in mfst.current(lake_root)["datasets"].get(_OUTBOX_DS, [])
+        for rel in mfst.current(lake_root)["datasets"].get(WebhookSink.OUTBOX, [])
     }
     removed: list[int] = []
     for name in os.listdir(ledger_path):
@@ -425,18 +337,20 @@ def maintain(
       superseded segments afterwards only when work actually ran.
 
     ``webhook_url`` (lake only) additionally DRAINS the lake's
-    pending webhook outbox through the standard delivery ledger
+    pending webhook outbox through its delivery ledger
     (``<root>/_webhook_ledger``) and sweeps that ledger's delivered
     partitions — so a lake that has stopped receiving batch runs
     still gets its staged notifications delivered by the same cron
     that compacts it, instead of holding undelivered intent forever
     (the r14 verdict's ask #3). ``webhook_sink`` injects a
-    preconstructed sink instead (tests, custom posters/headers); it
-    must carry a ``ledger_path``. Without either, a lake with
-    pending outbox segments reports ``outbox_pending`` so the
-    operator can see the backlog from the cron log. Drain results
-    ride the return dict under ``outbox``; they do not affect
-    ``ran`` (which keeps meaning compaction work).
+    preconstructed sink instead (tests, custom posters/headers).
+    A lake with pending outbox segments that this run does not drain
+    reports them — ``outbox_pending`` for the webhook outbox,
+    ``pubsub_outbox_pending`` for the Pub/Sub one (drained by the
+    next ``stream --pubsub-topic`` run) — so the operator can see the
+    backlog from the cron log. Drain results ride the return dict
+    under ``outbox``; they do not affect ``ran`` (which keeps meaning
+    compaction work).
 
     ``lock`` injects the manifest commit-lock provider for every
     commit this verb issues (layout/lake/index compaction, the
@@ -482,11 +396,12 @@ def maintain(
                     out["ran"] = True
                     out.update(res)
     elif "receipts" in datasets:
+        from fintech_etl_spark.sinks.pubsub import PubSubSink
         from fintech_etl_spark.sinks.receipts import (
-            _OUTBOX_DS,
             compact_receipts_lake,
-            drain_webhook_outbox,
+            drain_outbox,
         )
+        from fintech_etl_spark.sinks.webhook import WebhookSink
 
         n_segs = len(m["datasets"].get("receipts", []))
         out = {"kind": "lake", "ran": False, "segments": n_segs,
@@ -497,25 +412,21 @@ def maintain(
                 **lock_kw,
             ))
             out["ran"] = True
-        pending = m["datasets"].get(_OUTBOX_DS, [])
-        if webhook_sink is not None or webhook_url is not None:
-            sink = webhook_sink
-            if sink is None:
-                from fintech_etl_spark.sinks.webhook import WebhookSink
-
-                sink = WebhookSink(
-                    url=webhook_url,
-                    ledger_path=os.path.join(root, "_webhook_ledger"),
-                )
-            out["outbox"] = drain_webhook_outbox(spark, root, sink, **lock_kw)
-            # sweep residue the drain's in-line retention can miss
-            # (pre-r15 drains, a crash between remove-commit and drop)
-            expired = expire_outbox_ledger(root, sink.ledger_path)
+        if webhook_sink is None and webhook_url is not None:
+            webhook_sink = WebhookSink(url=webhook_url)
+        if webhook_sink is not None:
+            out["outbox"] = drain_outbox(spark, root, webhook_sink, **lock_kw)
+            expired = expire_outbox_ledger(root)
             if expired:
                 out["outbox_ledger_expired"] = expired
-        elif pending:
-            # no delivery config: surface the backlog, never hide it
-            out["outbox_pending"] = len(pending)
+        # no delivery config for a sink: surface its backlog, never hide it
+        for ds, key in (
+            (WebhookSink.OUTBOX, "outbox_pending"),
+            (PubSubSink.OUTBOX, "pubsub_outbox_pending"),
+        ):
+            pending = m["datasets"].get(ds, [])
+            if pending and (ds != WebhookSink.OUTBOX or webhook_sink is None):
+                out[key] = len(pending)
     elif {"vectors", "codes"} <= datasets or "index" in datasets:
         ivf = "vectors" in datasets
         names = ("vectors", "codes") if ivf else ("index",)

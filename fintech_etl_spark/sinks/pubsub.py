@@ -1,25 +1,26 @@
-"""Pub/Sub sink: executor-side batched publishes with ordering keys.
+"""Pub/Sub sink: receipt events published from the lake's outbox.
 
 The reference advertises Pub/Sub publishing — README:66 ("Publishes
 events to Pub/Sub"), README:85-87 (topic ``receipt-processing``),
 README:192 ("Processing → Pub/Sub: publishes events for downstream
 systems") — but ships NO implementing code (zero Pub/Sub references
-anywhere in its source). This module provides the real surface,
-Spark-first:
+anywhere in its source). Here it is a second transport behind the one
+delivery protocol the webhook uses: a commit stages the receipts' wire
+documents in the lake's ``pubsub_outbox`` dataset, in the same pointer
+swap as the receipts, and ``sinks.receipts.drain_outbox`` publishes
+them and records each success in ``<lake>/_pubsub_ledger``. This
+module supplies what is Pub/Sub's own:
 
-- ``foreachPartition`` delivery: executors publish in parallel, each
-  partition sequentially — the same fan-out/isolation shape as the
-  webhook sink;
-- request batching under BOTH Pub/Sub publish-request caps (1000
-  messages / 10 MB per request), flushed on either limit;
-- ordering keys: callers name an ordering column and a within-key sort;
-  the frame is repartitioned BY KEY and sorted within partitions, so
-  every key's messages flow through one partition in order — exactly
-  the contract Cloud Pub/Sub ordering keys need from a publisher;
-- at-least-once: publish failures are counted per batch and never
-  raised mid-stream; retry belongs to the caller/checkpoint layer, and
-  the ``document_id`` attribute is the receiver-side idempotency key
-  (same design as the webhook sink's ledger-less mode).
+- the arrangement: rows are hash-partitioned on the ordering key (the
+  document's ``source_file``) and sorted by ``receiptId`` within it,
+  so each key's messages flow through one partition in order — the
+  contract Cloud Pub/Sub ordering keys need from a publisher;
+- the delivery kernel: request batching under BOTH publish-request
+  caps (1000 messages / 10 MB), flushed on either limit, and
+  FAIL-STOP PER KEY: a failed request halts every key it carried, and
+  the rest of those keys' messages are marked failed instead of
+  published past the gap. The published prefix of every key is
+  gap-free, so the next drain resumes each key where it stopped.
 
 Transport is injectable, mirroring the webhook sink's ``poster``: the
 default resolves the real ``google-cloud-pubsub`` client and raises a
@@ -31,8 +32,9 @@ across executor processes for tests and local development.
 from __future__ import annotations
 
 import json
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import DataFrame
 
@@ -119,328 +121,82 @@ class FilePubSubEmulator:
 
 @dataclass
 class PubSubSink:
-    """Publish a DataFrame of events to a Pub/Sub topic.
+    """Publish the lake's receipt documents to a Pub/Sub topic.
 
-    ``events`` frames carry ``data`` (string) and optional
-    ``attributes`` (map<string,string>); see :meth:`publish`.
-    """
+    Delivery is ``sinks.receipts.drain_outbox(spark, lake, sink)``
+    over the payloads staged in the lake's ``OUTBOX`` dataset; the
+    successes are recorded in ``<lake>/<LEDGER>``. Each message's data
+    is the webhook wire document, its ordering key and ``source_file``
+    attribute the document's ``source_file``, and its ``document_id``
+    attribute the receiver-side idempotency key."""
+
+    #: the lake's manifest dataset holding this sink's pending payloads
+    OUTBOX: ClassVar[str] = "pubsub_outbox"
+    #: the delivery ledger's directory under the lake root
+    LEDGER: ClassVar[str] = "_pubsub_ledger"
 
     topic: str
     transport: Transport | None = None
     max_batch_messages: int = _MAX_BATCH_MESSAGES
     max_batch_bytes: int = _MAX_BATCH_BYTES
 
-    def publish(
-        self,
-        events: DataFrame,
-        ordering_col: str | None = None,
-        order_by: list[str] | None = None,
-    ) -> dict[str, int]:
-        """Publish ``events`` — columns ``data`` (string), optional
-        ``attributes`` (map<string,string>), plus ``ordering_col`` /
-        ``order_by`` columns when ordering is requested.
-
-        With ``ordering_col``, the frame is hash-repartitioned on that
-        column and sorted within partitions by (key, *order_by*): every
-        ordering key's messages pass through exactly one partition in
-        the requested order, and the partition publishes its batches
-        sequentially — the publisher-side contract Pub/Sub ordering
-        keys require. Without it, the existing partitioning is kept.
-
-        Batches flush at ``max_batch_messages`` or ``max_batch_bytes``
-        (the public per-request service caps). A failed request marks
-        its whole batch failed and delivery continues — at-least-once
-        with caller-level retry, receivers deduping on the
-        ``document_id`` attribute. Returns ``{"published": n,
-        "failed": m, "requests": r}``.
-        """
+    def arrange(self, docs: DataFrame) -> DataFrame:
+        """Route every ordering key through one partition, in
+        ``receiptId`` order within the key."""
         from pyspark.sql import functions as F
 
+        key = F.get_json_object("payload", "$.source_file")
+        return docs.repartition(key).sortWithinPartitions(
+            key, F.get_json_object("payload", "$.receiptId")
+        )
+
+    def deliver(self, docs: Iterable[tuple[str, str]]) -> Iterator[bool]:
+        """The per-partition delivery kernel: publish each
+        ``(document_id, payload)`` in order, batched into requests of at
+        most ``max_batch_messages`` messages and ``max_batch_bytes``
+        bytes, and yield, in input order, whether it was published.
+
+        A failed request fails its messages and halts every ordering
+        key it carried: later messages of a halted key are yielded as
+        failed without a request. Other keys keep publishing."""
         topic = self.topic
         transport = self.transport or _default_transport
-        max_msgs = self.max_batch_messages
-        max_bytes = self.max_batch_bytes
-        if ordering_col is not None:
-            events = (
-                events.repartition(F.col(ordering_col))
-                .sortWithinPartitions(ordering_col, *(order_by or []))
-            )
-        has_attrs = "attributes" in events.columns
-        sc = events.sparkSession.sparkContext
-        published_acc = sc.accumulator(0)
-        failed_acc = sc.accumulator(0)
-        requests_acc = sc.accumulator(0)
+        max_msgs, max_bytes = self.max_batch_messages, self.max_batch_bytes
+        queue: list[dict | None] = []  # outcomes owed, in input order
+        halted: set = set()
+        n_msgs = nbytes = 0
 
-        def deliver(rows) -> None:
-            batch: list[dict] = []
-            nbytes = 0
-            published = failed = requests = 0
-
-            def flush() -> None:
-                nonlocal published, failed, requests, nbytes
-                if not batch:
-                    return
-                requests += 1
+        def flush() -> list[bool]:
+            msgs = [m for m in queue if m is not None]
+            ok = True
+            if msgs:
                 try:
-                    transport(topic, list(batch))
-                    published += len(batch)
-                except Exception:  # noqa: BLE001 — batch is the retry unit
-                    failed += len(batch)
-                batch.clear()
-                nbytes = 0
+                    transport(topic, msgs)
+                except Exception:  # noqa: BLE001 — halt the request's keys
+                    ok = False
+                    halted.update(m["ordering_key"] for m in msgs)
+            out = [m is not None and ok for m in queue]
+            queue.clear()
+            return out
 
-            for row in rows:
-                msg = {"data": row["data"]}
-                if has_attrs and row["attributes"] is not None:
-                    msg["attributes"] = dict(row["attributes"])
-                if ordering_col is not None:
-                    msg["ordering_key"] = row[ordering_col]
-                sz = len(json.dumps(msg))
-                if batch and (
-                    len(batch) >= max_msgs or nbytes + sz > max_bytes
-                ):
-                    flush()
-                batch.append(msg)
-                nbytes += sz
-            flush()
-            published_acc.add(published)
-            failed_acc.add(failed)
-            requests_acc.add(requests)
-
-        events.foreachPartition(deliver)
-        return {
-            "published": published_acc.value,
-            "failed": failed_acc.value,
-            "requests": requests_acc.value,
-        }
-
-    def publish_with_ledger(
-        self,
-        events: DataFrame,
-        batch_id: int,
-        ledger_path: str,
-        ordering_col: str | None = "ordering_key",
-        order_by: list[str] | None = None,
-        id_attr: str = "document_id",
-    ) -> dict[str, int]:
-        """Ledger-gated publish for streaming micro-batches: the
-        cross-restart idempotency layer the webhook sink has
-        (``WebhookSink.send_batch`` with a ``batch_id``), for Pub/Sub.
-
-        A parquet ledger at ``ledger_path`` (hive-partitioned by
-        ``batch_id``, same layout/retention as the webhook ledger —
-        ``sinks.maintenance.expire_ledger_batches`` applies) records
-        each successfully published message's ``attributes[id_attr]``.
-        A RETRY of the same ``batch_id`` (foreachBatch redelivery after
-        a driver crash, or a caller-level retry of a failed batch)
-        anti-joins the already-published set away before any request —
-        the topic never sees a ledgered message twice.
-
-        Ordering under retry: delivery is FAIL-STOP PER ORDERING KEY —
-        a failed request halts every key it carried, and the rest of
-        those keys' messages are marked failed instead of published
-        past the gap (the contract the Cloud Pub/Sub client enforces:
-        a failure halts its ordering key until resume; other keys keep
-        flowing). The published prefix of every key is therefore
-        gap-free, so ledger-skip + retry replays each key from its
-        first unpublished message onward — per-key order survives
-        end-to-end, and an outage on one key never blocks the others.
-        Without ``ordering_col`` there is no order to protect and
-        batch-failure isolation applies, as in :meth:`publish`.
-
-        Counts: ``published`` (this call), ``failed`` (this call),
-        ``skipped`` (ledgered by a previous attempt). At-least-once
-        stands: a crash between a publish request and the ledger
-        append re-publishes that request's messages on retry —
-        receivers still dedupe on the ``id_attr`` attribute.
-        """
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        spark = events.sparkSession
-        topic = self.topic
-        transport = self.transport or _default_transport
-        max_msgs = self.max_batch_messages
-        max_bytes = self.max_batch_bytes
-        has_ordering = ordering_col is not None
-
-        if "attributes" not in events.columns:
-            raise ValueError(
-                "publish_with_ledger needs an 'attributes' map column "
-                f"carrying the '{id_attr}' idempotency key (the ledger "
-                "records it); use publish() for ledgerless delivery"
-            )
-        from pyspark import StorageLevel
-
-        ev = events.withColumn(
-            "_msg_id", F.col("attributes").getItem(id_attr)
-        )
-        # The batch lineage is consumed by THREE actions (the id
-        # validation below, the ledger anti-join count, and delivery
-        # itself) — cache it so the upstream micro-batch plan runs
-        # once, not once per action, on the hot streaming path.
-        ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # The ledger contract hangs entirely off _msg_id: a NULL id
-            # never matches the left_anti join (SQL null semantics) and
-            # would republish forever, and a duplicated id would make one
-            # pre-failure publish anti-join BOTH copies away on retry —
-            # silent message loss. Fail loudly before any publish instead.
-            chk = ev.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count("_msg_id").alias("n_nonnull"),
-                F.countDistinct("_msg_id").alias("n_distinct"),
-            ).first()
-            n_total = chk["n"]
-            if chk["n_nonnull"] != n_total:
-                raise ValueError(
-                    f"publish_with_ledger: {n_total - chk['n_nonnull']} row(s) "
-                    f"have a NULL attributes['{id_attr}'] — the idempotency "
-                    "ledger cannot dedup them (NULL never equi-joins); fix the "
-                    "id derivation or use publish() for ledgerless delivery"
-                )
-            if chk["n_distinct"] != n_total:
-                raise ValueError(
-                    f"publish_with_ledger: attributes['{id_attr}'] is not "
-                    f"unique within batch {batch_id} "
-                    f"({n_total - chk['n_distinct']} duplicate(s)) — a retry "
-                    "after partial publish would skip every copy of a "
-                    "duplicated id (silent loss); make the id unique per "
-                    "message"
-                )
-            already = self._read_ledger(spark, batch_id, ledger_path)
-            to_send = ev
-            if already is not None:
-                # per-batch ledgered set is bounded by the batch size →
-                # broadcast, the skip is a map-side anti join
-                to_send = ev.join(F.broadcast(already), "_msg_id", "left_anti")
-            n_to_send = to_send.count() if already is not None else n_total
-            n_skipped = n_total - n_to_send
-
-            if has_ordering:
-                to_send = to_send.repartition(F.col(ordering_col)).sortWithinPartitions(
-                    ordering_col, *(order_by or [])
-                )
-            # map<string,string> crosses into pandas as engine-version-
-            # dependent shapes; a JSON rendering is stable either way.
-            # Leading underscores would be renamed away by itertuples —
-            # plain names for the kernel columns.
-            cols = [
-                F.col("_msg_id").alias("msg_id"),
-                "data",
-                F.to_json("attributes").alias("attrs_json"),
-            ]
-            if has_ordering:
-                cols.append(F.col(ordering_col).alias("okey"))
-            to_send_rows = to_send.select(*cols)
-
-            def deliver(pdfs):
-                batch: list[dict] = []
-                ids: list[str] = []
-                nbytes = 0
-                halted_keys: set = set()  # ordering keys past their first failure
-                oks: list[bool] = []
-                out_ids: list[str] = []
-
-                def flush() -> None:
-                    nonlocal nbytes
-                    if not batch:
-                        return
-                    try:
-                        transport(topic, list(batch))
-                        ok = True
-                    except Exception:  # noqa: BLE001 — halt the request's keys
-                        ok = False
-                        halted_keys.update(m.get("ordering_key") for m in batch)
-                    out_ids.extend(ids)
-                    oks.extend([ok] * len(batch))
-                    batch.clear()
-                    ids.clear()
-                    nbytes = 0
-
-                for pdf in pdfs:
-                    for row in pdf.itertuples(index=False):
-                        msg = {"data": row.data}
-                        attrs = json.loads(row.attrs_json) if row.attrs_json else None
-                        if attrs:
-                            msg["attributes"] = attrs
-                        if has_ordering:
-                            msg["ordering_key"] = row.okey
-                        sz = len(json.dumps(msg))
-                        if batch and (
-                            len(batch) >= max_msgs or nbytes + sz > max_bytes
-                        ):
-                            flush()
-                        # halted check strictly AFTER any flush of earlier
-                        # messages: a failure is only discovered at flush
-                        # time, and publishing past a key's fresh gap is
-                        # exactly the ordering bug this prevents (the
-                        # Pub/Sub client contract: a failure halts ITS
-                        # ordering key until resume)
-                        if has_ordering and row.okey in halted_keys:
-                            out_ids.append(row.msg_id)
-                            oks.append(False)
-                            continue
-                        batch.append(msg)
-                        ids.append(row.msg_id)
-                        nbytes += sz
-                flush()
-                yield pd.DataFrame({"msg_id": out_ids, "ok": oks})
-
-            attempted = to_send_rows.mapInPandas(deliver, "msg_id string, ok boolean")
-            # the ledger append IS the action that drives delivery; only
-            # successes are recorded (crash between publish and append ⇒
-            # at-least-once, never a lost skip)
-            (
-                attempted.filter(F.col("ok"))
-                .select(
-                    F.col("msg_id").alias("message_id"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.current_timestamp().alias("published_at"),
-                )
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .parquet(ledger_path)
-            )
-            done = self._read_ledger(spark, batch_id, ledger_path)
-            n_done = done.count() if done is not None else 0
-            published = n_done - n_skipped
-            return {
-                "published": published,
-                "failed": n_to_send - published,
-                "skipped": n_skipped,
+        for doc_id, payload in docs:
+            key = json.loads(payload).get("source_file")
+            msg = {
+                "data": payload,
+                "attributes": {"document_id": doc_id, "source_file": key},
+                "ordering_key": key,
             }
-        finally:
-            # every exit path — loud validation raise, delivery or
-            # ledger-write failure, or clean return — drops the batch
-            # cache; a leak here strands one cached micro-batch per
-            # failed retry attempt in executor storage
-            ev.unpersist()
-
-    @staticmethod
-    def _read_ledger(spark, batch_id: int, ledger_path: str):
-        """Distinct ledgered message ids for ``batch_id``; None when the
-        ledger doesn't exist yet. batch_id partitioning makes the
-        filter a directory prune, not a full-ledger scan."""
-        from pyspark.errors import AnalysisException
-        from pyspark.sql import functions as F
-
-        try:
-            ledger = spark.read.parquet(ledger_path)
-        except AnalysisException as exc:
-            # ONLY "ledger not created yet" means no dedup set. Any
-            # other read failure (permissions, corrupt footer, transient
-            # FS error) must propagate — swallowing it would silently
-            # disable dedup and republish the whole batch.
-            cond = getattr(exc, "getCondition", None) or getattr(
-                exc, "getErrorClass", None
-            )
-            cls = cond() if cond is not None else None
-            if cls == "PATH_NOT_FOUND" or "Path does not exist" in str(exc):
-                return None
-            raise
-        return (
-            ledger.filter(F.col("batch_id") == batch_id)
-            .select(F.col("message_id").alias("_msg_id"))
-            .distinct()
-        )
+            sz = len(json.dumps(msg))
+            if n_msgs and (n_msgs >= max_msgs or nbytes + sz > max_bytes):
+                yield from flush()
+                n_msgs = nbytes = 0
+            # checked strictly AFTER flushing the earlier messages: a
+            # failure is only discovered at flush time, and publishing
+            # past a key's fresh gap is the ordering bug this prevents
+            if key in halted:
+                queue.append(None)
+                continue
+            queue.append(msg)
+            n_msgs += 1
+            nbytes += sz
+        yield from flush()

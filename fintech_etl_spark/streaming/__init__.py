@@ -4,12 +4,10 @@ from fintech_etl_spark.streaming.events import (
     sessionize_stateful,
     streaming_hourly_rollup,
 )
-from fintech_etl_spark.streaming.pubsub import start_receipt_event_stream
 
 __all__ = [
     "start_corpus_intake",
     "start_invoice_stream",
-    "start_receipt_event_stream",
     "streaming_hourly_rollup",
     "sessionize_stateful",
 ]

@@ -5,83 +5,61 @@ background tasks (/root/reference/intake/handlers.py:75-90) and its
 backfill re-lists the bucket with no processed-marker, so the same
 files reprocess forever (/root/reference/main.py:181-183 — SURVEY §2.6
 known bug). Structured Streaming's file source is the Spark-native
-replacement: the checkpoint records which files were consumed
-(exactly-once source semantics), each discovered file becomes part of
-a micro-batch, and the webhook/parquet sinks run in ``foreachBatch``.
+replacement: the checkpoint records which files were consumed, and
+each micro-batch of newly landed files is handed on by path.
 
-Delivery: source exactly-once + sink at-least-once ⇒ end-to-end
-at-least-once, with ``document_id`` as the receiver-side idempotency
-key — strictly better than the reference's at-most-once (errors
-swallowed, /root/reference/stream/util.py:59-60).
+The stream only discovers files. What happens to them is the batch
+pipeline's job (``cli.process_invoices``): it reads each file by its
+own header, commits exactly once per source file — so a replay after
+a lost checkpoint re-lists the files and commits nothing — and
+delivers notifications through the lake's outbox.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from fintech_etl_spark.operators.receipts import build_receipts
-from fintech_etl_spark.schemas import INVOICE_CSV_SCHEMA
-from fintech_etl_spark.sources.invoice_csv import ROW_IDX, SOURCE_PATH
-
-BatchHandler = Callable[[DataFrame, int], None]
+#: bounds a micro-batch, so a backfill burst of thousands of landed
+#: files doesn't become one giant commit
+_MAX_FILES_PER_TRIGGER = 32
+#: the binaryFile source's fixed columns; a streaming source must be
+#: given its schema
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
 
 
 def start_invoice_stream(
     spark: SparkSession,
     landing_dir: str,
     checkpoint_dir: str,
-    on_receipts: BatchHandler,
-    *,
-    gcs_bucket: str = "",
-    run_date: _dt.date,
-    run_ts: int = 0,
-    max_files_per_trigger: int = 32,
+    on_files: Callable[[list[str]], None],
 ) -> StreamingQuery:
-    """Watch ``landing_dir`` for CSVs; emit receipt batches to ``on_receipts``.
+    """Watch ``landing_dir`` for landed files and call ``on_files``
+    with each micro-batch's file paths, at most 32 per batch, until
+    every file present at start is consumed (``availableNow``).
 
-    The streaming scan needs a declared schema (no inference mid-stream),
-    which binds positionally — acceptable here because the landing zone
-    is produced by our own intake writer (one vendor export format).
-    A heterogeneous upload goes through the batch path one file at a
-    time (``process-csv``), which binds by header name; a multi-file
-    batch there refuses any file whose header differs from the
-    batch's first file.
-
-    ``maxFilesPerTrigger`` bounds micro-batch size so a backfill burst
-    of thousands of files doesn't become one giant batch.
-    """
-    raw = (
-        spark.readStream.schema(INVOICE_CSV_SCHEMA)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .csv(landing_dir)
-        .withColumn(SOURCE_PATH, F.input_file_name())
+    The source is the checkpointed ``binaryFile`` source with only
+    ``path`` selected, so Spark lists the files but never reads their
+    content; the callback reads them."""
+    paths = (
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
+        .option("maxFilesPerTrigger", _MAX_FILES_PER_TRIGGER)
+        .load(landing_dir)
+        .select("path")
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # monotonically_increasing_id is illegal on a streaming DF but
-        # fine here: foreachBatch hands us a static micro-batch, and the
-        # id preserves within-file row order for header extraction.
-        # per_file: a micro-batch may span many files; the same invoice
-        # number in two files must yield two receipts (reference parity).
-        receipts = build_receipts(
-            batch_df.withColumn(ROW_IDX, F.monotonically_increasing_id()),
-            per_file=True,
-            gcs_bucket=gcs_bucket,
-            gcs_path="",
-            run_date=run_date,
-            run_ts=run_ts,
-        )
-        on_receipts(receipts, batch_id)
+    def handle(batch_df: DataFrame, _batch_id: int) -> None:
+        files = [r.path for r in batch_df.collect()]
+        if files:
+            on_files(files)
 
     return (
-        raw.writeStream.foreachBatch(handle)
+        paths.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -212,25 +212,21 @@ def test_partition_pruning_on_receipt_lake(spark, tmp_path):
 
 
 def test_partition_pruning_on_webhook_ledger(spark, tmp_path):
-    """The delivery ledger is batch_id-partitioned, so the per-batch
-    skip read (`_read_ledger`) is a directory prune — one partition,
-    not a scan of every batch ever delivered (unbounded on a
-    long-lived stream)."""
-    from fintech_etl_spark.sinks import WebhookSink
+    """The delivery ledger is batch_id-partitioned, so the drain's
+    skip read (``sinks.receipts._read_ledger``) is a directory prune —
+    only the pending segments' partitions, not a scan of every batch
+    ever delivered."""
+    from fintech_etl_spark.sinks.receipts import _LEDGER_SCHEMA, _read_ledger
 
-    ledger = str(tmp_path / "ledger")
-    payloads = spark.createDataFrame(
-        [("d1", "{}"), ("d2", "{}")], "document_id string, payload string"
-    )
-    sink = WebhookSink(
-        url="http://example.invalid/hook",
-        poster=lambda u, b, h: 200,
-        ledger_path=ledger,
-    )
-    for b in (1, 2, 3):
-        sink.send_batch(payloads, batch_id=b)
+    ledger = str(tmp_path / "_webhook_ledger")
+    spark.createDataFrame(
+        [(d, b) for b in (1, 2, 3) for d in ("d1", "d2")],
+        "document_id string, batch_id long",
+    ).withColumn("delivered_at", F.current_timestamp()).select(
+        *[c.split()[0] for c in _LEDGER_SCHEMA.split(", ")]
+    ).write.partitionBy("batch_id").parquet(ledger)
 
-    pruned = sink._read_ledger(spark, 2)
+    pruned = _read_ledger(spark, ledger, [2])
     plan = plan_of(pruned)
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "batch_id" in pf

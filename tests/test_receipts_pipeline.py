@@ -77,7 +77,8 @@ def test_receipts_golden(spark, tmp_path):
     assert round(inv1.subtotal, 2) == 260.0
     assert round(inv2.subtotal, 2) == 230.0
     assert inv1.item_count == 2 and inv2.item_count == 3
-    assert inv1.document_id == "fnt-g42-INV1-1700000000"
+    # xxhash64 of the source file in 16 hex digits: stable across runs
+    assert inv1.document_id == "fnt-g42-INV1-075fc8c761ef4d6d"
     assert inv1.source_file == "gs://landing/intake/x.csv"
 
     # line items preserve file order within the invoice
@@ -136,7 +137,7 @@ def test_webhook_payloads(spark, tmp_path):
         run_ts=1700000000,
     )
     payloads = {r.document_id: json.loads(r.payload) for r in to_webhook_payloads(receipts).collect()}
-    doc = payloads["fnt-g42-INV2-1700000000"]
+    doc = payloads["fnt-g42-INV2-075fc8c761ef4d6d"]
     # wire projection renames (code wins over README: transactionDate)
     assert doc["receiptId"] == "INV2"
     assert doc["transactionDate"] == "2024-06-15"
@@ -479,8 +480,8 @@ def test_webhook_outbox_atomic_intent_and_recoverable_delivery(
     ingested). Here the notification INTENT commits atomically with
     the lake batch (outbox segment, same pointer swap), a blip leaves
     the batch in the outbox, and the next drain re-posts ONLY the
-    failures — with the ORIGINAL document_ids, pinned at publish time
-    (a re-run would mint different run_ts-derived ids)."""
+    failures — with the ORIGINAL document_ids, pinned at publish
+    time."""
     import os as _os
 
     from fintech_etl_spark.sinks import (
@@ -527,15 +528,9 @@ def test_webhook_outbox_atomic_intent_and_recoverable_delivery(
             raise ConnectionError("endpoint down mid-batch")
         return 200
 
-    ledger = str(tmp_path / "wh_ledger")
     mk = lambda: WebhookSink(  # noqa: E731 — fresh instance = restart
-        url="http://example.invalid/hook", poster=poster, ledger_path=ledger
+        url="http://example.invalid/hook", poster=poster
     )
-    # the ledger is not optional on this path
-    with pytest.raises(ValueError, match="ledger_path"):
-        drain_webhook_outbox(
-            spark, lake, WebhookSink(url="http://example.invalid/hook")
-        )
 
     # drain 1: blip mid-batch — failures stay in the outbox
     d1 = drain_webhook_outbox(spark, lake, mk())
@@ -652,6 +647,107 @@ def test_cli_webhook_outbox_end_to_end(spark, tmp_path, capsys, monkeypatch):
     assert mf.dataset_segments(lake, _OUTBOX_DS) == []  # all drained
     # orphan's 2 docs + other.csv's 1 doc joined the receiver store
     assert len(_os.listdir(store)) == 5
+
+
+def test_same_invoice_in_two_files_each_delivered_once(spark, tmp_path):
+    """``a.csv`` and ``b.csv`` both hold INV9 and the receiver fails the
+    first post. After a re-run each of the two documents has reached
+    the receiver exactly once, under its own id. (Were the id shared,
+    one success would mark both delivered in the ledger, and the
+    failed document would never be posted again.)"""
+    import collections
+    import os as _os
+    import uuid
+
+    from fintech_etl_spark.cli import process_invoices
+    from fintech_etl_spark.sinks import WebhookSink
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    inv9 = ROWS[0].replace("INV2,Acme Beer Co", "INV9,Acme", 1)
+    (landing / "a.csv").write_text(HEADER + "\n" + inv9 + "\n")
+    (landing / "b.csv").write_text(
+        HEADER + "\n" + inv9.replace("INV9,Acme", "INV9,Beta", 1) + "\n"
+    )
+    store = tmp_path / "receiver"
+    store.mkdir()
+    first_post = tmp_path / "first_post_done"
+
+    def poster(url, body, headers, _store=str(store), _m=str(first_post)):
+        if not _os.path.exists(_m):
+            open(_m, "w").close()
+            raise ConnectionError("receiver down for the first post")
+        doc = json.loads(body)
+        with open(_os.path.join(_store, f"{doc['document_id']}.{uuid.uuid4().hex}"), "w") as f:
+            f.write(doc["vendor"])
+        return 200
+
+    sink = WebhookSink(url="http://example.invalid/hook", poster=poster)
+    lake = str(tmp_path / "lake")
+    glob_ = str(landing / "*.csv")
+    assert process_invoices(spark, glob_, lake, sink) == 2
+    process_invoices(spark, glob_, lake, sink)  # the re-run
+    posts = collections.Counter(p.rsplit(".", 1)[0] for p in _os.listdir(store))
+    assert len(posts) == 2 and set(posts.values()) == {1}, posts
+    vendors = sorted((store / p).read_text() for p in _os.listdir(store))
+    assert vendors == ["Acme", "Beta"]
+
+
+def test_webhook_and_pubsub_outboxes_deliver_only_to_their_own_sink(
+    spark, tmp_path
+):
+    """A lake holding pending webhook AND Pub/Sub segments: each drain
+    delivers only its own sink's outbox through its own ledger, and
+    ``maintain`` reports each backlog separately."""
+    import os as _os
+
+    from fintech_etl_spark.sinks import WebhookSink, write_receipts_parquet
+    from fintech_etl_spark.sinks import manifest as mf
+    from fintech_etl_spark.sinks.maintenance import maintain
+    from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator, PubSubSink
+    from fintech_etl_spark.sinks.receipts import drain_outbox
+
+    base = build_receipts(
+        read_invoice_csv(spark, _write_fixture(tmp_path)),
+        run_date=RUN_DATE, per_file=True,
+    )
+    lake = str(tmp_path / "lake")
+    both = {WebhookSink.OUTBOX: to_webhook_payloads, PubSubSink.OUTBOX: to_webhook_payloads}
+    write_receipts_parquet(base, lake, file_key_col="source_file", outbox=both)
+    other = base.withColumn("source_file", F.lit("gs://b/other.csv")).withColumn(
+        "document_id", F.concat(F.col("document_id"), F.lit("-o"))
+    )
+    write_receipts_parquet(
+        other, lake, file_key_col="source_file", outbox=to_webhook_payloads
+    )
+    out = maintain(spark, lake)
+    assert (out["outbox_pending"], out["pubsub_outbox_pending"]) == (2, 1)
+
+    wire = tmp_path / "wire.log"
+
+    def poster(url, body, headers, _log=str(wire)):
+        with open(_log, "a") as f:
+            f.write(json.loads(body)["document_id"] + "\n")
+        return 200
+
+    hook = drain_outbox(spark, lake, WebhookSink(url="http://example.invalid/hook", poster=poster))
+    assert (hook["batches"], hook["sent"]) == (2, 4)
+    assert mf.dataset_segments(lake, WebhookSink.OUTBOX) == []
+    assert len(mf.dataset_segments(lake, PubSubSink.OUTBOX)) == 1
+    assert not _os.path.exists(_os.path.join(lake, PubSubSink.LEDGER))
+    out = maintain(spark, lake)
+    assert "outbox_pending" not in out and out["pubsub_outbox_pending"] == 1
+
+    spool = str(tmp_path / "spool")
+    pub = drain_outbox(spark, lake, PubSubSink("t", transport=FilePubSubEmulator(spool)))
+    assert (pub["batches"], pub["sent"]) == (1, 2)
+    published = sorted(
+        m["attributes"]["document_id"]
+        for r in FilePubSubEmulator(spool).read_requests("t") for m in r
+    )
+    assert published == sorted(r.document_id for r in base.collect())
+    assert len(wire.read_text().splitlines()) == 4  # the webhook saw no more
+    assert mf.dataset_segments(lake, PubSubSink.OUTBOX) == []
 
 
 def test_overwrite_rebuild_preserves_pending_outbox(spark, tmp_path):
@@ -882,21 +978,21 @@ def test_compaction_is_constant_jobs_in_segments(spark, tmp_path):
     assert jobs[2] <= 2, jobs
 
 
-def test_delivery_accounting_matches_ledger_and_posts(spark, tmp_path):
+def test_delivery_accounting_matches_ledger_and_posts(spark, tmp_path, monkeypatch):
     """The per-batch counts come from an accumulator inside the one
     delivery action, so pin them to what happened on disk and on the
     wire. Each outbox segment is written as 3 files, so the delivery
     runs as several tasks, and the poster fails a fixed subset: per
     batch, ``sent`` is the number of new ledger rows, ``failed`` the
-    number of failed posts, and a second pass skips exactly what the
-    first sent. Checked through the drain (``send_batches``) and
-    through ``send_batch(payloads, batch_id=b)``."""
+    number of failed posts, and a second drain skips exactly what the
+    first sent."""
     import collections
     import glob
     import os as _os
 
     from fintech_etl_spark.sinks import WebhookSink, write_receipts_parquet
     from fintech_etl_spark.sinks import manifest as mf
+    from fintech_etl_spark.sinks import receipts as rc
     from fintech_etl_spark.sinks.receipts import (
         _OUTBOX_DS,
         drain_webhook_outbox,
@@ -944,56 +1040,36 @@ def test_delivery_accounting_matches_ledger_and_posts(spark, tmp_path):
         failed_log.unlink(missing_ok=True)
         return collections.Counter(doc_batch[d] for d in lines)
 
-    def check(send, ledger):
-        def ledger_rows(b):
-            d = _os.path.join(ledger, f"batch_id={b}")
-            return spark.read.parquet(d).count() if _os.path.isdir(d) else 0
+    ledger = _os.path.join(lake, WebhookSink.LEDGER)
 
-        first = send()
-        fails = failed_posts()
-        assert set(first) == set(batch_payloads)
-        for b, res in first.items():
-            assert res["sent"] == ledger_rows(b) == 8, (b, res)
-            assert res["failed"] == fails[b] == 4, (b, res)
-            assert res["skipped"] == 0
-        second = send()
-        fails = failed_posts()
-        for b, res in second.items():
-            assert res == {
-                "sent": 0,
-                "failed": fails[b],
-                "skipped": first[b]["sent"],
-            }, (b, res)
+    def ledger_rows(b):
+        d = _os.path.join(ledger, f"batch_id={b}")
+        return spark.read.parquet(d).count() if _os.path.isdir(d) else 0
 
-    class RecordingSink(WebhookSink):
-        def send_batches(self, payloads, batch_ids):
-            self.last = super().send_batches(payloads, batch_ids)
-            return self.last
-
-    drain_sink = RecordingSink(
-        url="http://example.invalid/hook",
-        poster=poster,
-        ledger_path=str(tmp_path / "ledger_drain"),
+    recorded = []
+    deliver = rc._deliver
+    monkeypatch.setattr(
+        rc, "_deliver", lambda *a: recorded.append(deliver(*a)) or recorded[-1]
     )
+    sink = WebhookSink(url="http://example.invalid/hook", poster=poster)
 
-    def drain():
-        drain_webhook_outbox(spark, lake, drain_sink)
-        return drain_sink.last
-
-    check(drain, drain_sink.ledger_path)
-
-    one_sink = WebhookSink(
-        url="http://example.invalid/hook",
-        poster=poster,
-        ledger_path=str(tmp_path / "ledger_one"),
-    )
-    check(
-        lambda: {
-            b: one_sink.send_batch(p, batch_id=b)
-            for b, p in batch_payloads.items()
-        },
-        one_sink.ledger_path,
-    )
+    drain_webhook_outbox(spark, lake, sink)
+    first = recorded[-1]
+    fails = failed_posts()
+    assert set(first) == set(batch_payloads)
+    for b, res in first.items():
+        assert res["sent"] == ledger_rows(b) == 8, (b, res)
+        assert res["failed"] == fails[b] == 4, (b, res)
+        assert res["skipped"] == 0
+    drain_webhook_outbox(spark, lake, sink)
+    second = recorded[-1]
+    fails = failed_posts()
+    for b, res in second.items():
+        assert res == {
+            "sent": 0,
+            "failed": fails[b],
+            "skipped": first[b]["sent"],
+        }, (b, res)
 
 
 @pytest.mark.parametrize(
@@ -1059,7 +1135,7 @@ def test_corrupt_ledger_fails_the_drain_before_any_post(spark, tmp_path):
     lake = str(tmp_path / "lake_torn")
     _stage_outbox_batches(spark, tmp_path, lake, ["t"])
     (seg,) = mf.dataset_segments(lake, _OUTBOX_DS)
-    ledger = tmp_path / "ledger_torn"
+    ledger = tmp_path / "lake_torn" / WebhookSink.LEDGER
     part = ledger / f"batch_id={outbox_batch_id(_os.path.relpath(seg, lake))}"
     spark.createDataFrame(
         [("earlier-doc",)], "document_id string"
@@ -1077,9 +1153,7 @@ def test_corrupt_ledger_fails_the_drain_before_any_post(spark, tmp_path):
             f.write("post\n")
         return 200
 
-    sink = WebhookSink(
-        url="http://example.invalid/hook", poster=poster, ledger_path=str(ledger)
-    )
+    sink = WebhookSink(url="http://example.invalid/hook", poster=poster)
     with pytest.raises(Exception, match="(?i)parquet"):
         drain_webhook_outbox(spark, lake, sink)
     assert not posts.exists()
@@ -1091,12 +1165,15 @@ def test_drain_self_retains_ledger_by_outbox_membership(spark, tmp_path):
     ids are segment-name hashes with NO keep-last order, so ledger
     retention is keyed on manifest MEMBERSHIP — the drain drops a
     segment's ledger partition exactly when its remove-commit takes
-    the segment out of the outbox, and a PENDING segment's partition
-    (the retry skip records) is never touched."""
+    the segment out of the outbox, a PENDING segment's partition
+    (the retry skip records) is never touched, and the residue sweep
+    (``expire_outbox_ledger``) removes only partitions of segments no
+    longer pending."""
     import os as _os
 
     from fintech_etl_spark.sinks import WebhookSink
     from fintech_etl_spark.sinks import manifest as mf
+    from fintech_etl_spark.sinks.maintenance import expire_outbox_ledger
     from fintech_etl_spark.sinks.receipts import (
         _OUTBOX_DS,
         drain_webhook_outbox,
@@ -1105,92 +1182,37 @@ def test_drain_self_retains_ledger_by_outbox_membership(spark, tmp_path):
 
     lake = str(tmp_path / "lake_ret")
     _stage_outbox_batches(spark, tmp_path, lake, ["ok", "down"])
-    ledger = str(tmp_path / "ledger_ret")
+    ledger = _os.path.join(lake, WebhookSink.LEDGER)
 
     def poster(url, body, headers):
-        doc = json.loads(body)
-        if doc["receiptId"].endswith("-down"):
-            raise ConnectionError("receiver rejects batch 'down'")
+        if json.loads(body)["receiptId"] == "INV2-down":
+            raise ConnectionError("receiver rejects this document")
         return 200
 
-    sink = WebhookSink(
-        url="http://example.invalid/hook", poster=poster, ledger_path=ledger
-    )
+    sink = WebhookSink(url="http://example.invalid/hook", poster=poster)
     d = drain_webhook_outbox(spark, lake, sink)
-    assert d["batches"] == 2 and d["failed"] > 0 and d["sent"] > 0
+    assert d["batches"] == 2 and d["failed"] == 1 and d["sent"] == 3
     pending = mf.dataset_segments(lake, _OUTBOX_DS)
     assert len(pending) == 1  # 'down' stays
-    pend_id = outbox_batch_id(_os.path.relpath(pending[0], lake))
-    parts = (
-        {e for e in _os.listdir(ledger) if e.startswith("batch_id=")}
-        if _os.path.isdir(ledger)
-        else set()
-    )
-    # delivered segment's partition dropped with its remove-commit;
-    # the pending segment here has no successes recorded (all its
-    # posts failed), so at most the pending id's partition may exist —
-    # and an entirely-empty ledger is removed outright
-    assert parts <= {f"batch_id={pend_id}"}, parts
-    # a retry with a healed receiver delivers ONLY the pending batch
+    pend = f"batch_id={outbox_batch_id(_os.path.relpath(pending[0], lake))}"
+    # the delivered segment's partition dropped with its remove-commit;
+    # the pending segment's skip records (INV1-down) are kept
+    assert {e for e in _os.listdir(ledger) if e.startswith("batch_id=")} == {pend}
+    # residue of a segment no longer pending (a crash between a
+    # remove-commit and its partition drop) is swept; pending stays
+    _os.makedirs(_os.path.join(ledger, "batch_id=12345"))
+    assert expire_outbox_ledger(lake) == [12345]
+    assert {e for e in _os.listdir(ledger) if e.startswith("batch_id=")} == {pend}
+    # a retry with a healed receiver delivers ONLY the failure, and
+    # an entirely-empty ledger is removed outright
     ok_sink = WebhookSink(
         url="http://example.invalid/hook",
         poster=lambda url, body, headers: 200,
-        ledger_path=ledger,
     )
     d2 = drain_webhook_outbox(spark, lake, ok_sink)
-    assert d2["batches"] == 1 and d2["failed"] == 0
+    assert (d2["batches"], d2["sent"], d2["failed"], d2["skipped"]) == (1, 1, 0, 1)
     assert mf.dataset_segments(lake, _OUTBOX_DS) == []
-
-
-def test_expire_ledger_batches_refuses_outbox_ledger(spark, tmp_path):
-    """keep-last expiry over hash-derived outbox ids could delete a
-    PENDING segment's skip records while keeping delivered ones — the
-    exact silent downgrade the r14 verdict led with. The generic
-    expiry must refuse an outbox lake's ledger loudly and point at
-    the membership-keyed sweep."""
-    import os as _os
-
-    from fintech_etl_spark.sinks.maintenance import (
-        expire_ledger_batches,
-        expire_outbox_ledger,
-    )
-    from fintech_etl_spark.sinks.receipts import outbox_batch_id
-    from fintech_etl_spark.sinks import manifest as mf
-    from fintech_etl_spark.sinks.receipts import _OUTBOX_DS
-
-    lake = str(tmp_path / "lake_exp")
-    _stage_outbox_batches(spark, tmp_path, lake, ["p"])
-    ledger = _os.path.join(lake, "_webhook_ledger")
-    pend = mf.dataset_segments(lake, _OUTBOX_DS)
-    pend_id = outbox_batch_id(_os.path.relpath(pend[0], lake))
-    # simulate pre-r15 residue: a delivered batch's leftover partition
-    # (id not in the live outbox) plus the pending segment's partition
-    _os.makedirs(_os.path.join(ledger, f"batch_id={pend_id}"))
-    _os.makedirs(_os.path.join(ledger, "batch_id=12345"))
-    with pytest.raises(ValueError, match="expire_outbox_ledger"):
-        expire_ledger_batches(ledger, keep_last=1)
-    # a CUSTOM-pathed ledger holding a pending segment's partition is
-    # refused too (the well-known name is not the only detector)
-    custom = _os.path.join(lake, "my_ledger")
-    _os.makedirs(_os.path.join(custom, f"batch_id={pend_id}"))
-    with pytest.raises(ValueError, match="expire_outbox_ledger"):
-        expire_ledger_batches(custom, keep_last=1)
-    # ...but a STREAMING ledger (monotone epoch ids, none pending)
-    # inside the same outbox lake keeps its keep-last retention — the
-    # in-stream maintenance must not crash micro-batches just because
-    # the lake once committed an outbox (the r15 self-review catch)
-    stream = _os.path.join(lake, "stream_ledger")
-    for b in (1, 2, 3):
-        _os.makedirs(_os.path.join(stream, f"batch_id={b}"))
-    assert expire_ledger_batches(stream, keep_last=1) == [1, 2]
-    # membership-keyed sweep: residue goes, the pending partition stays
-    assert expire_outbox_ledger(lake) == [12345]
-    assert _os.listdir(ledger) == [f"batch_id={pend_id}"]
-    # non-lake ledgers keep working unchanged
-    other = str(tmp_path / "stream_ledger")
-    for b in (1, 2, 3):
-        _os.makedirs(_os.path.join(other, f"batch_id={b}"))
-    assert expire_ledger_batches(other, keep_last=1) == [1, 2]
+    assert not _os.path.isdir(ledger)
 
 
 def test_maintain_drains_outbox_on_quiesced_lake(spark, tmp_path):

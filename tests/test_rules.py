@@ -146,14 +146,20 @@ def test_safe_int_ansi_overflow_degrades(spark):
 
 
 def test_document_id_shapes(spark):
-    df = spark.createDataFrame([("g1", "INV9"), (None, "INV9")], "gid string, inv string")
+    df = spark.createDataFrame(
+        [("g1", "INV9", "src-a"), (None, "INV9", "src-a"), ("g1", "INV9", "src-b")],
+        "gid string, inv string, src string",
+    )
     rows = df.select(
-        R.document_id(F.col("gid"), F.col("inv"), 1700000000).alias("d")
+        R.document_id(F.col("gid"), F.col("inv"), F.col("src")).alias("d")
     ).collect()
-    assert rows[0].d == "fnt-g1-INV9-1700000000"
+    # the last segment is xxhash64(source file) in 16 hex digits: the
+    # same file gives the same id on every run, another file another id
+    assert rows[0].d == "fnt-g1-INV9-ab1230e5b8c94af6"
     # concat_ws skips the null gid (documented divergence from the
     # reference's literal 'None' rendering — ADVICE r1 low)
-    assert rows[1].d == "fnt-INV9-1700000000"
+    assert rows[1].d == "fnt-INV9-ab1230e5b8c94af6"
+    assert rows[2].d == "fnt-g1-INV9-14e0dccd6bc6828e"
 
 
 def test_document_id_reference_parity_mode(spark):

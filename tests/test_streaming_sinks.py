@@ -30,15 +30,17 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
     out = str(tmp_path / "receipts_out")
     (landing / "a.csv").write_text(HEADER + "\n" + "\n".join(ROWS[:3]) + "\n")
 
-    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
+    from fintech_etl_spark.cli import process_invoices
+    from fintech_etl_spark.sinks import read_receipts
     from fintech_etl_spark.streaming import start_invoice_stream
 
-    def on_receipts(receipts, batch_id):
-        write_receipts_parquet(receipts, out)
+    batches: list[list[str]] = []
 
-    q = start_invoice_stream(
-        spark, str(landing), ckpt, on_receipts, run_date=RUN_DATE, run_ts=1
-    )
+    def on_files(paths):
+        batches.append(paths)
+        process_invoices(spark, paths, out)
+
+    q = start_invoice_stream(spark, str(landing), ckpt, on_files)
     q.awaitTermination()
     first = read_receipts(spark, out).collect()
     assert [r.receipt_id for r in first] == ["INV2"]
@@ -48,10 +50,9 @@ def test_streaming_intake_checkpoint_no_reprocess(spark, tmp_path):
     # reference's backfill bug — re-listing reprocesses everything —
     # is what this pins against)
     (landing / "b.csv").write_text(HEADER + "\n" + "\n".join(ROWS[3:]) + "\n")
-    q2 = start_invoice_stream(
-        spark, str(landing), ckpt, on_receipts, run_date=RUN_DATE, run_ts=1
-    )
+    q2 = start_invoice_stream(spark, str(landing), ckpt, on_files)
     q2.awaitTermination()
+    assert [[os.path.basename(p) for p in b] for b in batches] == [["a.csv"], ["b.csv"]]
     rows = read_receipts(spark, out).collect()
     ids = sorted(r.receipt_id for r in rows)
     assert ids == ["INV1", "INV2"]  # INV2 exactly once
@@ -346,8 +347,9 @@ def test_documents_jsonl_roundtrip(spark, tmp_path):
 def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
     """Reference parity: each file is an independent processing unit, so
     the same invoice number in two files in ONE micro-batch must emit
-    two receipts."""
-    from fintech_etl_spark.sinks import read_receipts, write_receipts_parquet
+    two receipts — two documents, with two ids."""
+    from fintech_etl_spark.cli import process_invoices
+    from fintech_etl_spark.sinks import read_receipts
     from fintech_etl_spark.streaming import start_invoice_stream
 
     landing = tmp_path / "landing"
@@ -360,9 +362,7 @@ def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
         spark,
         str(landing),
         str(tmp_path / "ckpt"),
-        lambda r, _bid: write_receipts_parquet(r, out),
-        run_date=RUN_DATE,
-        run_ts=1,
+        lambda paths: process_invoices(spark, paths, out),
     )
     q.awaitTermination()
     rows = read_receipts(spark, out).collect()
@@ -371,6 +371,8 @@ def test_streaming_same_invoice_in_two_files_not_merged(spark, tmp_path):
     assert {r.item_count for r in rows} == {1}
     # provenance: each receipt carries its own file path
     assert len({r.gcs_path for r in rows}) == 2
+    # identity: each receipt is its own document
+    assert len({r.document_id for r in rows}) == 2
 
 
 def test_stream_stream_join_matches_batch_range_join(spark, tmp_path):
@@ -871,26 +873,33 @@ def test_streaming_ann_matches_batch_lsh(spark, tmp_path):
 def test_webhook_ledger_survives_driver_restart(spark, tmp_path):
     """Cross-restart idempotency (round-5 verdict #8): the endpoint
     dies mid-batch, the DRIVER dies too, and a brand-new sink instance
-    (fresh process state, same ledger parquet) retries the batch. The
-    ledger must anti-join away the already-delivered document before
-    any post — the wire never sees INV1 twice — and the retry delivers
-    only the failure. Receiver-side dedupe is not relied on at all."""
+    (fresh process state, same lake) drains the outbox again. The
+    lake's ledger must anti-join away the already-delivered document
+    before any post — the wire never sees INV1 twice — and the retry
+    delivers only the failure. Receiver-side dedupe is not relied on
+    at all."""
     from fintech_etl_spark.operators.receipts import (
         build_receipts,
         to_webhook_payloads,
     )
-    from fintech_etl_spark.sinks import WebhookSink
+    from fintech_etl_spark.sinks import WebhookSink, write_receipts_parquet
+    from fintech_etl_spark.sinks.receipts import drain_outbox
     from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
 
     fixture = tmp_path / "f.csv"
     fixture.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
-    payloads = to_webhook_payloads(
-        build_receipts(read_invoice_csv(spark, str(fixture)), run_date=RUN_DATE)
-    ).coalesce(1)  # one partition → both docs share one deliver() call
+    receipts = build_receipts(
+        read_invoice_csv(spark, str(fixture)), run_date=RUN_DATE, per_file=True
+    )
+    lake = str(tmp_path / "lake")
+    write_receipts_parquet(
+        receipts, lake, file_key_col="source_file",
+        # one partition → both docs share one deliver() call
+        outbox=lambda r: to_webhook_payloads(r).coalesce(1),
+    )
 
     wire_log = tmp_path / "wire.log"
     outage_marker = tmp_path / "outage_done"
-    ledger = str(tmp_path / "ledger")
 
     def poster(url, body, headers, _log=str(wire_log), _marker=str(outage_marker)):
         doc = json.loads(body)
@@ -901,17 +910,20 @@ def test_webhook_ledger_survives_driver_restart(spark, tmp_path):
             raise ConnectionError("endpoint down mid-batch")
         return 200
 
-    first = WebhookSink(
-        url="http://example.invalid/hook", poster=poster, ledger_path=ledger
-    ).send_batch(payloads, batch_id=7)
-    assert first == {"sent": 1, "failed": 1, "skipped": 0}
+    def counts(d):
+        return {k: d[k] for k in ("sent", "failed", "skipped")}
+
+    first = drain_outbox(
+        spark, lake, WebhookSink(url="http://example.invalid/hook", poster=poster)
+    )
+    assert counts(first) == {"sent": 1, "failed": 1, "skipped": 0}
 
     # "driver restart": a NEW sink instance, nothing shared but the
-    # ledger path on disk
-    retry = WebhookSink(
-        url="http://example.invalid/hook", poster=poster, ledger_path=ledger
-    ).send_batch(payloads, batch_id=7)
-    assert retry == {"sent": 1, "failed": 0, "skipped": 1}
+    # lake on disk
+    retry = drain_outbox(
+        spark, lake, WebhookSink(url="http://example.invalid/hook", poster=poster)
+    )
+    assert counts(retry) == {"sent": 1, "failed": 0, "skipped": 1}
 
     # the wire saw exactly 3 posts: INV1 once (never re-sent — the
     # ledger, not the receiver, prevented it), INV2 twice
@@ -919,80 +931,46 @@ def test_webhook_ledger_survives_driver_restart(spark, tmp_path):
     assert len(wire) == 3
     assert len(set(wire)) == 2
 
-    # a different batch_id is NOT deduped by batch 7's ledger rows
-    third = WebhookSink(
-        url="http://example.invalid/hook", poster=poster, ledger_path=ledger
-    ).send_batch(payloads, batch_id=8)
-    assert third == {"sent": 2, "failed": 0, "skipped": 0}
-
-
-def test_webhook_ledger_retention(spark, tmp_path):
-    """expire_ledger_batches drops all but the newest keep_last
-    batch_id partitions; the surviving partitions keep working as the
-    retry skip-set, and a retry of an EXPIRED batch degrades to
-    at-least-once (re-posts, receiver-side document_id dedupe) rather
-    than failing."""
-    import os
-
-    from fintech_etl_spark.sinks import WebhookSink
-    from fintech_etl_spark.sinks.maintenance import expire_ledger_batches
-
-    ledger = str(tmp_path / "ledger")
-    payloads = spark.createDataFrame(
-        [("d1", '{"document_id": "d1"}')], "document_id string, payload string"
+    # another batch staging the same documents is NOT deduped by the
+    # first batch's ledger rows
+    write_receipts_parquet(
+        receipts.limit(0), lake, batch_key="again",
+        outbox=lambda _r: to_webhook_payloads(receipts),
     )
-    sink = WebhookSink(
-        url="http://example.invalid/hook",
-        poster=lambda u, b, h: 200,
-        ledger_path=ledger,
+    third = drain_outbox(
+        spark, lake, WebhookSink(url="http://example.invalid/hook", poster=poster)
     )
-    for b in (1, 2, 3, 4):
-        assert sink.send_batch(payloads, batch_id=b)["sent"] == 1
-
-    assert expire_ledger_batches(ledger, keep_last=2) == [1, 2]
-    left = sorted(
-        n for n in os.listdir(ledger) if n.startswith("batch_id=")
-    )
-    assert left == ["batch_id=3", "batch_id=4"]
-
-    # kept batch: ledger still skips the delivered doc
-    assert sink.send_batch(payloads, batch_id=4) == {
-        "sent": 0, "failed": 0, "skipped": 1,
-    }
-    # expired batch: no skip-set left → re-posts (at-least-once)
-    assert sink.send_batch(payloads, batch_id=1)["sent"] == 1
-    # idempotent on an empty/expired-everything ledger
-    assert expire_ledger_batches(ledger, keep_last=10) == []
-    assert expire_ledger_batches(str(tmp_path / "nope"), keep_last=1) == []
+    assert counts(third) == {"sent": 2, "failed": 0, "skipped": 0}
 
 
 def test_streaming_pubsub_end_to_end(spark, tmp_path):
-    """streaming.pubsub.start_receipt_event_stream: the reference's
-    advertised "Processing → Pub/Sub" stage live — checkpointed file
-    intake feeds ledger-gated publishes. A restart consumes only the
-    new file (source exactly-once) AND republishes nothing (ledger),
-    so the topic sees every receipt exactly once, keyed and ordered by
-    source file."""
+    """The reference's advertised "Processing → Pub/Sub" stage live:
+    the checkpointed file intake hands each micro-batch to
+    ``process_invoices`` with a Pub/Sub sink, which commits the
+    receipts with their events in the lake's Pub/Sub outbox and drains
+    it. A restart consumes only the new file AND republishes nothing
+    (ledger), so the topic sees every receipt exactly once, keyed and
+    ordered by source file."""
+    from fintech_etl_spark.cli import process_invoices
     from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator, PubSubSink
-    from fintech_etl_spark.streaming import start_receipt_event_stream
+    from fintech_etl_spark.streaming import start_invoice_stream
 
     landing = tmp_path / "landing"
     landing.mkdir()
     ckpt = str(tmp_path / "ckpt")
     spool = str(tmp_path / "spool")
-    ledger = str(tmp_path / "ledger")
+    lake = str(tmp_path / "lake")
     (landing / "a.csv").write_text(HEADER + "\n" + "\n".join(ROWS[:3]) + "\n")
 
-    def mk_sink():
-        return PubSubSink(
-            "receipt-processing", transport=FilePubSubEmulator(spool)
+    def start():
+        # a fresh sink instance per incarnation
+        sink = PubSubSink("receipt-processing", transport=FilePubSubEmulator(spool))
+        return start_invoice_stream(
+            spark, str(landing), ckpt,
+            lambda paths: process_invoices(spark, paths, lake, sink),
         )
 
-    q = start_receipt_event_stream(
-        spark, str(landing), ckpt, mk_sink(), ledger,
-        run_date=RUN_DATE, run_ts=1,
-    )
-    _wait(q)
+    _wait(start())
     reqs = FilePubSubEmulator(spool).read_requests("receipt-processing")
     first = [json.loads(m["data"])["receiptId"] for r in reqs for m in r]
     assert first == ["INV2"]
@@ -1000,11 +978,7 @@ def test_streaming_pubsub_end_to_end(spark, tmp_path):
     # second file arrives; a restarted stream (same checkpoint, fresh
     # sink instance) publishes ONLY the new file's receipts
     (landing / "b.csv").write_text(HEADER + "\n" + "\n".join(ROWS[3:]) + "\n")
-    q2 = start_receipt_event_stream(
-        spark, str(landing), ckpt, mk_sink(), ledger,
-        run_date=RUN_DATE, run_ts=1,
-    )
-    _wait(q2)
+    _wait(start())
     reqs = FilePubSubEmulator(spool).read_requests("receipt-processing")
     msgs = [json.loads(m["data"])["receiptId"] for r in reqs for m in r]
     assert sorted(msgs) == ["INV1", "INV2"]  # each exactly once
@@ -1016,10 +990,38 @@ def test_streaming_pubsub_end_to_end(spark, tmp_path):
     )
 
 
+def _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool):
+    """Run ``cli stream --pubsub-topic receipt-processing`` over
+    ``landing`` into ``<tmp_path>/lake``; return (exit code, the JSON
+    lines it printed)."""
+    from fintech_etl_spark import cli
+
+    monkeypatch.setattr(cli, "build_session", lambda *a, **k: spark)
+    rc = cli.main([
+        "stream", "--landing", str(landing), "--lake", str(tmp_path / "lake"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--pubsub-topic", "receipt-processing", "--pubsub-spool", spool,
+    ])
+    out = capsys.readouterr().out
+    assert "stream drained" in out
+    return rc, [json.loads(l) for l in out.splitlines() if l.startswith("{")]
+
+
+def _numbers(obj):
+    if isinstance(obj, dict):
+        for v in obj.values():
+            yield from _numbers(v)
+    elif isinstance(obj, list):
+        for v in obj:
+            yield from _numbers(v)
+    elif isinstance(obj, (int, float)) and not isinstance(obj, bool):
+        yield obj
+
+
 def test_cli_stream_with_pubsub(spark, tmp_path, capsys, monkeypatch):
     """CLI `stream --pubsub-topic --pubsub-spool`: one command runs the
-    full advertised pipeline — landing CSVs → receipt lake AND
-    ledger-gated Pub/Sub events — without cloud dependencies."""
+    full advertised pipeline — landing CSVs → receipt lake AND Pub/Sub
+    events through the lake's outbox — without cloud dependencies."""
     from fintech_etl_spark import cli
     from fintech_etl_spark.sinks import read_receipts
     from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator
@@ -1039,7 +1041,7 @@ def test_cli_stream_with_pubsub(spark, tmp_path, capsys, monkeypatch):
     assert rc == 0
     out = capsys.readouterr().out
     assert "stream drained" in out
-    assert '"published": 2' in out
+    assert '"receipts": 2' in out
     reqs = FilePubSubEmulator(spool).read_requests("receipt-processing")
     msgs = sorted(
         json.loads(m["data"])["receiptId"] for r in reqs for m in r
@@ -1048,6 +1050,147 @@ def test_cli_stream_with_pubsub(spark, tmp_path, capsys, monkeypatch):
     assert sorted(
         r.receipt_id for r in read_receipts(spark, lake).collect()
     ) == ["INV1", "INV2"]
+
+
+def test_cli_stream_checkpoint_loss_republishes_nothing(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A lost checkpoint makes ``stream`` re-list every landed file.
+    The re-run must add no lake row and publish no message (the file
+    keys skip the commit, and the ids are the same documents'), and
+    print no negative count."""
+    import shutil
+
+    from fintech_etl_spark.sinks import read_receipts
+    from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator
+
+    landing = tmp_path / "raw"
+    landing.mkdir()
+    (landing / "a.csv").write_text(HEADER + "\n" + "\n".join(ROWS[:3]) + "\n")
+    (landing / "b.csv").write_text(HEADER + "\n" + "\n".join(ROWS[3:]) + "\n")
+    spool = str(tmp_path / "spool")
+
+    def published():
+        return sum(
+            len(r) for r in FilePubSubEmulator(spool).read_requests("receipt-processing")
+        )
+
+    rc, lines = _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool)
+    assert rc == 0 and published() == 2
+    rows = read_receipts(spark, str(tmp_path / "lake")).count()
+    assert rows == 2
+    shutil.rmtree(tmp_path / "ckpt")
+    rc, lines = _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool)
+    assert rc == 0
+    assert read_receipts(spark, str(tmp_path / "lake")).count() == rows
+    assert published() == 2
+    assert all(n >= 0 for n in _numbers(lines)), lines
+
+
+def test_cli_stream_same_invoice_in_two_files_publishes_both(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """``a.csv`` and ``b.csv`` both hold INV9: two documents with two
+    ids, both committed and both published, exit 0."""
+    from fintech_etl_spark.sinks import read_receipts
+    from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator
+
+    landing = tmp_path / "raw"
+    landing.mkdir()
+    inv9 = ROWS[0].replace("INV2,Acme Beer Co", "INV9,Acme", 1)
+    (landing / "a.csv").write_text(HEADER + "\n" + inv9 + "\n")
+    (landing / "b.csv").write_text(
+        HEADER + "\n" + inv9.replace("INV9,Acme", "INV9,Beta", 1) + "\n"
+    )
+    spool = str(tmp_path / "spool")
+    rc, _ = _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool)
+    assert rc == 0
+    rows = read_receipts(spark, str(tmp_path / "lake")).collect()
+    assert sorted(r.vendor for r in rows) == ["Acme", "Beta"]
+    msgs = [
+        m for r in FilePubSubEmulator(spool).read_requests("receipt-processing")
+        for m in r
+    ]
+    assert sorted(json.loads(m["data"])["vendor"] for m in msgs) == ["Acme", "Beta"]
+    assert len({m["attributes"]["document_id"] for m in msgs}) == 2
+
+
+def test_cli_stream_binds_reordered_export_by_header(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A reordered export landed alone under ``stream`` binds each
+    column by its header name, so it gives the receipts the canonical
+    file gives."""
+    from fintech_etl_spark.sinks import read_receipts
+    from tests.test_receipts_pipeline import _NAMES, _write_rows
+
+    landing = tmp_path / "raw"
+    landing.mkdir()
+    _write_rows(landing / "r.csv", list(reversed(_NAMES)), ROWS)
+    rc, _ = _stream_cli(
+        spark, capsys, monkeypatch, landing, tmp_path, str(tmp_path / "spool")
+    )
+    assert rc == 0
+    got = {
+        r.receipt_id: (r.vendor, round(r.subtotal, 2), r.item_count)
+        for r in read_receipts(spark, str(tmp_path / "lake")).collect()
+    }
+    assert got == {
+        "INV1": ("Unknown Vendor", 260.0, 2),
+        "INV2": ("Acme Beer Co", 230.0, 3),
+    }
+
+
+def test_cli_stream_retries_failed_publish_without_new_files(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """Publishes that fail during one ``stream`` run stay in the lake's
+    Pub/Sub outbox, and the next run delivers them although no file is
+    new — each document once, each ordering key in receiptId order."""
+    from fintech_etl_spark.sinks import manifest as mf
+    from fintech_etl_spark.sinks import pubsub
+
+    landing = tmp_path / "raw"
+    landing.mkdir()
+    (landing / "a.csv").write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
+    (landing / "b.csv").write_text(
+        HEADER + "\n" + "\n".join(r.replace("INV1,", "INV7,", 1) for r in ROWS[3:]) + "\n"
+    )
+    spool = str(tmp_path / "spool")
+    down = tmp_path / "broker_down"
+    down.touch()
+    real = pubsub.FilePubSubEmulator
+
+    def flaky_emulator(root):
+        def transport(topic, messages, _down=str(down)):
+            if os.path.exists(_down):
+                raise ConnectionError("broker down")
+            return real(root)(topic, messages)
+
+        return transport
+
+    monkeypatch.setattr(pubsub, "FilePubSubEmulator", flaky_emulator)
+    rc, lines = _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool)
+    assert rc == 0
+    lake = str(tmp_path / "lake")
+    assert len(mf.dataset_segments(lake, pubsub.PubSubSink.OUTBOX)) == 1
+    assert real(spool).read_requests("receipt-processing") == []
+    assert lines[-1]["drain"]["failed"] == 3
+
+    down.unlink()  # the broker is back; no file is new
+    rc, lines = _stream_cli(spark, capsys, monkeypatch, landing, tmp_path, spool)
+    assert rc == 0
+    assert not [l for l in lines if "stream_batch" in l]
+    assert lines[-1]["drain"]["sent"] == 3
+    assert mf.dataset_segments(lake, pubsub.PubSubSink.OUTBOX) == []
+    msgs = [m for r in real(spool).read_requests("receipt-processing") for m in r]
+    assert len({m["attributes"]["document_id"] for m in msgs}) == len(msgs) == 3
+    by_key: dict[str, list[str]] = {}
+    for m in msgs:
+        by_key.setdefault(m["ordering_key"], []).append(
+            json.loads(m["data"])["receiptId"]
+        )
+    assert sorted(by_key.values()) == [["INV1", "INV2"], ["INV7"]]
 
 
 def test_streaming_ivf_pq_matches_batch(spark, tmp_path):
@@ -1252,82 +1395,3 @@ def test_cli_index_build_and_serve_lsh(spark, tmp_path, capsys, monkeypatch):
     rows = [json.loads(l) for l in out.splitlines() if l.startswith("{")]
     assert rows and all(r2["query_id"] == 0 for r2 in rows)
     assert [r2["rank"] for r2 in rows] == list(range(1, len(rows) + 1))
-
-
-def test_streaming_ledger_vacuum_expires_old_batches(spark, tmp_path):
-    """r8 verdict #7: ledger retention runs INSIDE the long-lived
-    stream. Five single-file micro-batches with keep_last=2 and
-    maintenance after every batch → only the two newest batch_id=
-    partitions survive the drain, while every batch's events still
-    published (vacuum never touches the current batch's dedup set)."""
-    import os
-    import re
-
-    from fintech_etl_spark.sinks.pubsub import FilePubSubEmulator, PubSubSink
-    from fintech_etl_spark.streaming import start_receipt_event_stream
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    for i in range(5):
-        (landing / f"f{i}.csv").write_text(
-            HEADER + "\n" + "\n".join(ROWS) + "\n"
-        )
-    spool = str(tmp_path / "spool")
-    ledger = str(tmp_path / "ledger")
-
-    q = start_receipt_event_stream(
-        spark,
-        str(landing),
-        str(tmp_path / "ckpt"),
-        PubSubSink("receipt-processing", transport=FilePubSubEmulator(spool)),
-        ledger,
-        run_date=RUN_DATE,
-        run_ts=1,
-        max_files_per_trigger=1,  # one file per micro-batch → 5 batches
-        ledger_keep_batches=2,
-        maintenance_every=1,
-    )
-    _wait(q)
-    reqs = FilePubSubEmulator(spool).read_requests("receipt-processing")
-    msgs = [json.loads(m["data"])["receiptId"] for r in reqs for m in r]
-    assert sorted(msgs) == sorted(["INV1", "INV2"] * 5)  # nothing lost
-    parts = sorted(
-        int(m.group(1))
-        for m in (
-            re.fullmatch(r"batch_id=(\d+)", d) for d in os.listdir(ledger)
-        )
-        if m
-    )
-    assert parts == [3, 4]  # batches 0-2 vacuumed in-stream
-
-
-def test_webhook_sink_self_vacuums_ledger(spark, tmp_path):
-    """The webhook sink's opt-in in-stream retention: with
-    ledger_keep_batches set, old batch partitions disappear as later
-    batches deliver."""
-    import os
-
-    from fintech_etl_spark.operators.receipts import (
-        build_receipts,
-        to_webhook_payloads,
-    )
-    from fintech_etl_spark.sinks import WebhookSink
-    from fintech_etl_spark.sources.invoice_csv import read_invoice_csv
-
-    fixture = tmp_path / "f.csv"
-    fixture.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
-    payloads = to_webhook_payloads(
-        build_receipts(read_invoice_csv(spark, str(fixture)), run_date=RUN_DATE)
-    )
-    ledger = str(tmp_path / "ledger")
-    sink = WebhookSink(
-        url="http://example.invalid/hook",
-        poster=lambda u, b, h: 200,
-        ledger_path=ledger,
-        ledger_keep_batches=1,
-        maintenance_every=1,
-    )
-    for b in range(3):
-        assert sink.send_batch(payloads, batch_id=b)["sent"] == 2
-    parts = [d for d in os.listdir(ledger) if d.startswith("batch_id=")]
-    assert parts == ["batch_id=2"]

@@ -58,21 +58,20 @@ def _build_lake(root: str, n_segments: int, docs_per: int) -> None:
     mf.commit(root, add={"webhook_outbox": adds})
 
 
-def _drain(spark, root: str, ledger: str) -> tuple[dict, int, float]:
-    from fintech_etl_spark.sinks.receipts import drain_webhook_outbox
+def _drain(spark, root: str) -> tuple[dict, int, float]:
+    from fintech_etl_spark.sinks.receipts import drain_outbox
     from fintech_etl_spark.sinks.webhook import WebhookSink
 
     sink = WebhookSink(
         url="http://example.invalid/hook",
         poster=lambda url, body, headers: 200,
-        ledger_path=ledger,
     )
     sc = spark.sparkContext
     group = f"drain-receipt-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, "outbox drain receipt")
     t0 = time.monotonic()
     try:
-        stats = drain_webhook_outbox(spark, root, sink)
+        stats = drain_outbox(spark, root, sink)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     wall = time.monotonic() - t0
@@ -93,9 +92,8 @@ def main() -> int:
         out = {}
         for tag, n in (("small", n_small), ("large", n_large)):
             root = os.path.join(base, f"lake_{tag}")
-            ledger = os.path.join(base, f"ledger_{tag}")
             _build_lake(root, n, docs_per)
-            stats, jobs, wall = _drain(spark, root, ledger)
+            stats, jobs, wall = _drain(spark, root)
             assert stats["batches"] == n and stats["failed"] == 0, stats
             assert stats["sent"] == n * docs_per, stats
             out[tag] = {
